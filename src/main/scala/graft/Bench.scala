@@ -990,8 +990,10 @@ object Bench {
       s""","sf":${jsonStr(sfDir)}}"""
     def bytesOf(s: String): Int =
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-    // 2048-byte tail minus the "[info] " prefix and sbt's trailing
-    // "[success] Total time ..." line (~80 bytes).
+    // The driver reads a 2048-byte stdout tail, and the headline is the
+    // final stdout line with no sbt prefix or trailer (build.sbt:
+    // StdoutOutput, showSuccess := false); 1950 keeps ~100 bytes of
+    // margin below that window.
     val Budget = 1950
     val errsCount = s"""{"count":${errors.size}}"""
     // Degrade cascade, each step re-checked in BYTES: full -> errors
@@ -1017,9 +1019,12 @@ object Bench {
     // build.sbt's `run / outputStrategy := StdoutOutput` +
     // `showSuccess := false` guarantee no sbt "[info] " prefix and no
     // trailing "[success]" line — the headline is the final stdout
-    // line, verbatim.
-    spark.stop()
-    println(line)
-    System.out.flush()
+    // line, verbatim. The finally keeps the headline even when stop()
+    // throws.
+    try spark.stop()
+    finally {
+      println(line)
+      System.out.flush()
+    }
   }
 }

@@ -46,7 +46,6 @@ object Cli {
     val schemaId = schemaIdS.toInt
     val t0 = System.nanoTime()
     val schema = FixedSchema.fromFile(schemaFile)
-    val parsed = FixedWidth.read(spark, dataFile, schema)
     // Row count comes from the WRITE itself (writeFixed's accumulator /
     // parquet footer metadata) — the old parsed.count() afterwards was
     // a second full scan+parse of the input purely to print a number,
@@ -56,6 +55,10 @@ object Cli {
         if (registryUrl == "mem:") new InMemorySchemaRegistry
         else new HttpSchemaRegistry(registryUrl))
       val (keyId, _) = KafkaStage.registerSubjects(registry, topic, schema)
+      // Typed parse only here: the OCF branch encodes straight from the
+      // lines, and an unused parse plan still lists the input and gets
+      // analysed.
+      val parsed = FixedWidth.read(spark, dataFile, schema)
       val staged = KafkaStage.stage(parsed, schema, schemaId = schemaId,
         topic = topic, keySchemaId = keyId)
       val stageDir = sys.env.getOrElse("GRAFT_STAGE_DIR", s"/tmp/graft-stage/$topic")

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** Session-construction defaults shared by every graft entry point
   * (Verify, Bench, Cli, tests, tools).
@@ -64,4 +67,19 @@ object GraftSession {
     GraftExtensions.register(s)
     s
   }
+
+  /** The session's Hadoop conf as ONE broadcast per job (Spark's own
+    * `broadcastedHadoopConf` shape) for executor-side FileSystem use,
+    * so fs.defaultFS and object-store credentials reach the tasks. A
+    * closure-captured `SerializableConfiguration` (~1k properties) is
+    * serialized into the task binary and deserialized again by EVERY
+    * task (~10 ms each on a 4-vCPU VM); a broadcast is deserialized
+    * once per executor, and under `local[N]` tasks read the driver's
+    * copy. The conf is copied first, so later driver-side edits never
+    * reach a running job. Callers that own the job `destroy()` it
+    * afterwards; a lazily returned plan leaves it to the
+    * ContextCleaner. */
+  def broadcastHadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(
+      new Configuration(spark.sparkContext.hadoopConfiguration)))
 }

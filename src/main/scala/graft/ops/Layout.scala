@@ -1125,8 +1125,7 @@ object Layout {
   private[graft] def footerManifestFor(spark: SparkSession,
       files: Seq[String], statCols: Seq[String] = ZDims): DataFrame = {
     import spark.implicits._
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val ser = new org.apache.spark.util.SerializableConfiguration(hconf)
+    val bconf = graft.GraftSession.broadcastHadoopConf(spark)
     val slices = math.max(1, math.min(files.length,
       spark.sparkContext.defaultParallelism))
     val wanted = statCols.toSet
@@ -1138,9 +1137,10 @@ object Layout {
       .mapPartitions { it =>
         it.flatMap { f =>
           val p = new org.apache.hadoop.fs.Path(f)
-          val st = p.getFileSystem(ser.value).getFileStatus(p)
+          val hconf = bconf.value.value
+          val st = p.getFileSystem(hconf).getFileStatus(p)
           val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, ser.value)
+            .fromStatus(st, hconf)
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
           try {
             val blocks = r.getFooter.getBlocks

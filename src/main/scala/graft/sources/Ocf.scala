@@ -95,16 +95,15 @@ object Ocf {
       nullable: Boolean = false): Unit = {
     val avroJson = if (nullable) schema.nullableAvroJson else schema.avroJson
     val sparkSchema = df.schema
-    // Session Hadoop conf, serializably captured: keeps fs.defaultFS /
-    // object-store credentials working on executors (a bare
-    // `new Configuration()` only sees local defaults).
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
+    // Session Hadoop conf, broadcast once for the job: keeps
+    // fs.defaultFS / object-store credentials working on executors (a
+    // bare `new Configuration()` only sees local defaults).
+    val hadoopConf = graft.GraftSession.broadcastHadoopConf(df.sparkSession)
     // queryExecution.toRdd stays on InternalRow — no Tungsten exit, no
     // external-Row boxing per value. Values are copied into the Avro
     // encoder at append time, so the per-iterator row buffer reuse is
     // safe.
-    df.queryExecution.toRdd.foreachPartition { rows =>
+    try df.queryExecution.toRdd.foreachPartition { rows =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val avroSchema = new Schema.Parser().parse(avroJson)
       val path = new Path(dir, f"part-$pid%05d.avro")
@@ -115,7 +114,7 @@ object Ocf {
       // the JVM's life. The uncached instance is closed after the
       // part-file is written.
       val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-        path.toUri, hadoopConf.value)
+        path.toUri, hadoopConf.value.value)
       try {
       // OCF blocks already carry sync markers and the container is
       // seekable/splittable without Hadoop's client-side CRC — the
@@ -144,7 +143,7 @@ object Ocf {
         finally w.close()
       }
       } finally fs.close()
-    }
+    } finally hadoopConf.destroy()
   }
 
   /** Fixed-width LINES → snappy OCF, one file per partition, through the
@@ -171,22 +170,21 @@ object Ocf {
       dropFooter: Boolean = true): Long = {
     val avroJson = schema.avroJson
     val sparkSchema = schema.sparkSchema
-    val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
-      lines.sparkSession.sparkContext.hadoopConfiguration)
+    val hadoopConf = graft.GraftSession.broadcastHadoopConf(lines.sparkSession)
     val enc = new graft.functions.FixedAvro.LineEncoder(schema, -1)
     // Rows-written count via accumulator (one add per PARTITION, not
     // per row — the hot loop stays untouched): callers that need the
     // count (Cli's throughput line) used to re-scan and re-parse the
     // whole input in a second job just to count it.
     val rowsWritten = lines.sparkSession.sparkContext.longAccumulator("ocf_rows_written")
-    keptLines(lines, dropFooter).queryExecution.toRdd.foreachPartition { rows =>
+    try keptLines(lines, dropFooter).queryExecution.toRdd.foreachPartition { rows =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val avroSchema = new Schema.Parser().parse(avroJson)
       val path = new Path(dir, f"part-$pid%05d.avro")
       // newInstance + close: see the [[write]] note — the checksum
       // toggle must not mutate the JVM-cached shared FileSystem.
       val fs = org.apache.hadoop.fs.FileSystem.newInstance(
-        path.toUri, hadoopConf.value)
+        path.toUri, hadoopConf.value.value)
       try {
         fs.setWriteChecksum(false)
         val out = fs.create(path, true, 1 << 20)
@@ -202,7 +200,7 @@ object Ocf {
           rowsWritten.add(n)
         } finally w.close()
       } finally fs.close()
-    }
+    } finally hadoopConf.destroy()
     rowsWritten.value
   }
 

@@ -6,6 +6,8 @@ import graft.ops.Pipeline
 import graft.sinks.KafkaStage
 import graft.registry.InMemorySchemaRegistry
 import graft.sources.{FixedWidth, Ocf}
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -43,6 +45,24 @@ class CliSpec extends SparkSpec {
     assert(rows == expected.count())
     val readBack = Ocf.read(spark, out, Pipeline.lineitemFixed)
     assert(readBack.exceptAll(expected).isEmpty && expected.exceptAll(readBack).isEmpty)
+  }
+
+  test("outdir sink: the OCF branch runs exactly one Spark job") {
+    // The fused line→OCF write is the branch's only job: the row count
+    // comes from its accumulator, not from a second scan.
+    val sc = spark.sparkContext
+    val args = Array(tmp("graft-cli-jobs"), "mem:", schemaFile, "42", "lineitem", "2", dataDir)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      Cli.run(spark, args)
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 1)
   }
 
   test("http sink + mem: registry: CLI stages the Confluent Kafka frame") {

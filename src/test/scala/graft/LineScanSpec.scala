@@ -125,6 +125,39 @@ class LineScanSpec extends SparkSpec {
     assert(e.getMessage.contains("partition") && e.getMessage.contains(LineScan.Conf))
   }
 
+  test("local listing ≡ listLocatedStatus: paths, lengths, block offsets/lengths") {
+    // The local filesystem lists with listStatus + a null-permission
+    // LocatedFileStatus (no `ls -ld` per file); the result must equal
+    // the stock located listing, with the same files skipped.
+    import org.apache.hadoop.fs.{LocalFileSystem, LocatedFileStatus, Path}
+    val dir = fixture(Seq("a\n", "bb\nbb\n", "c" * 5000))
+    Seq("_SUCCESS", "._meta", ".hidden").foreach(n =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, n), "x\n".getBytes("UTF-8")))
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(dir, "sub"))
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.isInstanceOf[LocalFileSystem])
+    def shape(s: LocatedFileStatus) = (s.getPath.toString, s.getLen,
+      s.getBlockLocations.toSeq.map(b => (b.getOffset, b.getLength, b.getHosts.toSeq)))
+    val stockIt = fs.listLocatedStatus(root)
+    val stock = Iterator.continually(stockIt).takeWhile(_.hasNext).map(_.next()).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.toString).map(shape)
+    assert(stock.map(_._1.split('/').last) == Seq("part-000.txt", "part-001.txt", "part-002.txt"))
+    val raw = fs.asInstanceOf[LocalFileSystem].getRawFileSystem
+    Seq(fs, raw).foreach { f =>
+      assert(LineScan.listDataFiles(f, f.getFileStatus(root)).map(shape) == stock)
+    }
+    val one = new Path(root, "part-001.txt")
+    assert(LineScan.listDataFiles(fs, fs.getFileStatus(one)).map(shape) ==
+      stock.filter(_._1.endsWith("part-001.txt")))
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(dir, "ds=1"))
+    val e = intercept[IllegalArgumentException](
+      LineScan.listDataFiles(fs, fs.getFileStatus(root)))
+    assert(e.getMessage.contains("partition") && e.getMessage.contains(LineScan.Conf))
+  }
+
   test("chunk iterator reuses ONE row instance (no per-line allocation)") {
     // The narrow-row regression fix: the per-chunk iterator must emit
     // the SAME mutable row object for every line (consumers copy via
