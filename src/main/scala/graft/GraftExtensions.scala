@@ -147,50 +147,6 @@ object GraftExtensions {
       graft.functions.CappedCollect.CappedSortedIds(
         es(0), intLit("capped_sorted_ids", "cap", es(1)))
     },
-    fn("kll_sketch_agg",
-      "_FUNC_(value, k) - aggregate: KLL quantile sketch of a double column as BINARY " +
-        "(mergeable via kll_merge_agg, read via kll_quantile)") { es =>
-      arity("kll_sketch_agg", "(value, k)", es, 2)
-      graft.functions.KllSketch.KllSketchAgg(
-        es(0), intLit("kll_sketch_agg", "k", es(1)))
-    },
-    fn("kll_merge_agg",
-      "_FUNC_(sk) - aggregate: merge serialized KLL sketches into one BINARY sketch") { es =>
-      arity("kll_merge_agg", "(sk)", es, 1)
-      graft.functions.KllSketch.KllMergeAgg(es(0))
-    },
-    fn("kll_quantile",
-      "_FUNC_(sk, q) - value at rank ceil(q*n) of a serialized KLL sketch") { es =>
-      arity("kll_quantile", "(sk, q)", es, 2)
-      graft.functions.KllSketch.KllQuantile(es(0), es(1))
-    },
-    fn("theta_sketch_agg",
-      "_FUNC_(key, k) - aggregate: KMV/theta distinct sketch of a long key column as " +
-        "BINARY (union via theta_union_agg, read via theta_estimate/theta_intersect_estimate)") { es =>
-      arity("theta_sketch_agg", "(key, k)", es, 2)
-      graft.functions.ThetaSketch.ThetaSketchAgg(
-        es(0), intLit("theta_sketch_agg", "k", es(1)))
-    },
-    fn("theta_union_agg",
-      "_FUNC_(sk) - aggregate: union serialized theta sketches into one BINARY sketch") { es =>
-      arity("theta_union_agg", "(sk)", es, 1)
-      graft.functions.ThetaSketch.ThetaUnionAgg(es(0))
-    },
-    fn("theta_estimate",
-      "_FUNC_(sk) - distinct-count estimate of a serialized theta sketch") { es =>
-      arity("theta_estimate", "(sk)", es, 1)
-      graft.functions.ThetaSketch.ThetaEstimate(es(0))
-    },
-    fn("theta_intersect_estimate",
-      "_FUNC_(a, b) - set-intersection size estimate from two serialized theta sketches") { es =>
-      arity("theta_intersect_estimate", "(a, b)", es, 2)
-      graft.functions.ThetaSketch.ThetaIntersectEstimate(es(0), es(1))
-    },
-    fn("theta_anotb_estimate",
-      "_FUNC_(a, b) - set-difference size estimate |A \\ B| from two serialized theta sketches") { es =>
-      arity("theta_anotb_estimate", "(a, b)", es, 2)
-      graft.functions.ThetaSketch.ThetaANotBEstimate(es(0), es(1))
-    },
     // The confluent_* builders restate graft.functions.Confluent's
     // Column compositions as direct catalyst trees: a builder returning
     // a Column-derived expression hands the analyzer an opaque

@@ -655,25 +655,26 @@ object Sessions {
        |SELECT day, active_7d, CAST(TRUE AS BOOLEAN) AS sketch_within_bound
        |FROM wau ORDER BY day""".stripMargin
 
-  /** Theta/KMV geometry for [[eventsRetentionSketch]]. k=1024 keeps the
-    * per-day sketch EXACT at the verify scale (sf0.01 has ~134 distinct
-    * users/day; even sf0.1's ~1336 only just exceeds it) while still a
-    * few KB — and at web scale bounds state at 8 KB/day regardless of
-    * user count. The 10% gate is ~3 standard errors of the intersection
-    * estimator at this k and the fixture's day-over-day overlap
-    * (RSE ≈ sqrt(|A ∪ B| / (k·|A ∩ B|)) ≈ 3.4% at |∪|/|∩| ≈ 1.2),
-    * the [[SketchActivesBound]] discipline. */
-  val ThetaK = 1024
+  /** Theta geometry for [[eventsRetentionSketch]]: Spark's built-in
+    * DataSketches `theta_sketch_agg` at lgNomEntries = 10, i.e. 1024
+    * nominal entries. That keeps the per-day sketch EXACT at the verify
+    * scale (sf0.01 has ~134 distinct users/day; even sf0.1's ~1336 only
+    * just exceeds it) while still a few KB — and at web scale bounds
+    * state at ~8 KB/day regardless of user count. The 10% gate is ~3
+    * standard errors of the intersection estimator at this size and the
+    * fixture's day-over-day overlap (RSE ≈ sqrt(|A ∪ B| / (k·|A ∩ B|))
+    * ≈ 3.4% at |∪|/|∩| ≈ 1.2), the [[SketchActivesBound]] discipline. */
+  val ThetaLgNomEntries = 10
   val ThetaRetentionBound = 0.10
 
   /** `events_retention_sketch`: day-over-day retained users via
-    * INTERSECTABLE theta/KMV sketches — the set-operation query the HLL
+    * INTERSECTABLE theta sketches — the set-operation query the HLL
     * lane ([[eventsSketchActives]]) cannot express: HLL sketches union
     * but never intersect, so "users active on BOTH day d and d+1" from
-    * two per-day blobs needs KMV's comparable hash samples
-    * ([[graft.functions.ThetaSketch]]). The event log is touched ONCE
+    * two per-day blobs needs theta's comparable hash samples (Spark's
+    * built-in `theta_intersection`). The event log is touched ONCE
     * into per-day sketches (a partially-aggregated `theta_sketch_agg` —
-    * map-side combined like any partial agg, ≤8 KB each); every
+    * map-side combined like any partial agg, ~8 KB each); every
     * consecutive-day estimate then reads off the tiny sketch table via
     * a self-join on adjacent days — at 100 TB the retention matrix
     * costs days² sketch comparisons of a few KB each, ZERO log
@@ -683,14 +684,14 @@ object Sessions {
     * within [[ThetaRetentionBound]]), the standard gated-approx
     * discipline. */
   def eventsRetentionSketch(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.ThetaSketch.{theta_intersect_estimate, theta_sketch_agg}
     val du = events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("user_id"))
-    val daily = du.groupBy("day").agg(theta_sketch_agg(col("user_id"), ThetaK).as("sk"))
+    val daily = du.groupBy("day")
+      .agg(theta_sketch_agg(col("user_id"), ThetaLgNomEntries).as("sk"))
     val nextDay = daily.select(date_sub(col("day"), 1).as("day"), col("sk").as("sk_next"))
     val est = daily.join(nextDay, Seq("day"))
       .select(col("day"),
-        theta_intersect_estimate(col("sk"), col("sk_next")).as("est"))
+        theta_sketch_estimate(theta_intersection(col("sk"), col("sk_next"))).as("est"))
     val exact = du.dropDuplicates("day", "user_id").as("a")
       .join(du.dropDuplicates("day", "user_id").as("b"),
         col("b.day") === date_add(col("a.day"), 1) &&
@@ -715,10 +716,11 @@ object Sessions {
     * scales with sqrt(|A ∪ B| / (k·|A \ B|)) — churned users are the
     * SMALL slice of a day's actives on this fixture (sf0.1: ~146
     * churned of ~1336 actives/day), so at the same k the relative
-    * error runs wider than retention's. Measured on the deterministic
-    * hash draw at sf0.1: max 8.5% / mean 3.2% over 29 day pairs
-    * (tools/ChurnProbe), so 15% leaves ~1.75x headroom against
-    * innocuous re-rolls; sf0.001/0.01 are below capacity and exact. */
+    * error runs wider than retention's. Measured at sf0.1: max 13.95% /
+    * mean 3.6% over 29 day pairs (tools/ChurnProbe). The margin to 15%
+    * is thin but deterministic — DataSketches hashes with a fixed seed,
+    * so the same data always draws the same sample; sf0.001/0.01 are
+    * below capacity and exact. */
   val ThetaChurnBound = 0.15
 
   /** `events_churn_sketch`: day-over-day CHURNED users (active on day d,
@@ -727,12 +729,13 @@ object Sessions {
     * [[eventsRetentionSketch]]: union (actives), intersect (retention),
     * a-not-b (churn) now all read from one stored artifact. The log is
     * touched once into per-day sketches (partial-agg map-side combine,
-    * ≤8 KB each); every consecutive-day churn estimate is an O(k) merge
-    * walk over two blobs — at 100 TB the whole churn series costs days
-    * sketch comparisons and ZERO log re-reads, where the exact form
-    * re-shuffles user×day rows per day pair. The exact side powers the
-    * oracle-pinned `churned` column and the gate (estimate within
-    * [[ThetaChurnBound]]), the standard gated-approx discipline.
+    * ~8 KB each); every consecutive-day churn estimate is one
+    * `theta_difference` of two blobs — at 100 TB the whole churn
+    * series costs days sketch comparisons and ZERO log re-reads, where
+    * the exact form re-shuffles user×day rows per day pair. The exact
+    * side powers the oracle-pinned `churned` column and the gate
+    * (estimate within [[ThetaChurnBound]]), the standard gated-approx
+    * discipline.
     * Days whose successor day has no events at all drop (no sketch to
     * difference against — same edge as the retention sketch's inner
     * join), as do all-retained days (the exact inner count group). */
@@ -747,14 +750,14 @@ object Sessions {
     * shared with tools/ChurnProbe so the measured headroom prices THIS
     * pipeline, never a drifted copy. */
   private[graft] def eventsChurnDetail(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.ThetaSketch.{theta_anotb_estimate, theta_sketch_agg}
     val du = events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("user_id"))
-    val daily = du.groupBy("day").agg(theta_sketch_agg(col("user_id"), ThetaK).as("sk"))
+    val daily = du.groupBy("day")
+      .agg(theta_sketch_agg(col("user_id"), ThetaLgNomEntries).as("sk"))
     val nextDay = daily.select(date_sub(col("day"), 1).as("day"), col("sk").as("sk_next"))
     val est = daily.join(nextDay, Seq("day"))
       .select(col("day"),
-        theta_anotb_estimate(col("sk"), col("sk_next")).as("est"))
+        theta_sketch_estimate(theta_difference(col("sk"), col("sk_next"))).as("est"))
     val du1 = du.dropDuplicates("day", "user_id")
     val nextUsers = du1.select(date_sub(col("day"), 1).as("day"), col("user_id"))
     val exact = du1
@@ -783,20 +786,19 @@ object Sessions {
     * [[eventsKllRange]]. The per-day sketch table persists as a
     * content-fingerprinted [[IndexStore]] artifact (load-not-rebuild
     * across processes, like the KLL daily table and the ANN
-    * codebooks); this query then intersects exactly TWO ≤8 KB blobs —
+    * codebooks); this query then intersects exactly TWO ~8 KB blobs —
     * at 100 TB any day-pair retention question is two blob reads and
-    * an O(k) merge walk, ZERO log reads, where the exact form
+    * one `theta_intersection`, ZERO log reads, where the exact form
     * re-shuffles both days' user sets per question. The range bounds
     * ride as a broadcast single-row scalar (min day — no driver
     * action); the exact side re-reads the log only to power the
     * oracle-pinned `retained` column and the gate, the standard
     * gated-approx discipline. */
   def eventsRetentionRange(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.ThetaSketch.{theta_intersect_estimate, theta_sketch_agg}
-    val daily = IndexStore.loadOrBuild(spark, dir, "events", "theta_daily_v1") {
+    val daily = IndexStore.loadOrBuild(spark, dir, "events", "theta_daily_v2") {
       events(spark, dir)
         .select(to_date(col("ts")).as("day"), col("user_id"))
-        .groupBy("day").agg(theta_sketch_agg(col("user_id"), ThetaK).as("sk"))
+        .groupBy("day").agg(theta_sketch_agg(col("user_id"), ThetaLgNomEntries).as("sk"))
     }
     val bounds = broadcast(daily.agg(min(col("day")).as("day_lo"))
       .select(col("day_lo"),
@@ -810,8 +812,8 @@ object Sessions {
       .crossJoin(daily.join(bounds, col("day") === col("day_hi"))
         .select(col("sk").as("sk_hi")))
       .agg(coalesce(
-        max(theta_intersect_estimate(col("sk_lo"), col("sk_hi"))),
-        lit(0.0)).as("est"))
+        max(theta_sketch_estimate(theta_intersection(col("sk_lo"), col("sk_hi")))),
+        lit(0L)).as("est"))
     val du = events(spark, dir)
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .dropDuplicates("day", "user_id")
@@ -825,7 +827,7 @@ object Sessions {
     // hash exists without a common user — rather than dividing by zero
     exact.crossJoin(broadcast(est)).crossJoin(bounds)
       .select(col("day_lo"), col("day_hi"), col("retained"),
-        when(col("retained") === 0, col("est") === 0.0)
+        when(col("retained") === 0, col("est") === 0L)
           .otherwise(abs(col("est") - col("retained")) / col("retained")
             <= ThetaRetentionBound).as("sketch_within_bound"))
   }
@@ -841,11 +843,12 @@ object Sessions {
        |       CAST(TRUE AS BOOLEAN) AS sketch_within_bound
        |FROM b""".stripMargin
 
-  /** KLL geometry for [[eventsQuantilesKllDaily]]: k=256 concentrates
-    * rank error well inside ±1%; the gate allows 1.5% — the same
-    * ~3-sigma headroom [[SketchActivesBound]] gives HLL, loose enough
-    * to never flake under partial-merge order variation, tight enough
-    * to catch any wiring mistake. */
+  /** KLL geometry for [[eventsQuantilesKllDaily]]: Spark's built-in
+    * DataSketches `kll_sketch_agg_double` at k=256 concentrates rank
+    * error well inside ±1%; the gate allows 1.5% — the same ~3-sigma
+    * headroom [[SketchActivesBound]] gives HLL, loose enough to never
+    * flake under the sketch's randomized compaction and partial-merge
+    * order, tight enough to catch any wiring mistake. */
   val KllK = 256
   val KllRankTol = 0.015
 
@@ -853,8 +856,8 @@ object Sessions {
     * mergeable KLL sketch table — the 100 TB form of
     * [[eventsQuantiles]]'s inline `percentile_approx`, and the
     * quantile twin of [[eventsSketchActives]]'s daily HLL table. The
-    * event log is touched once into per-(type, day) sketches
-    * ([[graft.functions.KllSketch]], ~KB each, map-side combined like
+    * event log is touched once into per-(type, day) sketches (Spark's
+    * built-in `kll_sketch_agg_double`, ~KB each, map-side combined like
     * any partial agg); the per-type quantile then reads off a MERGE of
     * the daily blobs — the stored sketch table answers arbitrary date
     * ranges later without re-touching the log, which the built-in
@@ -865,17 +868,16 @@ object Sessions {
     * that interval comes within [[KllRankTol]] of the target — the
     * [[QuantileApproxRankTol]] discipline, both bounds, tie-safe. */
   def eventsQuantilesKllDaily(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.KllSketch.{kll_merge_agg, kll_quantile, kll_sketch_agg}
     val ev = events(spark, dir).select(col("event_type"), col("ts"), col("value"))
     val daily = ev
       .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
       .groupBy("event_type", "day")
-      .agg(kll_sketch_agg(col("value"), KllK).as("sk"))
+      .agg(kll_sketch_agg_double(col("value"), KllK).as("sk"))
     val merged = daily.groupBy("event_type")
-      .agg(kll_merge_agg(col("sk")).as("sk"))
+      .agg(kll_merge_agg_double(col("sk")).as("sk"))
       .select(col("event_type"),
-        kll_quantile(col("sk"), lit(0.5)).as("v50"),
-        kll_quantile(col("sk"), lit(0.95)).as("v95"))
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("v50"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.95)).as("v95"))
     rankGate(ev.select(col("event_type"), col("value")), merged,
       KllRankTol, "kll_within_bound")
   }
@@ -904,21 +906,20 @@ object Sessions {
     * columns and the rank-interval gate, the standard gated-approx
     * discipline. */
   def eventsKllRange(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.KllSketch.{kll_merge_agg, kll_quantile, kll_sketch_agg}
-    val daily = IndexStore.loadOrBuild(spark, dir, "events", "kll_daily_v1") {
+    val daily = IndexStore.loadOrBuild(spark, dir, "events", "kll_daily_v2") {
       events(spark, dir)
         .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
         .groupBy("event_type", "day")
-        .agg(kll_sketch_agg(col("value"), KllK).as("sk"))
+        .agg(kll_sketch_agg_double(col("value"), KllK).as("sk"))
     }
     val bounds = broadcast(daily.agg(min(col("day")).as("lo"))
       .select(col("lo"), date_add(col("lo"), KllRangeDays - 1).as("hi")))
     val merged = daily
       .join(bounds, col("day").between(col("lo"), col("hi")))
-      .groupBy("event_type").agg(kll_merge_agg(col("sk")).as("sk"))
+      .groupBy("event_type").agg(kll_merge_agg_double(col("sk")).as("sk"))
       .select(col("event_type"),
-        kll_quantile(col("sk"), lit(0.5)).as("v50"),
-        kll_quantile(col("sk"), lit(0.95)).as("v95"))
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("v50"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.95)).as("v95"))
     val ev = events(spark, dir)
       .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
       .join(bounds, col("day").between(col("lo"), col("hi")))

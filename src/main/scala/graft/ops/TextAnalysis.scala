@@ -1577,17 +1577,6 @@ object TextAnalysis {
     * selection is an exact integer both engines agree on. */
   val LmDropPct = 8L
 
-  /** Conf gate for [[corpusLmScore]]'s perDoc reuse-point exchange
-    * (`spark.graft.text.lmSharePerDoc`): on = one shared evaluation of
-    * the trigram scoring join feeds both the threshold histogram and
-    * the final projection (one fewer corpus-scale pass — the 100 TB
-    * shape); off = each consumer recomputes it (wins at high local
-    * core counts, where AQE races the in-flight stage cache and the
-    * branches overlap on otherwise-idle cores). Results identical
-    * either way (the exchange is plan shape only). */
-  val LmScoreSharePerDocConf = "spark.graft.text.lmSharePerDoc"
-  private[ops] val LmScoreSharePerDocDefault = "false"
-
   /** `corpus_lm_score`: statistical language-model quality filter —
     * the model-based sibling of the rule-based
     * [[corpusQualityFilter]] (CCNet filters on LM perplexity; this is
@@ -1632,19 +1621,17 @@ object TextAnalysis {
     // and the final projection both consume perDoc, which has no
     // exchange of its own to reuse) — with zero exchange reuse: per-
     // branch column pruning makes each copy's exchange non-canonical-
-    // equal. Two fixes, both result-identical:
-    //  1. c2 derives from c3 (every occurrence of a trigram contributes
-    //     to its prefix's count, so Σ c3 per prefix is the same sum) —
-    //     that removes one full explode AND one occurrence-scale
-    //     shuffle, replacing them with a |distinct trigrams| shuffle;
-    //     c3's own exchange is referenced twice with identical columns,
-    //     so the second reference rides a ReusedExchange.
-    //  2. perDoc gains a tiny reuse-point exchange (one row per doc —
-    //     corpus metadata) so the histogram branch and the final
-    //     projection share ONE evaluation of the scoring join instead
-    //     of recomputing the explode+join per consumer.
-    // Net at 100 TB: two corpus passes → down from four, one
-    // occurrence-scale shuffle → down from two. Oracle unchanged.
+    // equal. The fix, result-identical: c2 derives from c3 (every
+    // occurrence of a trigram contributes to its prefix's count, so
+    // Σ c3 per prefix is the same sum) — that removes one full explode
+    // AND one occurrence-scale shuffle, replacing them with a
+    // |distinct trigrams| shuffle; c3's own exchange is referenced
+    // twice with identical columns, so the second reference rides a
+    // ReusedExchange. The histogram and the final projection each
+    // evaluate perDoc: sharing it through a full-row reuse-point
+    // exchange measured as a wash (2.72 vs 2.70 s, r21). Net: three
+    // corpus passes → down from four, one occurrence-scale shuffle →
+    // down from two. Oracle unchanged.
     val t = Docs.fanned(spark, dir)
       .where(length(col("text")) >= 3)
       .select(col("doc_id"), explode(transform(
@@ -1662,34 +1649,11 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tri"), sum(col("p")).as("score_sum"))
       .withColumn("si", expr("score_sum div n_tri"))
-    // Reuse point on ALL columns (the Pipeline.barrier rationale):
-    // keyed on a subset, per-branch column pruning would narrow one
-    // copy's exchange and break canonical equality — full-row hash
-    // keeps both consumers' subtrees identical so AQE stage reuse
-    // serves the second from the first's shuffle files.
-    //
-    // CONF-GATED as of r22 (VERDICT r21 #2), mirroring
-    // [[Dedup.ShareSignaturesConf]]: at high local core counts AQE
-    // materializes the two consumer branches CONCURRENTLY, the
-    // in-flight stage cache misses for the duplicate, and the extra
-    // exchange lengthens the critical path (canonical 32-core record:
-    // 2.15 → 2.70 s, the round's understated regression). Under
-    // serialized stage materialization (8 cores: wall 2.2 → 1.5 s,
-    // cpuT 10.2 → 6.1 s) the reuse fires and the plan does one
-    // scoring-join evaluation instead of two — which is also the
-    // 100 TB shape, where a second corpus-scale pass dwarfs one
-    // doc-count exchange. Default = the measured 32-core A/B winner
-    // (see OPTIMIZATION_r22.md); production clusters with deep
-    // queues should enable it.
-    val perDocShared =
-      if (!spark.conf.get(LmScoreSharePerDocConf, LmScoreSharePerDocDefault).toBoolean) perDoc
-      else perDoc.repartition(
-        spark.sparkContext.defaultParallelism, perDoc.columns.map(col): _*)
     // Exact percentile selection on the integer grid: histogram of the
     // floored scores (grid-bounded), running count, threshold = the
     // smallest score whose cumulative count reaches rank
     // (N·LmDropPct) div 100 + 1 — i.e. the r-th smallest score.
-    val hist = perDocShared.groupBy("si").agg(count(lit(1)).as("cnt"))
+    val hist = perDoc.groupBy("si").agg(count(lit(1)).as("cnt"))
     val cumWin = org.apache.spark.sql.expressions.Window.orderBy("si")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
@@ -1698,7 +1662,7 @@ object TextAnalysis {
       .crossJoin(broadcast(nDocs))
       .where(col("cum") >= expr(s"(n_docs * $LmDropPct) div 100 + 1"))
       .agg(min(col("si")).as("thr"))
-    perDocShared.crossJoin(broadcast(thr))
+    perDoc.crossJoin(broadcast(thr))
       .select(col("doc_id"), col("n_tri"), col("score_sum"),
         round(col("score_sum").cast(DoubleType) / col("n_tri"), 6).as("avg_score"),
         (col("si") >= col("thr")).as("keep"))

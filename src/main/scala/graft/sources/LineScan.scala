@@ -55,38 +55,6 @@ object LineScan {
     * implementations against `spark.read.text`. */
   private[graft] val ForceStreamConf = "spark.graft.linescan.forceStream"
 
-  /** Session conf: mmap preload mode — "off" (default), "load", "read".
-    *
-    * Escape hatch for environments where demand-paging degrades the
-    * mmap scan. Hypothesis behind it: `read()` drives the kernel's
-    * sequential readahead at full window size, while a demand-paged
-    * mapping faults in page-cluster units with a readahead window that
-    * can shrink under memory pressure — so an evicted corpus would be
-    * streamed by the stock source but faulted in smaller units by the
-    * naked mmap scan (a candidate explanation for the r13 driver
-    * record, where the native scan ran 13-97 s vs 2.1-2.3 s same-day
-    * idle probes and lost its stock A/B).
-    *
-    * MEASURED on this box (tools/ProbeCold14, r14): the hypothesis did
-    * NOT hold here. Cold-corpus A/B with caches dropped before every
-    * run — naked mmap min 2.57 s vs stock min 3.02 s (native WINS
-    * cold); "load" preload was slightly counterproductive cold
-    * (3.07-3.48 s) and cost ~2% warm; "read" was a wash (2.60-3.74).
-    * Under a concurrent sibling JVM at loadavg 8-19 all three legs
-    * degraded 1.2-3x with no consistent native-specific collapse. So
-    * the default stays "off" (the measured-best path), and the conf
-    * exists so a deployment that DOES observe fault-bound mmap scans
-    * (slow network-backed page-ins, cgroup memory pressure) can flip
-    * the I/O path per session without a code change.
-    *
-    *  - "off":   demand paging (default; measured best here).
-    *  - "load":  `MappedByteBuffer.load()` — madvise(MADV_WILLNEED) on
-    *             the whole mapping + a page-stride touch loop.
-    *  - "read":  stream the chunk through the already-open channel into
-    *             a 1 MiB buffer (pure page-cache population via the
-    *             read path; the copy is discarded). */
-  private[graft] val PreloadConf = "spark.graft.linescan.preload"
-
   /** 128 MiB: HDFS-block-scale chunks. Smaller chunks pay ~1 ms of
     * scheduler overhead per task (measured: 1 MiB chunks → 4400 tasks →
     * +4.7 s on a 4.4 GB corpus), and mmap makes the per-chunk memory
@@ -94,7 +62,7 @@ object LineScan {
   val DefaultChunkBytes: Long = 128L << 20
 
   private[graft] case class Chunk(file: String, start: Long, end: Long, fileLen: Long,
-      forceStream: Boolean = false, preload: String = "off")
+      forceStream: Boolean = false)
 
   private val schema = StructType(Seq(StructField("value", StringType, nullable = false)))
 
@@ -185,7 +153,6 @@ object LineScan {
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = listDataFiles(fs, fs.getFileStatus(rootPath))
     val forceStream = spark.conf.get(ForceStreamConf, "false").toBoolean
-    val preloadMode = spark.conf.get(PreloadConf, "off")
     // Adaptive chunk size, exactly FilePartition's sizing rule: cap at
     // `chunkBytes`, but shrink toward totalBytes/parallelism (floor
     // 4 MiB ≈ the open cost) so a small corpus still fans out across
@@ -219,7 +186,7 @@ object LineScan {
       // rows). Both terms here stay below len and k^2 respectively.
       def bound(i: Long): Long = i * (len / k) + i * (len % k) / k
       (0L until k).map(i => Chunk(st.getPath.toString,
-        bound(i), bound(i + 1), len, forceStream, preloadMode))
+        bound(i), bound(i + 1), len, forceStream))
     }.filter(c => c.end > c.start)
     // Bin-pack chunks into tasks the way FilePartition packs file
     // splits: a directory of MANY SMALL files must not fan out as one
@@ -288,49 +255,16 @@ object LineScan {
 
   /** mmap region for local files: zero-copy, page-cache backed. Every
     * mapping created for this chunk is pinned in `mappings` until task
-    * end, so zero-copy rows can never outlive their mapping. */
+    * end, so zero-copy rows can never outlive their mapping. Pages are
+    * demand-faulted: a cold-corpus A/B (r14) measured both preloading
+    * variants (`MappedByteBuffer.load()`, and a `read()` pass to fill
+    * the page cache) as no faster, cold or warm. */
   private final class MmapRegion(c: Chunk, f: java.io.File) extends Region(c) {
     private val ch = java.nio.channels.FileChannel.open(
       f.toPath, java.nio.file.StandardOpenOption.READ)
     private val mappings = scala.collection.mutable.ListBuffer.empty[java.nio.MappedByteBuffer]
     private var tail: Long = 1L << 20
-    // How far the chunk has been preloaded (absolute file offset) — so a
-    // tail-extend remap only preloads the NEW bytes, not the whole
-    // mapping again.
-    private var preloadedTo: Long = c.start
     remap()
-
-    /** Populate the page cache for `[preloadedTo, start+want)` — see
-      * [[PreloadConf]]. "load" = madvise(WILLNEED) + page-touch via
-      * MappedByteBuffer.load(); "read" = stream the range through the
-      * channel (explicit kernel readahead), copies discarded. */
-    private def preload(mbb: java.nio.MappedByteBuffer, want: Long): Unit = {
-      val from = preloadedTo
-      val to = c.start + want
-      if (to <= from) return
-      c.preload match {
-        case "load" =>
-          if (from == c.start) mbb.load()
-          else { // extend: only the new tail needs faulting in
-            val dup = mbb.duplicate()
-            dup.position((from - c.start).toInt)
-            dup.slice() match { // JDK 13+ slices stay MappedByteBuffers
-              case m: java.nio.MappedByteBuffer => m.load()
-              case _                            => () // demand paging, correct either way
-            }
-          }
-        case "read" =>
-          val tmp = java.nio.ByteBuffer.allocate(1 << 20)
-          var p = from
-          while (p < to) {
-            tmp.clear()
-            val r = ch.read(tmp, p)
-            if (r <= 0) p = to else p += r
-          }
-        case _ => ()
-      }
-      preloadedTo = to
-    }
 
     private def remap(): Unit = {
       // Mapping size is Int-addressed downstream; cap at Int.MaxValue
@@ -344,7 +278,6 @@ object LineScan {
           s"${c.start} extends more than ${Int.MaxValue} bytes past the chunk start")
       val mbb = ch.map(java.nio.channels.FileChannel.MapMode.READ_ONLY, c.start, want)
       mappings += mbb // keep EVERY mapping alive until task end
-      preload(mbb, want)
       base = null
       off = addressField.get.getLong(mbb)
       limit = want.toInt

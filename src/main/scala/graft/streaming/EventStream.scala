@@ -126,10 +126,10 @@ object EventStream {
     * the streaming half of the `events_quantiles_kll_daily`
     * architecture, and the quantile twin of [[dailyActivesStream]]:
     * the stream maintains ONE KLL sketch per open (type, day) window
-    * ([[graft.functions.KllSketch]] — state is groups × ~3k items,
-    * never raw values; a streaming exact-percentile would buffer every
-    * group member), per-type/day quantile estimates update each
-    * micro-batch, and the periodic batch pass stores the authoritative
+    * (Spark's built-in `kll_sketch_agg_double` — state is groups × a
+    * few k items, never raw values; a streaming exact-percentile would
+    * buffer every group member), per-type/day quantile estimates
+    * update each micro-batch, and the periodic batch pass stores the authoritative
     * reaggregatable daily sketch table (`events_kll_range`'s IndexStore
     * artifact). Late data beyond 1 day drops with the closed window's
     * state, like [[dailyActivesStream]]. Day attribution reads the same
@@ -140,36 +140,36 @@ object EventStream {
       .withColumn("ts", col("ts").cast(TimestampType))
       .withWatermark("ts", "1 day")
       .groupBy(col("event_type"), window(col("ts"), "1 day"))
-      .agg(graft.functions.KllSketch.kll_sketch_agg(col("value"), k).as("sk"))
+      .agg(kll_sketch_agg_double(col("value"), k).as("sk"))
       .select(col("event_type"),
         col("window.start").cast(org.apache.spark.sql.types.DateType).as("day"),
-        graft.functions.KllSketch.kll_quantile(col("sk"), lit(0.5)).as("p50_est"),
-        graft.functions.KllSketch.kll_quantile(col("sk"), lit(0.95)).as("p95_est"))
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("p50_est"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.95)).as("p95_est"))
 
-  /** Watermarked per-day DISTINCT theta/KMV sketch on the live stream —
+  /** Watermarked per-day DISTINCT theta sketch on the live stream —
     * the streaming half of the `events_retention_sketch` architecture,
     * and the set-operation twin of [[dailyActivesStream]]: the stream
-    * maintains ONE ≤k-hash sketch per open day window
-    * ([[graft.functions.ThetaSketch]] — state is days × ≤8 KB, never
-    * per-user identity rows), and emits the day's estimate NEXT TO the
+    * maintains ONE theta sketch per open day window (Spark's built-in
+    * `theta_sketch_agg` — state is days × ~8 KB, never per-user
+    * identity rows), and emits the day's estimate NEXT TO the
     * mergeable blob itself, so a downstream consumer intersects
     * consecutive days' blobs for live retention without touching the
-    * log. Because KMV state is a pure set (no compaction coin), the
-    * streamed blob is BYTE-IDENTICAL to the batch one-pass sketch of
-    * the same day — spec-pinned, the property that lets the streaming
-    * ingest feed the same content-fingerprinted sketch table the batch
-    * pass owns. Late data beyond 1 day drops with the closed window's
-    * state, like [[dailyActivesStream]]; day attribution reads the same
-    * pinned-UTC session zone invariant documented there. */
+    * log. The sketch hashes with a fixed seed and its compact form is
+    * ordered, so the streamed blob is BYTE-IDENTICAL to the batch
+    * sketch of the same day — spec-pinned, the property that lets the
+    * streaming ingest feed the same content-fingerprinted sketch table
+    * the batch pass owns. Late data beyond 1 day drops with the closed
+    * window's state, like [[dailyActivesStream]]; day attribution
+    * reads the same pinned-UTC session zone invariant documented there. */
   def thetaDailyStream(events: DataFrame,
-      k: Int = graft.ops.Sessions.ThetaK): DataFrame =
+      lgNomEntries: Int = graft.ops.Sessions.ThetaLgNomEntries): DataFrame =
     events
       .withColumn("ts", col("ts").cast(TimestampType))
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day"))
-      .agg(graft.functions.ThetaSketch.theta_sketch_agg(col("user_id"), k).as("sk"))
+      .agg(theta_sketch_agg(col("user_id"), lgNomEntries).as("sk"))
       .select(col("window.start").cast(DateType).as("day"),
-        graft.functions.ThetaSketch.theta_estimate(col("sk")).as("active_est"),
+        theta_sketch_estimate(col("sk")).as("active_est"),
         col("sk"))
 
   /** `ts` carries the watermark-marked attribute through to the

@@ -2,13 +2,15 @@ package graft
 
 import graft.functions.{RefTimestamp, VectorOps, Winnow, TopK}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.functions._
 
 /** The SQL function surface ([[GraftExtensions]]) must reach the same
   * expressions as the Column API: every registered function is checked
-  * SQL-vs-Column on real data, constant parameters reject non-literal
-  * arguments at analysis time, and the `withExtensions` construction
-  * path (the `spark.sql.extensions` hook) registers the same list. */
+  * SQL-vs-Column on real data, no registered name replaces a Spark
+  * built-in, constant parameters reject non-literal arguments at
+  * analysis time, and the `withExtensions` construction path (the
+  * `spark.sql.extensions` hook) registers the same list. */
 class ExtensionsSpec extends SparkSpec {
 
   private lazy val registered: SparkSession = {
@@ -31,77 +33,6 @@ class ExtensionsSpec extends SparkSpec {
     val lsql = s.sql(
       "SELECT vec_l2sq_long(array(1L,2L), array(4L,6L)) AS l").head().getLong(0)
     assert(lsql == 9L + 16L)
-  }
-
-  test("kll sketch family via SQL == Column API == exact order statistic") {
-    val s = registered
-    import s.implicits._
-    // sized below compaction (n=300 < k=512) so the sketch is exact and
-    // its reads are arrival-order-independent — SQL == Column is then a
-    // strict equality, not a tolerance check (the compacting regime's
-    // bounds are KllSketchSpec's job).
-    val rows = (1 to 300).map(i => (i % 4, (i * 37 % 1000).toDouble))
-    val df = rows.toDF("g", "v")
-    df.createOrReplaceTempView("kllvals")
-    val sql = s.sql(
-      """SELECT kll_quantile(kll_merge_agg(sk), 0.5d) AS p50
-        |FROM (SELECT g, kll_sketch_agg(v, 512) AS sk FROM kllvals GROUP BY g)"""
-        .stripMargin).head().getDouble(0)
-    val api = df.groupBy("g")
-      .agg(graft.functions.KllSketch.kll_sketch_agg(col("v"), 512).as("sk"))
-      .agg(graft.functions.KllSketch.kll_merge_agg(col("sk")).as("sk"))
-      .select(graft.functions.KllSketch.kll_quantile(col("sk"), lit(0.5)))
-      .head().getDouble(0)
-    assert(sql == api)
-    val exact = rows.map(_._2).sorted.apply(149) // rank ceil(0.5*300) = 150
-    assert(api == exact)
-  }
-
-  test("theta sketch family via SQL == Column API == exact set arithmetic") {
-    val s = registered
-    import s.implicits._
-    // sized below capacity (300 distinct < k=512) so the sketches are
-    // exact sets and SQL == Column is strict equality against the true
-    // distinct/overlap counts (the estimating regime's bounds are
-    // ThetaSketchSpec's job).
-    val df = (1 to 900).map(i => (i % 2, (i % 300).toLong)).toDF("g", "u")
-    df.createOrReplaceTempView("thetakeys")
-    val sql = s.sql(
-      """SELECT theta_estimate(theta_union_agg(sk)) AS nd,
-        |       theta_intersect_estimate(min(sk), max(sk)) AS ni
-        |FROM (SELECT g, theta_sketch_agg(u, 512) AS sk
-        |      FROM thetakeys GROUP BY g)""".stripMargin).head()
-    import graft.functions.ThetaSketch.{theta_estimate, theta_intersect_estimate, theta_sketch_agg, theta_union_agg}
-    val api = df.groupBy("g")
-      .agg(theta_sketch_agg(col("u"), 512).as("sk"))
-      .agg(theta_union_agg(col("sk")).as("sku"),
-        min(col("sk")).as("a"), max(col("sk")).as("b"))
-      .select(
-        theta_estimate(col("sku")).as("nd"),
-        theta_intersect_estimate(col("a"), col("b")).as("ni"))
-      .head()
-    assert(sql == api)
-    // u = i%300 with 300 even means a residue's parity equals i's
-    // parity: group 0 holds exactly the 150 even residues, group 1 the
-    // 150 odd ones — union 300, overlap 0, both exact at this size.
-    assert(sql.getDouble(0) == 300.0)
-    assert(sql.getDouble(1) == 0.0)
-    // set DIFFERENCE completes the algebra: disjoint groups, so each
-    // group's a-not-b is its full 150; exact at this size, SQL == API
-    val diffSql = s.sql(
-      """SELECT theta_anotb_estimate(min(sk), max(sk)) AS ab,
-        |       theta_anotb_estimate(max(sk), min(sk)) AS ba
-        |FROM (SELECT g, theta_sketch_agg(u, 512) AS sk
-        |      FROM thetakeys GROUP BY g)""".stripMargin).head()
-    import graft.functions.ThetaSketch.theta_anotb_estimate
-    val diffApi = df.groupBy("g")
-      .agg(theta_sketch_agg(col("u"), 512).as("sk"))
-      .agg(min(col("sk")).as("a"), max(col("sk")).as("b"))
-      .select(theta_anotb_estimate(col("a"), col("b")).as("ab"),
-        theta_anotb_estimate(col("b"), col("a")).as("ba"))
-      .head()
-    assert(diffSql == diffApi)
-    assert(diffSql.getDouble(0) == 150.0 && diffSql.getDouble(1) == 150.0)
   }
 
   test("pq_adc via SQL == lookup arithmetic") {
@@ -262,6 +193,12 @@ class ExtensionsSpec extends SparkSpec {
       s.sql("SELECT winnow_fingerprint('abcdef', 4294967312)").collect()
     }
     assert(e2.getMessage.contains("Int-range"), e2.getMessage)
+  }
+
+  test("no graft SQL function shadows a Spark built-in") {
+    val shadowing = GraftExtensions.descriptors.map(_._1)
+      .filter(FunctionRegistry.builtin.functionExists)
+    assert(shadowing.isEmpty, s"graft would replace Spark built-ins: $shadowing")
   }
 
   test("DESCRIBE FUNCTION shows usage for registered functions") {

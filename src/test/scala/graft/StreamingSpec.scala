@@ -690,24 +690,23 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming KLL daily sketch ≡ batch per-(type,day) quantile estimates") {
-    import graft.functions.KllSketch.{kll_quantile, kll_sketch_agg}
     val stream = EventStream.kllDailyStream(EventStream.readEvents(spark, eventsDir))
     assert(stream.isStreaming)
     EventStream.runToMemory(stream, "kll_daily")
     // fixture groups sit far below k=256, so no compaction happens and
     // the estimates are EXACT order statistics — arrival-order
-    // independent, strict equality (the compacting regime's tolerance
-    // bounds are KllSketchSpec's job)
+    // independent, strict equality (the compacting regime is gated
+    // per query against the exact CDF)
     val streamed = spark.table("kll_daily").collect()
       .map(r => (r.getString(0), r.getDate(1).toLocalDate) ->
         ((r.getDouble(2), r.getDouble(3)))).toMap
     val batch = Sessions.events(spark, sf)
       .select(col("event_type"), to_date(col("ts")).as("day"), col("value"))
       .groupBy("event_type", "day")
-      .agg(kll_sketch_agg(col("value"), graft.ops.Sessions.KllK).as("sk"))
+      .agg(kll_sketch_agg_double(col("value"), Sessions.KllK).as("sk"))
       .select(col("event_type"), col("day"),
-        kll_quantile(col("sk"), lit(0.5)).as("p50"),
-        kll_quantile(col("sk"), lit(0.95)).as("p95"))
+        kll_sketch_get_quantile_double(col("sk"), lit(0.5)).as("p50"),
+        kll_sketch_get_quantile_double(col("sk"), lit(0.95)).as("p95"))
       .collect()
       .map(r => (r.getString(0), r.getDate(1).toLocalDate) ->
         ((r.getDouble(2), r.getDouble(3)))).toMap
@@ -716,56 +715,57 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming theta daily sketch ≡ batch blobs BYTE-FOR-BYTE; blobs intersect to retention") {
-    import graft.functions.ThetaSketch
-    import graft.functions.ThetaSketch.theta_sketch_agg
+    val s = spark
+    import s.implicits._
     val stream = EventStream.thetaDailyStream(EventStream.readEvents(spark, eventsDir))
     assert(stream.isStreaming)
     EventStream.runToMemory(stream, "theta_daily")
     val streamed = spark.table("theta_daily").collect()
       .map(r => r.getDate(0).toLocalDate ->
-        ((r.getDouble(1), r.getAs[Array[Byte]]("sk").toSeq))).toMap
+        ((r.getLong(1), r.getAs[Array[Byte]]("sk").toSeq))).toMap
     val batch = Sessions.events(spark, sf)
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .groupBy("day")
-      .agg(theta_sketch_agg(col("user_id"), graft.ops.Sessions.ThetaK).as("sk"))
+      .agg(theta_sketch_agg(col("user_id"), Sessions.ThetaLgNomEntries).as("sk"))
+      .select(col("day"), theta_sketch_estimate(col("sk")), col("sk"))
       .collect()
       .map(r => r.getDate(0).toLocalDate ->
-        ((ThetaSketch.deserialize(r.getAs[Array[Byte]]("sk")).estimate,
-          r.getAs[Array[Byte]]("sk").toSeq))).toMap
-    // KMV state is a pure set: incremental micro-batch folding and the
-    // one-pass batch build land on the SAME bytes, not just the same
-    // estimate — the property that lets streaming ingest feed the batch
-    // pass's content-fingerprinted sketch table.
+        ((r.getLong(1), r.getAs[Array[Byte]]("sk").toSeq))).toMap
+    // the sketch hashes with a fixed seed and compacts to an ordered
+    // form: incremental micro-batch folding and the batch build land on
+    // the SAME bytes, not just the same estimate — the property that
+    // lets streaming ingest feed the batch pass's content-fingerprinted
+    // sketch table.
     assert(streamed == batch,
       s"stream/batch theta mismatch on days ${
         (streamed.keySet ++ batch.keySet).filter(d => streamed.get(d) != batch.get(d)).take(3)}")
-    // and the streamed blobs answer retention: consecutive-day
-    // intersections match the oracle-checked batch query's exact column
-    // (k=1024 > the fixture's daily distinct — exact regime)
-    val exact = graft.ops.Sessions.eventsRetentionSketch(spark, sf).collect()
+    // and the streamed blobs answer retention and churn: consecutive-day
+    // intersections and differences match the oracle-checked batch
+    // queries' exact columns (1024 nominal entries > the fixture's daily
+    // distinct — exact regime)
+    val exact = Sessions.eventsRetentionSketch(spark, sf).collect()
       .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
-    // the set-difference dual: streamed blobs must also answer CHURN
-    // (the a_not_b lane) against the oracle-checked batch query
-    val churn = graft.ops.Sessions.eventsChurnSketch(spark, sf).collect()
+    val churn = Sessions.eventsChurnSketch(spark, sf).collect()
       .map(r => r.getDate(0).toLocalDate -> r.getLong(1)).toMap
-    val days = streamed.keySet.toSeq.sorted
-    days.sliding(2).foreach {
+    val pairs = streamed.keySet.toSeq.sorted.sliding(2).collect {
       case Seq(d1, d2) if java.time.temporal.ChronoUnit.DAYS.between(d1, d2) == 1 =>
-        val est = ThetaSketch.intersectEstimate(
-          streamed(d1)._2.toArray, streamed(d2)._2.toArray)
-        // a zero-retained day pair has no row in the batch query (its
-        // inner self-join drops it) — the exact value is then 0, and
-        // the blobs' intersection must agree
-        val want = exact.getOrElse(d1, 0L).toDouble
-        assert(est == want, s"streamed-blob retention $est != exact $want on $d1")
-        // churn: all-retained days drop from the batch query the same
-        // way → exact 0 (k=1024 > daily distinct, exact regime)
-        val estChurn = ThetaSketch.aNotBEstimate(
-          streamed(d1)._2.toArray, streamed(d2)._2.toArray)
-        val wantChurn = churn.getOrElse(d1, 0L).toDouble
-        assert(estChurn == wantChurn,
-          s"streamed-blob churn $estChurn != exact $wantChurn on $d1")
-      case _ => ()
+        (java.sql.Date.valueOf(d1), streamed(d1)._2.toArray, streamed(d2)._2.toArray)
+    }.toSeq
+    assert(pairs.nonEmpty, "fixture must have consecutive streamed days")
+    val est = pairs.toDF("day", "a", "b")
+      .select(col("day"),
+        theta_sketch_estimate(theta_intersection(col("a"), col("b"))),
+        theta_sketch_estimate(theta_difference(col("a"), col("b"))))
+      .collect()
+    est.foreach { r =>
+      val d = r.getDate(0).toLocalDate
+      // a zero-retained day pair has no row in the batch retention query
+      // (its inner self-join drops it), and an all-retained day none in
+      // the churn query — the exact value is then 0, and the blobs agree
+      assert(r.getLong(1) == exact.getOrElse(d, 0L),
+        s"streamed-blob retention ${r.getLong(1)} != exact ${exact.get(d)} on $d")
+      assert(r.getLong(2) == churn.getOrElse(d, 0L),
+        s"streamed-blob churn ${r.getLong(2)} != exact ${churn.get(d)} on $d")
     }
   }
 
