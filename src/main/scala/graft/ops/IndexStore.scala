@@ -42,8 +42,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * a half-written artifact; if two PROCESSES race one cold artifact,
   * the rename loser deletes its copy and reads the winner's (both
   * built the same deterministic result — a wasted job, never a wrong
-  * one). In-process races are already single-flighted by the callers'
-  * memo maps.
+  * one). In-process races are single-flighted by [[memo]].
   */
 object IndexStore {
 
@@ -185,6 +184,36 @@ object IndexStore {
         spark.read.parquet(destPath(spark, dir, table, name, r).toString)
       }
   }
+
+  /** A value memoized under its by-name build; evaluated at most once
+    * per cell (a lazy val is single-flight), OUTSIDE the map's own
+    * locking — so a build may itself consult [[memo]] for other keys
+    * (centroids → seeds → corpus count) without the recursive-update
+    * hazard of nesting `computeIfAbsent` on one map. A build that
+    * throws leaves the cell unset; the next caller retries. */
+  private final class Once(build: => Any) { lazy val value: Any = build }
+
+  private val memos = new java.util.concurrent.ConcurrentHashMap[(String, String), Once]()
+
+  /** The one process memo for per-snapshot index state: a value
+    * derived from `dir` (a corpus count, an embedding dim, a decoded
+    * artifact) under its value or artifact `name`, computed once per
+    * process. Keyed on the snapshot path, so it assumes — like every
+    * artifact here — that the data at `dir` does not change under a
+    * running process. */
+  private[graft] def memo[T](dir: String, name: String)(build: => T): T =
+    memos.computeIfAbsent((dir, name), _ => new Once(build)).value.asInstanceOf[T]
+
+  /** [[loadOrBuild]] decoded to a driver value (centroids, codebooks,
+    * stats), memoized per process on (dir, artifact name): the first
+    * caller loads — or builds and writes — the artifact, later callers
+    * get the decoded value without touching the store. */
+  private[graft] def loadMemo[T](spark: SparkSession, dir: String, table: String, name: String)(
+      build: => DataFrame)(decode: DataFrame => T): T =
+    memo(dir, name)(decode(loadOrBuild(spark, dir, table, name)(build)))
+
+  /** Test hook: forget every memoized value (a simulated fresh driver). */
+  private[graft] def clearMemos(): Unit = memos.clear()
 
   /** Retire artifact generations of superseded snapshots (r18). Every
     * regenerated snapshot gets a fresh fingerprint directory, so the

@@ -1,12 +1,23 @@
 package graft.ops
 
 import graft.functions.TopK.topk_by_score
+import graft.functions.VectorOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType}
 
 /** Similarity search over the `embeddings` table (vec_id,
   * embedding: array<float>, label).
+  *
+  * Every retrieval query is ONE [[AnnIndex]] value — FAISS
+  * index-factory style: a coarse stage ([[Blocked]] equi-join over all
+  * pairs, or an [[Ivf]] probe of the nearest cells) times a code
+  * ([[Exact]] vectors, [[Pq]], [[Sq8]], [[Bq]], [[ResPq]]), optionally
+  * label-filtered and served from a persisted index artifact. All
+  * lanes share one candidate stage, one shortlist → exact-rerank tail,
+  * one recall gate ([[recallGate]]) and one process memo
+  * ([[IndexStore.memo]]) for their trained state.
   *
   * `similarity_topk` is the exact baseline, in the scale-safe shape:
   * a BLOCKED equi-join (queries replicated across B neighbor blocks —
@@ -31,6 +42,12 @@ object Similarity {
 
   val K = 5
 
+  /** Centroids as (residue class, vector, norm), sorted by class. */
+  type Pivots = Array[(Long, Array[Double], Double)]
+
+  /** PQ codewords as (residue class, codeword on the grid), sorted by class. */
+  type Codebook = Array[(Int, Array[Long])]
+
   /** Neighbor blocks for the exact baseline. B only matters in the
     * SHUFFLE-join regime (query set too big to broadcast): there each
     * join task sees all queries x 1/B of the corpus, so B bounds the
@@ -48,34 +65,52 @@ object Similarity {
     * With the build side PINNED to broadcast(queries) (r16), B no
     * longer buys parallelism at all — it only multiplies the
     * broadcast, exactly the reasoning that cut PqBlocks 16→4. A
-    * same-machine A/B at sf0.1/32 (ProbeTopkBlocks16-style, warm):
+    * same-machine A/B at sf0.1/32 (warm):
     * B=16 0.75-0.91 s, B=8 0.82-0.84, B=4 0.72-0.74 — B=4 ties or
     * wins AND carries a 4x smaller broadcast, which is the term that
     * grows with the query set at 100 TB. */
   val Blocks = 4
 
+  /** Block count for the code lanes' blocked candidate join. The build
+    * side is PINNED to the broadcast query side, so blocks no longer
+    * bound per-task memory (the corpus side's parallelism comes from
+    * [[fanOut]]'s id-keyed exchange) — they only multiply the
+    * broadcast by the replication factor. 4 keeps the blocked-join
+    * structure (and a non-degenerate key for any future shuffle-regime
+    * flip) at 1/4 the LUT broadcast bytes of 16 blocks. */
+  val PqBlocks = 4
+
+  private def embeddings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/embeddings.parquet")
+
   private def normed(spark: SparkSession, dir: String): DataFrame =
-    normedOver(spark.read.parquet(s"$dir/embeddings.parquet"))
+    normedOver(embeddings(spark, dir))
 
   /** [[normed]] plus the `label` attribute column — the working shape
     * of the FILTERED retrieval family (attribute rides the index row
     * as one int; everything downstream of the filter is label-blind). */
   private def normedL(spark: SparkSession, dir: String): DataFrame =
-    normedLOver(spark.read.parquet(s"$dir/embeddings.parquet"))
+    normedLOver(embeddings(spark, dir))
+
+  /** Native array cast, not transform(cast): a higher-order function is
+    * codegen fallback and drops the whole widening projection out of
+    * WSCG; Cast on arrays is element-wise and fully codegen'd —
+    * identical values. */
+  private def vecCol: Column = col("embedding").cast(ArrayType(DoubleType))
 
   /** [[normedL]] over any embeddings-shaped frame — the entry the
     * index-maintenance paths (batch delta extend, streaming ingest)
     * use for vectors that are not (yet) part of a stored snapshot. */
   private[graft] def normedLOver(df: DataFrame): DataFrame =
-    df.select(col("vec_id"),
-        col("embedding")
-          // native array cast, not transform(cast): a higher-order
-          // function is codegen fallback and drops the whole widening
-          // projection out of WSCG; Cast on arrays is element-wise and
-          // fully codegen'd — identical values.
-          .cast(org.apache.spark.sql.types.ArrayType(DoubleType)).as("v"),
-        col("label"))
-      .withColumn("nrm", graft.functions.VectorOps.vec_norm(col("v")))
+    df.select(col("vec_id"), vecCol.as("v"), col("label"))
+      .withColumn("nrm", VectorOps.vec_norm(col("v")))
+
+  /** Normalize an embeddings-shaped frame (vec_id, embedding) to the
+    * (vec_id, v, nrm) working shape — the streaming entry for
+    * [[clusterAssignment]] and [[annServe]]. */
+  private[graft] def normedOver(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), vecCol.as("v"))
+      .withColumn("nrm", VectorOps.vec_norm(col("v")))
 
   /** Fan the corpus side of a similarity join out to at least the
     * cluster's parallelism.
@@ -97,16 +132,16 @@ object Similarity {
     * compute DOWNSTREAM of this scan.
     *
     * The split-count probe (`df.rdd.getNumPartitions`) physical-plans a
-    * throwaway copy of the corpus subplan, so it is memoized per corpus
-    * dir: repeat queries skip both the planning and the (cached, but
-    * thousands-of-splits at 100 TB) file-split enumeration. Every probed
-    * frame is narrow ops over the same `normed(dir)` scan, so one count
-    * per dir is exact. The memo key is `dir#table`, and `table` is a
-    * REQUIRED parameter composed here — when it was a caller-side
-    * suffix convention, a caller passing the bare dir for a different
-    * table silently inherited the embeddings scan's cached split count
-    * and the fan-out no-op'd: the single-core collapse this helper
-    * exists to prevent, with nothing to catch it. */
+    * throwaway copy of the corpus subplan, so it is memoized per
+    * scanned source: repeat queries skip both the planning and the
+    * (cached, but thousands-of-splits at 100 TB) file-split
+    * enumeration. The memo key is `dir#table`, and `table` is a
+    * REQUIRED parameter naming the scan the frame reads — the raw
+    * table, or an [[IndexStore]] artifact by its artifact name. A
+    * frame keyed under another scan's name inherits that scan's split
+    * count, and the fan-out silently no-ops (or fires) on the wrong
+    * evidence: the single-core collapse this helper exists to
+    * prevent, with nothing to catch it. */
   private val scanSplitsCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   private[graft] def fanOut(spark: SparkSession, dir: String, table: String,
@@ -117,6 +152,11 @@ object Similarity {
     else df.repartition(par, keys: _*)
   }
 
+  /** Bounded top-`k` per query of `score` over (query_id, neighbor_id,
+    * score) rows — the map-side [[graft.functions.TopK]] aggregate. */
+  private def nearest(df: DataFrame, score: String, k: Int): DataFrame =
+    df.groupBy("query_id").agg(topk_by_score(col(score), col("neighbor_id"), k).as("nn"))
+
   /** (query_id, nn: array<struct<id,score>>) → ranked output rows. */
   private def ranked(agg: DataFrame): DataFrame =
     agg.select(col("query_id"), posexplode(col("nn")).as(Seq("pos", "s")))
@@ -125,12 +165,15 @@ object Similarity {
         (col("pos") + 1).cast(IntegerType).as("rank"))
       .orderBy("query_id", "rank")
 
-  /** Exact cosine top-k per query vector (blocked join + bounded agg). */
-  def similarityTopk(spark: SparkSession, dir: String): DataFrame =
-    similarityTopk(spark, dir, Blocks)
+  /** Cosine of (va, na) against (vb, nb). nullif: a zero-norm vector
+    * would otherwise THROW under this default-ANSI runtime; null sims
+    * are skipped by the topk aggregate (TopKByScore.update's null
+    * guard), matching the oracle's NULL-propagating comparisons. */
+  private def cosine: Column =
+    Dedup.dot(col("va"), col("vb")) / nullif(col("na") * col("nb"), lit(0.0))
 
   /** Broadcast-regime ceiling for the exact baseline's query side.
-    * `similarityTopk` makes EVERY corpus vector a query, so the r16
+    * `similarity_topk` makes EVERY corpus vector a query, so the r16
     * unconditional broadcast(a) pin carried corpus × Blocks replicated
     * vectors — correct and measured-faster at fixture scale, but it
     * hard-fails on Spark's 8 GB broadcast ceiling the moment the query
@@ -147,36 +190,6 @@ object Similarity {
     * shared by the gate and its spec. */
   private[graft] def queryBroadcastBytes(rows: Long, dim: Int, blocks: Int): Long =
     rows * (dim * 8L + 32L) * blocks
-
-  private[graft] def similarityTopk(spark: SparkSession, dir: String,
-      blocks: Int): DataFrame = {
-    val n = normed(spark, dir)
-    val a = n.select(col("vec_id").as("query_id"), col("v").as("va"), col("nrm").as("na"))
-      .withColumn("blk", explode(typedLit((0 until blocks).toArray)))
-    val b = fanOut(spark, dir, "embeddings",
-      n.select(col("vec_id").as("neighbor_id"), col("v").as("vb"), col("nrm").as("nb"))
-        .withColumn("blk", pmod(hash(col("neighbor_id")), lit(blocks))),
-      col("blk"), col("neighbor_id"))
-    // Explicit build-side pin (r16): the heuristic happened to pick
-    // BuildLeft here, but the PQ/IVF variants showed one projection
-    // slimming the corpus side flips it to streaming the one-split
-    // query scan — pin the intended shape instead of relying on luck.
-    // Gated (r17): the pin only applies while the replicated query
-    // side fits [[MaxQueryBroadcastBytes]]; see the gate doc.
-    val fits = queryBroadcastBytes(corpusCount(spark, dir),
-      embeddingDim(spark, dir), blocks) <= MaxQueryBroadcastBytes
-    val build = if (fits) broadcast(a) else a
-    val pairs = build.join(b, "blk").filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        // nullif: a zero-norm vector would otherwise THROW under this
-        // default-ANSI runtime; null sims are skipped by the topk
-        // aggregate (TopKByScore.update's null guard), matching the
-        // oracle's NULL-propagating comparisons.
-        (Dedup.dot(col("va"), col("vb")) /
-          nullif(col("na") * col("nb"), lit(0.0))).as("sim"))
-    ranked(pairs.groupBy("query_id")
-      .agg(topk_by_score(col("sim"), col("neighbor_id"), K).as("nn")))
-  }
 
   val similarityTopkOracle: String =
     s"""WITH v AS (
@@ -223,14 +236,10 @@ object Similarity {
   val TargetClusterSize = 32
 
   /** Corpus row count, one metadata-scale count job per immutable
-    * snapshot dir (shared by the PQ shortlist budget and the cluster
+    * snapshot dir (shared by the shortlist budgets and the cluster
     * geometry). */
-  private val corpusCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private[graft] def corpusCount(spark: SparkSession, dir: String): Long =
-    corpusCountCache.computeIfAbsent(dir,
-      _ => spark.read.parquet(s"$dir/embeddings.parquet").count()).longValue()
+    IndexStore.memo(dir, "corpus_count")(embeddings(spark, dir).count())
 
   /** The scale law itself: k for a corpus of n vectors. Integer-exact
     * (one double ceil on n/32 — exact for any n below 2^53), so the
@@ -262,28 +271,87 @@ object Similarity {
     * measured recall band — roughly constant. */
   val ProbeFrac = 0.75
 
-  /** Conf override for [[ProbeFrac]] (`spark.graft.ann.probeFrac`):
-    * the IVF recall/cost dial, shared by every IVF-probed lane (flat
-    * IVF, IVFADC, IVFSQ, filtered/staged/residual variants). Default
-    * unchanged — the oracles and recall gates replay 0.75. Derivation
-    * note: the scanned corpus fraction ≈ probeFrac, so pick the
-    * smallest fraction whose recall@k clears the product floor on a
-    * held-out set; structured embeddings typically sit at 0.02–0.1
-    * where this fixture's near-random vectors need 0.75. */
+  /** Conf overrides — the recall/cost dials of every ANN lane, each
+    * defaulting to the constant the oracles and recall gates replay:
+    *  - `spark.graft.ann.probeFrac` ([[ProbeFrac]]): the IVF dial, shared
+    *    by every IVF-probed lane. The scanned corpus fraction ≈
+    *    probeFrac, so pick the smallest fraction whose recall@k clears
+    *    the product floor on a held-out set; structured embeddings
+    *    typically sit at 0.02–0.1 where this fixture's near-random
+    *    vectors need 0.75.
+    *  - `spark.graft.ann.shortlistFrac` / `spark.graft.ann.shortlistCap`
+    *    ([[PqShortlistFrac]] / [[PqShortlistMax]]): the budget of every
+    *    code-shortlist retrieval (flat PQ/SQ/BQ and the IVF composites).
+    *    Pick the smallest frac whose measured recall@k clears the
+    *    product's floor (structured embeddings typically reach PQ
+    *    recall ≥ 0.9 at 1-5% where this fixture needs 25%); the cap is
+    *    an executor-memory bound (16 bytes × cap per query buffer in
+    *    the TopK aggregate), not a quality dial. */
   val ProbeFracConf = "spark.graft.ann.probeFrac"
+  val ShortlistFracConf = "spark.graft.ann.shortlistFrac"
+  val ShortlistCapConf = "spark.graft.ann.shortlistCap"
 
-  private[graft] def probeFrac(spark: SparkSession): Double = {
-    val v = spark.conf.get(ProbeFracConf, ProbeFrac.toString).toDouble
-    require(v > 0.0 && v <= 1.0, s"$ProbeFracConf must be in (0,1], got $v")
-    v
+  /** ADC rerank budget as a corpus fraction — the recall/cost dial.
+    * A FIXED shortlist would silently degrade as the corpus grows
+    * (50 of 500 is 10%, 50 of 2000 is 2.5%); the fraction keeps the
+    * contract stable across snapshot sizes. 0.25 is tuned for THIS
+    * fixture's near-random 64-dim vectors (PQ's worst case — no
+    * cluster structure for the codebook to exploit); embeddings with
+    * real structure reach the same recall at far smaller budgets. */
+  val PqShortlistFrac = 0.25
+
+  /** Hard ceiling on the per-query shortlist (r16): the fractional
+    * contract cannot scale unbounded — the shortlist is a TopKBuffer
+    * of 16·k bytes allocated per query group in the aggregate, and
+    * `(n·frac).toInt` would silently saturate at Int.MaxValue on a
+    * multi-billion-row corpus. 1M entries = 16 MB per query buffer,
+    * already generous; past the cap, recall comes from a better
+    * codebook / larger M (the published IVF-PQ recipe), not from
+    * reranking a quarter of the corpus — which at that size is no
+    * longer "approximate" retrieval at all. */
+  val PqShortlistMax = 1000000
+
+  /** The three dials and the budget arithmetic over them. */
+  private[graft] final case class Dials(probeFrac: Double, shortlistFrac: Double,
+      shortlistCap: Int) {
+    def probes(cells: Int): Int = math.max(1, math.ceil(cells * probeFrac).toInt)
+
+    /** Flat-lane budget for an n-vector corpus: least(ceil(frac·n), cap). */
+    def shortlist(n: Long): Int =
+      math.min(math.ceil(n * shortlistFrac), shortlistCap.toDouble).toInt
+
+    /** IVF-composite budget: the shortlist fraction applied to the
+      * candidate pool the probe list actually admits (~probeFrac·N, not
+      * N — the flat budget over the full corpus would rerank a THIRD of
+      * the probed candidates and erase most of the composite's cost
+      * win), floored at [[K]] so the result is never starved below the
+      * output contract, capped like the flat path. Pure arithmetic
+      * shared with the oracle's `budget` CTE: one left-associated double
+      * product + ceil, identical IEEE steps in both engines. */
+    def ivfShortlist(n: Long): Int =
+      math.max(K, math.min(math.ceil(n * probeFrac * shortlistFrac),
+        shortlistCap.toDouble).toInt)
   }
 
-  private[graft] def ivfProbes(cells: Int): Int =
-    math.max(1, math.ceil(cells * ProbeFrac).toInt)
+  private def defaultDials = Dials(ProbeFrac, PqShortlistFrac, PqShortlistMax)
 
-  /** Session-dialed form (defaults reproduce [[ivfProbes]] exactly). */
-  private[graft] def ivfProbes(spark: SparkSession, cells: Int): Int =
-    math.max(1, math.ceil(cells * probeFrac(spark)).toInt)
+  /** The session's dials — the one place the three confs are read. */
+  private[graft] def dials(spark: SparkSession): Dials = {
+    val pf = spark.conf.get(ProbeFracConf, ProbeFrac.toString).toDouble
+    require(pf > 0.0 && pf <= 1.0, s"$ProbeFracConf must be in (0,1], got $pf")
+    val sf = spark.conf.get(ShortlistFracConf, PqShortlistFrac.toString).toDouble
+    require(sf > 0.0 && sf <= 1.0, s"$ShortlistFracConf must be in (0,1], got $sf")
+    val cap = spark.conf.get(ShortlistCapConf, PqShortlistMax.toString).toInt
+    require(cap > 0, s"$ShortlistCapConf must be positive, got $cap")
+    Dials(pf, sf, cap)
+  }
+
+  private[graft] def ivfProbes(cells: Int): Int = defaultDials.probes(cells)
+  private[graft] def ivfProbes(spark: SparkSession, cells: Int): Int = dials(spark).probes(cells)
+  private[graft] def shortlistFor(spark: SparkSession, n: Long): Int = dials(spark).shortlist(n)
+  private[graft] def ivfPqShortlist(n: Long): Int = defaultDials.ivfShortlist(n)
+  private[graft] def ivfPqShortlist(spark: SparkSession, n: Long): Int =
+    dials(spark).ivfShortlist(n)
 
   /** Seed pivots: the vector with the smallest vec_id in each of the
     * k residue classes — no RNG, stable across runs; driver-collected
@@ -292,47 +360,36 @@ object Similarity {
     * buffers per task (vec_id is unique, so the min_by tie rule never
     * fires) — the r16 window formulation sorted the full corpus at
     * k-way parallelism to pick the same k rows. */
-  private def seedPivots(n: DataFrame, cells: Int): Array[(Long, Array[Double], Double)] =
-    n.withColumn("cls", col("vec_id") % cells)
+  private def seedPivots(n: DataFrame, cells: Int): Pivots =
+    collectPivots(n.withColumn("cls", col("vec_id") % cells)
       .groupBy("cls")
       .agg(min_by(struct(col("v"), col("nrm")), col("vec_id")).as("s"))
-      .select(col("cls"), col("s.v"), col("s.nrm"))
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
-      .sortBy(_._1)
-
-  /** Seed pivots memoized per corpus snapshot (r16): the seed scan is
-    * a full-corpus aggregation pass + driver collect — index CONSTRUCTION
-    * under the [[pivotCache]] doctrine, which must not ride along with
-    * every embedding_cluster / dedup_semantic / streaming-assignment
-    * invocation. Same key discipline as the other index caches.
-    * Since r18 the in-memory memo is backed by a WRITTEN artifact
-    * ([[graft.ops.IndexStore]]): a fresh process loads the parquet
-    * instead of re-running the seed scan. */
-  private val seedCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), Array[(Long, Array[Double], Double)]]()
+      .select(col("cls"), col("s.v").as("v"), col("s.nrm").as("nrm")))
 
   /** Pivot array ⇄ artifact frame. Parquet round-trips the doubles
     * bit-exactly, and the collect re-sorts by class, so a loaded pivot
     * set is indistinguishable from a freshly built one. */
-  private def pivotsToDf(spark: SparkSession,
-      arr: Array[(Long, Array[Double], Double)]): DataFrame = {
+  private def pivotsToDf(spark: SparkSession, arr: Pivots): DataFrame = {
     import spark.implicits._
     arr.toSeq.map { case (c, v, nr) => (c, v.toSeq, nr) }.toDF("cls", "v", "nrm")
   }
 
-  private def collectPivots(df: DataFrame): Array[(Long, Array[Double], Double)] =
+  private def collectPivots(df: DataFrame): Pivots =
     df.select(col("cls"), col("v"), col("nrm")).collect()
       .map(r => (r.getLong(0), r.getSeq[Double](1).toArray, r.getDouble(2)))
       .sortBy(_._1)
 
-  private def seedPivotsCached(spark: SparkSession, dir: String)
-      : Array[(Long, Array[Double], Double)] = {
+  /** Seed centroids for a corpus snapshot — the index an embedding
+    * ingest stream assigns against. The seed scan is a full-corpus
+    * aggregation pass + driver collect: index CONSTRUCTION, which must
+    * not ride along with every embedding_cluster / dedup_semantic /
+    * streaming-assignment invocation, so it is a written artifact
+    * ([[graft.ops.IndexStore]]) memoized per process. */
+  private[graft] def seedPivotsFor(spark: SparkSession, dir: String): Pivots = {
     val cells = ivfCells(spark, dir)
-    seedCache.computeIfAbsent((dir, cells), _ =>
-      collectPivots(IndexStore.loadOrBuild(spark, dir, "embeddings", s"ivf_seeds_k$cells") {
-        pivotsToDf(spark, seedPivots(normed(spark, dir), cells))
-      }))
+    IndexStore.loadMemo(spark, dir, "embeddings", s"ivf_seeds_k$cells") {
+      pivotsToDf(spark, seedPivots(normed(spark, dir), cells))
+    }(collectPivots)
   }
 
   /** The per-cell cosine array over the whole centroid set as ONE
@@ -343,9 +400,8 @@ object Similarity {
     * [[graft.functions.VectorOps.CentroidSims]] holds the matrix as a
     * reference object — generated code constant-size in k, cell values
     * identical (same dot order, same zero-norm null guard). */
-  private def centroidSimsCol(seeds: Array[(Long, Array[Double], Double)]): Column =
-    graft.functions.VectorOps.vec_centroid_sims(col("v"), col("nrm"),
-      seeds.map(_._2), seeds.map(_._3))
+  private def centroidSimsCol(seeds: Pivots): Column =
+    VectorOps.vec_centroid_sims(col("v"), col("nrm"), seeds.map(_._2), seeds.map(_._3))
 
   /** Cell count past which assignment switches from the flat
     * O(k·dim)-per-vector scan to the two-level coarse-quantized form
@@ -390,17 +446,25 @@ object Similarity {
     * two-level coarse-quantized scan past it. Shared by the Lloyd
     * build and the assignment operators so every consumer flips to
     * the scale path together. */
-  private def withBestCell0(n: DataFrame,
-      seeds: Array[(Long, Array[Double], Double)]): DataFrame =
+  private def withBestCell0(n: DataFrame, seeds: Pivots): DataFrame =
     if (seeds.length < TwoLevelMinCells)
       n.withColumn("cellSims", centroidSimsCol(seeds))
         .withColumn("cell", expr("array_position(cellSims, array_max(cellSims)) - 1"))
     else
-      n.withColumn("tl", graft.functions.VectorOps.centroid_argmax_two_level(
+      n.withColumn("tl", VectorOps.centroid_argmax_two_level(
           col("v"), col("nrm"), seeds.map(_._2), seeds.map(_._3),
           twoLevelGroupSize(seeds.length), TwoLevelProbeGroups))
-        .withColumn("cell",
-          (col("tl.pos") - 1).cast(org.apache.spark.sql.types.LongType))
+        .withColumn("cell", (col("tl.pos") - 1).cast(LongType))
+
+  /** The probe list: each query's `nProbe` nearest cells, ranked by
+    * (sim desc, cell asc) over the full cellSims array (the query side
+    * is the bounded side, and nProbe = 0.75·k wants most cells ranked
+    * anyway), one (query_id, carried…, cell) row per probe. */
+  private def probeCells(q: DataFrame, pivots: Pivots, nProbe: Int, carry: Column*): DataFrame =
+    q.withColumn("cellSims", centroidSimsCol(pivots))
+      .select((col("vec_id").as("query_id") +: carry :+ explode(slice(expr(
+        "transform(array_sort(zip_with(cellSims, sequence(0, size(cellSims)-1), (s, i) -> struct(-s AS negs, i AS idx))), p -> p.idx)"),
+        1, nProbe)).as("cell")): _*)
 
   /** Fixed-point grid for the Lloyd means (r18, per ADVICE): centroid
     * components land on a 1e-6 grid via EXACT integer sums —
@@ -422,8 +486,7 @@ object Similarity {
     * centroid as the element-wise mean on the [[LloydGrid]] integer
     * grid, re-collect (metadata scale); empty cells keep their seed.
     * One extra pass over the corpus, done once at index build. */
-  private def refinedPivots(n: DataFrame,
-      seeds: Array[(Long, Array[Double], Double)]): Array[(Long, Array[Double], Double)] = {
+  private def refinedPivots(n: DataFrame, seeds: Pivots): Pivots = {
     val assigned = withBestCell0(n, seeds)
     val centroidRows =
       // cell IS NULL: a zero-norm vector's cellSims are all null
@@ -436,7 +499,7 @@ object Similarity {
       keepWhereNotNull(assigned, col("cell"), col("cell"), col("v"))
       .select(col("cell"), posexplode(col("v")).as(Seq("pos", "x")))
       .select(col("cell"), col("pos"),
-        round(col("x") * LloydGrid).cast(org.apache.spark.sql.types.LongType).as("xi"))
+        round(col("x") * LloydGrid).cast(LongType).as("xi"))
       .groupBy("cell", "pos")
       .agg((round(sum(col("xi")).cast(DoubleType) / count(lit(1))) / (LloydGrid.toDouble))
         .as("m"))
@@ -458,93 +521,25 @@ object Similarity {
     }
   }
 
-  /** Index-build factoring: the pivot array is built ONCE per (corpus
-    * dir, cell count) and shared by every subsequent `similarity_ann_ivf`
-    * / `similarity_ann_recall` invocation in the process — the build's
-    * two full corpus passes (seed scan + one Lloyd refinement) are index
-    * CONSTRUCTION, not query work, and at 100 TB must not ride along
-    * with each query. The cache key is the corpus path: an IVF index is
-    * valid for the immutable snapshot it was built from (rebuilds on a
-    * new path). Value size is k x dim doubles — metadata scale. Since
-    * r18 the refined centroids ARE persisted next to the data
-    * ([[graft.ops.IndexStore]], content-fingerprinted): a fresh
+  /** Index-build factoring: the refined pivot array is built ONCE per
+    * (corpus dir, cell count) and shared by every IVF lane in the
+    * process — the build's two full corpus passes (seed scan + one
+    * Lloyd refinement) are index CONSTRUCTION, not query work, and at
+    * 100 TB must not ride along with each query. An IVF index is valid
+    * for the immutable snapshot it was built from; since r18 the
+    * refined centroids ARE persisted next to the data
+    * ([[graft.ops.IndexStore]], content-fingerprinted), so a fresh
     * process loads the artifact instead of re-paying the seed scan +
-    * Lloyd pass. */
-  private val pivotCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), Array[(Long, Array[Double], Double)]]()
-
-  private[graft] def ivfPivots(spark: SparkSession, dir: String)
-      : Array[(Long, Array[Double], Double)] = {
+    * Lloyd pass. The artifact name carries the mean-grid parameter: the
+    * fingerprint keys on the SNAPSHOT, so a construction-semantics
+    * change (r18: round(avg,6) → exact integer-grid means) must rename
+    * the artifact or a warm process would load centroids the current
+    * oracle no longer replays. */
+  private[graft] def ivfPivots(spark: SparkSession, dir: String): Pivots = {
     val cells = ivfCells(spark, dir)
-    // The artifact name carries the mean-grid parameter: the content
-    // fingerprint keys on the SNAPSHOT, so a construction-semantics
-    // change (r18: round(avg,6) → exact integer-grid means) must
-    // rename the artifact or a warm process would load centroids the
-    // current oracle no longer replays.
-    pivotCache.computeIfAbsent((dir, cells), _ =>
-      collectPivots(IndexStore.loadOrBuild(spark, dir, "embeddings",
-          s"ivf_centroids_k${cells}_g$LloydGrid") {
-        pivotsToDf(spark, refinedPivots(normed(spark, dir), seedPivotsCached(spark, dir)))
-      }))
-  }
-
-  /** Approximate top-k: IVF with deterministically seeded,
-    * one-iteration-refined centroids. Returns the same schema as
-    * similarityTopk. */
-  def similarityAnnIvf(spark: SparkSession, dir: String): DataFrame =
-    similarityAnnIvf(spark, dir, ivfProbes(spark, ivfCells(spark, dir)))
-
-  private[graft] def similarityAnnIvf(spark: SparkSession, dir: String,
-      nProbe: Int): DataFrame = {
-    val n = normed(spark, dir)
-    val pivots = ivfPivots(spark, dir)
-    // Corpus-side assignment goes through the shared best-cell route
-    // (r18): flat argmax below [[TwoLevelMinCells]] — the
-    // oracle-replayed rule at every fixture k — and the two-level
-    // coarse-quantized scan past it, so the CORPUS pass (the side
-    // that is 100 TB) never flat-scans a 2¹⁷-centroid matrix per
-    // vector. The probe list below stays a full cellSims ranking —
-    // that runs per QUERY, the bounded side by assumption (and
-    // nProbe = 0.75·k wants most cells ranked anyway).
-    val assigned = fanOut(spark, dir, "embeddings",
-      withBestCell0(n, pivots).select(col("vec_id"), col("v"), col("nrm"), col("cell")),
-      col("cell"), col("vec_id"))
-    val withCells = n.withColumn("cellSims", centroidSimsCol(pivots))
-    // Probe list SLIMMED to id pairs (r17): the probe frame used to
-    // carry the full query vector on every (query, probed cell) row —
-    // nProbe-fold replication of the vectors through the broadcast
-    // (Q·nProbe·vecBytes; the derived geometry quadrupled it the
-    // moment k grew). Split into two map-side broadcast joins instead:
-    // the (query_id, cell) id pairs first (Q·nProbe·16 B), then the
-    // query vectors ONCE per query (Q·vecBytes) onto the matched
-    // pairs. At a bounded query batch against a 100 TB corpus both
-    // broadcasts stay trivially small while the corpus side streams.
-    val probeCells = withCells.select(col("vec_id").as("query_id"),
-      explode(slice(expr(
-        "transform(array_sort(zip_with(cellSims, sequence(0, size(cellSims)-1), (s, i) -> struct(-s AS negs, i AS idx))), p -> p.idx)"),
-        1, nProbe)).as("cell"))
-    val queryVecs = n.select(col("vec_id").as("query_id"),
-      col("v").as("va"), col("nrm").as("na"))
-    // Exact rerank within probed cells, bounded top-k aggregation — the
-    // same shape as the exact baseline, over nProbe/C of the pairs.
-    // broadcast(...): the same build-side pin as the PQ paths — left
-    // to the size heuristic, Catalyst broadcast the fanned-out corpus
-    // side and STREAMED the probe side (a one-split scan at fixture
-    // scale), single-coring the probed-pair stage; the query side is
-    // the bounded side BY ASSUMPTION (a production ANN serves a
-    // bounded query batch against a huge corpus — when the query set
-    // is the whole corpus, run similarityTopk, whose pin is gated on
-    // [[MaxQueryBroadcastBytes]] with a shuffle fallback).
-    val pairs = broadcast(probeCells).join(assigned, "cell")
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(queryVecs), "query_id")
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        // nullif: the default-ANSI zero-norm guard, same as the exact
-        // path — null sims are skipped by the topk aggregate.
-        (Dedup.dot(col("va"), col("v")) /
-          nullif(col("na") * col("nrm"), lit(0.0))).as("sim"))
-    ranked(pairs.groupBy("query_id")
-      .agg(topk_by_score(col("sim"), col("neighbor_id"), K).as("nn")))
+    IndexStore.loadMemo(spark, dir, "embeddings", s"ivf_centroids_k${cells}_g$LloydGrid") {
+      pivotsToDf(spark, refinedPivots(normed(spark, dir), seedPivotsFor(spark, dir)))
+    }(collectPivots)
   }
 
   /** Driver-visible ANN quality gate: recall@K of the IVF result against
@@ -554,13 +549,6 @@ object Similarity {
     * [[ProbeFrac]]-derived probe count across sf0.001/0.01/0.1). */
   val AnnRecallFloor = 0.9
 
-  /** Exact-baseline top-k pairs, built ONCE per (corpus dir, K) and
-    * persisted — the same build-once factoring as [[pivotCache]]: the
-    * exact O(N^2) pass is ground-truth CONSTRUCTION for an immutable
-    * corpus snapshot, not per-query work, and must not ride along with
-    * every recall evaluation. Persisted size is queries x K id pairs —
-    * id-scale, fine to hold distributed at 100 TB (and a real
-    * deployment persists it next to the index it validates). */
   /** Most corpora a session holds ground truth for at once. Each entry
     * is queries x K id pairs (id-scale), but a long-lived session
     * sweeping MANY snapshot dirs must not accumulate storage blocks
@@ -568,17 +556,24 @@ object Similarity {
     * entry is unpersisted and dropped (rebuilt on next touch). */
   private val MaxExactPairCorpora = 4
 
-  /** Access-ordered LRU. The monitor guards MAP MUTATION only — the
-    * O(N²) exact-baseline build runs OUTSIDE it, so a cold build for one
-    * corpus never blocks cache hits (or concurrent builds) for others.
-    * Two threads racing the same cold key both build; the loser
-    * unpersists its copy and adopts the winner's — a wasted job, never a
-    * wrong result or a leaked storage block. Keyed by SESSION as well
-    * as corpus (r18, per ADVICE): a persisted DataFrame is bound to
-    * the SparkSession that planned it, and a dir-only key in a
+  /** Exact-baseline top-k pairs, built ONCE per (corpus dir, K) and
+    * persisted: the exact O(N^2) pass is ground-truth CONSTRUCTION for
+    * an immutable corpus snapshot, not per-query work, and must not
+    * ride along with every recall evaluation. Persisted size is
+    * queries x K id pairs — id-scale.
+    *
+    * Kept apart from [[IndexStore.memo]] because its value is a
+    * session-bound persisted DataFrame: an access-ordered LRU keyed by
+    * SESSION as well as corpus (r18, per ADVICE — a dir-only key in a
     * multi-session process could hand a frame of a STOPPED session to
-    * a live caller. Eviction is logged — a silently-degraded cache is
-    * the failure mode the log line makes observable. */
+    * a live caller), bounded at [[MaxExactPairCorpora]], unpersisting
+    * on eviction. The monitor guards MAP MUTATION only — the O(N²)
+    * build runs OUTSIDE it, so a cold build for one corpus never blocks
+    * cache hits (or concurrent builds) for others. Two threads racing
+    * the same cold key both build; the loser unpersists its copy and
+    * adopts the winner's — a wasted job, never a wrong result or a
+    * leaked storage block. Eviction is logged — a silently-degraded
+    * cache is the failure mode the log line makes observable. */
   private val exactPairsCache =
     new java.util.LinkedHashMap[(SparkSession, String, Int), DataFrame](8, 0.75f, true) {
       override def removeEldestEntry(
@@ -603,7 +598,7 @@ object Similarity {
     // the engine — since r18 it is a written artifact too (id-pair
     // scale on disk), so only the FIRST process over a snapshot pays it.
     val df = IndexStore.loadOrBuild(spark, dir, "embeddings", s"exact_topk_k$K") {
-        similarityTopk(spark, dir).select(col("query_id"), col("neighbor_id"))
+        ExactTopk.run(spark, dir).select(col("query_id"), col("neighbor_id"))
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     df.count() // materialize now so every later recall check is a cache read
     exactPairsCache.synchronized {
@@ -612,19 +607,6 @@ object Similarity {
       else { exactPairsCache.put(key, df); df }
     }
   }
-
-  def similarityAnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = exactTopkPairs(spark, dir)
-    val ann = similarityAnnIvf(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val hit = ann.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= AnnRecallFloor).as("recall_ok"),
-        lit(AnnRecallFloor).as("floor"))
-  }
-
-  val annRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($AnnRecallFloor AS DOUBLE) AS floor"
 
   /** Full value oracle for `similarity_ann_ivf` (r17). The IVF result
     * is APPROXIMATE relative to exact top-k (that contract is what the
@@ -734,7 +716,7 @@ object Similarity {
     * (sim desc, cls asc) = first occurrence of the max over
     * class-sorted seeds, mirrored in the oracle's row_number. */
   def embeddingCluster(spark: SparkSession, dir: String): DataFrame =
-    clusterAssignment(normed(spark, dir), seedPivotsCached(spark, dir))
+    clusterAssignment(normed(spark, dir), seedPivotsFor(spark, dir))
       .orderBy("vec_id")
 
   /** The assignment projection over any (vec_id, v, nrm) frame —
@@ -743,8 +725,7 @@ object Similarity {
     * batch oracle that value-checks `embedding_cluster` pins the
     * streaming assignment arithmetic too. Centroids are plan
     * literals: works identically on a batch or micro-batch plan. */
-  private[graft] def clusterAssignment(n: DataFrame,
-      seeds: Array[(Long, Array[Double], Double)]): DataFrame =
+  private[graft] def clusterAssignment(n: DataFrame, seeds: Pivots): DataFrame =
     assignedCells(n, seeds)
       .select(col("vec_id"), col("cluster_id"),
         round(col("best_sim"), 6).as("sim"))
@@ -760,8 +741,7 @@ object Similarity {
     * contract-undefined but must not throw). Past the threshold the
     * [[withBestCell0]] two-level scan applies the same tie-break over
     * the probed candidate set. */
-  private def assignedCells(n: DataFrame,
-      seeds: Array[(Long, Array[Double], Double)]): DataFrame = {
+  private def assignedCells(n: DataFrame, seeds: Pivots): DataFrame = {
     val clsLit = typedLit(seeds.map(_._1).toSeq)
     val withCell = withBestCell0(n, seeds)
     val best =
@@ -772,26 +752,6 @@ object Similarity {
     best.withColumn("cluster_id",
       element_at(clsLit, (col("cell") + 1).cast(IntegerType)))
   }
-
-  /** Normalize an embeddings-shaped frame (vec_id, embedding) to the
-    * (vec_id, v, nrm) working shape — the streaming entry for
-    * [[clusterAssignment]]; the batch path reads the same projection
-    * via [[normed]]. */
-  private[graft] def normedOver(df: DataFrame): DataFrame =
-    df.select(col("vec_id"),
-        col("embedding")
-          // native array cast, not transform(cast): a higher-order
-          // function is codegen fallback and drops the whole widening
-          // projection out of WSCG; Cast on arrays is element-wise and
-          // fully codegen'd — identical values.
-          .cast(org.apache.spark.sql.types.ArrayType(DoubleType)).as("v"))
-      .withColumn("nrm", graft.functions.VectorOps.vec_norm(col("v")))
-
-  /** Seed centroids for a reference corpus, batch-computed (metadata
-    * scale) — the index an embedding ingest stream assigns against. */
-  private[graft] def seedPivotsFor(spark: SparkSession, dir: String)
-      : Array[(Long, Array[Double], Double)] =
-    seedPivotsCached(spark, dir)
 
   val embeddingClusterOracle: String =
     s"""WITH v AS (
@@ -856,12 +816,9 @@ object Similarity {
     * whole assignment pipeline and the count aggregation re-ran per
     * side; the literal map keeps the r18 plan shape and adds one
     * map-side expression. */
-  private val subKCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[Long, Long]]()
-
   private[graft] def semanticSubK(spark: SparkSession, dir: String): Map[Long, Long] =
-    subKCache.computeIfAbsent(dir, _ =>
-      assignedCells(normed(spark, dir), seedPivotsCached(spark, dir))
+    IndexStore.memo(dir, "semantic_subk")(
+      assignedCells(normed(spark, dir), seedPivotsFor(spark, dir))
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("n"))
         .where(col("n") > SemSplitBound)
@@ -916,7 +873,7 @@ object Similarity {
     * shuffles whenever clusters produce more pairs than rows. */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame = {
     val n = normed(spark, dir)
-    val seeds = seedPivotsCached(spark, dir)
+    val seeds = seedPivotsFor(spark, dir)
     val asg = semanticCells(fanOut(spark, dir, "embeddings",
       assignedCells(n, seeds)
         .select(col("vec_id"), col("cluster_id"), col("v"), col("nrm")),
@@ -998,17 +955,11 @@ object Similarity {
   val PqDims = 8
   val PqCodewords = 16
 
-  /** Embedding dim per corpus snapshot — one head-row probe, memoized
-    * like [[pivotCache]] (the dim is a property of the immutable
-    * snapshot). */
-  private val dimCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
   /** Embedding dimension of a corpus snapshot: one head-row probe,
     * memoized (shared by the PQ geometry and the broadcast gate). */
   private[graft] def embeddingDim(spark: SparkSession, dir: String): Int =
-    dimCache.computeIfAbsent(dir, _ =>
-      spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(size(col("embedding"))).head().getInt(0)).intValue()
+    IndexStore.memo(dir, "embedding_dim")(
+      embeddings(spark, dir).select(size(col("embedding"))).head().getInt(0))
 
   /** Subspace width for this corpus: dim / [[PqM]], failing loudly on
     * a non-divisible embedding dimension rather than silently
@@ -1029,86 +980,31 @@ object Similarity {
     * uses exact decimal moments). */
   val PqScale = 1000
 
-  /** ADC rerank budget as a corpus fraction — the recall/cost dial.
-    * A FIXED shortlist would silently degrade as the corpus grows
-    * (50 of 500 is 10%, 50 of 2000 is 2.5%); the fraction keeps the
-    * contract stable across snapshot sizes. 0.25 is tuned for THIS
-    * fixture's near-random 64-dim vectors (PQ's worst case — no
-    * cluster structure for the codebook to exploit); embeddings with
-    * real structure reach the same recall at far smaller budgets. */
-  val PqShortlistFrac = 0.25
+  /** round(v·[[PqScale]]) over the double-cast vector `v` — the grid
+    * view every code lane trains, encodes and scores on. vec_grid, not
+    * transform(round(cast).cast): bit-identical values (spec-pinned —
+    * the persisted artifacts derive from them) with the projection kept
+    * inside whole-stage codegen (a higher-order function is codegen
+    * fallback). */
+  private def vqCol: Column = VectorOps.vec_grid(col("v"), PqScale)
 
-  /** Hard ceiling on the per-query shortlist (r16): the fractional
-    * contract cannot scale unbounded — the shortlist is a TopKBuffer
-    * of 16·k bytes allocated per query group in the aggregate, and
-    * `(n·frac).toInt` would silently saturate at Int.MaxValue on a
-    * multi-billion-row corpus. 1M entries = 16 MB per query buffer,
-    * already generous; past the cap, recall comes from a better
-    * codebook / larger M (the published IVF-PQ recipe), not from
-    * reranking a quarter of the corpus — which at that size is no
-    * longer "approximate" retrieval at all. */
-  val PqShortlistMax = 1000000
-
-  /** Conf overrides for the shortlist budget
-    * (`spark.graft.ann.shortlistFrac` / `spark.graft.ann.shortlistCap`):
-    * the recall/cost dial of every code-shortlist retrieval (flat PQ,
-    * SQ, residual IVFADC). Defaults unchanged — the oracles and recall
-    * gates replay 0.25 / 1M. Derivation note: pick the smallest frac
-    * whose measured recall@k clears the product's floor on a held-out
-    * query set (structured embeddings typically reach PQ recall ≥ 0.9
-    * at 1-5% where this fixture's near-random vectors need 25%); the
-    * cap is an executor-memory bound (16 bytes × cap per query buffer
-    * in the TopK aggregate), not a quality dial — size it to the
-    * memory you can give one aggregation buffer. */
-  val ShortlistFracConf = "spark.graft.ann.shortlistFrac"
-  val ShortlistCapConf = "spark.graft.ann.shortlistCap"
-
-  private[graft] def shortlistFrac(spark: SparkSession): Double = {
-    val v = spark.conf.get(ShortlistFracConf, PqShortlistFrac.toString).toDouble
-    require(v > 0.0 && v <= 1.0, s"$ShortlistFracConf must be in (0,1], got $v")
-    v
-  }
-
-  private[graft] def shortlistCap(spark: SparkSession): Int = {
-    val v = spark.conf.get(ShortlistCapConf, PqShortlistMax.toString).toInt
-    require(v > 0, s"$ShortlistCapConf must be positive, got $v")
-    v
-  }
-
-  /** The shortlist budget for an n-vector corpus under the session's
-    * dials: least(ceil(frac·n), cap). */
-  private[graft] def shortlistFor(spark: SparkSession, n: Long): Int =
-    math.min(math.ceil(n * shortlistFrac(spark)),
-      shortlistCap(spark).toDouble).toInt
-
-  /** Quantized integer view of the corpus: round(x·[[PqScale]]) per
-    * component, as array<long>. */
+  /** Quantized integer view of the corpus: (vec_id, vq). */
   private def quantized(spark: SparkSession, dir: String): DataFrame =
-    // vec_grid, not transform(round(cast).cast): bit-identical values
-    // (spec-pinned — the persisted artifacts derive from them) with
-    // the projection kept inside whole-stage codegen (a higher-order
-    // function is codegen fallback).
-    spark.read.parquet(s"$dir/embeddings.parquet").select(col("vec_id"),
-      graft.functions.VectorOps.vec_grid(
-        col("embedding").cast(org.apache.spark.sql.types.ArrayType(DoubleType)),
-        PqScale).as("vq"))
+    embeddings(spark, dir).select(col("vec_id"), VectorOps.vec_grid(vecCol, PqScale).as("vq"))
 
-  /** PQ seed codebook: the quantized vectors with the smallest vec_id
-    * in each of [[PqCodewords]] residue classes (same RNG-free scheme
-    * as [[seedPivots]]), keyed by their RESIDUE CLASS — codewords are
-    * (cls, vector) pairs throughout, and codes pack cls, never the
-    * positional index in this array. The two coincide only when every
-    * residue class is inhabited (the refinedPivots trap); a corpus
-    * with fewer than PqCodewords vectors or sparse vec_id residues
-    * must still agree with the oracle's `cls AS j`. Driver-collected —
-    * ≤ PqCodewords × dim longs, metadata scale. */
-  private def pqSeeds(spark: SparkSession, dir: String): Array[(Int, Array[Long])] =
-    pqSeedsOver(quantized(spark, dir))
-
-  /** Seed selection over ANY (vec_id, vq) grid frame — shared by the
+  /** PQ seed codebook over ANY (vec_id, vq) grid frame — shared by the
     * raw-vector codebook and the residual codebook (r18), which train
-    * with identical machinery over different grid views. */
-  private def pqSeedsOver(q: DataFrame): Array[(Int, Array[Long])] =
+    * with identical machinery over different grid views: the vectors
+    * with the smallest vec_id in each of [[PqCodewords]] residue
+    * classes (same RNG-free scheme as [[seedPivots]]), keyed by their
+    * RESIDUE CLASS — codewords are (cls, vector) pairs throughout, and
+    * codes pack cls, never the positional index in this array. The two
+    * coincide only when every residue class is inhabited (the
+    * refinedPivots trap); a corpus with fewer than PqCodewords vectors
+    * or sparse vec_id residues must still agree with the oracle's
+    * `cls AS j`. Driver-collected — ≤ PqCodewords × dim longs, metadata
+    * scale. */
+  private def pqSeedsOver(q: DataFrame): Codebook =
     q.withColumn("cls", col("vec_id") % PqCodewords)
       .groupBy("cls")
       .agg(min_by(col("vq"), col("vec_id")).as("vq"))
@@ -1127,20 +1023,12 @@ object Similarity {
     * seed components. One extra corpus pass, done once at index
     * build; the groupBy output is PqM × PqCodewords × PqDims rows —
     * metadata scale, the comment-audited collect. */
-  private def pqRefine(spark: SparkSession, dir: String,
-      seeds: Array[(Int, Array[Long])]): Array[(Int, Array[Long])] =
-    pqRefineOver(quantized(spark, dir), pqSubDims(spark, dir), seeds)
-
-  /** The Lloyd step over ANY (vec_id, vq) grid frame (see
-    * [[pqSeedsOver]]). */
-  private def pqRefineOver(q: DataFrame, dims: Int,
-      seeds: Array[(Int, Array[Long])]): Array[(Int, Array[Long])] = {
+  private def pqRefineOver(q: DataFrame, dims: Int, seeds: Codebook): Codebook = {
     // One fused argmin pass (r17): the per-candidate struct-min
     // composition is now [[graft.functions.VectorOps.PqCodeArgmin]] —
     // same (d, smallest-class) rule, constant-size plan/codegen.
     val assigned = q
-      .withColumn("pc", graft.functions.VectorOps.pq_code_argmin(col("vq"),
-        seeds.map(_._1), seeds.map(_._2), PqM, dims))
+      .withColumn("pc", pqArgmin(col("vq"), seeds, dims))
     val stacked = assigned.select(explode(array((0 until PqM).map(s =>
       struct(lit(s).as("s"), element_at(col("pc.codes"), s + 1).as("j"),
         slice(col("vq"), s * dims + 1, dims).as("sub"))): _*)).as("e"))
@@ -1150,7 +1038,7 @@ object Similarity {
       .agg(sum(col("x")).as("sx"), count(lit(1)).as("cn"))
       .select(col("s"), col("j"), col("pos"),
         round(col("sx").cast(DoubleType) / col("cn"))
-          .cast(org.apache.spark.sql.types.LongType).as("m"))
+          .cast(LongType).as("m"))
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getLong(3)).toMap
     seeds.map { case (cls, seed) =>
@@ -1161,54 +1049,49 @@ object Similarity {
     }
   }
 
+  /** Codebook ⇄ artifact frame: (cls, cw) rows, longs round-trip
+    * parquet exactly; the collect re-sorts by class. */
+  private def codebookDf(spark: SparkSession, cb: Codebook): DataFrame = {
+    import spark.implicits._
+    cb.toSeq.map { case (cls, cw) => (cls, cw.toSeq) }.toDF("cls", "cw")
+  }
+
+  private def collectCodebook(df: DataFrame): Codebook =
+    df.select(col("cls"), col("cw")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
+      .sortBy(_._1)
+
   /** Trained PQ codebook (seeds + one Lloyd step) as (residue class,
-    * codeword) pairs sorted by class, cached per corpus snapshot like
-    * [[pivotCache]] — and since r18 persisted through
-    * [[graft.ops.IndexStore]] (artifact name carries the PQ geometry,
-    * so a constants change invalidates rather than misreads; longs
-    * round-trip parquet exactly). */
-  private val pqCodebookCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Int, Array[Long])]]()
+    * codeword) pairs sorted by class — a persisted
+    * [[graft.ops.IndexStore]] artifact memoized per process (artifact
+    * name carries the PQ geometry, so a constants change invalidates
+    * rather than misreads). */
+  private[graft] def pqCodebook(spark: SparkSession, dir: String): Codebook =
+    IndexStore.loadMemo(spark, dir, "embeddings",
+        s"pq_codebook_m${PqM}_c${PqCodewords}_s$PqScale") {
+      val q = quantized(spark, dir)
+      codebookDf(spark, pqRefineOver(q, pqSubDims(spark, dir), pqSeedsOver(q)))
+    }(collectCodebook)
 
-  private[graft] def pqCodebook(spark: SparkSession, dir: String): Array[(Int, Array[Long])] =
-    pqCodebookCache.computeIfAbsent(dir, _ => {
-      val df = IndexStore.loadOrBuild(spark, dir, "embeddings",
-          s"pq_codebook_m${PqM}_c${PqCodewords}_s$PqScale") {
-        import spark.implicits._
-        pqRefine(spark, dir, pqSeeds(spark, dir))
-          .toSeq.map { case (cls, cw) => (cls, cw.toSeq) }.toDF("cls", "cw")
-      }
-      df.select(col("cls"), col("cw")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1)
-    })
-
-  /** (vec_id, vq, codes: array<int>, pq_code, distortion): per-subspace
-    * argmin codeword (tie-break smallest class), the packed
-    * 4-bit-per-subspace code, and total quantization distortion. ONE
-    * fused map-side expression (r17,
+  /** Per-subspace argmin codeword (tie-break smallest class), the
+    * packed 4-bit-per-subspace code, and total quantization distortion
+    * of a grid vector, as ONE fused map-side expression (r17,
     * [[graft.functions.VectorOps.PqCodeArgmin]]): the r16 composition
     * built m×16 `vec_l2sq_long` candidates into one projection — the
     * stage fell out of whole-stage codegen and every codeword rode the
     * plan as a separate literal; the codebook is now a reference
     * object and the generated code is constant-size. Zero shuffle. */
-  private def pqCoded(spark: SparkSession, dir: String): DataFrame = {
-    val cb = pqCodebook(spark, dir)
-    val dims = pqSubDims(spark, dir)
-    quantized(spark, dir)
-      .withColumn("pc", graft.functions.VectorOps.pq_code_argmin(col("vq"),
-        cb.map(_._1), cb.map(_._2), PqM, dims))
-      .select(col("vec_id"), col("vq"), col("pc.codes").as("codes"),
-        col("pc.pq_code").as("pq_code"), col("pc.distortion").as("distortion"))
-  }
+  private def pqArgmin(vq: Column, cb: Codebook, dims: Int): Column =
+    VectorOps.pq_code_argmin(vq, cb.map(_._1), cb.map(_._2), PqM, dims)
 
   /** `embedding_pq`: the PQ encode step — every vector's packed code
     * plus its quantization distortion (the index-quality signal).
     * Value-checked against the oracle because codebook, grid, and
     * argmin are all integer-exact and SQL-expressible. */
   def embeddingPq(spark: SparkSession, dir: String): DataFrame =
-    pqCoded(spark, dir)
-      .select(col("vec_id"), col("pq_code"), col("distortion"))
+    quantized(spark, dir)
+      .withColumn("pc", pqArgmin(col("vq"), pqCodebook(spark, dir), pqSubDims(spark, dir)))
+      .select(col("vec_id"), col("pc.pq_code").as("pq_code"), col("pc.distortion").as("distortion"))
       .orderBy("vec_id")
 
   val embeddingPqOracle: String =
@@ -1266,170 +1149,13 @@ object Similarity {
        |FROM best WHERE rk = 1
        |GROUP BY vec_id ORDER BY vec_id""".stripMargin
 
-  /** `similarity_pq_topk`: asymmetric-distance (ADC) retrieval — the
-    * query keeps its exact quantized vector and precomputes its
-    * per-subspace distance TABLE to every codeword (textbook ADC), so
-    * each of the O(N·queries) candidate pairs costs M table lookups +
-    * adds; the shortlist of the closest ceil([[PqShortlistFrac]]·N)
-    * codes per query is exact-reranked on the true float vectors, and
-    * the final top-[[K]] comes out in [[similarityTopk]]'s schema.
-    * Approximate relative to exact top-k — the oracle-visible
-    * `similarity_pq_recall` row prices that gap — and since r17 also
-    * value-checked end-to-end ([[similarityPqTopkOracle]]): every
-    * stage is deterministic, integer-exact through the shortlist.
-    *
-    * 100 TB shape: the ADC join carries (id, 8 codes) per corpus row —
-    * the whole point of PQ: the O(N·queries) candidate stage streams
-    * 4-byte codes, not 256-byte vectors (and since r16, scores them at
-    * table-lookup cost, not dim-wide L2 cost); only the shortlist
-    * (queries × R ids) rejoins the true vectors for rerank, and both
-    * rerank joins are id-keyed equi-joins AQE can broadcast when the
-    * query set is bounded. */
-  def similarityPqTopk(spark: SparkSession, dir: String): DataFrame =
-    pqRetrieve(spark, dir, lutScoring = true)
-
-  /** Reconstruct-then-L2 reference formulation of the ADC stage —
-    * mathematically identical to the LUT scoring (the integer L2 over
-    * a concatenated reconstruction IS the sum of its per-subspace
-    * table entries), kept only so a spec can pin the two outputs
-    * row-for-row; the production path is the LUT. */
-  private[graft] def similarityPqTopkRecon(spark: SparkSession, dir: String): DataFrame =
-    pqRetrieve(spark, dir, lutScoring = false)
-
-  private def pqRetrieve(spark: SparkSession, dir: String,
-      lutScoring: Boolean): DataFrame = {
-    // Corpus count for the shortlist budget: one metadata-scale count
-    // job per corpus snapshot, memoized like the codebook.
-    val n = corpusCount(spark, dir)
-    val shortlist = shortlistFor(spark, n)
-    rerankShortlist(spark, dir, pqAdcStage(spark, dir, lutScoring), shortlist)
-  }
-
-  /** Shared tail of every code-shortlist retrieval (flat PQ, SQ):
-    * bounded top-`shortlist` per query over the ADC candidates'
-    * `negd`, then the exact rerank on the true vectors — two id-keyed
-    * equi-joins — into [[similarityTopk]]'s ranked output schema. */
-  private def rerankShortlist(spark: SparkSession, dir: String, adc: DataFrame,
-      shortlist: Int): DataFrame = {
-    val short = adc.groupBy("query_id")
-      .agg(topk_by_score(col("negd"), col("neighbor_id"), shortlist).as("nn"))
-      .select(col("query_id"), explode(col("nn.id")).as("neighbor_id"))
-    // Exact rerank on the true vectors: two id-keyed equi-joins.
-    val nv = normed(spark, dir)
-    val reranked = short
-      .join(nv.select(col("vec_id").as("neighbor_id"), col("v").as("vb"), col("nrm").as("nb")),
-        "neighbor_id")
-      .join(nv.select(col("vec_id").as("query_id"), col("v").as("vqr"), col("nrm").as("nq")),
-        "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        // nullif: a zero-norm vector can reach the shortlist (the ADC
-        // stage over integer codes has no division to stop it) — the
-        // default-ANSI guard, same as every cosine site.
-        (Dedup.dot(col("vqr"), col("vb")) /
-          nullif(col("nq") * col("nb"), lit(0.0))).as("sim"))
-    ranked(reranked.groupBy("query_id")
-      .agg(topk_by_score(col("sim"), col("neighbor_id"), K).as("nn")))
-  }
-
-  /** The O(N·queries) ADC candidate stage alone: (query_id,
-    * neighbor_id, negd). Package-private so probes can price it
-    * without the shortlist/rerank stages. */
-  /** Block count for the PQ candidate join. The build side is PINNED
-    * to the broadcast query side, so blocks no longer bound per-task
-    * memory (the corpus side's parallelism comes from [[fanOut]]'s
-    * id-keyed exchange) — they only multiply the broadcast by the
-    * replication factor. 4 keeps the blocked-join structure (and a
-    * non-degenerate key for any future shuffle-regime flip) at 1/4
-    * the LUT broadcast bytes of [[Blocks]]=16. */
-  val PqBlocks = 4
-
-  private[graft] def pqAdcStage(spark: SparkSession, dir: String,
-      lutScoring: Boolean): DataFrame = {
-    val coded = pqCoded(spark, dir)
-    val cb = pqCodebook(spark, dir)
-    val dims = pqSubDims(spark, dir)
-    // Corpus side of the candidate stage: (id, M codes) — the whole
-    // point of PQ: it streams 4-byte codes, never vectors.
-    val b = fanOut(spark, dir, "embeddings",
-      coded.select(col("vec_id").as("neighbor_id"), col("codes"))
-        .withColumn("blk", pmod(hash(col("neighbor_id")), lit(PqBlocks))),
-      col("blk"), col("neighbor_id"))
-    if (lutScoring) {
-      // Textbook ADC: each query precomputes its M×PqCodewords table of
-      // subspace distances to every codeword ONCE, and each candidate
-      // pair then costs M table loads + adds instead of a dim-wide L2
-      // over a reconstruction. The table is ONE FLAT array of
-      // M×PqCodewords longs (entry s·PqCodewords + cls = query's
-      // subspace-s distance to class cls's codeword): a nested
-      // array-of-arrays costs a getArray allocation per
-      // (pair, subspace) in the hot stage, the flat layout is a single
-      // stride-indexed getLong. Uninhabited residue classes keep
-      // zero-filled slots no code ever indexes. Since r17 the whole
-      // table is ONE fused expression
-      // ([[graft.functions.VectorOps.PqQueryLut]], codebook as a
-      // reference object) — the 128-candidate column composition ran
-      // outside whole-stage codegen.
-      val a = quantized(spark, dir)
-        .select(col("vec_id").as("query_id"),
-          graft.functions.VectorOps.pq_query_lut(col("vq"),
-            cb.map(_._1), cb.map(_._2), PqM, dims, PqCodewords).as("lut"))
-        .withColumn("blk", explode(typedLit((0 until PqBlocks).toArray)))
-      // broadcast(a): pin the build side. Left to size heuristics,
-      // Catalyst flips to broadcasting the corpus side the moment its
-      // rows shrink to (id, M codes) — which STREAMS the query side,
-      // a raw one-file scan at fixture scale, and the whole O(N·Q)
-      // ADC stage lands on one core (the r8-r11 single-core collapse,
-      // resurrected by the build-side flip; measured 2× on the full
-      // query at sf0.1). The query side is the bounded side BY
-      // ASSUMPTION — the 100 TB shape streams the huge fanned-out
-      // code corpus against a broadcast of query LUTs (~1 KB each at
-      // M=8, C=16); an unbounded query set wants the
-      // [[MaxQueryBroadcastBytes]]-gated shuffle fallback pattern.
-      broadcast(a).join(b, "blk").filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          (-graft.functions.VectorOps.pq_adc(col("codes"), col("lut")))
-            .cast(DoubleType).as("negd"))
-    } else {
-      // Reference path: reconstruct each candidate from its codes via
-      // the dense-by-class codebook literal, full-dim integer L2.
-      val dense = Array.fill(PqCodewords)(Array.fill(PqM * dims)(0L))
-      cb.foreach { case (cls, cw) => dense(cls) = cw }
-      val cbLit = typedLit(dense.map(_.toSeq).toSeq)
-      val recon = flatten(transform(sequence(lit(0), lit(PqM - 1)),
-        s => slice(element_at(cbLit, element_at(col("codes"), s + 1) + 1),
-          s * dims + 1, lit(dims))))
-      val a = quantized(spark, dir)
-        .select(col("vec_id").as("query_id"), col("vq").as("va"))
-        .withColumn("blk", explode(typedLit((0 until PqBlocks).toArray)))
-      // Same explicit build-side pin as the LUT path (see above).
-      broadcast(a).join(b.withColumn("vr", recon), "blk")
-        .filter(col("query_id") =!= col("neighbor_id"))
-        .select(col("query_id"), col("neighbor_id"),
-          (-graft.functions.VectorOps.vec_l2sq_long(col("va"), col("vr")))
-            .cast(DoubleType).as("negd"))
-    }
-  }
-
   /** Recall floor for the PQ path. Measured recall@5 vs the exact
     * baseline with the trained codebook at the 0.25 rerank budget:
-    * 0.877 / 0.864 / 0.921 at sf0.001 / 0.01 / 0.1 (ProbePq15) — the
-    * floor sits under that band the same way [[AnnRecallFloor]] does.
+    * 0.877 / 0.864 / 0.921 at sf0.001 / 0.01 / 0.1 — the floor sits
+    * under that band the same way [[AnnRecallFloor]] does.
     * (Seed-only codebook measured 0.79-0.87; the Lloyd step is worth
     * ~+0.06 recall at the same budget on this worst-case corpus.) */
   val PqRecallFloor = 0.8
-
-  def similarityPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = exactTopkPairs(spark, dir)
-    val pq = similarityPqTopk(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val hit = pq.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= PqRecallFloor).as("recall_ok"),
-        lit(PqRecallFloor).as("floor"))
-  }
-
-  val pqRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($PqRecallFloor AS DOUBLE) AS floor"
 
   /** Full value oracle for `similarity_pq_topk` (r17). Approximate
     * relative to exact top-k (the recall gate's contract) but
@@ -1541,31 +1267,22 @@ object Similarity {
     * persisted like the PQ codebook (artifact name carries levels +
     * grid so a geometry change invalidates rather than misreads),
     * memoized per corpus snapshot. */
-  private val sqStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Long], Array[Long])]()
-
   private[graft] def sqStats(spark: SparkSession, dir: String): (Array[Long], Array[Long]) =
-    sqStatsCache.computeIfAbsent(dir, _ => {
-      val df = IndexStore.loadOrBuild(spark, dir, "embeddings",
-          s"sq_stats_l${SqLevels}_s$PqScale") {
-        quantized(spark, dir)
-          .select(posexplode(col("vq")).as(Seq("i", "x")))
-          .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
-      }
+    IndexStore.loadMemo(spark, dir, "embeddings", s"sq_stats_l${SqLevels}_s$PqScale") {
+      quantized(spark, dir)
+        .select(posexplode(col("vq")).as(Seq("i", "x")))
+        .groupBy("i").agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
+    } { df =>
       val rows = df.select(col("i"), col("mn"), col("mx")).collect().sortBy(_.getInt(0))
       require(rows.nonEmpty, s"sq_stats: empty embeddings corpus at $dir")
       (rows.map(_.getLong(1)), rows.map(_.getLong(2)))
-    })
+    }
 
-  /** (vec_id, vq, codes, distortion): the SQ encode — ONE map-side
-    * fused expression over the scan ([[graft.functions.VectorOps.SqEncode]]),
-    * zero shuffle, the [[pqCoded]] discipline. */
-  private def sqCoded(spark: SparkSession, dir: String): DataFrame = {
+  /** The SQ encode of a grid vector — ONE map-side fused expression
+    * ([[graft.functions.VectorOps.SqEncode]]): (codes, distortion). */
+  private def sqEncode(vq: Column, spark: SparkSession, dir: String): Column = {
     val (mns, mxs) = sqStats(spark, dir)
-    quantized(spark, dir)
-      .withColumn("sc", graft.functions.VectorOps.sq_encode(col("vq"), mns, mxs, SqLevels))
-      .select(col("vec_id"), col("vq"), col("sc.codes").as("codes"),
-        col("sc.distortion").as("distortion"))
+    VectorOps.sq_encode(vq, mns, mxs, SqLevels)
   }
 
   /** `embedding_sq`: every vector's SQ8 code (hex string, two chars
@@ -1574,10 +1291,11 @@ object Similarity {
     * Value-checked end-to-end: stats, codes, and distortion are all
     * integer-exact and SQL-expressible. */
   def embeddingSq(spark: SparkSession, dir: String): DataFrame =
-    sqCoded(spark, dir).select(col("vec_id"),
-      concat_ws("", transform(col("codes"),
-        c => lpad(lower(hex(c)), 2, "0"))).as("sq_code"),
-      col("distortion"))
+    quantized(spark, dir).withColumn("sc", sqEncode(col("vq"), spark, dir))
+      .select(col("vec_id"),
+        concat_ws("", transform(col("sc.codes"),
+          c => lpad(lower(hex(c)), 2, "0"))).as("sq_code"),
+        col("sc.distortion").as("distortion"))
       .orderBy("vec_id")
 
   val embeddingSqOracle: String =
@@ -1602,53 +1320,6 @@ object Similarity {
        |       string_agg(printf('%02x', q), '' ORDER BY i) AS sq_code,
        |       CAST(sum((x - r) * (x - r)) AS BIGINT) AS distortion
        |FROM rec GROUP BY vec_id ORDER BY vec_id""".stripMargin
-
-  /** `similarity_sq_topk`: SQ asymmetric-distance retrieval — the
-    * query keeps its exact grid vector, each candidate streams its
-    * 1-byte-per-dim codes, the pair stage scores integer L2² against
-    * the candidate's reconstruction via a dim×levels decode table
-    * precomputed once per plan
-    * ([[graft.functions.VectorOps.SqAdcL2]]), and the closest
-    * ceil([[PqShortlistFrac]]·N) (capped [[PqShortlistMax]], the PQ
-    * budget shared deliberately — same fraction, directly comparable
-    * recall) rerank exactly on the true vectors into
-    * [[similarityTopk]]'s schema.
-    *
-    * 100 TB shape: identical to the flat-PQ path — the candidate
-    * stage streams (id, codes) only (64 B/row at dim 64 vs 512 B of
-    * float vector), queries broadcast, the only corpus-scale shuffle
-    * is [[fanOut]]'s exchange, and the rerank joins move
-    * shortlist·Q ids against the vector table. */
-  def similaritySqTopk(spark: SparkSession, dir: String): DataFrame = {
-    val n = corpusCount(spark, dir)
-    similaritySqTopk(spark, dir,
-      shortlistFor(spark, n))
-  }
-
-  /** Parameterized form: `SqSpec` pins the exhaustive identity — a
-    * shortlist ≥ N reduces the retrieval to exact [[similarityTopk]]
-    * (every pair survives to the exact rerank). */
-  private[graft] def similaritySqTopk(spark: SparkSession, dir: String,
-      shortlistN: Int): DataFrame = {
-    val (mns, mxs) = sqStats(spark, dir)
-    val b = fanOut(spark, dir, "embeddings",
-      sqCoded(spark, dir).select(col("vec_id").as("neighbor_id"), col("codes"))
-        .withColumn("blk", pmod(hash(col("neighbor_id")), lit(PqBlocks))),
-      col("blk"), col("neighbor_id"))
-    val a = quantized(spark, dir)
-      .select(col("vec_id").as("query_id"), col("vq"))
-      .withColumn("blk", explode(typedLit((0 until PqBlocks).toArray)))
-    // Same explicit build-side pin as the PQ ADC stage (see
-    // [[pqAdcStage]]): the query side is the bounded side BY
-    // ASSUMPTION; left to size heuristics Catalyst broadcasts the
-    // shrunken code corpus and the O(N·Q) stage lands on one core.
-    val adc = broadcast(a).join(b, "blk")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (-graft.functions.VectorOps.sq_adc_l2(col("codes"), col("vq"),
-          mns, mxs, SqLevels)).cast(DoubleType).as("negd"))
-    rerankShortlist(spark, dir, adc, shortlistN)
-  }
 
   val similaritySqTopkOracle: String =
     s"""WITH v AS (
@@ -1705,19 +1376,6 @@ object Similarity {
     * the floor sits under the band the way [[PqRecallFloor]] does. */
   val SqRecallFloor = 0.9
 
-  def similaritySqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = exactTopkPairs(spark, dir)
-    val sq = similaritySqTopk(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val hit = sq.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= SqRecallFloor).as("recall_ok"),
-        lit(SqRecallFloor).as("floor"))
-  }
-
-  val sqRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($SqRecallFloor AS DOUBLE) AS floor"
-
   // ------------------------------------------- Binary quantization (BQ)
 
   /** Per-dimension corpus MEDIANS on the shared grid — the BQ
@@ -1732,38 +1390,24 @@ object Similarity {
     * well-defined under ties); med_i = min value whose cumulative
     * count reaches the rank. Persisted like the other stats
     * artifacts. */
-  private val bqStatsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Long]]()
-
   private[graft] def bqThresholds(spark: SparkSession, dir: String): Array[Long] =
-    bqStatsCache.computeIfAbsent(dir, _ => {
-      val df = IndexStore.loadOrBuild(spark, dir, "embeddings",
-          s"bq_median_s$PqScale") {
-        val medRank = (corpusCount(spark, dir) + 1) / 2
-        val hist = quantized(spark, dir)
-          .select(posexplode(col("vq")).as(Seq("i", "x")))
-          .groupBy("i", "x").agg(count(lit(1)).as("c"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("i").orderBy("x")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-        // `cum` is a WINDOW output — the filter stays above the
-        // Window operator (a barrier), so no alias-substitution
-        // hazard here.
-        hist.withColumn("cum", sum(col("c")).over(w))
-          .where(col("cum") >= medRank)
-          .groupBy("i").agg(min(col("x")).as("med"))
-      }
+    IndexStore.loadMemo(spark, dir, "embeddings", s"bq_median_s$PqScale") {
+      val medRank = (corpusCount(spark, dir) + 1) / 2
+      val hist = quantized(spark, dir)
+        .select(posexplode(col("vq")).as(Seq("i", "x")))
+        .groupBy("i", "x").agg(count(lit(1)).as("c"))
+      val w = Window.partitionBy("i").orderBy("x").rowsBetween(Window.unboundedPreceding, 0)
+      // `cum` is a WINDOW output — the filter stays above the
+      // Window operator (a barrier), so no alias-substitution
+      // hazard here.
+      hist.withColumn("cum", sum(col("c")).over(w))
+        .where(col("cum") >= medRank)
+        .groupBy("i").agg(min(col("x")).as("med"))
+    } { df =>
       val rows = df.select(col("i"), col("med")).collect().sortBy(_.getInt(0))
       require(rows.nonEmpty, s"bq_thresholds: empty embeddings corpus at $dir")
       rows.map(_.getLong(1))
-    })
-
-  /** (vec_id, bq_bits): 64 dims → ONE long, map-side
-    * ([[graft.functions.VectorOps.BitPackGt]]), zero shuffle. */
-  private def bqCoded(spark: SparkSession, dir: String): DataFrame =
-    quantized(spark, dir).select(col("vec_id"),
-      graft.functions.VectorOps.bitpack_gt(col("vq"),
-        bqThresholds(spark, dir)).as("bq_bits"))
+    }
 
   /** `embedding_bq`: the 1-bit-per-dimension encode — the CHEAPEST
     * rung of the compression ladder (flat 8 B/component → SQ8
@@ -1775,7 +1419,9 @@ object Similarity {
     * the signed minimum because DuckDB's `<<` range-checks BIGINT
     * shifts where Java's wraps.) */
   def embeddingBq(spark: SparkSession, dir: String): DataFrame =
-    bqCoded(spark, dir).orderBy("vec_id")
+    quantized(spark, dir)
+      .select(col("vec_id"), VectorOps.bitpack_gt(col("vq"), bqThresholds(spark, dir)).as("bq_bits"))
+      .orderBy("vec_id")
 
   val embeddingBqOracle: String =
     s"""WITH v AS (
@@ -1801,43 +1447,6 @@ object Similarity {
        |         AS bq_bits
        |FROM v CROSS JOIN med m
        |GROUP BY v.vec_id ORDER BY v.vec_id""".stripMargin
-
-  /** `similarity_bq_topk`: symmetric Hamming retrieval over the
-    * packed bits — the pair stage is `bit_count(a XOR b)` on two
-    * longs, pure built-in codegen (the cheapest candidate scorer any
-    * lane here has: 8 B per corpus row moves, one xor+popcount per
-    * pair); the closest ceil([[PqShortlistFrac]]·N) candidates
-    * (shared budget — the lanes' recall bands stay directly
-    * comparable) exact-rerank on the true vectors into
-    * [[similarityTopk]]'s schema. The recall gate prices what one
-    * bit per dimension keeps — the ladder's floor, see
-    * [[BqRecallFloor]]. */
-  def similarityBqTopk(spark: SparkSession, dir: String): DataFrame = {
-    val n = corpusCount(spark, dir)
-    similarityBqTopk(spark, dir,
-      shortlistFor(spark, n))
-  }
-
-  /** Parameterized form: the spec pins the exhaustive identity —
-    * shortlist ≥ N reduces the retrieval to exact [[similarityTopk]]. */
-  private[graft] def similarityBqTopk(spark: SparkSession, dir: String,
-      shortlistN: Int): DataFrame = {
-    val b = fanOut(spark, dir, "embeddings",
-      bqCoded(spark, dir).select(col("vec_id").as("neighbor_id"), col("bq_bits").as("nb"))
-        .withColumn("blk", pmod(hash(col("neighbor_id")), lit(PqBlocks))),
-      col("blk"), col("neighbor_id"))
-    val a = bqCoded(spark, dir)
-      .select(col("vec_id").as("query_id"), col("bq_bits").as("qb"))
-      .withColumn("blk", explode(typedLit((0 until PqBlocks).toArray)))
-    // Build-side pin: see pqAdcStage — the corpus side shrinks to
-    // (id, one long) and a size heuristic would broadcast it,
-    // single-coring the O(N·Q) stage on the streamed query scan.
-    val adc = broadcast(a).join(b, "blk")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (-bit_count(col("qb").bitwiseXOR(col("nb")))).cast(DoubleType).as("negd"))
-    rerankShortlist(spark, dir, adc, shortlistN)
-  }
 
   val similarityBqTopkOracle: String =
     s"""WITH v AS (
@@ -1899,298 +1508,7 @@ object Similarity {
     * sits under the band the way [[PqRecallFloor]] does. */
   val BqRecallFloor = 0.8
 
-  def similarityBqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = exactTopkPairs(spark, dir)
-    val bq = similarityBqTopk(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val hit = bq.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= BqRecallFloor).as("recall_ok"),
-        lit(BqRecallFloor).as("floor"))
-  }
-
-  val bqRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($BqRecallFloor AS DOUBLE) AS floor"
-
-  // ---------------------------------------------------------- IVF-PQ ANN
-
-  /** Rerank budget for the IVF-PQ composite: the PQ rerank fraction
-    * applied to the candidate pool the probe list actually admits
-    * (~[[ProbeFrac]]·N, not N — the flat-PQ budget over the full corpus
-    * would rerank a THIRD of the probed candidates and erase most of
-    * the composite's cost win), floored at [[K]] so the result is
-    * never starved below the output contract, capped at
-    * [[PqShortlistMax]] like the flat path. Pure arithmetic shared
-    * with the oracle's `budget` CTE: one left-associated double
-    * product + ceil, identical IEEE steps in both engines. */
-  private[graft] def ivfPqShortlist(n: Long): Int =
-    math.max(K, math.min(math.ceil(n * ProbeFrac * PqShortlistFrac),
-      PqShortlistMax.toDouble).toInt)
-
-  /** Session-dialed form: same arithmetic under the
-    * [[ShortlistFracConf]]/[[ShortlistCapConf]] overrides (defaults
-    * reproduce [[ivfPqShortlist]] exactly, which is what the oracles
-    * replay). */
-  private[graft] def ivfPqShortlist(spark: SparkSession, n: Long): Int =
-    math.max(K, math.min(math.ceil(n * probeFrac(spark) * shortlistFrac(spark)),
-      shortlistCap(spark).toDouble).toInt)
-
-  /** `similarity_ann_ivfpq`: the textbook IVFADC composite (Jégou,
-    * Douze, Schmid 2011, "Product Quantization for Nearest Neighbor
-    * Search" §IV) — the production ANN shape at 100 TB, assembled
-    * entirely from index pieces this file already constructs and
-    * persists: the coarse IVF quantizer prunes WHICH rows are scanned
-    * (nProbe of k cells per query) and PQ codes compress WHAT is
-    * scanned (4·[[PqM]] bits per row instead of the vector), so the
-    * candidate stage streams (id, cell, codes) — neither the corpus
-    * vectors nor an uncompressed probed subset ever move. Divergence
-    * from the paper, deliberate: codes quantize the RAW vectors (the
-    * [[embeddingPq]] codebook, shared artifact), not the per-cell
-    * residuals — residual codebooks couple the PQ artifact to the IVF
-    * artifact (k codebooks or a shared one over residuals, retrained
-    * whenever centroids move) for accuracy this corpus's near-random
-    * vectors cannot realize, and the raw-vector form keeps both
-    * artifacts independently reusable and the whole construction
-    * integer-exact in DuckDB. The ADC shortlist reranks on the true
-    * vectors exactly like the flat PQ path, so output schema and
-    * tie-breaks are [[similarityTopk]]'s.
-    *
-    * 100 TB shape: corpus-side work is ONE map pass (two-level-safe
-    * cell assignment + fused code argmin) over the scan, then an
-    * equi-shuffle on cell; the query side broadcasts (query, cell) id
-    * pairs plus one ~1 KB LUT per query (bounded query batch BY
-    * ASSUMPTION, as every ANN path here); the ADC join output is
-    * id-pair + one long — the only corpus-scale shuffle is the
-    * fanOut exchange itself, and the rerank joins move shortlist·Q
-    * ids against the vector table. */
-  def similarityAnnIvfPq(spark: SparkSession, dir: String): DataFrame =
-    similarityAnnIvfPq(spark, dir, ivfProbes(spark, ivfCells(spark, dir)),
-      ivfPqShortlist(spark, corpusCount(spark, dir)))
-
-  /** Parameterized form: `IvfPqSpec` pins the exhaustive identity —
-    * nProbe = k and shortlist ≥ N reduce the composite to exact
-    * [[similarityTopk]] (every cell probed → every pair ADC'd →
-    * shortlist keeps all → the exact rerank IS the exact baseline). */
-  private[graft] def similarityAnnIvfPq(spark: SparkSession, dir: String,
-      nProbe: Int, shortlistN: Int): DataFrame =
-    ivfPqQuery(spark, dir, ivfPqIndexRows(spark, dir), nProbe, shortlistN)
-
-  /** round(v·[[PqScale]]) over the double-cast vector ≡ [[quantized]]'s
-    * projection (same cast, same grid) — computed inline so a corpus
-    * index row (cell + codes) is ONE map pass over one scan, not an
-    * id-equi-join of two derived frames. */
-  private def vqCol: Column =
-    graft.functions.VectorOps.vec_grid(col("v"), PqScale)
-
-  /** The IVFADC corpus index rows — (neighbor_id, cell, codes, label),
-    * the inverted lists + code table of the index in one frame: one
-    * map pass (two-level-safe cell assignment + fused code argmin)
-    * over the embedding scan. `label` is the filter ATTRIBUTE riding
-    * the index row (one int) — how production filtered vector search
-    * stores its metadata: beside the code, so a predicate prunes
-    * candidates before any distance work. */
-  private[graft] def ivfPqIndexRows(spark: SparkSession, dir: String): DataFrame =
-    ivfPqIndexRowsOver(spark, dir,
-      spark.read.parquet(s"$dir/embeddings.parquet"))
-
-  /** Index rows for ANY embeddings-shaped frame under `dir`'s (frozen)
-    * dials — the per-row assignment+encode is deterministic in the
-    * dials, so the same vector gets the same index row whether it
-    * arrives in the original snapshot, a batch delta, or a streaming
-    * micro-batch ([[graft.streaming.EmbedStream.indexIngestStream]]). */
-  private[graft] def ivfPqIndexRowsOver(spark: SparkSession, dir: String,
-      vecs: DataFrame): DataFrame = {
-    val pivots = ivfPivots(spark, dir)
-    val cb = pqCodebook(spark, dir)
-    val dims = pqSubDims(spark, dir)
-    // cell IS NULL (zero-norm vector, belongs to no cell): the
-    // probe equi-join would drop it anyway; the drop keeps the
-    // fanned-out index frame clean. Via [[keepWhereNotNull]] — a
-    // `.where` on the `cell` alias is alias-substituted by pushdown,
-    // re-running the whole (two-level) argmax in the pushed predicate
-    // BELOW the index frame's fan-out exchange.
-    keepWhereNotNull(
-      withBestCell0(normedLOver(vecs), pivots)
-        .withColumn("pc", graft.functions.VectorOps.pq_code_argmin(vqCol,
-          cb.map(_._1), cb.map(_._2), PqM, dims)),
-      col("cell"),
-      col("vec_id").as("neighbor_id"), col("cell"),
-      col("pc.codes").as("codes"), col("label"))
-  }
-
-  /** The corpus index as a WRITTEN artifact — unlike the centroid/
-    * codebook artifacts (metadata scale) this one is CORPUS-scale
-    * rows, but ~20 bytes each (id + cell + packed codes): the inverted
-    * lists a production ANN service actually serves from, persisted
-    * beside the snapshot so query processes load them instead of
-    * re-running the assignment + encode pass over the full corpus.
-    * The artifact name carries every construction dial (cell count,
-    * Lloyd grid, PQ geometry) — a semantics change renames rather
-    * than misreads, the same discipline as the parent artifacts. */
-  private[graft] def ivfPqIndexStored(spark: SparkSession, dir: String): DataFrame = {
-    val cells = ivfCells(spark, dir)
-    // `lbl` in the name: the artifact schema gained the label column
-    // (filtered retrieval) — a label-less artifact written by the
-    // earlier schema must rebuild, not load-and-miss a column.
-    IndexStore.loadOrBuild(spark, dir, "embeddings",
-      s"ivfpq_index_k${cells}_g${LloydGrid}_m${PqM}_c${PqCodewords}_s${PqScale}_lbl") {
-      ivfPqIndexRows(spark, dir)
-    }
-  }
-
-  /** Incremental (delta) index maintenance — FAISS-`add()` semantics,
-    * the vector-side dual of `Dedup.pairGraphExtend`: grow `baseDir`'s
-    * persisted index to cover `newDir` (a superset snapshot) WITHOUT
-    * re-encoding the base corpus and WITHOUT retraining the dials.
-    * New vectors are found by an id anti-join against the base
-    * artifact (id-scale), then assigned + coded under the base's
-    * FROZEN centroids and codebook — per-row deterministic, so
-    * (base artifact ∪ delta rows) is bit-identical to re-encoding the
-    * whole new corpus under the same dials (`IndexMaintSpec` pins it).
-    *
-    * The documented divergence, same class as the pair-graph extend:
-    * a FRESH build of `newDir` would RETRAIN dials on the full corpus
-    * (new seed set, new Lloyd means, and past a count boundary a new
-    * k), so extend ≡ rebuild only dials-frozen. That is the
-    * production trade — serve adds immediately, re-index on a cadence
-    * (or when N drifts past the geometry the frozen k was derived
-    * for). To keep the retrained-dials staged path honest, the frozen
-    * artifact is written under a name carrying the BASE fingerprint —
-    * `similarity_ann_ivfpq_staged` over `newDir` can never silently
-    * load frozen-dial rows. */
-  private[graft] def ivfPqIndexExtendRows(spark: SparkSession,
-      baseDir: String, newDir: String): DataFrame = {
-    val base = ivfPqIndexStored(spark, baseDir)
-    val delta = spark.read.parquet(s"$newDir/embeddings.parquet")
-      .join(base.select(col("neighbor_id").as("vec_id")), Seq("vec_id"), "left_anti")
-    base.unionByName(ivfPqIndexRowsOver(spark, baseDir, delta))
-  }
-
-  /** The extended index as a written artifact under `newDir`'s
-    * fingerprint (frozen-tagged name — see [[ivfPqIndexExtendRows]]). */
-  private[graft] def ivfPqIndexExtendStored(spark: SparkSession,
-      baseDir: String, newDir: String): DataFrame = {
-    val baseFp = IndexStore.fingerprint(spark, baseDir, "embeddings").take(8)
-    val cells = ivfCells(spark, baseDir)
-    IndexStore.loadOrBuild(spark, newDir, "embeddings",
-      s"ivfpq_index_frozen${baseFp}_k${cells}_g${LloydGrid}_m${PqM}_c${PqCodewords}_s${PqScale}_lbl") {
-      ivfPqIndexExtendRows(spark, baseDir, newDir)
-    }
-  }
-
-  /** Serve ANN queries from the frozen-dials extended index: the
-    * production read path between re-index cadences — base dials
-    * (probe ranking, LUTs) + the extended inverted lists; rerank
-    * vectors come from the NEW corpus (they must: delta neighbors
-    * exist only there). */
-  private[graft] def annServeExtended(spark: SparkSession, baseDir: String,
-      newDir: String, queryVecs: DataFrame): DataFrame =
-    ivfPqQueryOverDirs(spark, baseDir, newDir, normedOver(queryVecs),
-      ivfPqIndexExtendStored(spark, baseDir, newDir),
-      ivfProbes(spark, ivfCells(spark, baseDir)),
-      ivfPqShortlist(spark, corpusCount(spark, newDir)))
-
-  /** `similarity_ann_ivfpq_staged`: the same retrieval over the
-    * persisted index artifact — registered against the SAME oracle as
-    * the inline form, so the driver's sweep checks staged ≡ inline
-    * value-for-value (the `pairGraph` staging discipline). This is
-    * the production serving shape: index construction ran once,
-    * queries touch only the artifact scan + the true-vector rerank. */
-  def similarityAnnIvfPqStaged(spark: SparkSession, dir: String): DataFrame =
-    ivfPqQuery(spark, dir, ivfPqIndexStored(spark, dir),
-      ivfProbes(spark, ivfCells(spark, dir)), ivfPqShortlist(spark, corpusCount(spark, dir)))
-
-  /** The retrieval machinery over any (neighbor_id, cell, codes)
-    * index frame — inline-built or artifact-loaded — with the corpus
-    * itself as the query set (the registry contract). */
-  private def ivfPqQuery(spark: SparkSession, dir: String, indexRows: DataFrame,
-      nProbe: Int, shortlistN: Int): DataFrame =
-    ivfPqQueryOver(spark, dir, normed(spark, dir), indexRows, nProbe, shortlistN)
-
-  /** ANN retrieval for an ARBITRARY query batch — (vec_id,
-    * embedding: array<float>) rows that need not come from the corpus —
-    * against `dir`'s persisted index: the serving entry point, shared
-    * verbatim by the streaming dual
-    * ([[graft.streaming.EmbedStream.runAnnServe]]), so the batch
-    * oracle that value-checks `similarity_ann_ivfpq_staged` pins the
-    * served arithmetic too. A query whose vec_id collides with a
-    * corpus id is treated as that corpus vector re-asked (the
-    * self-match is excluded), which is exactly the registry queries'
-    * semantics. */
-  def annServe(spark: SparkSession, dir: String, queryVecs: DataFrame): DataFrame =
-    ivfPqQueryOver(spark, dir, normedOver(queryVecs), ivfPqIndexStored(spark, dir),
-      ivfProbes(spark, ivfCells(spark, dir)), ivfPqShortlist(spark, corpusCount(spark, dir)))
-
-  /** The retrieval machinery over any query frame (vec_id, v, nrm
-    * [, label]) and any (neighbor_id, cell, codes[, label]) index
-    * frame. With `matchLabel` the candidate stage keeps only
-    * same-label pairs — filtered vector search: the predicate prunes
-    * BEFORE any ADC work, riding the broadcast probe pairs (query
-    * label) against the index row's attribute column. */
-  private def ivfPqQueryOver(spark: SparkSession, dir: String, q: DataFrame,
-      indexRows: DataFrame, nProbe: Int, shortlistN: Int,
-      matchLabel: Boolean = false): DataFrame =
-    ivfPqQueryOverDirs(spark, dir, dir, q, indexRows, nProbe, shortlistN, matchLabel)
-
-  /** Split-dir form: `dialsDir` owns the trained dials (centroids,
-    * codebook — the probe ranking and LUTs), `corpusDir` owns the
-    * vectors the rerank re-attaches. They differ only on the
-    * frozen-dials extended-index path ([[annServeExtended]]). */
-  private def ivfPqQueryOverDirs(spark: SparkSession, dialsDir: String,
-      corpusDir: String, q: DataFrame, indexRows: DataFrame,
-      nProbe: Int, shortlistN: Int, matchLabel: Boolean = false): DataFrame = {
-    val pivots = ivfPivots(spark, dialsDir)
-    val cb = pqCodebook(spark, dialsDir)
-    val dims = pqSubDims(spark, dialsDir)
-    val n = normed(spark, corpusDir)
-    val corpus = fanOut(spark, corpusDir, "embeddings", indexRows,
-      col("cell"), col("neighbor_id"))
-    // Query side: the slimmed (query, cell) probe pairs of the IVF
-    // path + the flat ADC LUT of the PQ path, each broadcast once.
-    // Under matchLabel the probe pair carries the query's label (one
-    // int on an already-broadcast frame).
-    val withCells = q.withColumn("cellSims", centroidSimsCol(pivots))
-    val probeCols =
-      Seq(col("vec_id").as("query_id")) ++
-        (if (matchLabel) Seq(col("label").as("q_label")) else Nil) ++
-        Seq(explode(slice(expr(
-          "transform(array_sort(zip_with(cellSims, sequence(0, size(cellSims)-1), (s, i) -> struct(-s AS negs, i AS idx))), p -> p.idx)"),
-          1, nProbe)).as("cell"))
-    val probeCells = withCells.select(probeCols: _*)
-    val luts = q.select(col("vec_id").as("query_id"),
-      graft.functions.VectorOps.pq_query_lut(vqCol,
-        cb.map(_._1), cb.map(_._2), PqM, dims, PqCodewords).as("lut"))
-    // Same build-side pins as the parents: both query-side frames are
-    // the bounded side by assumption; left to the heuristic the
-    // moment the corpus side slims to (id, cell, codes) Catalyst
-    // flips to broadcasting IT and streams the one-split query scan —
-    // the single-core collapse every ANN path here pins away.
-    val probed = broadcast(probeCells).join(corpus, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val admitted =
-      if (matchLabel) probed.filter(col("q_label") === col("label")) else probed
-    val cands = admitted
-      .join(broadcast(luts), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (-graft.functions.VectorOps.pq_adc(col("codes"), col("lut")))
-          .cast(DoubleType).as("negd"))
-    val short = cands.groupBy("query_id")
-      .agg(topk_by_score(col("negd"), col("neighbor_id"), shortlistN).as("nn"))
-      .select(col("query_id"), explode(col("nn.id")).as("neighbor_id"))
-    // Exact rerank on the true vectors: the flat PQ path verbatim —
-    // corpus vectors re-attached by neighbor id, QUERY vectors from
-    // the query frame (they need not exist in the corpus).
-    val reranked = short
-      .join(n.select(col("vec_id").as("neighbor_id"), col("v").as("vb"), col("nrm").as("nb")),
-        "neighbor_id")
-      .join(q.select(col("vec_id").as("query_id"), col("v").as("vqr"), col("nrm").as("nq")),
-        "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (Dedup.dot(col("vqr"), col("vb")) /
-          nullif(col("nq") * col("nb"), lit(0.0))).as("sim"))
-    ranked(reranked.groupBy("query_id")
-      .agg(topk_by_score(col("sim"), col("neighbor_id"), K).as("nn")))
-  }
+  // ----------------------------------------------------- IVF composites
 
   /** Recall floor for the composite. It stacks both approximations —
     * the probe list's recall ceiling (~0.93-0.97 measured for IVF
@@ -2199,19 +1517,6 @@ object Similarity {
     * their product's measured band rather than under either parent's:
     * recall@5 vs exact = 0.814 / 0.792 / 0.878 at sf0.001/0.01/0.1. */
   val IvfPqRecallFloor = 0.75
-
-  def similarityAnnIvfPqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = exactTopkPairs(spark, dir)
-    val ann = similarityAnnIvfPq(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val hit = ann.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= IvfPqRecallFloor).as("recall_ok"),
-        lit(IvfPqRecallFloor).as("floor"))
-  }
-
-  val ivfPqRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($IvfPqRecallFloor AS DOUBLE) AS floor"
 
   /** Full value oracle for `similarity_ann_ivfpq`: the
     * [[similarityAnnIvfOracle]] centroid/probe machinery verbatim
@@ -2342,61 +1647,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, round(sim, 6) AS sim, CAST(rank AS INTEGER) AS rank
        |FROM rked WHERE rank <= $K ORDER BY query_id, rank""".stripMargin
 
-  // ------------------------------------------------------- IVF-SQ ANN
-
-  /** `similarity_ann_ivfsq`: the IVF × SQ8 composite — FAISS's
-    * `IVF…,SQ8` index factory, the standard middle option between
-    * IVFFlat and IVFADC: the coarse quantizer prunes WHICH rows each
-    * query scans (the IVFADC probe machinery verbatim) and SQ8 codes
-    * compress WHAT is scanned to 1 B/dimension — 8× the PQ code size
-    * for near-flat in-pool accuracy, and NO codebook training (the
-    * stats table is the only learned state). With all three code
-    * lanes + the coarse quantizer persisted, the engine now covers
-    * the practical index matrix: flat / SQ8 / PQ / BQ, each alone and
-    * the IVF composites over SQ8 and PQ.
-    *
-    * 100 TB shape: identical to [[similarityAnnIvfPq]] — one corpus
-    * map pass (two-level-safe cell + fused SQ encode), the only
-    * corpus-scale shuffle is the index frame's fan-out, the query
-    * side broadcasts (query, cell) probe pairs + grid vectors, and
-    * the ADC join output is id-pair + one long. */
-  def similarityAnnIvfSq(spark: SparkSession, dir: String): DataFrame =
-    similarityAnnIvfSq(spark, dir, ivfProbes(spark, ivfCells(spark, dir)),
-      ivfPqShortlist(spark, corpusCount(spark, dir)))
-
-  /** Parameterized form: `IvfSqSpec` pins the exhaustive identity —
-    * nProbe = k plus a corpus-sized shortlist reduces the composite
-    * to the exact baseline. */
-  private[graft] def similarityAnnIvfSq(spark: SparkSession, dir: String,
-      nProbe: Int, shortlistN: Int): DataFrame = {
-    val pivots = ivfPivots(spark, dir)
-    val (mns, mxs) = sqStats(spark, dir)
-    // Index rows: (neighbor_id, cell, codes) — ONE map pass, the
-    // ivfPqIndexRows shape with the SQ encoder in the code slot.
-    val idx = keepWhereNotNull(
-      withBestCell0(normedLOver(spark.read.parquet(s"$dir/embeddings.parquet")), pivots)
-        .withColumn("sc", graft.functions.VectorOps.sq_encode(vqCol, mns, mxs, SqLevels)),
-      col("cell"),
-      col("vec_id").as("neighbor_id"), col("cell"), col("sc.codes").as("codes"))
-    val corpus = fanOut(spark, dir, "embeddings", idx, col("cell"), col("neighbor_id"))
-    val q = normed(spark, dir)
-    val withCells = q.withColumn("cellSims", centroidSimsCol(pivots))
-    val probeCells = withCells.select(col("vec_id").as("query_id"),
-      explode(slice(expr(
-        "transform(array_sort(zip_with(cellSims, sequence(0, size(cellSims)-1), (s, i) -> struct(-s AS negs, i AS idx))), p -> p.idx)"),
-        1, nProbe)).as("cell"))
-    val qv = q.select(col("vec_id").as("query_id"), vqCol.as("vq"))
-    // Same build-side pins as every ANN path: the query-side frames
-    // are the bounded side by assumption.
-    val probed = broadcast(probeCells).join(corpus, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-    val cands = probed.join(broadcast(qv), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        (-graft.functions.VectorOps.sq_adc_l2(col("codes"), col("vq"),
-          mns, mxs, SqLevels)).cast(DoubleType).as("negd"))
-    rerankShortlist(spark, dir, cands, shortlistN)
-  }
-
   /** Recall floor for the IVF-SQ composite: the probe list's ceiling
     * times SQ8's near-exact in-pool ordering. Measured recall@5 vs
     * exact: 0.945 / 0.935 / 0.974 at sf0.001/0.01/0.1 — the SQ term
@@ -2405,19 +1655,6 @@ object Similarity {
     * (0.79-0.88 at the same dials). Floor under the band like the
     * other gates. */
   val IvfSqRecallFloor = 0.9
-
-  def similarityAnnIvfSqRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = exactTopkPairs(spark, dir)
-    val ann = similarityAnnIvfSq(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val hit = ann.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= IvfSqRecallFloor).as("recall_ok"),
-        lit(IvfSqRecallFloor).as("floor"))
-  }
-
-  val ivfSqRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($IvfSqRecallFloor AS DOUBLE) AS floor"
 
   /** Full value oracle for `similarity_ann_ivfsq`, derived TEXTUALLY
     * from [[similarityAnnIvfPqOracle]] (the filtered-oracle
@@ -2479,7 +1716,7 @@ object Similarity {
     val pivots = ivfPivots(spark, dir)
     keepWhereNotNull(
       withBestCell0(normedLOver(vecs), pivots)
-        .withColumn("vq", graft.functions.VectorOps.vec_residual_grid(
+        .withColumn("vq", VectorOps.vec_residual_grid(
           col("v"), col("cell"), pivots.map(_._2), PqScale)),
       col("cell"),
       col("vec_id"), col("cell"), col("vq"))
@@ -2487,9 +1724,6 @@ object Similarity {
 
   private def resQuantized(spark: SparkSession, dir: String): DataFrame =
     resQuantizedOver(spark, dir, spark.read.parquet(s"$dir/embeddings.parquet"))
-
-  private val pqResCodebookCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Int, Array[Long])]]()
 
   /** Residual PQ codebook — [[pqCodebook]]'s machinery (same seeds
     * rule, same Lloyd step, via the shared [[pqSeedsOver]] /
@@ -2500,108 +1734,18 @@ object Similarity {
     * centroid-semantics change invalidates the residual codebook
     * rather than misreading it, while the raw-vector codebook stays
     * independently reusable (which is why both lanes exist). */
-  private[graft] def pqResCodebook(spark: SparkSession, dir: String): Array[(Int, Array[Long])] =
-    pqResCodebookCache.computeIfAbsent(dir, _ => {
-      val cells = ivfCells(spark, dir)
-      val df = IndexStore.loadOrBuild(spark, dir, "embeddings",
-          s"pqres_codebook_k${cells}_g${LloydGrid}_m${PqM}_c${PqCodewords}_s$PqScale") {
-        import spark.implicits._
-        val rq = resQuantized(spark, dir).select(col("vec_id"), col("vq"))
-        pqRefineOver(rq, pqSubDims(spark, dir), pqSeedsOver(rq))
-          .toSeq.map { case (cls, cw) => (cls, cw.toSeq) }.toDF("cls", "cw")
-      }
-      df.select(col("cls"), col("cw")).collect()
-        .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
-        .sortBy(_._1)
-    })
+  private[graft] def pqResCodebook(spark: SparkSession, dir: String): Codebook =
+    IndexStore.loadMemo(spark, dir, "embeddings",
+        s"pqres_codebook${geometryTag(spark, dir)}") {
+      val rq = resQuantized(spark, dir).select(col("vec_id"), col("vq"))
+      codebookDf(spark, pqRefineOver(rq, pqSubDims(spark, dir), pqSeedsOver(rq)))
+    }(collectCodebook)
 
-  /** Residual-IVFADC corpus index rows: (neighbor_id, cell, codes) in
-    * ONE map pass — the [[ivfPqIndexRows]] shape with the residual
-    * grid feeding the code argmin. */
-  private[graft] def ivfPqResIndexRows(spark: SparkSession, dir: String): DataFrame = {
-    val cb = pqResCodebook(spark, dir)
-    val dims = pqSubDims(spark, dir)
-    resQuantized(spark, dir)
-      .withColumn("pc", graft.functions.VectorOps.pq_code_argmin(col("vq"),
-        cb.map(_._1), cb.map(_._2), PqM, dims))
-      .select(col("vec_id").as("neighbor_id"), col("cell"),
-        col("pc.codes").as("codes"))
-  }
-
-  /** `similarity_ann_ivfpq_res`: IVFADC with RESIDUAL encoding — the
-    * un-diverged textbook form (Jégou et al. 2011 §IV): PQ codes
-    * quantize `x − q1(x)`, the vector's offset from its cell centroid,
-    * instead of `x` itself. Residuals concentrate around the origin
-    * (the coarse quantizer absorbed the between-cell variance), so the
-    * same 4·[[PqM]]-bit budget spends its codewords on a tighter
-    * distribution — the accuracy the paper's IVFADC buys over
-    * raw-vector codes. The price is the coupling the raw lane's
-    * Scaladoc documents: the codebook artifact depends on the centroid
-    * artifact, and the query side needs ONE distance table per
-    * (query, probed cell) — the residual `q − c_cell` differs per cell
-    * — instead of one per query: Q·nProbe LUTs, the paper's own
-    * serving cost (Algorithm IVFADC, "compute the distance table for
-    * each of the probed lists"), fine under the bounded-query-batch
-    * assumption every ANN path here shares.
-    *
-    * 100 TB shape: identical to [[similarityAnnIvfPq]] — one corpus
-    * map pass (shared two-level-safe assignment + residual grid +
-    * fused code argmin), the only corpus-scale shuffle is the index
-    * frame fan-out, the ADC join output is id-pair + one long. The
-    * query side carries Q·nProbe LUT rows (~1 KB each) rather than
-    * Q — bounded by assumption, and DISTRIBUTED rather than broadcast:
-    * see [[resProbeLuts]] for why (single-threaded broadcast-child
-    * evaluation, and the codegen-deferral trap the Generate barrier
-    * there closes). */
-  def similarityAnnIvfPqRes(spark: SparkSession, dir: String): DataFrame =
-    similarityAnnIvfPqRes(spark, dir, ivfProbes(spark, ivfCells(spark, dir)),
-      ivfPqShortlist(spark, corpusCount(spark, dir)))
-
-  /** Parameterized form: `IvfPqResSpec` pins the exhaustive identity —
-    * nProbe = k plus a corpus-sized shortlist reduces the composite to
-    * the exact baseline (the per-cell LUTs then cover every cell, and
-    * ADC ordering errors are shortlisted away like the parent's). */
-  private[graft] def similarityAnnIvfPqRes(spark: SparkSession, dir: String,
-      nProbe: Int, shortlistN: Int): DataFrame =
-    ivfPqResQuery(spark, dir, ivfPqResIndexRows(spark, dir), nProbe, shortlistN)
-
-  /** The residual retrieval over any (neighbor_id, cell, codes) index
-    * frame — inline-built or artifact-loaded. */
-  private def ivfPqResQuery(spark: SparkSession, dir: String,
-      indexRows: DataFrame, nProbe: Int, shortlistN: Int): DataFrame = {
-    val corpus = fanOut(spark, dir, "embeddings", indexRows,
-      col("cell"), col("neighbor_id"))
-    val cands = resProbeLuts(spark, dir, nProbe).join(corpus, "cell")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        (-graft.functions.VectorOps.pq_adc(col("codes"), col("lut")))
-          .cast(DoubleType).as("negd"))
-    rerankShortlist(spark, dir, cands, shortlistN)
-  }
-
-  /** The residual corpus index as a WRITTEN artifact — the
-    * [[ivfPqIndexStored]] discipline for the residual lane: corpus-
-    * scale but ~16 B/row (id + cell + packed residual codes), name
-    * carrying every construction dial INCLUDING the centroid geometry
-    * the residual coupling adds. */
-  private[graft] def ivfPqResIndexStored(spark: SparkSession, dir: String): DataFrame = {
-    val cells = ivfCells(spark, dir)
-    IndexStore.loadOrBuild(spark, dir, "embeddings",
-      s"ivfpqres_index_k${cells}_g${LloydGrid}_m${PqM}_c${PqCodewords}_s$PqScale") {
-      ivfPqResIndexRows(spark, dir)
-    }
-  }
-
-  /** `similarity_ann_ivfpq_res_staged`: residual retrieval over the
-    * persisted index artifact, registered against the SAME oracle as
-    * the inline form so the driver's sweep checks staged ≡ inline
-    * value-for-value (the `pairGraph`/[[similarityAnnIvfPqStaged]]
-    * discipline) — index construction ran once, queries touch only
-    * the artifact scan, the probe tables, and the true-vector
-    * rerank. */
-  def similarityAnnIvfPqResStaged(spark: SparkSession, dir: String): DataFrame =
-    ivfPqResQuery(spark, dir, ivfPqResIndexStored(spark, dir),
-      ivfProbes(spark, ivfCells(spark, dir)), ivfPqShortlist(spark, corpusCount(spark, dir)))
+  /** The IVF × PQ construction dials every composite artifact name
+    * carries (cell count, Lloyd grid, PQ geometry) — a semantics change
+    * renames rather than misreads. */
+  private def geometryTag(spark: SparkSession, dir: String): String =
+    s"_k${ivfCells(spark, dir)}_g${LloydGrid}_m${PqM}_c${PqCodewords}_s$PqScale"
 
   /** One LUT per (query, probed cell): the query's residual w.r.t.
     * THAT cell's centroid against the residual codebook — Q·nProbe
@@ -2620,22 +1764,16 @@ object Similarity {
     * because the STREAMED side is this multi-split frame (the
     * single-core collapse the ANN broadcast pins exist to prevent
     * cannot re-form: the one-split scan is behind the exchange). */
-  private[graft] def resProbeLuts(spark: SparkSession, dir: String,
+  private[graft] def resProbeLuts(spark: SparkSession, dir: String, q: DataFrame,
       nProbe: Int): DataFrame = {
     val pivots = ivfPivots(spark, dir)
     val cb = pqResCodebook(spark, dir)
-    val dims = pqSubDims(spark, dir)
-    normed(spark, dir).withColumn("cellSims", centroidSimsCol(pivots))
-      .select(col("vec_id").as("query_id"), col("v"),
-        explode(slice(expr(
-          "transform(array_sort(zip_with(cellSims, sequence(0, size(cellSims)-1), (s, i) -> struct(-s AS negs, i AS idx))), p -> p.idx)"),
-          1, nProbe)).as("cell"))
+    probeCells(q, pivots, nProbe, col("v"))
       .repartition(spark.sparkContext.defaultParallelism, col("cell"))
       .select(col("query_id"), col("cell"),
-        graft.functions.VectorOps.pq_query_lut(
-          graft.functions.VectorOps.vec_residual_grid(col("v"), col("cell"),
-            pivots.map(_._2), PqScale),
-          cb.map(_._1), cb.map(_._2), PqM, dims, PqCodewords).as("lut"))
+        VectorOps.pq_query_lut(
+          VectorOps.vec_residual_grid(col("v"), col("cell"), pivots.map(_._2), PqScale),
+          cb.map(_._1), cb.map(_._2), PqM, pqSubDims(spark, dir), PqCodewords).as("lut"))
       // Materialization barrier (the keepWhereNotNull/Generate
       // discipline, §8j's trap one level deeper): without it the lut
       // projection FUSES into the candidate join's whole-stage-codegen
@@ -2657,19 +1795,6 @@ object Similarity {
     * near-random vectors), so the floor sits a notch above the
     * parent's 0.75. */
   val IvfPqResRecallFloor = 0.78
-
-  def similarityAnnIvfPqResRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = exactTopkPairs(spark, dir)
-    val ann = similarityAnnIvfPqRes(spark, dir).select(col("query_id"), col("neighbor_id"))
-    val hit = ann.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= IvfPqResRecallFloor).as("recall_ok"),
-        lit(IvfPqResRecallFloor).as("floor"))
-  }
-
-  val ivfPqResRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($IvfPqResRecallFloor AS DOUBLE) AS floor"
 
   /** Full value oracle for `similarity_ann_ivfpq_res`, derived
     * TEXTUALLY from [[similarityAnnIvfPqOracle]] (anchored splices
@@ -2726,39 +1851,6 @@ object Similarity {
       parent.substring(budgetStart)
   }
 
-  // ------------------------------------------- filtered vector search
-
-  /** `similarity_filtered_topk`: exact top-k under an attribute
-    * predicate — each query's neighbors restricted to corpus vectors
-    * sharing its `label` (the fixture's categorical attribute; a real
-    * deployment filters on tenant / language / source the same way).
-    * The scale shape is [[similarityTopk]]'s blocked join with the
-    * label equality fused into the pair filter — the predicate prunes
-    * ~(1 − 1/|labels|) of pairs before the cosine, and the broadcast /
-    * shuffle regimes are unchanged. Doubles as the ground truth for
-    * the filtered ANN's recall gate. */
-  def similarityFilteredTopk(spark: SparkSession, dir: String): DataFrame = {
-    val n = normedL(spark, dir)
-    val a = n.select(col("vec_id").as("query_id"), col("v").as("va"),
-        col("nrm").as("na"), col("label").as("ql"))
-      .withColumn("blk", explode(typedLit((0 until Blocks).toArray)))
-    val b = fanOut(spark, dir, "embeddings",
-      n.select(col("vec_id").as("neighbor_id"), col("v").as("vb"),
-          col("nrm").as("nb"), col("label").as("nl"))
-        .withColumn("blk", pmod(hash(col("neighbor_id")), lit(Blocks))),
-      col("blk"), col("neighbor_id"))
-    val fits = queryBroadcastBytes(corpusCount(spark, dir),
-      embeddingDim(spark, dir), Blocks) <= MaxQueryBroadcastBytes
-    val build = if (fits) broadcast(a) else a
-    val pairs = build.join(b, "blk")
-      .filter(col("query_id") =!= col("neighbor_id") && col("ql") === col("nl"))
-      .select(col("query_id"), col("neighbor_id"),
-        (Dedup.dot(col("va"), col("vb")) /
-          nullif(col("na") * col("nb"), lit(0.0))).as("sim"))
-    ranked(pairs.groupBy("query_id")
-      .agg(topk_by_score(col("sim"), col("neighbor_id"), K).as("nn")))
-  }
-
   val similarityFilteredTopkOracle: String =
     s"""WITH v AS (
        |  SELECT vec_id, label,
@@ -2775,25 +1867,6 @@ object Similarity {
        |SELECT query_id, neighbor_id, round(sim, 6) AS sim, CAST(rank AS INTEGER) AS rank
        |FROM r WHERE rank <= $K ORDER BY query_id, rank""".stripMargin
 
-  /** `similarity_ann_ivfpq_filtered`: filtered vector search on the
-    * IVFADC index — the label predicate prunes candidates at the
-    * probe join, BEFORE any ADC distance work, exactly how production
-    * attribute-filtered retrieval stores the filter column beside the
-    * codes in the index row. Same dials as the unfiltered composite;
-    * the shortlist budget is unchanged (now generous relative to the
-    * label-pruned pool — measured recall is correspondingly higher). */
-  def similarityAnnIvfPqFiltered(spark: SparkSession, dir: String): DataFrame =
-    similarityAnnIvfPqFiltered(spark, dir, ivfProbes(spark, ivfCells(spark, dir)),
-      ivfPqShortlist(spark, corpusCount(spark, dir)))
-
-  /** Parameterized form — `IvfPqSpec` pins the filtered exhaustive
-    * identity: nProbe = k and shortlist ≥ N reduce this to exact
-    * [[similarityFilteredTopk]], the same reduction as the parent. */
-  private[graft] def similarityAnnIvfPqFiltered(spark: SparkSession, dir: String,
-      nProbe: Int, shortlistN: Int): DataFrame =
-    ivfPqQueryOver(spark, dir, normedL(spark, dir), ivfPqIndexRows(spark, dir),
-      nProbe, shortlistN, matchLabel = true)
-
   /** Recall floor for filtered ANN, against the exact FILTERED
     * baseline. The probe list misses the same cells as the unfiltered
     * composite, but the shortlist budget now covers a label-pruned
@@ -2802,23 +1875,6 @@ object Similarity {
     * recall@5 = 0.889 / 0.902 / 0.949 at sf0.001/0.01/0.1 (vs the
     * unfiltered composite's 0.79-0.88 under the same probes). */
   val FilteredRecallFloor = 0.8
-
-  def similarityAnnIvfPqFilteredRecall(spark: SparkSession, dir: String): DataFrame = {
-    val exact = IndexStore.loadOrBuild(spark, dir, "embeddings",
-      s"exact_filtered_topk_k$K") {
-      similarityFilteredTopk(spark, dir).select(col("query_id"), col("neighbor_id"))
-    }
-    val ann = similarityAnnIvfPqFiltered(spark, dir)
-      .select(col("query_id"), col("neighbor_id"))
-    val hit = ann.withColumn("hit", lit(1L))
-    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
-      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
-      .select((col("recall") >= FilteredRecallFloor).as("recall_ok"),
-        lit(FilteredRecallFloor).as("floor"))
-  }
-
-  val filteredRecallOracle: String =
-    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($FilteredRecallFloor AS DOUBLE) AS floor"
 
   /** Full value oracle for `similarity_ann_ivfpq_filtered`: the
     * [[similarityAnnIvfPqOracle]] machinery with the label equality
@@ -2862,15 +1918,464 @@ object Similarity {
     out
   }
 
+  // --------------------------------------------------------- the ANN index
+
+  /** Which (query, corpus row) pairs meet in the candidate stage. */
+  sealed trait Coarse
+
+  /** Every pair, through the blocked equi-join: the query side
+    * replicated across `blocks` neighbor blocks and pinned to the
+    * broadcast build side, the corpus side block-keyed and fanned out
+    * (see [[Blocks]]). */
+  final case class Blocked(blocks: Int) extends Coarse
+
+  /** IVF: corpus rows sit in the inverted list of their nearest refined
+    * centroid, each query probes its `nProbe` nearest cells (None: the
+    * session's probe-fraction dial over the derived cell count). */
+  final case class Ivf(nProbe: Option[Int] = None) extends Coarse
+
+  /** What a corpus row carries and how a candidate pair is scored. */
+  sealed trait Code
+
+  /** The true vectors, exact cosine — ranked directly, no shortlist. */
+  case object Exact extends Code
+
+  /** Raw-vector PQ codes scored by the query's ADC lookup table
+    * (textbook ADC: M table loads + adds per pair). */
+  case object Pq extends Code
+
+  /** Reconstruct-then-L2 reference formulation of [[Pq]]'s scorer —
+    * mathematically identical (the integer L2 over a concatenated
+    * reconstruction IS the sum of its per-subspace table entries),
+    * kept only so a spec can pin the two outputs row-for-row. */
+  case object PqRecon extends Code
+
+  /** SQ8: one byte per dimension, integer L2 against the candidate's
+    * reconstruction. */
+  case object Sq8 extends Code
+
+  /** One bit per dimension (median binarization), Hamming distance. */
+  case object Bq extends Code
+
+  /** PQ over per-cell RESIDUALS (IVF only): the query side carries one
+    * LUT per (query, probed cell) — see [[resProbeLuts]]. */
+  case object ResPq extends Code
+
+  /** One ANN retrieval lane: the coarse stage × the code, optionally
+    * restricted to same-`label` pairs (filtered vector search — the
+    * predicate prunes candidates before any distance work) and, for
+    * the IVF PQ codes, served from the persisted index artifact
+    * (`staged`). Coded lanes keep the closest `shortlist` candidates per
+    * query (None: the session's budget for the coarse stage) and
+    * rerank them on the true vectors; every lane returns
+    * [[ExactTopk]]'s ranked (query_id, neighbor_id, sim, rank) schema
+    * under the same tie-breaks.
+    *
+    * 100 TB shape, every lane: the only corpus-scale shuffle is
+    * [[fanOut]]'s exchange on the corpus side (id + code, never more
+    * than the vector); the query side is the bounded side BY
+    * ASSUMPTION and is pinned to the broadcast build side (left to
+    * size heuristics, Catalyst flips to broadcasting the slimmed
+    * corpus the moment its rows shrink to codes — which STREAMS the
+    * one-split query scan and lands the whole O(N·Q) stage on one core,
+    * the r8-r11 collapse); the rerank joins move shortlist·Q ids
+    * against the vector table. */
+  final case class AnnIndex(coarse: Coarse, code: Code, filterLabel: Boolean = false,
+      staged: Boolean = false, shortlist: Option[Int] = None) {
+    /** The registry contract: the corpus itself is the query set. */
+    def run(spark: SparkSession, dir: String): DataFrame =
+      search(spark, dir, dir, corpus(spark, dir), if (staged) Some(stored(spark, dir)) else None)
+
+    /** The candidate stage alone over the corpus: (query_id,
+      * neighbor_id, sim | negd). */
+    private[graft] def candidates(spark: SparkSession, dir: String): DataFrame =
+      candidatesOver(spark, dir, dir, corpus(spark, dir), None)
+
+    /** The working frame; only a filtered lane reads (and needs) `label`. */
+    private def corpus(spark: SparkSession, dir: String): DataFrame =
+      if (filterLabel) normedL(spark, dir) else normed(spark, dir)
+
+    /** Retrieval for query frame `q` (vec_id, v, nrm[, label]).
+      * `dialsDir` owns the trained state (centroids, codebooks, stats —
+      * the probe ranking and LUTs), `corpusDir` the vectors the rerank
+      * re-attaches; they differ only on the frozen-dials extended
+      * index ([[annServeExtended]]). `index` is a persisted index
+      * frame and its artifact name, or None for the inline build. */
+    private[graft] def search(spark: SparkSession, dialsDir: String, corpusDir: String,
+        q: DataFrame, index: Option[(String, DataFrame)]): DataFrame = {
+      val cands = candidatesOver(spark, dialsDir, corpusDir, q, index)
+      if (code == Exact) ranked(nearest(cands, "sim", K))
+      else rerank(spark, corpusDir, q, cands, shortlist.getOrElse {
+        val n = corpusCount(spark, corpusDir)
+        if (coarse.isInstanceOf[Ivf]) ivfPqShortlist(spark, n) else shortlistFor(spark, n)
+      })
+    }
+
+    private def candidatesOver(spark: SparkSession, dialsDir: String, corpusDir: String,
+        q: DataFrame, index: Option[(String, DataFrame)]): DataFrame = {
+      val slot = if (code == Exact) "sim" else "negd"
+      def label(as: String): Seq[Column] = if (filterLabel) Seq(col("label").as(as)) else Nil
+      def admit(id: String): Column = {
+        val other = col("query_id") =!= col(id)
+        if (filterLabel) other && col("ql") === col("label") else other
+      }
+      coarse match {
+        case Blocked(blocks) =>
+          val a = q.select((col("vec_id").as("query_id") +: queryCols(spark, dialsDir)) ++
+              label("ql"): _*)
+            .withColumn("blk", explode(typedLit((0 until blocks).toArray)))
+          // The blocked lanes serve the registry contract only: the
+          // query frame IS the corpus (one scan read for both sides).
+          val b = fanOut(spark, corpusDir, "embeddings",
+            q.select((col("vec_id").as("neighbor_id") +: corpusCols(spark, dialsDir)) ++
+                label("label"): _*)
+              .withColumn("blk", pmod(hash(col("neighbor_id")), lit(blocks))),
+            col("blk"), col("neighbor_id"))
+          // Exact's query side is whole vectors: the pin is gated on
+          // [[MaxQueryBroadcastBytes]] with a shuffle fallback.
+          val pin = code != Exact || queryBroadcastBytes(corpusCount(spark, dialsDir),
+            embeddingDim(spark, dialsDir), blocks) <= MaxQueryBroadcastBytes
+          (if (pin) broadcast(a) else a).join(b, "blk").filter(admit("neighbor_id"))
+            .select(col("query_id"), col("neighbor_id"), score(spark, dialsDir).as(slot))
+        case Ivf(np) =>
+          val nProbe = np.getOrElse(ivfProbes(spark, ivfCells(spark, dialsDir)))
+          // The fan-out memo keys on the scan the index frame reads: the
+          // raw table for an inline build, the artifact for a stored one.
+          // The corpus id rides the inverted lists as `vec_id`.
+          val (table, rows) = index.getOrElse(
+            "embeddings" -> indexRowsOver(spark, dialsDir, embeddings(spark, corpusDir)))
+          val lists = fanOut(spark, corpusDir, table,
+            rows.withColumnRenamed("neighbor_id", "vec_id"), col("cell"), col("vec_id"))
+          val probes =
+            if (code == ResPq) resProbeLuts(spark, dialsDir, q, nProbe)
+            else broadcast(probeCells(q, ivfPivots(spark, dialsDir), nProbe, label("ql"): _*))
+          val probed = probes.join(lists, "cell").filter(admit("vec_id"))
+          // The query payload (vectors, LUT, grid vector) rides a second
+          // broadcast join ONCE per query, not once per probed cell.
+          val payload = queryCols(spark, dialsDir)
+          (if (payload.isEmpty) probed
+           else probed.join(broadcast(q.select(col("vec_id").as("query_id") +: payload: _*)),
+             "query_id"))
+            .select(col("query_id"), col("vec_id").as("neighbor_id"),
+              score(spark, dialsDir).as(slot))
+      }
+    }
+
+    /** Corpus-row code columns over a (vec_id, v, nrm[, cell]) frame. */
+    private def corpusCols(spark: SparkSession, dir: String): Seq[Column] = code match {
+      case Exact => Seq(col("v").as("vb"), col("nrm").as("nb"))
+      case Pq | PqRecon =>
+        Seq(pqArgmin(vqCol, pqCodebook(spark, dir), pqSubDims(spark, dir))("codes").as("codes"))
+      case Sq8 => Seq(sqEncode(vqCol, spark, dir)("codes").as("codes"))
+      case Bq => Seq(VectorOps.bitpack_gt(vqCol, bqThresholds(spark, dir)).as("nb"))
+      case ResPq =>
+        val residual = VectorOps.vec_residual_grid(col("v"), col("cell"),
+          ivfPivots(spark, dir).map(_._2), PqScale)
+        Seq(pqArgmin(residual, pqResCodebook(spark, dir), pqSubDims(spark, dir))("codes")
+          .as("codes"))
+    }
+
+    /** Query-side payload columns over a (vec_id, v, nrm) frame. */
+    private def queryCols(spark: SparkSession, dir: String): Seq[Column] = code match {
+      case Exact => Seq(col("v").as("va"), col("nrm").as("na"))
+      case Pq =>
+        val cb = pqCodebook(spark, dir)
+        // Each query precomputes its M×PqCodewords table of subspace
+        // distances ONCE, as ONE FLAT array (entry s·PqCodewords + cls):
+        // a nested array-of-arrays costs a getArray allocation per
+        // (pair, subspace) in the hot stage. Uninhabited residue classes
+        // keep zero-filled slots no code ever indexes. One fused
+        // expression ([[graft.functions.VectorOps.PqQueryLut]]).
+        Seq(VectorOps.pq_query_lut(vqCol, cb.map(_._1), cb.map(_._2), PqM,
+          pqSubDims(spark, dir), PqCodewords).as("lut"))
+      case PqRecon | Sq8 => Seq(vqCol.as(if (code == Sq8) "vq" else "va"))
+      case Bq => Seq(VectorOps.bitpack_gt(vqCol, bqThresholds(spark, dir)).as("qb"))
+      case ResPq => Nil // per-cell LUTs ride the probe frame
+    }
+
+    /** The pair scorer over joined (query payload, corpus code) rows:
+      * cosine for [[Exact]], else the negated integer distance. */
+    private def score(spark: SparkSession, dir: String): Column = code match {
+      case Exact => cosine
+      case Pq | ResPq => (-VectorOps.pq_adc(col("codes"), col("lut"))).cast(DoubleType)
+      case PqRecon =>
+        // reconstruct each candidate from its codes via the
+        // dense-by-class codebook literal, full-dim integer L2
+        val dims = pqSubDims(spark, dir)
+        val dense = Array.fill(PqCodewords)(Array.fill(PqM * dims)(0L))
+        pqCodebook(spark, dir).foreach { case (cls, cw) => dense(cls) = cw }
+        val cbLit = typedLit(dense.map(_.toSeq).toSeq)
+        val recon = flatten(transform(sequence(lit(0), lit(PqM - 1)),
+          s => slice(element_at(cbLit, element_at(col("codes"), s + 1) + 1),
+            s * dims + 1, lit(dims))))
+        (-VectorOps.vec_l2sq_long(col("va"), recon)).cast(DoubleType)
+      case Sq8 =>
+        val (mns, mxs) = sqStats(spark, dir)
+        (-VectorOps.sq_adc_l2(col("codes"), col("vq"), mns, mxs, SqLevels)).cast(DoubleType)
+      case Bq => (-bit_count(col("qb").bitwiseXOR(col("nb")))).cast(DoubleType)
+    }
+
+    /** The IVF index rows — (neighbor_id, cell, codes[, label]), the
+      * inverted lists + code table in one frame — for ANY
+      * embeddings-shaped frame under `dir`'s (frozen) dials: one map
+      * pass (two-level-safe cell assignment + fused encode) over the
+      * scan. The per-row assignment+encode is deterministic in the
+      * dials, so the same vector gets the same index row whether it
+      * arrives in the original snapshot, a batch delta, or a streaming
+      * micro-batch. [[Pq]] rows carry the filter attribute `label` (one
+      * int) beside the code — how production filtered vector search
+      * stores its metadata. cell IS NULL (zero-norm vector, belongs to
+      * no cell) is dropped via [[keepWhereNotNull]]: a `.where` on the
+      * `cell` alias is alias-substituted by pushdown, re-running the
+      * whole (two-level) argmax in the pushed predicate BELOW the index
+      * frame's fan-out exchange. */
+    private[graft] def indexRowsOver(spark: SparkSession, dir: String,
+        vecs: DataFrame): DataFrame =
+    {
+      val labelled = code == Pq
+      // Encode in a projection BELOW the null drop: inside the drop's
+      // filter() lambda input the encode would run interpreted (a
+      // higher-order function is codegen fallback).
+      val coded = withBestCell0(if (labelled) normedLOver(vecs) else normedOver(vecs),
+          ivfPivots(spark, dir))
+        .select((Seq(col("vec_id"), col("cell")) ++ corpusCols(spark, dir) ++
+          (if (labelled) Seq(col("label")) else Nil)): _*)
+      keepWhereNotNull(coded, col("cell"),
+        col("vec_id").as("neighbor_id") +: coded.columns.toSeq.tail.map(col): _*)
+    }
+
+    private[graft] def indexRows(spark: SparkSession, dir: String): DataFrame =
+      indexRowsOver(spark, dir, embeddings(spark, dir))
+
+    /** The artifact name of this lane's persisted index. `lbl`: the raw
+      * PQ artifact schema carries the label column — a label-less
+      * artifact written by an earlier schema must rebuild, not
+      * load-and-miss a column. */
+    private def artifactName(spark: SparkSession, dir: String): String =
+      if (code == Pq) s"ivfpq_index${geometryTag(spark, dir)}_lbl"
+      else s"ivfpqres_index${geometryTag(spark, dir)}"
+
+    /** The corpus index as a WRITTEN artifact (name → frame): corpus-
+      * scale rows, but ~16-20 bytes each (id + cell + packed codes) —
+      * the inverted lists a production ANN service actually serves
+      * from, persisted beside the snapshot so query processes load them
+      * instead of re-running the assignment + encode pass. */
+    private[graft] def stored(spark: SparkSession, dir: String): (String, DataFrame) = {
+      val name = artifactName(spark, dir)
+      name -> IndexStore.loadOrBuild(spark, dir, "embeddings", name)(indexRows(spark, dir))
+    }
+  }
+
+  /** Exact top-k shortlist → exact rerank on the true vectors: the
+    * closest `budget` candidates per query by `negd`, corpus vectors
+    * re-attached by neighbor id from `corpusDir`, QUERY vectors from
+    * the query frame (they need not exist in the corpus) — two id-keyed
+    * equi-joins — then the bounded top-[[K]] by cosine. */
+  private def rerank(spark: SparkSession, corpusDir: String, q: DataFrame,
+      cands: DataFrame, budget: Int): DataFrame = {
+    val nv = normed(spark, corpusDir)
+    val pairs = nearest(cands, "negd", budget)
+      .select(col("query_id"), explode(col("nn.id")).as("neighbor_id"))
+      .join(nv.select(col("vec_id").as("neighbor_id"), col("v").as("vb"), col("nrm").as("nb")),
+        "neighbor_id")
+      .join(q.select(col("vec_id").as("query_id"), col("v").as("va"), col("nrm").as("na")),
+        "query_id")
+      // cosine's nullif: a zero-norm vector can reach the shortlist (the
+      // code stage has no division to stop it).
+      .select(col("query_id"), col("neighbor_id"), cosine.as("sim"))
+    ranked(nearest(pairs, "sim", K))
+  }
+
+  // ------------------------------------------------------- the lanes
+
+  /** `similarity_topk`: exact cosine top-k per query vector (blocked
+    * join + bounded agg). */
+  val ExactTopk = AnnIndex(Blocked(Blocks), Exact)
+
+  /** `similarity_filtered_topk`: exact top-k under an attribute
+    * predicate — each query's neighbors restricted to corpus vectors
+    * sharing its `label` (the fixture's categorical attribute; a real
+    * deployment filters on tenant / language / source the same way),
+    * fused into the pair filter: the predicate prunes ~(1 − 1/|labels|)
+    * of pairs before the cosine. The ground truth of the filtered ANN's
+    * recall gate. */
+  val FilteredTopk = ExactTopk.copy(filterLabel = true)
+
+  /** `similarity_ann_ivf`: IVF with deterministically seeded,
+    * one-iteration-refined centroids, exact cosine within the probed
+    * cells. */
+  val AnnIvf = AnnIndex(Ivf(), Exact)
+
+  /** `similarity_pq_topk`: asymmetric-distance (ADC) retrieval — the
+    * query keeps its exact quantized vector and precomputes its
+    * per-subspace distance TABLE to every codeword, so each of the
+    * O(N·queries) candidate pairs costs M table lookups + adds, and
+    * the candidate stage streams (id, 8 codes) per corpus row — 4-byte
+    * codes, not 256-byte vectors. */
+  val PqTopk = AnnIndex(Blocked(PqBlocks), Pq)
+
+  /** `similarity_sq_topk`: SQ8 ADC — each candidate streams 1 B/dim
+    * codes scored by integer L2² against the query's grid vector via a
+    * dim×levels decode table ([[graft.functions.VectorOps.SqAdcL2]]);
+    * the shortlist budget is PQ's, deliberately, so the lanes' recall
+    * bands stay directly comparable. */
+  val SqTopk = AnnIndex(Blocked(PqBlocks), Sq8)
+
+  /** `similarity_bq_topk`: symmetric Hamming over the packed bits —
+    * `bit_count(a XOR b)` on two longs, pure built-in codegen (8 B per
+    * corpus row moves, one xor+popcount per pair). */
+  val BqTopk = AnnIndex(Blocked(PqBlocks), Bq)
+
+  /** `similarity_ann_ivfsq`: the IVF × SQ8 composite — FAISS's
+    * `IVF…,SQ8` factory, the middle option between IVFFlat and IVFADC:
+    * 8× the PQ code size for near-flat in-pool accuracy and NO codebook
+    * training (the stats table is the only learned state). */
+  val AnnIvfSq = AnnIndex(Ivf(), Sq8)
+
+  /** `similarity_ann_ivfpq`: the textbook IVFADC composite (Jégou,
+    * Douze, Schmid 2011, §IV): the coarse quantizer prunes WHICH rows
+    * are scanned, PQ codes compress WHAT is scanned. Divergence from
+    * the paper, deliberate: codes quantize the RAW vectors (the
+    * [[embeddingPq]] codebook, shared artifact), not the per-cell
+    * residuals — residual codebooks couple the PQ artifact to the IVF
+    * artifact for accuracy this corpus's near-random vectors barely
+    * realize; [[AnnIvfPqRes]] is the residual form. */
+  val AnnIvfPq = AnnIndex(Ivf(), Pq)
+
+  /** `similarity_ann_ivfpq_staged`: [[AnnIvfPq]] over the persisted
+    * index artifact — registered against the SAME oracle as the inline
+    * form, so the driver's sweep checks staged ≡ inline value-for-value
+    * (the `pairGraph` staging discipline). */
+  val AnnIvfPqStaged = AnnIvfPq.copy(staged = true)
+
+  /** `similarity_ann_ivfpq_res`: IVFADC with RESIDUAL encoding — PQ
+    * codes quantize `x − q1(x)`, the vector's offset from its cell
+    * centroid. Residuals concentrate around the origin, so the same
+    * 4·[[PqM]]-bit budget spends its codewords on a tighter
+    * distribution; the price is one distance table per (query, probed
+    * cell) — the paper's own serving cost. */
+  val AnnIvfPqRes = AnnIndex(Ivf(), ResPq)
+
+  /** `similarity_ann_ivfpq_res_staged`: the residual lane over its
+    * persisted index, checked against the inline form's oracle. */
+  val AnnIvfPqResStaged = AnnIvfPqRes.copy(staged = true)
+
+  /** `similarity_ann_ivfpq_filtered`: filtered vector search on the
+    * IVFADC index — the label predicate prunes candidates at the probe
+    * join, BEFORE any ADC distance work. Same dials as the unfiltered
+    * composite; the shortlist budget is unchanged (now generous
+    * relative to the label-pruned pool). */
+  val AnnIvfPqFiltered = AnnIvfPq.copy(filterLabel = true)
+
+  /** Driver-visible ANN quality gate: recall@K of `lane` against its
+    * exact baseline (the filtered baseline for a filtered lane),
+    * computed engine-side; [[recallOracle]] is the same inequality as a
+    * constant row, so the entry hash-matches iff recall >= `floor`. */
+  private[graft] def recallGate(lane: AnnIndex, floor: Double)(
+      spark: SparkSession, dir: String): DataFrame = {
+    val exact =
+      if (!lane.filterLabel) exactTopkPairs(spark, dir)
+      else IndexStore.loadOrBuild(spark, dir, "embeddings", s"exact_filtered_topk_k$K") {
+        FilteredTopk.run(spark, dir).select(col("query_id"), col("neighbor_id"))
+      }
+    val hit = lane.run(spark, dir).select(col("query_id"), col("neighbor_id"))
+      .withColumn("hit", lit(1L))
+    exact.join(hit, Seq("query_id", "neighbor_id"), "left_outer")
+      .agg((sum(coalesce(col("hit"), lit(0L))) / count(lit(1L))).as("recall"))
+      .select((col("recall") >= floor).as("recall_ok"), lit(floor).as("floor"))
+  }
+
+  private[graft] def recallOracle(floor: Double): String =
+    s"SELECT CAST(TRUE AS BOOLEAN) AS recall_ok, CAST($floor AS DOUBLE) AS floor"
+
+  /** The recall-gated lanes: (query name, lane, floor). */
+  private def gates: Seq[(String, AnnIndex, Double)] = Seq(
+    ("similarity_ann_recall", AnnIvf, AnnRecallFloor),
+    ("similarity_pq_recall", PqTopk, PqRecallFloor),
+    ("similarity_sq_recall", SqTopk, SqRecallFloor),
+    ("similarity_bq_recall", BqTopk, BqRecallFloor),
+    ("similarity_ann_ivfsq_recall", AnnIvfSq, IvfSqRecallFloor),
+    ("similarity_ann_ivfpq_recall", AnnIvfPq, IvfPqRecallFloor),
+    ("similarity_ann_ivfpq_res_recall", AnnIvfPqRes, IvfPqResRecallFloor),
+    ("similarity_ann_ivfpq_filtered_recall", AnnIvfPqFiltered, FilteredRecallFloor))
+
+  // ----------------------------------------------- serving and maintenance
+
+  /** The IVFADC index rows for any embeddings-shaped frame under
+    * `dir`'s frozen dials — the streaming ingest entry
+    * ([[graft.streaming.EmbedStream.indexIngestStream]]). */
+  private[graft] def ivfPqIndexRowsOver(spark: SparkSession, dir: String,
+      vecs: DataFrame): DataFrame =
+    AnnIvfPq.indexRowsOver(spark, dir, vecs)
+
+  /** ANN retrieval for an ARBITRARY query batch — (vec_id,
+    * embedding: array<float>) rows that need not come from the corpus —
+    * against `dir`'s persisted index: the serving entry point, shared
+    * verbatim by the streaming dual
+    * ([[graft.streaming.EmbedStream.runAnnServe]]), so the batch
+    * oracle that value-checks `similarity_ann_ivfpq_staged` pins the
+    * served arithmetic too. A query whose vec_id collides with a
+    * corpus id is treated as that corpus vector re-asked (the
+    * self-match is excluded), which is exactly the registry queries'
+    * semantics. */
+  def annServe(spark: SparkSession, dir: String, queryVecs: DataFrame): DataFrame =
+    AnnIvfPq.search(spark, dir, dir, normedOver(queryVecs), Some(AnnIvfPq.stored(spark, dir)))
+
+  /** Incremental (delta) index maintenance — FAISS-`add()` semantics,
+    * the vector-side dual of `Dedup.pairGraphExtend`: grow `baseDir`'s
+    * persisted index to cover `newDir` (a superset snapshot) WITHOUT
+    * re-encoding the base corpus and WITHOUT retraining the dials.
+    * New vectors are found by an id anti-join against the base
+    * artifact (id-scale), then assigned + coded under the base's
+    * FROZEN centroids and codebook — per-row deterministic, so
+    * (base artifact ∪ delta rows) is bit-identical to re-encoding the
+    * whole new corpus under the same dials (`IndexMaintSpec` pins it).
+    *
+    * The documented divergence, same class as the pair-graph extend:
+    * a FRESH build of `newDir` would RETRAIN dials on the full corpus
+    * (new seed set, new Lloyd means, and past a count boundary a new
+    * k), so extend ≡ rebuild only dials-frozen. That is the
+    * production trade — serve adds immediately, re-index on a cadence
+    * (or when N drifts past the geometry the frozen k was derived
+    * for). To keep the retrained-dials staged path honest, the frozen
+    * artifact is written under a name carrying the BASE fingerprint —
+    * `similarity_ann_ivfpq_staged` over `newDir` can never silently
+    * load frozen-dial rows. */
+  private[graft] def ivfPqIndexExtendRows(spark: SparkSession,
+      baseDir: String, newDir: String): DataFrame = {
+    val base = AnnIvfPq.stored(spark, baseDir)._2
+    val delta = embeddings(spark, newDir)
+      .join(base.select(col("neighbor_id").as("vec_id")), Seq("vec_id"), "left_anti")
+    base.unionByName(ivfPqIndexRowsOver(spark, baseDir, delta))
+  }
+
+  /** The extended index as a written artifact under `newDir`'s
+    * fingerprint (frozen-tagged name — see [[ivfPqIndexExtendRows]]). */
+  private def ivfPqIndexExtendStored(spark: SparkSession,
+      baseDir: String, newDir: String): (String, DataFrame) = {
+    val baseFp = IndexStore.fingerprint(spark, baseDir, "embeddings").take(8)
+    val name = s"ivfpq_index_frozen$baseFp${geometryTag(spark, baseDir)}_lbl"
+    name -> IndexStore.loadOrBuild(spark, newDir, "embeddings", name) {
+      ivfPqIndexExtendRows(spark, baseDir, newDir)
+    }
+  }
+
+  /** Serve ANN queries from the frozen-dials extended index: the
+    * production read path between re-index cadences — base dials
+    * (probe ranking, LUTs) + the extended inverted lists; rerank
+    * vectors come from the NEW corpus (they must: delta neighbors
+    * exist only there). */
+  private[graft] def annServeExtended(spark: SparkSession, baseDir: String,
+      newDir: String, queryVecs: DataFrame): DataFrame =
+    AnnIvfPq.search(spark, baseDir, newDir, normedOver(queryVecs),
+      Some(ivfPqIndexExtendStored(spark, baseDir, newDir)))
+
   /** Test hook (IndexStoreSpec): drop every in-process memo, simulating
     * a fresh driver over the same snapshot — anything reproduced after
     * this call without an [[graft.ops.IndexStore]] build came from a
     * written artifact, which is exactly what the spec asserts. */
   private[graft] def clearProcessCaches(): Unit = {
-    seedCache.clear(); pivotCache.clear(); pqCodebookCache.clear()
-    pqResCodebookCache.clear()
-    sqStatsCache.clear(); bqStatsCache.clear()
-    corpusCountCache.clear(); dimCache.clear(); scanSplitsCache.clear()
+    IndexStore.clearMemos(); scanSplitsCache.clear()
     exactPairsCache.synchronized {
       val it = exactPairsCache.values().iterator()
       while (it.hasNext) { it.next().unpersist(false); it.remove() }
@@ -2878,70 +2383,53 @@ object Similarity {
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "similarity_topk" -> (similarityTopk _),
-    "similarity_ann_ivf" -> (similarityAnnIvf _),
-    "similarity_ann_recall" -> (similarityAnnRecall _),
+    "similarity_topk" -> ExactTopk.run _,
+    "similarity_ann_ivf" -> AnnIvf.run _,
     "embedding_cluster" -> (embeddingCluster _),
     "dedup_semantic" -> (dedupSemantic _),
     "embedding_pq" -> (embeddingPq _),
-    "similarity_pq_topk" -> (similarityPqTopk _),
-    "similarity_pq_recall" -> (similarityPqRecall _),
+    "similarity_pq_topk" -> PqTopk.run _,
     "embedding_sq" -> (embeddingSq _),
-    "similarity_sq_topk" -> ((s: SparkSession, d: String) => similaritySqTopk(s, d)),
-    "similarity_sq_recall" -> (similaritySqRecall _),
+    "similarity_sq_topk" -> SqTopk.run _,
     "embedding_bq" -> (embeddingBq _),
-    "similarity_bq_topk" -> ((s: SparkSession, d: String) => similarityBqTopk(s, d)),
-    "similarity_bq_recall" -> (similarityBqRecall _),
-    "similarity_ann_ivfsq" -> ((s: SparkSession, d: String) => similarityAnnIvfSq(s, d)),
-    "similarity_ann_ivfsq_recall" -> (similarityAnnIvfSqRecall _),
-    "similarity_ann_ivfpq" -> ((s: SparkSession, d: String) => similarityAnnIvfPq(s, d)),
-    "similarity_ann_ivfpq_staged" -> (similarityAnnIvfPqStaged _),
-    "similarity_ann_ivfpq_recall" -> (similarityAnnIvfPqRecall _),
-    "similarity_ann_ivfpq_res" -> ((s: SparkSession, d: String) => similarityAnnIvfPqRes(s, d)),
-    "similarity_ann_ivfpq_res_staged" -> (similarityAnnIvfPqResStaged _),
-    "similarity_ann_ivfpq_res_recall" -> (similarityAnnIvfPqResRecall _),
-    "similarity_filtered_topk" -> (similarityFilteredTopk _),
-    "similarity_ann_ivfpq_filtered" -> (similarityAnnIvfPqFiltered _),
-    "similarity_ann_ivfpq_filtered_recall" -> (similarityAnnIvfPqFilteredRecall _),
-  )
+    "similarity_bq_topk" -> BqTopk.run _,
+    "similarity_ann_ivfsq" -> AnnIvfSq.run _,
+    "similarity_ann_ivfpq" -> AnnIvfPq.run _,
+    "similarity_ann_ivfpq_staged" -> AnnIvfPqStaged.run _,
+    "similarity_ann_ivfpq_res" -> AnnIvfPqRes.run _,
+    "similarity_ann_ivfpq_res_staged" -> AnnIvfPqResStaged.run _,
+    "similarity_filtered_topk" -> FilteredTopk.run _,
+    "similarity_ann_ivfpq_filtered" -> AnnIvfPqFiltered.run _,
+  ) ++ gates.map { case (name, lane, floor) => name -> recallGate(lane, floor) _ }
 
   def oracleSql: Map[String, String] = Map(
     "similarity_topk" -> similarityTopkOracle,
-    // The two ANN results are APPROXIMATE relative to exact top-k (that
-    // gap is what the recall gates price) but DETERMINISTIC by
-    // construction — every stage is replayable, so since r17 both carry
-    // full value oracles instead of rows-only checks.
+    // The ANN results are APPROXIMATE relative to exact top-k (that gap
+    // is what the recall gates price) but DETERMINISTIC by construction
+    // — every stage is replayable, so since r17 they carry full value
+    // oracles instead of rows-only checks.
     "similarity_ann_ivf" -> similarityAnnIvfOracle,
-    "similarity_ann_recall" -> annRecallOracle,
     "embedding_cluster" -> embeddingClusterOracle,
     "dedup_semantic" -> dedupSemanticOracle,
     "embedding_pq" -> embeddingPqOracle,
     "similarity_pq_topk" -> similarityPqTopkOracle,
-    "similarity_pq_recall" -> pqRecallOracle,
     // The SQ lane replays end-to-end like the PQ lane: stats, codes,
     // reconstruction, and ADC distances are integer-exact by
     // construction; only the final rerank cosine is double, and the
     // oracle replays that with the similarity_topk machinery.
     "embedding_sq" -> embeddingSqOracle,
     "similarity_sq_topk" -> similaritySqTopkOracle,
-    "similarity_sq_recall" -> sqRecallOracle,
     "embedding_bq" -> embeddingBqOracle,
     "similarity_bq_topk" -> similarityBqTopkOracle,
-    "similarity_bq_recall" -> bqRecallOracle,
     "similarity_ann_ivfsq" -> similarityAnnIvfSqOracle,
-    "similarity_ann_ivfsq_recall" -> ivfSqRecallOracle,
     "similarity_ann_ivfpq" -> similarityAnnIvfPqOracle,
-    // The staged form consumes the persisted index artifact but runs
-    // against the SAME oracle — the driver's sweep is what checks
+    // The staged forms consume the persisted index artifacts but run
+    // against the SAME oracles — the driver's sweep is what checks
     // staged ≡ inline (the pairGraph staging discipline).
     "similarity_ann_ivfpq_staged" -> similarityAnnIvfPqOracle,
-    "similarity_ann_ivfpq_recall" -> ivfPqRecallOracle,
     "similarity_ann_ivfpq_res" -> similarityAnnIvfPqResOracle,
-    // staged ≡ inline checked by the driver via the shared oracle
     "similarity_ann_ivfpq_res_staged" -> similarityAnnIvfPqResOracle,
-    "similarity_ann_ivfpq_res_recall" -> ivfPqResRecallOracle,
     "similarity_filtered_topk" -> similarityFilteredTopkOracle,
     "similarity_ann_ivfpq_filtered" -> similarityAnnIvfPqFilteredOracle,
-    "similarity_ann_ivfpq_filtered_recall" -> filteredRecallOracle,
-  )
+  ) ++ gates.map { case (name, _, floor) => name -> recallOracle(floor) }
 }

@@ -166,28 +166,3 @@ object ProbePlans2 {
     spark.stop()
   }
 }
-
-/** Dev probe: similarity_topk parallelism after the Blocks change. */
-object ProbeTopk {
-  private def force(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-  private def t(f: => Unit): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-  def main(args: Array[String]): Unit = {
-    val spark = graft.GraftSession.local(32, "probe-topk")
-    spark.sparkContext.setLogLevel("ERROR")
-    val sf = "/root/testdata/sf0.1"
-    for (b <- Seq(16, 32, 64, 128)) {
-      val q = graft.ops.Similarity.similarityTopk(spark, sf, b)
-      force(q)
-      println(s"[probe] topk_b$b: " + Seq.fill(3)({System.gc(); Thread.sleep(200); t(force(q))})
-        .map(x => f"$x%.3f").mkString(" "))
-    }
-    val ivf = graft.ops.Similarity.similarityAnnIvf(spark, sf)
-    force(ivf)
-    println("[probe] ivf: " + Seq.fill(3)({System.gc(); Thread.sleep(200); t(force(ivf))})
-      .map(x => f"$x%.3f").mkString(" "))
-    spark.stop()
-  }
-}

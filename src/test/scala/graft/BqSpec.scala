@@ -19,8 +19,8 @@ class BqSpec extends SparkSpec {
 
   test("exhaustive shortlist reduces BQ retrieval to the exact baseline") {
     val n = Similarity.corpusCount(spark, sf).toInt
-    val exhaustive = Similarity.similarityBqTopk(spark, sf, n).collect().toSeq
-    val exact = Similarity.similarityTopk(spark, sf).collect().toSeq
+    val exhaustive = Similarity.BqTopk.copy(shortlist = Some(n)).run(spark, sf).collect().toSeq
+    val exact = Similarity.ExactTopk.run(spark, sf).collect().toSeq
     assert(exhaustive == exact)
   }
 
@@ -55,7 +55,7 @@ class BqSpec extends SparkSpec {
   }
 
   test("retrieval contract: schema, K rows per query, no self-pairs") {
-    val out = Similarity.similarityBqTopk(spark, sf)
+    val out = Similarity.BqTopk.run(spark, sf)
     assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
     val perQuery = out.groupBy("query_id").count().collect()
     assert(perQuery.forall(_.getLong(1) == Similarity.K))
@@ -63,14 +63,14 @@ class BqSpec extends SparkSpec {
   }
 
   test("candidate stage never degrades to a nested-loop/cartesian plan") {
-    val plan = Similarity.similarityBqTopk(spark, sf)
+    val plan = Similarity.BqTopk.run(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "cartesian in BQ plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in BQ plan")
   }
 
   test("recall gate holds at the fixture") {
-    val r = Similarity.similarityBqRecall(spark, sf).head()
+    val r = Similarity.queries("similarity_bq_recall")(spark, sf).head()
     assert(r.getBoolean(0), s"BQ recall under floor ${r.getDouble(1)}")
   }
 
@@ -79,7 +79,7 @@ class BqSpec extends SparkSpec {
     // pair stage — bit_count(xor) — is the pinned hot path; the
     // once-per-row pack projections carry the grid cast (`transform`
     // = codegen fallback) and legitimately sit outside WSCG.
-    val df = Similarity.similarityBqTopk(spark, sf)
+    val df = Similarity.BqTopk.run(spark, sf)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     val scorer = plan.linesIterator

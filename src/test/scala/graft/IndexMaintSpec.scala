@@ -63,7 +63,7 @@ class IndexMaintSpec extends SparkSpec {
     assert(ingested.isStreaming)
     EventStream.runToMemory(ingested, "idx_ingest")
     val streamed = spark.table("idx_ingest")
-    val batch = Similarity.ivfPqIndexRows(spark, sf)
+    val batch = Similarity.AnnIvfPq.indexRows(spark, sf)
     assert(streamed.count() == batch.count())
     val diff = streamed.as("a").join(batch.as("b"), "neighbor_id")
       .where(col("a.cell") =!= col("b.cell") ||

@@ -37,7 +37,7 @@ class IndexStoreSpec extends SparkSpec {
       // Cold pass: pays construction, writes the artifacts.
       val cluster1 = Similarity.embeddingCluster(spark, sf).collect().toSeq
       val pq1 = Similarity.embeddingPq(spark, sf).collect().toSeq
-      val ann1 = Similarity.similarityAnnIvf(spark, sf).collect().toSeq
+      val ann1 = Similarity.AnnIvf.run(spark, sf).collect().toSeq
       val graph1 = graphRows(Dedup.pairGraph(spark, sf))
       val sq1 = Similarity.embeddingSq(spark, sf).collect().toSeq
       val bq1 = Similarity.embeddingBq(spark, sf).collect().toSeq
@@ -51,7 +51,7 @@ class IndexStoreSpec extends SparkSpec {
       val l1 = IndexStore.loads.get()
       val cluster2 = Similarity.embeddingCluster(spark, sf).collect().toSeq
       val pq2 = Similarity.embeddingPq(spark, sf).collect().toSeq
-      val ann2 = Similarity.similarityAnnIvf(spark, sf).collect().toSeq
+      val ann2 = Similarity.AnnIvf.run(spark, sf).collect().toSeq
       val graph2 = graphRows(Dedup.pairGraph(spark, sf))
       val sq2 = Similarity.embeddingSq(spark, sf).collect().toSeq
       val bq2 = Similarity.embeddingBq(spark, sf).collect().toSeq

@@ -22,13 +22,14 @@ class IvfPqResSpec extends SparkSpec {
     val k = Similarity.ivfCells(spark, sf)
     val n = Similarity.corpusCount(spark, sf)
     val exhaustive =
-      Similarity.similarityAnnIvfPqRes(spark, sf, k, n.toInt).collect().toSeq
-    val exact = Similarity.similarityTopk(spark, sf).collect().toSeq
+      Similarity.AnnIvfPqRes.copy(coarse = Similarity.Ivf(Some(k)),
+        shortlist = Some(n.toInt)).run(spark, sf).collect().toSeq
+    val exact = Similarity.ExactTopk.run(spark, sf).collect().toSeq
     assert(exhaustive == exact)
   }
 
   test("residual composite has the exact baseline's schema and K rows per query") {
-    val out = Similarity.similarityAnnIvfPqRes(spark, sf)
+    val out = Similarity.AnnIvfPqRes.run(spark, sf)
     assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
     val perQuery = out.groupBy("query_id").count().collect()
     assert(perQuery.forall(_.getLong(1) == Similarity.K))
@@ -85,9 +86,9 @@ class IvfPqResSpec extends SparkSpec {
     // codebook silently fell back to the raw machinery, the two index
     // row sets would coincide and the lane would be a copy of the
     // parent wearing a new name.
-    val raw = Similarity.ivfPqIndexRows(spark, sf)
+    val raw = Similarity.AnnIvfPq.indexRows(spark, sf)
       .select(col("neighbor_id"), col("codes"))
-    val res = Similarity.ivfPqResIndexRows(spark, sf)
+    val res = Similarity.AnnIvfPqRes.indexRows(spark, sf)
       .select(col("neighbor_id"), col("codes"))
     val differing = raw.join(res, "neighbor_id")
       .where(raw("codes") =!= res("codes")).count()
@@ -95,7 +96,7 @@ class IvfPqResSpec extends SparkSpec {
   }
 
   test("candidate stage never degrades to a nested-loop/cartesian plan") {
-    val plan = Similarity.similarityAnnIvfPqRes(spark, sf)
+    val plan = Similarity.AnnIvfPqRes.run(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "cartesian in residual-IVFADC plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in residual-IVFADC plan")
@@ -105,10 +106,11 @@ class IvfPqResSpec extends SparkSpec {
     // Without the barrier, whole-stage codegen fuses the LUT projection
     // into the candidate join's stage and defers the expression into
     // the per-match loop — the full residual+table computation re-ran
-    // once per PAIR (measured 75 CPU-s vs 8.6 at sf0.1; ProbeRes18).
+    // once per PAIR (measured 75 CPU-s vs 8.6 at sf0.1).
     // The barrier's signature in the plan: the lut-carrying struct
     // exploded between the probe exchange and the join.
     val plan = Similarity.resProbeLuts(spark, sf,
+      Similarity.normedOver(spark.read.parquet(s"$sf/embeddings.parquet")),
       Similarity.ivfProbes(Similarity.ivfCells(spark, sf)))
       .queryExecution.executedPlan.toString
     assert(plan.contains("explode(filter(array(struct(query_id"),
@@ -120,19 +122,19 @@ class IvfPqResSpec extends SparkSpec {
   }
 
   test("staged retrieval over the persisted residual index equals the inline form") {
-    val inline0 = Similarity.similarityAnnIvfPqRes(spark, sf).collect().toSeq
-    val staged = Similarity.similarityAnnIvfPqResStaged(spark, sf).collect().toSeq
+    val inline0 = Similarity.AnnIvfPqRes.run(spark, sf).collect().toSeq
+    val staged = Similarity.AnnIvfPqResStaged.run(spark, sf).collect().toSeq
     assert(staged == inline0)
     val b0 = graft.ops.IndexStore.builds.get()
     val l0 = graft.ops.IndexStore.loads.get()
-    val again = Similarity.similarityAnnIvfPqResStaged(spark, sf).collect().toSeq
+    val again = Similarity.AnnIvfPqResStaged.run(spark, sf).collect().toSeq
     assert(again == inline0)
     assert(graft.ops.IndexStore.builds.get() == b0, "staged re-run rebuilt the index")
     assert(graft.ops.IndexStore.loads.get() > l0, "staged re-run did not load the artifact")
   }
 
   test("residual recall gate holds on the fixture (and the row says so)") {
-    val row = Similarity.similarityAnnIvfPqResRecall(spark, sf).head()
+    val row = Similarity.queries("similarity_ann_ivfpq_res_recall")(spark, sf).head()
     assert(row.getBoolean(0), "recall_ok")
     assert(row.getDouble(1) == Similarity.IvfPqResRecallFloor)
   }

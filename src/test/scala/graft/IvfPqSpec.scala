@@ -23,13 +23,14 @@ class IvfPqSpec extends SparkSpec {
     val k = Similarity.ivfCells(spark, sf)
     val n = Similarity.corpusCount(spark, sf)
     val exhaustive =
-      Similarity.similarityAnnIvfPq(spark, sf, k, n.toInt).collect().toSeq
-    val exact = Similarity.similarityTopk(spark, sf).collect().toSeq
+      Similarity.AnnIvfPq.copy(coarse = Similarity.Ivf(Some(k)),
+        shortlist = Some(n.toInt)).run(spark, sf).collect().toSeq
+    val exact = Similarity.ExactTopk.run(spark, sf).collect().toSeq
     assert(exhaustive == exact)
   }
 
   test("composite has the exact baseline's schema and K rows per query") {
-    val out = Similarity.similarityAnnIvfPq(spark, sf)
+    val out = Similarity.AnnIvfPq.run(spark, sf)
     assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
     val perQuery = out.groupBy("query_id").count().collect()
     assert(perQuery.forall(_.getLong(1) == Similarity.K))
@@ -50,28 +51,28 @@ class IvfPqSpec extends SparkSpec {
   }
 
   test("candidate stage never degrades to a nested-loop/cartesian plan") {
-    val plan = Similarity.similarityAnnIvfPq(spark, sf)
+    val plan = Similarity.AnnIvfPq.run(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "cartesian in IVFADC plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in IVFADC plan")
   }
 
   test("staged retrieval over the persisted index equals the inline form") {
-    val inline0 = Similarity.similarityAnnIvfPq(spark, sf).collect().toSeq
-    val staged = Similarity.similarityAnnIvfPqStaged(spark, sf).collect().toSeq
+    val inline0 = Similarity.AnnIvfPq.run(spark, sf).collect().toSeq
+    val staged = Similarity.AnnIvfPqStaged.run(spark, sf).collect().toSeq
     assert(staged == inline0)
     // And the artifact is really on disk: a second staged run loads
     // without paying a build.
     val b0 = graft.ops.IndexStore.builds.get()
     val l0 = graft.ops.IndexStore.loads.get()
-    val again = Similarity.similarityAnnIvfPqStaged(spark, sf).collect().toSeq
+    val again = Similarity.AnnIvfPqStaged.run(spark, sf).collect().toSeq
     assert(again == inline0)
     assert(graft.ops.IndexStore.builds.get() == b0, "staged re-run rebuilt the index")
     assert(graft.ops.IndexStore.loads.get() > l0, "staged re-run did not load the artifact")
   }
 
   test("composite recall gate holds on the fixture (and the row says so)") {
-    val row = Similarity.similarityAnnIvfPqRecall(spark, sf).head()
+    val row = Similarity.queries("similarity_ann_ivfpq_recall")(spark, sf).head()
     assert(row.getBoolean(0), "recall_ok")
     assert(row.getDouble(1) == Similarity.IvfPqRecallFloor)
   }
@@ -80,8 +81,9 @@ class IvfPqSpec extends SparkSpec {
     val k = Similarity.ivfCells(spark, sf)
     val n = Similarity.corpusCount(spark, sf)
     val exhaustive =
-      Similarity.similarityAnnIvfPqFiltered(spark, sf, k, n.toInt).collect().toSeq
-    val exact = Similarity.similarityFilteredTopk(spark, sf).collect().toSeq
+      Similarity.AnnIvfPqFiltered.copy(coarse = Similarity.Ivf(Some(k)),
+        shortlist = Some(n.toInt)).run(spark, sf).collect().toSeq
+    val exact = Similarity.FilteredTopk.run(spark, sf).collect().toSeq
     assert(exhaustive == exact)
   }
 
@@ -94,16 +96,16 @@ class IvfPqSpec extends SparkSpec {
         .join(labels.withColumnRenamed("vec_id", "neighbor_id")
           .withColumnRenamed("label", "nl"), "neighbor_id")
         .where(col("ql") =!= col("nl")).count()
-    assert(labelViolations(Similarity.similarityFilteredTopk(spark, sf)) == 0L)
-    assert(labelViolations(Similarity.similarityAnnIvfPqFiltered(spark, sf)) == 0L)
+    assert(labelViolations(Similarity.FilteredTopk.run(spark, sf)) == 0L)
+    assert(labelViolations(Similarity.AnnIvfPqFiltered.run(spark, sf)) == 0L)
     // and both still produce K rows per query (every fixture label has
     // far more than K members)
-    assert(Similarity.similarityAnnIvfPqFiltered(spark, sf)
+    assert(Similarity.AnnIvfPqFiltered.run(spark, sf)
       .groupBy("query_id").count().collect().forall(_.getLong(1) == Similarity.K))
   }
 
   test("filtered recall gate holds on the fixture (and the row says so)") {
-    val row = Similarity.similarityAnnIvfPqFilteredRecall(spark, sf).head()
+    val row = Similarity.queries("similarity_ann_ivfpq_filtered_recall")(spark, sf).head()
     assert(row.getBoolean(0), "recall_ok")
     assert(row.getDouble(1) == Similarity.FilteredRecallFloor)
   }

@@ -15,13 +15,14 @@ class IvfSqSpec extends SparkSpec {
     val k = Similarity.ivfCells(spark, sf)
     val n = Similarity.corpusCount(spark, sf)
     val exhaustive =
-      Similarity.similarityAnnIvfSq(spark, sf, k, n.toInt).collect().toSeq
-    val exact = Similarity.similarityTopk(spark, sf).collect().toSeq
+      Similarity.AnnIvfSq.copy(coarse = Similarity.Ivf(Some(k)),
+        shortlist = Some(n.toInt)).run(spark, sf).collect().toSeq
+    val exact = Similarity.ExactTopk.run(spark, sf).collect().toSeq
     assert(exhaustive == exact)
   }
 
   test("composite has the exact baseline's schema and K rows per query") {
-    val out = Similarity.similarityAnnIvfSq(spark, sf)
+    val out = Similarity.AnnIvfSq.run(spark, sf)
     assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
     val perQuery = out.groupBy("query_id").count().collect()
     assert(perQuery.forall(_.getLong(1) == Similarity.K))
@@ -29,14 +30,14 @@ class IvfSqSpec extends SparkSpec {
   }
 
   test("candidate stage never degrades to a nested-loop/cartesian plan") {
-    val plan = Similarity.similarityAnnIvfSq(spark, sf)
+    val plan = Similarity.AnnIvfSq.run(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "cartesian in IVF-SQ plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in IVF-SQ plan")
   }
 
   test("recall gate holds at the fixture") {
-    val r = Similarity.similarityAnnIvfSqRecall(spark, sf).head()
+    val r = Similarity.queries("similarity_ann_ivfsq_recall")(spark, sf).head()
     assert(r.getBoolean(0), s"IVF-SQ recall under floor ${r.getDouble(1)}")
   }
 }

@@ -74,7 +74,7 @@ class LlmOpsSpec extends SparkSpec {
   }
 
   test("similarity_topk: k rows per query, descending sim, no self-match") {
-    val out = Similarity.similarityTopk(spark, sf).collect()
+    val out = Similarity.ExactTopk.run(spark, sf).collect()
     val byQuery = out.groupBy(_.getAs[Long]("query_id"))
     assert(byQuery.values.forall(_.length == Similarity.K))
     byQuery.values.foreach { rows =>
@@ -89,8 +89,8 @@ class LlmOpsSpec extends SparkSpec {
     import spark.implicits._
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val exact = pairs(Similarity.similarityTopk(spark, sf))
-    val ann = pairs(Similarity.similarityAnnIvf(spark, sf))
+    val exact = pairs(Similarity.ExactTopk.run(spark, sf))
+    val ann = pairs(Similarity.AnnIvf.run(spark, sf))
     val recall = (exact & ann).size.toDouble / exact.size
     // Lloyd-refined centroids at 12/16 probes measure 0.94 here; the
     // floor matches the oracle-visible similarity_ann_recall gate.

@@ -50,7 +50,7 @@ class PlanSingleEvalSpec extends SparkSpec {
   }
 
   test("IVFADC: one code argmin for the corpus, two centroid stages") {
-    val df = Similarity.similarityAnnIvfPq(spark, sf)
+    val df = Similarity.AnnIvfPq.run(spark, sf)
     assert(occurrences(df, "pq_code_argmin") == 1)
     // corpus-side cell assignment + query-side probe ranking: two
     // DIFFERENT stages by design, not a re-evaluation.
@@ -58,14 +58,14 @@ class PlanSingleEvalSpec extends SparkSpec {
   }
 
   test("SQ retrieval: one encode pass, one ADC scorer") {
-    val df = Similarity.similaritySqTopk(spark, sf)
+    val df = Similarity.SqTopk.run(spark, sf)
     assert(occurrences(df, "sq_encode") == 1)
     assert(occurrences(df, "sq_adc_l2") == 1)
   }
 
   test("BQ retrieval: one pack pass per side") {
     // query side + corpus side: two different projections by design.
-    assert(occurrences(Similarity.similarityBqTopk(spark, sf), "bitpack_gt") == 2)
+    assert(occurrences(Similarity.BqTopk.run(spark, sf), "bitpack_gt") == 2)
   }
 
   test("ngram counting tokenizes exactly once") {

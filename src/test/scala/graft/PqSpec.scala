@@ -80,7 +80,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("similarity_pq_topk has the exact baseline's schema and K rows per query") {
-    val out = Similarity.similarityPqTopk(spark, sf)
+    val out = Similarity.PqTopk.run(spark, sf)
     assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
     val perQuery = out.groupBy("query_id").count().collect()
     assert(perQuery.forall(_.getLong(1) == Similarity.K))
@@ -106,7 +106,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("ADC join never degrades to a nested-loop/cartesian plan") {
-    val plan = Similarity.similarityPqTopk(spark, sf)
+    val plan = Similarity.PqTopk.run(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "cartesian in ADC plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in ADC plan")
@@ -116,8 +116,8 @@ class PqSpec extends SparkSpec {
     // The per-subspace table entries sum to exactly the integer L2
     // over the concatenated reconstruction, so the two formulations
     // must agree on every row including all tie-breaks.
-    val lut = Similarity.similarityPqTopk(spark, sf).collect().toSeq
-    val rec = Similarity.similarityPqTopkRecon(spark, sf).collect().toSeq
+    val lut = Similarity.PqTopk.run(spark, sf).collect().toSeq
+    val rec = Similarity.PqTopk.copy(code = Similarity.PqRecon).run(spark, sf).collect().toSeq
     assert(lut == rec)
   }
 
@@ -141,7 +141,7 @@ class PqSpec extends SparkSpec {
       val code = r.getAs[Long]("pq_code")
       assert(code >= 0L && code < (1L << (4 * Similarity.PqM)))
     }
-    val topk = Similarity.similarityPqTopk(spark, dir)
+    val topk = Similarity.PqTopk.run(spark, dir)
     assert(topk.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
     assert(topk.groupBy("query_id").count().collect()
       .forall(_.getLong(1) == Similarity.K))
@@ -156,7 +156,7 @@ class PqSpec extends SparkSpec {
   }
 
   test("PQ recall gate holds on the fixture (and the row says so)") {
-    val row = Similarity.similarityPqRecall(spark, sf).head()
+    val row = Similarity.queries("similarity_pq_recall")(spark, sf).head()
     assert(row.getBoolean(0), "recall_ok")
     assert(row.getDouble(1) == Similarity.PqRecallFloor)
   }

@@ -153,10 +153,11 @@ class Round16OpsSpec extends SparkSpec {
     // one-split query scan, single-coring the quadratic stage. The
     // explicit broadcast() pins must hold in the executed plan.
     for ((name, df, key) <- Seq(
-      ("similarity_topk", Similarity.similarityTopk(spark, sf), "blk"),
-      ("similarity_ann_ivf", Similarity.similarityAnnIvf(spark, sf), "cell"),
-      ("pq_adc_lut", Similarity.pqAdcStage(spark, sf, lutScoring = true), "blk"),
-      ("pq_adc_recon", Similarity.pqAdcStage(spark, sf, lutScoring = false), "blk"))) {
+      ("similarity_topk", Similarity.ExactTopk.run(spark, sf), "blk"),
+      ("similarity_ann_ivf", Similarity.AnnIvf.run(spark, sf), "cell"),
+      ("pq_adc_lut", Similarity.PqTopk.candidates(spark, sf), "blk"),
+      ("pq_adc_recon",
+        Similarity.PqTopk.copy(code = Similarity.PqRecon).candidates(spark, sf), "blk"))) {
       val plan = df.queryExecution.executedPlan.toString
       val joins = plan.split("\n").filter(_.contains("BroadcastHashJoin"))
       // the candidate join is the one keyed on the block/cell column
@@ -169,7 +170,7 @@ class Round16OpsSpec extends SparkSpec {
     // a SECOND broadcast join keyed on query_id — its build side is the
     // broadcast vector frame on the RIGHT (the pair stream stays
     // streamed); a BuildLeft here would broadcast the pair stream.
-    val ivfPlan = Similarity.similarityAnnIvf(spark, sf)
+    val ivfPlan = Similarity.AnnIvf.run(spark, sf)
       .queryExecution.executedPlan.toString
     val attach = ivfPlan.split("\n")
       .filter(l => l.contains("BroadcastHashJoin") && l.contains("[query_id#"))

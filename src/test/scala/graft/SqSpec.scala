@@ -25,8 +25,8 @@ class SqSpec extends SparkSpec {
     // rerank IS the exact baseline — row-for-row, ties included. The
     // production budget only PRUNES this computation.
     val n = Similarity.corpusCount(spark, sf).toInt
-    val exhaustive = Similarity.similaritySqTopk(spark, sf, n).collect().toSeq
-    val exact = Similarity.similarityTopk(spark, sf).collect().toSeq
+    val exhaustive = Similarity.SqTopk.copy(shortlist = Some(n)).run(spark, sf).collect().toSeq
+    val exact = Similarity.ExactTopk.run(spark, sf).collect().toSeq
     assert(exhaustive == exact)
   }
 
@@ -111,7 +111,7 @@ class SqSpec extends SparkSpec {
   }
 
   test("retrieval contract: schema, K rows per query, no self-pairs") {
-    val out = Similarity.similaritySqTopk(spark, sf)
+    val out = Similarity.SqTopk.run(spark, sf)
     assert(out.columns.toSeq == Seq("query_id", "neighbor_id", "sim", "rank"))
     val perQuery = out.groupBy("query_id").count().collect()
     assert(perQuery.forall(_.getLong(1) == Similarity.K))
@@ -119,14 +119,14 @@ class SqSpec extends SparkSpec {
   }
 
   test("candidate stage never degrades to a nested-loop/cartesian plan") {
-    val plan = Similarity.similaritySqTopk(spark, sf)
+    val plan = Similarity.SqTopk.run(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), "cartesian in SQ plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), "nested loop in SQ plan")
   }
 
   test("recall gate holds at the fixture") {
-    val r = Similarity.similaritySqRecall(spark, sf).head()
+    val r = Similarity.queries("similarity_sq_recall")(spark, sf).head()
     assert(r.getBoolean(0), s"SQ recall under floor ${r.getDouble(1)}")
   }
 
@@ -137,7 +137,7 @@ class SqSpec extends SparkSpec {
     // grid cast (`transform`, a higher-order function = codegen
     // fallback) and legitimately sit outside WSCG — N-scale, not the
     // hot path.
-    val df = Similarity.similaritySqTopk(spark, sf)
+    val df = Similarity.SqTopk.run(spark, sf)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     val scorer = plan.linesIterator.filter(_.contains("sq_adc_l2")).toSeq

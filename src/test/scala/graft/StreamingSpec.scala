@@ -812,7 +812,7 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(s"$landing/*")
     EmbedStream.runAnnServe(queries, sf, out, ck)
     val streamed = spark.read.parquet(out)
-    val batch = graft.ops.Similarity.similarityAnnIvfPqStaged(spark, sf)
+    val batch = graft.ops.Similarity.AnnIvfPqStaged.run(spark, sf)
     assert(streamed.count() == batch.count())
     val diff = streamed.as("a").join(batch.as("b"), Seq("query_id", "rank"))
       .filter(col("a.neighbor_id") =!= col("b.neighbor_id") ||

@@ -61,7 +61,7 @@ class TopKAndPlanSpec extends SparkSpec {
   }
 
   test("similarity_topk plans no CartesianProduct / BroadcastNestedLoopJoin") {
-    val plan = executed(Similarity.similarityTopk(spark, sf))
+    val plan = executed(Similarity.ExactTopk.run(spark, sf))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
       s"quadratic join shape in plan:\n${plan.take(1200)}")
   }
@@ -76,7 +76,7 @@ class TopKAndPlanSpec extends SparkSpec {
     assert(Similarity.MaxQueryBroadcastBytes * 4 <= (8L << 30))
     // and the broadcast pin IS present on the fixture plan (the r16
     // build-side flip regression this pin exists for)
-    val plan = executed(Similarity.similarityTopk(spark, sf))
+    val plan = executed(Similarity.ExactTopk.run(spark, sf))
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"),
       s"fixture-scale query side must broadcast:\n${plan.take(1200)}")
   }
@@ -93,10 +93,10 @@ class TopKAndPlanSpec extends SparkSpec {
     // hashes into at most Blocks(=16) distinct groups — half a 32-core
     // cluster idle — so losing `neighbor_id` from the exchange is a
     // regression this pin must catch, not just losing the exchange.
-    val topk = executed(Similarity.similarityTopk(spark, sf))
+    val topk = executed(Similarity.ExactTopk.run(spark, sf))
     assert("hashpartitioning\\(blk[^)]*neighbor_id".r.findFirstIn(topk).isDefined,
       s"no (blk, neighbor_id) fan-out exchange in similarity_topk plan:\n${topk.take(1500)}")
-    val ivf = executed(Similarity.similarityAnnIvf(spark, sf))
+    val ivf = executed(Similarity.AnnIvf.run(spark, sf))
     assert("hashpartitioning\\(cell[^)]*vec_id".r.findFirstIn(ivf).isDefined,
       s"no (cell, vec_id) fan-out exchange in similarity_ann_ivf plan:\n${ivf.take(1500)}")
     // dedup_embedding's 2048-dot signature projection has the same
@@ -169,7 +169,7 @@ class TopKAndPlanSpec extends SparkSpec {
   }
 
   test("similarity_ann_recall reports the floor met on the fixture") {
-    val row = Similarity.similarityAnnRecall(spark, sf).collect()
+    val row = Similarity.queries("similarity_ann_recall")(spark, sf).collect()
     assert(row.length == 1 && row(0).getAs[Boolean]("recall_ok"))
   }
 
