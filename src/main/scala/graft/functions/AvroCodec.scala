@@ -1,16 +1,14 @@
 package graft.functions
 
-import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 
 import org.apache.avro.Schema
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.io.{BinaryDecoder, BinaryEncoder, DecoderFactory, EncoderFactory}
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,190 +19,192 @@ import org.apache.spark.unsafe.types.UTF8String
   * module, so `to_avro`/`from_avro` are re-implemented here over
   * `org.apache.avro` directly. This re-expresses the reference's
   * per-record `avro.Marshal` (`fixed2avro/ColumnBuilder.go:75-95`) as an
-  * expression: one reused encoder + record per task (the reference reuses
+  * expression: one reused output buffer per task (the reference reuses
   * one record per chunk, `fixed2avro/ColumnBuilder.go:67-68`), no
   * per-row allocation beyond the output byte array.
   *
   * Supported field types = the reference's type universe (SURVEY.md §1.3):
   * boolean, bytes, int, long, float, double, string, date (int days),
-  * timestamp-millis/micros (long). Flat records only, no unions — exactly
-  * the model of `common/fixed.go:86-148`.
+  * timestamp-millis/micros (long), each plain or as the optional
+  * `["null", T]` union ([[graft.schema.FixedSchema.nullableAvroJson]]).
+  *
+  * One table, [[kindOf]], maps an (Avro field schema, Spark type) pair to
+  * its wire kind. Every encoder ([[RowWriter]] under `to_avro` and the
+  * OCF sink, [[AvroEncodeDirect]]) and every decoder ([[RowReader]] under
+  * `from_avro`, the Kafka decode and the OCF source) dispatches on it.
   */
 object AvroCodec {
 
-  /** Encode one `InternalRow` field straight to the Avro binary
-    * encoder — no boxing, no `GenericData.Record` store, no
-    * `GenericDatumWriter` schema walk. Timestamps/dates are already
-    * epoch micros/days in Tungsten; strings write their UTF-8 bytes via
-    * `writeBytes` (Avro wire encoding of `string` and `bytes` is
-    * identical: length + data), skipping the UTF8String→String decode +
-    * re-encode round trip. */
-  private[graft] type FieldWriter = (InternalRow, Int, org.apache.avro.io.Encoder) => Unit
+  // Wire kinds: the value encoding of one field.
+  private[graft] final val KBool = 0; private[graft] final val KInt = 1
+  private[graft] final val KLong = 2; private[graft] final val KIntAsLong = 3
+  private[graft] final val KFloat = 4; private[graft] final val KDouble = 5
+  private[graft] final val KStr = 6; private[graft] final val KBytes = 7
+  private[graft] final val KTsMillis = 8
 
-  /** For an optional `["null", T]` union, the (null branch index,
-    * value branch index, value schema). Only two-branch unions with a
-    * null member are supported — the standard Avro optional-field
-    * encoding ([[graft.schema.FixedSchema.nullableAvroJson]]); wider
-    * unions are outside both the reference's model and this codec's. */
-  private def optionalBranches(avro: Schema): (Int, Int, Schema) = {
-    val ts = avro.getTypes
-    require(ts.size == 2 &&
-        (ts.get(0).getType == Schema.Type.NULL || ts.get(1).getType == Schema.Type.NULL),
-      s"AvroCodec: only optional [\"null\", T] unions are supported, got $avro")
-    val nullIdx = if (ts.get(0).getType == Schema.Type.NULL) 0 else 1
-    (nullIdx, 1 - nullIdx, ts.get(1 - nullIdx))
-  }
+  /** A field's wire kind; for an optional `["null", T]` union also its
+    * null and value branch indexes (both -1 for a plain field). */
+  private[graft] final case class FieldKind(kind: Int, nullIdx: Int, valIdx: Int)
 
-  private def fieldWriter(dt: DataType, avro: Schema): FieldWriter = {
+  /** The (Avro field schema, Spark type) → wire kind table. Timestamps
+    * and dates are already epoch micros/days in Tungsten; the
+    * `timestamp-millis` annotation (on the union's value branch for an
+    * optional field) selects the floor-div to millis. Only two-branch
+    * unions with a null member are supported — wider unions are outside
+    * both the reference's model and this codec's. */
+  private[graft] def kindOf(avro: Schema, dt: DataType): FieldKind = {
     if (avro.getType == Schema.Type.UNION) {
-      // Optional union: branch index (zigzag long on the wire), then
-      // nothing for null / the value encoding for the value branch.
-      val (nullIdx, valIdx, valSchema) = optionalBranches(avro)
-      val base = fieldWriter(dt, valSchema)
-      return (r, i, e) =>
-        if (r.isNullAt(i)) { e.writeIndex(nullIdx); e.writeNull() }
-        else { e.writeIndex(valIdx); base(r, i, e) }
+      val ts = avro.getTypes
+      require(ts.size == 2 &&
+          (ts.get(0).getType == Schema.Type.NULL || ts.get(1).getType == Schema.Type.NULL),
+        s"AvroCodec: only optional [\"null\", T] unions are supported, got $avro")
+      val nullIdx = if (ts.get(0).getType == Schema.Type.NULL) 0 else 1
+      return FieldKind(kindOf(ts.get(1 - nullIdx), dt).kind, nullIdx, 1 - nullIdx)
     }
-    val logical = Option(avro.getProp("logicalType"))
-    dt match {
-      case StringType  => (r, i, e) => {
-        val b = r.getUTF8String(i).getBytes; e.writeBytes(b, 0, b.length)
-      }
-      case BinaryType  => (r, i, e) => { val b = r.getBinary(i); e.writeBytes(b, 0, b.length) }
-      case BooleanType => (r, i, e) => e.writeBoolean(r.getBoolean(i))
-      case IntegerType if avro.getType == Schema.Type.LONG =>
-        (r, i, e) => e.writeLong(r.getInt(i).toLong)
-      case IntegerType => (r, i, e) => e.writeInt(r.getInt(i))
-      case LongType    => (r, i, e) => e.writeLong(r.getLong(i))
-      case FloatType   => (r, i, e) => e.writeFloat(r.getFloat(i))
-      case DoubleType  => (r, i, e) => e.writeDouble(r.getDouble(i))
-      case DateType    => (r, i, e) => e.writeInt(r.getInt(i))
-      case TimestampType | TimestampNTZType =>
-        if (logical.contains("timestamp-millis"))
-          (r, i, e) => e.writeLong(Math.floorDiv(r.getLong(i), 1000L))
-        else (r, i, e) => e.writeLong(r.getLong(i))
-      case t => throw new IllegalArgumentException(s"AvroCodec: unsupported Spark type $t")
+    val kind = (avro.getType, dt) match {
+      case (Schema.Type.STRING, StringType) => KStr
+      case (Schema.Type.BYTES, BinaryType) => KBytes
+      case (Schema.Type.BOOLEAN, BooleanType) => KBool
+      case (Schema.Type.INT, IntegerType | DateType) => KInt
+      case (Schema.Type.LONG, IntegerType) => KIntAsLong
+      case (Schema.Type.LONG, LongType) => KLong
+      case (Schema.Type.FLOAT, FloatType) => KFloat
+      case (Schema.Type.DOUBLE, DoubleType) => KDouble
+      case (Schema.Type.LONG, TimestampType | TimestampNTZType) =>
+        if (avro.getProp("logicalType") == "timestamp-millis") KTsMillis else KLong
+      case (a, t) => throw new IllegalArgumentException(
+        s"AvroCodec: unsupported field pair: Avro $a as Spark $t")
+    }
+    FieldKind(kind, -1, -1)
+  }
+
+  private def recordKinds(avroSchema: Schema, sparkSchema: StructType): Array[FieldKind] = {
+    require(avroSchema.getType == Schema.Type.RECORD &&
+        avroSchema.getFields.size == sparkSchema.size,
+      s"Avro schema has ${avroSchema.getFields.size} fields, struct has ${sparkSchema.size}")
+    sparkSchema.fields.zipWithIndex.map { case (f, i) =>
+      kindOf(avroSchema.getFields.get(i).schema(), f.dataType)
     }
   }
 
-  /** `DatumWriter` over `InternalRow` built from the per-field writer
-    * plan; rows must be non-null in every field (the flat reference
-    * schema model has no unions). Shared by [[AvroEncode]] and the OCF
-    * sink ([[graft.sources.Ocf.write]]). */
-  private[graft] final class InternalRowDatumWriter(avroSchema: Schema, sparkSchema: StructType)
-      extends org.apache.avro.io.DatumWriter[InternalRow] {
-    private val writers: Array[FieldWriter] =
-      sparkSchema.fields.zipWithIndex.map { case (f, i) =>
-        fieldWriter(f.dataType, avroSchema.getFields.get(i).schema())
-      }.toArray
-    override def setSchema(s: Schema): Unit = ()
-    override def write(row: InternalRow, out: org.apache.avro.io.Encoder): Unit = {
+  private[graft] def nullFieldMessage(who: String, field: String): String =
+    s"$who: null in field '$field' — the fixed-width schema model has no " +
+      "unions/nullable fields (SURVEY.md §1.2); filter or default nulls " +
+      "before encoding, or encode with the [\"null\", T] optional schema " +
+      "(nullableAvroJson)"
+
+  /** `InternalRow` → Avro record body, straight into an [[AvroWire]]: no
+    * boxing, no `GenericData.Record`, no schema walk. Strings ship their
+    * UTF-8 bytes in one copy. A null in an optional field is its null
+    * branch index; a null in a plain field fails, naming the field.
+    * Shared by [[AvroEncode]] and the OCF sink
+    * ([[graft.sources.OcfWire.Writer.append]]). */
+  private[graft] final class RowWriter(avroSchema: Schema, sparkSchema: StructType, who: String) {
+    private val fks = recordKinds(avroSchema, sparkSchema)
+    private val kinds = fks.map(_.kind)
+    private val nullIdx = fks.map(_.nullIdx)
+    private val valIdx = fks.map(_.valIdx)
+
+    def write(row: InternalRow, out: AvroWire): Unit = {
       var i = 0
-      while (i < writers.length) { writers(i)(row, i, out); i += 1 }
+      while (i < kinds.length) {
+        if (row.isNullAt(i)) {
+          if (nullIdx(i) < 0)
+            throw new IllegalArgumentException(nullFieldMessage(who, sparkSchema(i).name))
+          out.writeInt(nullIdx(i))
+        } else {
+          if (valIdx(i) >= 0) out.writeInt(valIdx(i))
+          (kinds(i): @annotation.switch) match {
+            case KBool => out.writeBoolean(row.getBoolean(i))
+            case KInt => out.writeInt(row.getInt(i))
+            case KLong => out.writeLong(row.getLong(i))
+            case KIntAsLong => out.writeLong(row.getInt(i).toLong)
+            case KFloat => out.writeFloat(row.getFloat(i))
+            case KDouble => out.writeDouble(row.getDouble(i))
+            case KStr => out.writeUtf8(row.getUTF8String(i))
+            case KBytes => out.writeBytes(row.getBinary(i))
+            case KTsMillis => out.writeLong(Math.floorDiv(row.getLong(i), 1000L))
+          }
+        }
+        i += 1
+      }
     }
   }
 
-  private[graft] def internalRowDatumWriter(avroSchema: Schema, sparkSchema: StructType)
-      : InternalRowDatumWriter = new InternalRowDatumWriter(avroSchema, sparkSchema)
+  /** Avro record → `InternalRow`, adaptive on the writer schema set by
+    * `setSchema` (an OCF header's, or a Confluent id's): equal to the
+    * reader schema (the steady state), fields decode straight off the
+    * binary decoder — no `GenericRecord`, no schema walk; an evolved
+    * writer goes through the resolving `GenericDatumReader` (fields
+    * matched by name, promotions applied) and the per-kind converter.
+    * Without a `setSchema` call the writer is the reader. Strings and
+    * bytes are fresh per value: no returned row aliases decoder memory. */
+  private[graft] final class RowReader(reader: Schema, sparkSchema: StructType)
+      extends org.apache.avro.io.DatumReader[InternalRow] {
+    private val fks = recordKinds(reader, sparkSchema)
+    private val kinds = fks.map(_.kind)
+    private val nullIdx = fks.map(_.nullIdx)
+    private var resolving: GenericDatumReader[GenericRecord] = _
 
-  /** Decode one Avro field straight off the binary decoder into its
-    * Tungsten representation — the read-side mirror of [[FieldWriter]]:
-    * no `GenericRecord` store, no schema walk, no `Utf8` wrapper.
-    * String/bytes read through `readBytes(null)` (fresh buffer per
-    * value — the returned row must not alias decoder-reused memory). */
-  private[graft] type FieldReader = org.apache.avro.io.Decoder => Any
+    override def setSchema(writer: Schema): Unit =
+      resolving = if (writer == reader) null else new GenericDatumReader[GenericRecord](writer, reader)
 
-  private def fieldReader(avro: Schema, dt: DataType): FieldReader = {
-    if (avro.getType == Schema.Type.UNION) {
-      val (nullIdx, _, valSchema) = optionalBranches(avro)
-      val base = fieldReader(valSchema, dt)
-      return d => {
-        val idx = d.readIndex()
-        if (idx == nullIdx) { d.readNull(); null } else base(d)
+    override def read(reuse: InternalRow, d: org.apache.avro.io.Decoder): InternalRow = {
+      val out = new Array[Any](kinds.length)
+      var i = 0
+      if (resolving == null) {
+        while (i < kinds.length) {
+          out(i) = if (nullIdx(i) >= 0 && d.readIndex() == nullIdx(i)) null else decode(kinds(i), d)
+          i += 1
+        }
+      } else {
+        // A fresh record per read: the string branch wraps the Utf8's own
+        // buffer (no char decode), so a reused record would alias rows.
+        val rec = resolving.read(null, d)
+        while (i < kinds.length) {
+          val v = rec.get(i)
+          out(i) = if (v == null) null else convert(kinds(i), v)
+          i += 1
+        }
       }
+      new GenericInternalRow(out)
     }
-    val logical = Option(avro.getProp("logicalType"))
-    (avro.getType, dt) match {
-      case (Schema.Type.STRING, StringType) => d => {
+
+    private def decode(kind: Int, d: org.apache.avro.io.Decoder): Any = (kind: @annotation.switch) match {
+      case KBool => d.readBoolean()
+      case KInt => d.readInt()
+      case KLong => d.readLong()
+      case KIntAsLong => d.readLong().toInt
+      case KFloat => d.readFloat()
+      case KDouble => d.readDouble()
+      case KStr =>
         val bb = d.readBytes(null)
         UTF8String.fromBytes(bb.array(), bb.position(), bb.remaining())
-      }
-      case (Schema.Type.BYTES, BinaryType) => d => {
+      case KBytes =>
         val bb = d.readBytes(null)
         val a = new Array[Byte](bb.remaining()); bb.get(a); a
+      case KTsMillis => Math.multiplyExact(d.readLong(), 1000L)
+    }
+
+    /** A `GenericRecord` field value → its Catalyst value. */
+    private def convert(kind: Int, v: AnyRef): Any = (kind: @annotation.switch) match {
+      case KStr => v match {
+        case u: org.apache.avro.util.Utf8 => UTF8String.fromBytes(u.getBytes, 0, u.getByteLength)
+        case s => UTF8String.fromString(s.toString)
       }
-      case (Schema.Type.BOOLEAN, BooleanType) => d => d.readBoolean()
-      case (Schema.Type.INT, IntegerType)     => d => d.readInt()
-      case (Schema.Type.LONG, LongType)       => d => d.readLong()
-      case (Schema.Type.LONG, IntegerType)    => d => d.readLong().toInt
-      case (Schema.Type.FLOAT, FloatType)     => d => d.readFloat()
-      case (Schema.Type.DOUBLE, DoubleType)   => d => d.readDouble()
-      case (Schema.Type.INT, DateType)        => d => d.readInt()
-      case (Schema.Type.LONG, TimestampType | TimestampNTZType)
-          if logical.contains("timestamp-millis") =>
-        d => Math.multiplyExact(d.readLong(), 1000L)
-      case (Schema.Type.LONG, TimestampType | TimestampNTZType) => d => d.readLong()
-      case (a, t) =>
-        throw new IllegalArgumentException(s"AvroCodec: cannot decode Avro $a as Spark $t")
-    }
-  }
-
-  /** Sequential-field decoder for the writer == reader case (flat
-    * schema, no unions → the wire layout IS the field order). Callers
-    * MUST verify schema equality first; mismatched writers go through
-    * the resolving `GenericDatumReader` path. */
-  private[graft] final class InternalRowDatumReader(avroSchema: Schema, sparkSchema: StructType) {
-    private val readers: Array[FieldReader] =
-      sparkSchema.fields.zipWithIndex.map { case (f, i) =>
-        fieldReader(avroSchema.getFields.get(i).schema(), f.dataType)
-      }.toArray
-    def read(d: org.apache.avro.io.Decoder): InternalRow = {
-      val out = new Array[Any](readers.length)
-      var i = 0
-      while (i < readers.length) { out(i) = readers(i)(d); i += 1 }
-      new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-    }
-  }
-
-  private[graft] def internalRowDatumReader(avroSchema: Schema, sparkSchema: StructType)
-      : InternalRowDatumReader = new InternalRowDatumReader(avroSchema, sparkSchema)
-
-  /** Avro field value → Catalyst value converters. */
-  private def decoder(avro: Schema, dt: DataType): AnyRef => Any = {
-    if (avro.getType == Schema.Type.UNION) {
-      // GenericDatumReader resolves the union per value: null or the
-      // value branch's Java representation.
-      val (_, _, valSchema) = optionalBranches(avro)
-      val base = decoder(valSchema, dt)
-      return v => if (v == null) null else base(v)
-    }
-    val logical = Option(avro.getProp("logicalType"))
-    (avro.getType, dt) match {
-      case (Schema.Type.STRING, StringType)  => v => UTF8String.fromString(v.toString)
-      case (Schema.Type.BYTES, BinaryType)   => v => {
+      case KBytes =>
         val bb = v.asInstanceOf[ByteBuffer]
         val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a); a
-      }
-      case (Schema.Type.BOOLEAN, BooleanType)=> v => v.asInstanceOf[java.lang.Boolean].booleanValue()
-      case (Schema.Type.INT, IntegerType)    => v => v.asInstanceOf[java.lang.Integer].intValue()
-      case (Schema.Type.LONG, LongType)      => v => v.asInstanceOf[java.lang.Long].longValue()
-      case (Schema.Type.LONG, IntegerType)   => v => v.asInstanceOf[java.lang.Long].intValue()
-      case (Schema.Type.FLOAT, FloatType)    => v => v.asInstanceOf[java.lang.Float].floatValue()
-      case (Schema.Type.DOUBLE, DoubleType)  => v => v.asInstanceOf[java.lang.Double].doubleValue()
-      case (Schema.Type.INT, DateType)       => v => v.asInstanceOf[java.lang.Integer].intValue()
-      case (Schema.Type.LONG, TimestampType | TimestampNTZType) if logical.contains("timestamp-millis") =>
-        v => Math.multiplyExact(v.asInstanceOf[java.lang.Long].longValue(), 1000L)
-      case (Schema.Type.LONG, TimestampType | TimestampNTZType) =>
-        v => v.asInstanceOf[java.lang.Long].longValue()
-      case (a, t) =>
-        throw new IllegalArgumentException(s"AvroCodec: cannot decode Avro $a as Spark $t")
+      case KIntAsLong => v.asInstanceOf[java.lang.Long].intValue()
+      case KTsMillis => Math.multiplyExact(v.asInstanceOf[java.lang.Long].longValue(), 1000L)
+      case _ => v // boxed boolean/int/long/float/double are Catalyst's own values
     }
   }
 
   /** struct → Avro binary (record body only, no framing).
     *
-    * Codegen: the Avro writer itself is library code that cannot be
-    * inlined into generated Java, so doGenCode emits a direct call to
+    * Codegen: the [[RowWriter]] is library code that cannot be inlined
+    * into generated Java, so doGenCode emits a direct call to
     * this expression's evaluator via a reference object. That keeps the
     * surrounding whole-stage codegen fused (no CodegenFallback
     * row-materialization detour); the measured encode leg runs at
@@ -224,52 +224,22 @@ object AvroCodec {
         s"${ev.value} = (byte[]) $ref.nullSafeEval($c);")
     }
 
-    @transient private lazy val avroSchema = new Schema.Parser().parse(avroJson)
-    @transient private lazy val structType = child.dataType.asInstanceOf[StructType]
-    @transient private lazy val irWriter: InternalRowDatumWriter = {
-      require(avroSchema.getFields.size == structType.size,
-        s"Avro schema has ${avroSchema.getFields.size} fields, struct has ${structType.size}")
-      new InternalRowDatumWriter(avroSchema, structType)
-    }
-    @transient private lazy val bos = new ByteArrayOutputStream(256)
-    @transient private var binEnc: BinaryEncoder = _
-
-    /** Null rejection applies only to NON-optional fields: an
-      * `["null", T]` union field carries its null as a branch index
-      * (r17, [[graft.schema.FixedSchema.nullableAvroJson]]); a null in
-      * a plain field still fails loudly — the flat reference model has
-      * nowhere to put it. */
-    @transient private lazy val rejectsNull: Array[Boolean] =
-      (0 until avroSchema.getFields.size)
-        .map(i => avroSchema.getFields.get(i).schema().getType != Schema.Type.UNION)
-        .toArray
+    @transient private lazy val writer = new RowWriter(
+      new Schema.Parser().parse(avroJson), child.dataType.asInstanceOf[StructType], "avro_encode")
+    @transient private lazy val wire = new AvroWire(256)
 
     override def nullSafeEval(input: Any): Any = {
-      val row = input.asInstanceOf[InternalRow]
-      val n = structType.size
-      var i = 0
-      while (i < n) {
-        if (rejectsNull(i) && row.isNullAt(i))
-          throw new IllegalArgumentException(
-            s"avro_encode: null in field '${structType(i).name}' — the fixed-width " +
-              "schema model has no unions/nullable fields (SURVEY.md §1.2); " +
-              "filter or default nulls before encoding, or encode with the " +
-              "[\"null\", T] optional schema (nullableAvroJson)")
-        i += 1
-      }
-      bos.reset()
-      binEnc = EncoderFactory.get().binaryEncoder(bos, binEnc)
-      irWriter.write(row, binEnc)
-      binEnc.flush()
-      bos.toByteArray
+      wire.reset()
+      writer.write(input.asInstanceOf[InternalRow], wire)
+      wire.result()
     }
     override protected def withNewChildInternal(c: Expression): AvroEncode = copy(child = c)
   }
 
   /** Avro binary (record body) → struct. Same-shape schemas ONLY: the
     * writer schema is assumed identical to `avroJson` and fields map
-    * positionally (that contract is exactly what lets the sequential
-    * [[InternalRowDatumReader]] decode without a `GenericRecord`) — use
+    * positionally (that contract is exactly what lets [[RowReader]]
+    * decode without a `GenericRecord`) — use
     * [[AvroDecodeFramed]] (writer→reader resolution by name) whenever
     * the writer can differ. */
   case class AvroDecode(child: Expression, avroJson: String, outType: StructType)
@@ -277,18 +247,13 @@ object AvroCodec {
     override def dataType: DataType = outType
     override def prettyName: String = "avro_decode"
 
-    @transient private lazy val avroSchema = new Schema.Parser().parse(avroJson)
-    @transient private lazy val irReader: InternalRowDatumReader = {
-      require(avroSchema.getFields.size == outType.size,
-        s"Avro schema has ${avroSchema.getFields.size} fields, struct has ${outType.size}")
-      new InternalRowDatumReader(avroSchema, outType)
-    }
+    @transient private lazy val reader = new RowReader(new Schema.Parser().parse(avroJson), outType)
     @transient private var binDec: BinaryDecoder = _
 
     override def nullSafeEval(input: Any): Any = {
       val bytes = input.asInstanceOf[Array[Byte]]
       binDec = DecoderFactory.get().binaryDecoder(bytes, binDec)
-      irReader.read(binDec)
+      reader.read(null, binDec)
     }
     override protected def withNewChildInternal(c: Expression): AvroDecode = copy(child = c)
   }
@@ -333,31 +298,19 @@ object AvroCodec {
     }
 
     @transient private lazy val readerSchema = new Schema.Parser().parse(readerJson)
-    @transient private lazy val fieldDec: Array[AnyRef => Any] = {
-      val readerFields = readerSchema.getFields
-      require(readerFields.size == outType.size,
-        s"reader schema has ${readerFields.size} fields, struct has ${outType.size}")
-      outType.fields.zipWithIndex.map { case (sf, i) =>
-        decoder(readerFields.get(i).schema(), sf.dataType)
-      }
-    }
-    /** One decode plan per writer id, built lazily per task: the
-      * sequential [[InternalRowDatumReader]] when the writer schema
-      * EQUALS the reader (the overwhelmingly common steady state — no
-      * GenericRecord, no schema walk), the resolving
-      * `GenericDatumReader` for genuinely evolved writers. */
-    @transient private lazy val plans = new java.util.HashMap[Int, AnyRef]()
+    /** One [[RowReader]] per writer id, built lazily per task: direct
+      * when the writer schema EQUALS the reader (the overwhelmingly
+      * common steady state), resolving for genuinely evolved writers. */
+    @transient private lazy val plans = new java.util.HashMap[Int, RowReader]()
     @transient private var binDec: BinaryDecoder = _
-    @transient private var reuse: GenericRecord = _
 
-    private def planFor(id: Int): AnyRef = {
+    private def planFor(id: Int): RowReader = {
       var p = plans.get(id)
       if (p == null) {
         schemasById.get(id) match {
           case Some(writerJson) =>
-            val writer = new Schema.Parser().parse(writerJson)
-            p = if (writer == readerSchema) new InternalRowDatumReader(readerSchema, outType)
-                else new GenericDatumReader[GenericRecord](writer, readerSchema)
+            p = new RowReader(readerSchema, outType)
+            p.setSchema(new Schema.Parser().parse(writerJson))
             plans.put(id, p)
           case None => return null
         }
@@ -367,26 +320,14 @@ object AvroCodec {
 
     override def nullSafeEval(input: Any): Any = {
       val bytes = input.asInstanceOf[Array[Byte]]
-      if (bytes.length < 6 || bytes(0) != 0x00) return null // unknown magic byte
+      if (bytes.length < Confluent.MinFramedBytes || bytes(0) != Confluent.MagicByte)
+        return null // not well-framed
       val id = ((bytes(1) & 0xff) << 24) | ((bytes(2) & 0xff) << 16) |
         ((bytes(3) & 0xff) << 8) | (bytes(4) & 0xff)
       val plan = planFor(id)
       if (plan == null) return null // unknown schema id
       binDec = DecoderFactory.get().binaryDecoder(bytes, 5, bytes.length - 5, binDec)
-      plan match {
-        case direct: InternalRowDatumReader => direct.read(binDec)
-        case resolving: GenericDatumReader[GenericRecord @unchecked] =>
-          reuse = resolving.read(reuse, binDec)
-          val n = fieldDec.length
-          val out = new Array[Any](n)
-          var i = 0
-          while (i < n) {
-            val v = reuse.get(i)
-            out(i) = if (v == null) null else fieldDec(i)(v)
-            i += 1
-          }
-          InternalRow.fromSeq(out.toIndexedSeq)
-      }
+      plan.read(null, binDec)
     }
     override protected def withNewChildInternal(c: Expression): AvroDecodeFramed = copy(child = c)
   }
@@ -425,7 +366,8 @@ object AvroCodec {
     * on JDK 17 (ByteArrayOutputStream is synchronized and biased locking
     * is gone) plus a buffered-encoder flush copy; this writes straight
     * into one growable array and copies out exactly once. Byte output is
-    * verified identical to `BinaryEncoder`'s in `AvroDirectSpec`. */
+    * verified identical to Avro's stock generic datum writer + binary
+    * encoder in `AvroDirectSpec`. */
   private[graft] final class AvroWire(initial: Int = 1024) {
     private var buf = new Array[Byte](initial)
     private var pos = 0
@@ -499,47 +441,14 @@ object AvroCodec {
     def raw(): (Array[Byte], Int) = (buf, pos)
   }
 
-  // Field kinds for AvroEncodeDirect's interpreted eval + codegen dispatch.
-  private[graft] final val KBool = 0; private[graft] final val KInt = 1
-  private[graft] final val KLong = 2; private[graft] final val KIntAsLong = 3
-  private[graft] final val KFloat = 4; private[graft] final val KDouble = 5
-  private[graft] final val KStr = 6; private[graft] final val KBytes = 7
-  private[graft] final val KTsMillis = 8
-
-  private def fieldKind(dt: DataType, avro: Schema): Int = {
-    // The fused direct encoder dispatches on the SPARK type — handed an
-    // optional-union schema it would silently write the value WITHOUT
-    // its branch index: bytes that CLAIM the union schema but decode as
-    // garbage. Reject at plan build; the general [[AvroEncode]] path
-    // carries optional unions (r17).
-    require(avro.getType != Schema.Type.UNION,
-      "avro_encode_direct: union schemas are not supported by the fused " +
-        "encoder — use to_avro/AvroEncode for [\"null\", T] optional fields")
-    val logical = Option(avro.getProp("logicalType"))
-    dt match {
-      case StringType => KStr
-      case BinaryType => KBytes
-      case BooleanType => KBool
-      case IntegerType if avro.getType == Schema.Type.LONG => KIntAsLong
-      case IntegerType | DateType => KInt
-      case LongType => KLong
-      case FloatType => KFloat
-      case DoubleType => KDouble
-      case TimestampType | TimestampNTZType =>
-        if (logical.contains("timestamp-millis")) KTsMillis else KLong
-      case t => throw new IllegalArgumentException(s"AvroCodec: unsupported Spark type $t")
-    }
-  }
-
   /** Fused serialize: field expressions → (optional Confluent header +)
     * Avro record body, in one pass into a reusable per-task buffer.
     *
     * Versus `Confluent.frame(to_avro(struct(cols)))` this removes, per
     * row: the struct's UnsafeRow materialization (a full copy of the
-    * row), the synchronized ByteArrayOutputStream + BinaryEncoder flush
-    * copy, the megamorphic per-field lambda dispatch (codegen emits a
-    * direct typed call per field instead), and the frame `concat`'s
-    * second output array + copy. The reference's equivalent is the
+    * row), the per-field kind dispatch (codegen emits a direct typed
+    * call per field instead), and the frame `concat`'s second output
+    * array + copy. The reference's equivalent is the
     * per-chunk reused record + marshal at
     * `fixed2avro/ColumnBuilder.go:67-95`.
     *
@@ -557,7 +466,15 @@ object AvroCodec {
       require(avroSchema.getFields.size == children.size,
         s"Avro schema has ${avroSchema.getFields.size} fields, ${children.size} exprs given")
       children.zipWithIndex.map { case (c, i) =>
-        fieldKind(c.dataType, avroSchema.getFields.get(i).schema())
+        val avro = avroSchema.getFields.get(i).schema()
+        // The fused encoder writes no branch index — handed an
+        // optional-union schema it would emit bytes that CLAIM the union
+        // schema but decode as garbage. Reject at plan build; to_avro
+        // carries optional unions.
+        require(avro.getType != Schema.Type.UNION,
+          "avro_encode_direct: union schemas are not supported by the fused " +
+            "encoder — use to_avro/AvroEncode for [\"null\", T] optional fields")
+        kindOf(avro, c.dataType).kind
       }.toArray
     }
     @transient private lazy val header: Array[Byte] =
@@ -578,8 +495,7 @@ object AvroCodec {
     def wTsMillis(v: Long): Unit = wire.writeLong(Math.floorDiv(v, 1000L))
     def nullField(i: Int): Unit =
       throw new IllegalArgumentException(
-        s"avro_encode: null in field '${avroSchema.getFields.get(i).name}' — the " +
-          "fixed-width schema model has no unions/nullable fields (SURVEY.md §1.2)")
+        nullFieldMessage("avro_encode", avroSchema.getFields.get(i).name))
 
     override def eval(input: InternalRow): Any = {
       begin()

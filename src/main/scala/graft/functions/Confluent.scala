@@ -16,6 +16,10 @@ import org.apache.spark.sql.types.IntegerType
 object Confluent {
   val MagicByte: Byte = 0x00
 
+  /** Shortest well-framed message: the 5-byte header plus a non-empty
+    * body. Schema-id discovery and the decoder share this gate. */
+  private[graft] final val MinFramedBytes = 6
+
   def prefixBytes(schemaId: Int): Array[Byte] =
     Array(MagicByte,
       ((schemaId >> 24) & 0xff).toByte, ((schemaId >> 16) & 0xff).toByte,

@@ -169,16 +169,9 @@ object Multimodal {
     * [[Docs.fanned]]: the per-row PNG encode is real work that must
     * run partition-parallel, not on the single split a sub-128 MB
     * parquet scans as (see the class doc for the stub-era trade). */
-  def media(spark: SparkSession, dir: String): DataFrame =
-    mediaOver(Docs.fanned(spark, dir))
-
-  /** The PNG staging over any documents-shaped frame — shared with the
-    * fan-out probe's unfanned twin (`tools/ProbeMm14`) so the A/B it
-    * measures stays byte-identical to production by construction. */
-  private[graft] def mediaOver(docs: DataFrame): DataFrame = {
-    val spark = docs.sparkSession
+  def media(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    docs
+    Docs.fanned(spark, dir)
       .select(col("doc_id"), col("text"), col("source"))
       .as[(Long, String, String)]
       .mapPartitions { rows =>
@@ -434,7 +427,7 @@ object Multimodal {
       // Same byte-vs-char oracle coupling as the image lane: the
       // engine slices UTF-8 BYTES, the DuckDB oracle slices VARCHAR
       // chars — equal only for ASCII. Fail loudly on a multibyte
-      // document (mediaOver's guard, declarative form) instead of
+      // document (media's guard, declarative form) instead of
       // silently diverging frame boundaries and hashes.
       when(octet_length(encode(col("text"), "UTF-8")) === length(col("text")),
         encode(col("text"), "UTF-8"))

@@ -18,7 +18,9 @@ import scala.collection.concurrent.TrieMap
 trait SchemaRegistryClient {
   /** Register a schema under `subject`, returning its id (memoized). */
   def register(subject: String, schemaJson: String): Int
-  /** Fetch a schema by id (memoized). */
+  /** Fetch a schema by id (memoized). An id the registry does not
+    * hold throws `NoSuchElementException`; other failures (a registry
+    * outage) throw other exceptions, so callers can tell them apart. */
   def getById(id: Int): String
 }
 
@@ -86,6 +88,8 @@ final class HttpSchemaRegistry(baseUrl: String) extends SchemaRegistryClient {
   override def getById(id: Int): String = {
     val req = HttpRequest.newBuilder(URI.create(s"$baseUrl/schemas/ids/$id")).GET().build()
     val resp = http.send(req, HttpResponse.BodyHandlers.ofString(StandardCharsets.UTF_8))
+    if (resp.statusCode() == 404)
+      throw new NoSuchElementException(s"schema id $id not registered: ${resp.body()}")
     require(resp.statusCode() / 100 == 2, s"registry fetch failed: ${resp.statusCode()} ${resp.body()}")
     mapper.readTree(resp.body()).path("schema").asText()
   }

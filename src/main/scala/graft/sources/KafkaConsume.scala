@@ -25,16 +25,17 @@ object KafkaConsume {
     * caller cannot enumerate ids up front; the input should be persisted
     * by then (see [[decode]]) so this does not recompute the pipeline.
     *
-    * Junk-gated (r16): only well-framed messages (non-null, >= 5 bytes,
-    * magic byte) contribute an id. Without the gate, ONE non-Confluent
-    * message (plain JSON bytes, a tombstone null) put a garbage id —
-    * or a null — into the discovery set, and the registry lookup for
-    * it crashed the whole decode, the opposite of the documented
-    * "bad messages are dropped" contract. */
+    * Junk-gated (r16): only messages the decoder accepts as well-framed
+    * (non-null, >= [[Confluent.MinFramedBytes]], magic byte) contribute
+    * an id. Without the gate, ONE non-Confluent message (plain JSON
+    * bytes, a tombstone null) put a garbage id — or a null — into the
+    * discovery set, and the registry lookup for it crashed the whole
+    * decode, the opposite of the documented "bad messages are dropped"
+    * contract. */
   def schemaIds(framed: DataFrame, valueCol: String = "value"): Seq[Int] =
     framed
       .where(col(valueCol).isNotNull &&
-        length(col(valueCol)) >= 5 && Confluent.hasMagic(col(valueCol)))
+        length(col(valueCol)) >= Confluent.MinFramedBytes && Confluent.hasMagic(col(valueCol)))
       .select(Confluent.schemaId(col(valueCol)).as("sid"))
       .distinct().collect().map(_.getInt(0)).toSeq
 
@@ -50,9 +51,11 @@ object KafkaConsume {
     *
     * @param knownIds writer-schema ids expected in the stream. Pass them
     *   when the producer side knows its ids (normal case — the reference
-    *   carries the id in config, SURVEY.md §2.4). When empty, ids are
-    *   discovered from the data itself; the frame is persisted first so
-    *   discovery does not recompute the upstream pipeline twice.
+    *   carries the id in config, SURVEY.md §2.4); each must be
+    *   registered. When empty, ids are discovered from the data itself
+    *   (the frame is persisted first so discovery does not recompute the
+    *   upstream pipeline twice), and a discovered id the registry does
+    *   not hold is junk like any other: its messages are dropped.
     */
   def decode(framed: DataFrame, registry: SchemaRegistryClient,
       target: FixedSchema, knownIds: Seq[Int] = Nil,
@@ -68,10 +71,13 @@ object KafkaConsume {
         val cached = framed.persist(StorageLevel.MEMORY_AND_DISK)
         (cached, schemaIds(cached, valueCol))
       }
-    if (ids.isEmpty) // empty topic / all-bad-magic batch → empty frame, not a crash
+    val schemasById = ids.flatMap { id =>
+      try Some(id -> registry.getById(id))
+      catch { case _: NoSuchElementException if knownIds.isEmpty => None }
+    }.toMap
+    if (schemasById.isEmpty) // empty topic / all-junk batch → empty frame, not a crash
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target.sparkSchema)
-    val schemasById = ids.map(id => id -> registry.getById(id)).toMap
     // Generator form: one decode per message emitting top-level columns
     // (the struct + `r.*` form decodes once per OUTPUT column after
     // projection collapse); junk messages yield zero rows.

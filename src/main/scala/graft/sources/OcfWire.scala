@@ -3,21 +3,24 @@ package graft.sources
 import java.io.OutputStream
 import java.util.zip.CRC32
 
+import graft.functions.AvroCodec
 import graft.functions.AvroCodec.AvroWire
 import org.apache.avro.Schema
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Minimal Avro Object Container File writer over [[AvroWire]].
   *
-  * `DataFileWriter` + a `DatumWriter` costs, per value: a megamorphic
-  * field-writer dispatch, `BufferedBinaryEncoder` bounds checks, and a
-  * buffer-chain copy before the codec sees the block. This writer reads
-  * each field straight off the `InternalRow` with a kind switch, appends
-  * to one growable block buffer, and snappy-compresses whole blocks —
-  * the same shape the reference gets from its per-chunk
-  * `avro.Marshal` + container append (`fixed2avro/Exporters.go:105-138`).
+  * Avro's stock container writer + datum writer cost, per value: a
+  * megamorphic field-writer dispatch, buffered-encoder bounds checks, and
+  * a buffer-chain copy before the codec sees the block. This writer
+  * encodes each row straight into one growable block buffer (typed rows
+  * through [[AvroCodec.RowWriter]], optional `["null", T]` unions
+  * included; fixed-width lines through the fused line encoder) and
+  * snappy-compresses whole blocks — the same shape the reference gets
+  * from its per-chunk `avro.Marshal` + container append
+  * (`fixed2avro/Exporters.go:105-138`).
   *
   * The emitted container is byte-level spec-conformant (Avro 1.11 spec,
   * "Object Container Files"): `Obj\x01` magic, metadata map with
@@ -25,58 +28,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * `[count][size][snappy data + crc32-BE of the uncompressed bytes]
   * [sync]` — readable by any stock `DataFileStream`
   * (pinned by `OcfWireSpec` reading it back generically).
-  *
-  * Flat no-union schemas only — the reference's data model (SURVEY.md
-  * §1.2); [[Ocf.write]] keeps the generic path for anything else.
   */
 private[graft] object OcfWire {
 
   private val Magic: Array[Byte] = Array('O'.toByte, 'b'.toByte, 'j'.toByte, 1.toByte)
 
-  // Field kinds (mirrors AvroCodec's fieldWriter universe).
-  private final val KBool = 0; private final val KInt = 1; private final val KLong = 2
-  private final val KIntAsLong = 3; private final val KFloat = 4; private final val KDouble = 5
-  private final val KStr = 6; private final val KBytes = 7; private final val KTsMillis = 8
-
-  /** Whether the fast wire path supports this (avro, spark) field pair;
-    * mirrors the kind table below. */
-  def supports(avroSchema: Schema, sparkSchema: StructType): Boolean =
-    avroSchema.getType == Schema.Type.RECORD &&
-      avroSchema.getFields.size == sparkSchema.size &&
-      sparkSchema.fields.zipWithIndex.forall { case (f, i) =>
-        kindOf(avroSchema.getFields.get(i).schema(), f.dataType) >= 0
-      }
-
-  private def kindOf(avro: Schema, dt: DataType): Int = {
-    val logical = Option(avro.getProp("logicalType"))
-    (avro.getType, dt) match {
-      case (Schema.Type.STRING, StringType) => KStr
-      case (Schema.Type.BYTES, BinaryType) => KBytes
-      case (Schema.Type.BOOLEAN, BooleanType) => KBool
-      case (Schema.Type.LONG, IntegerType) => KIntAsLong
-      case (Schema.Type.INT, IntegerType) => KInt
-      case (Schema.Type.INT, DateType) => KInt
-      case (Schema.Type.LONG, LongType) => KLong
-      case (Schema.Type.FLOAT, FloatType) => KFloat
-      case (Schema.Type.DOUBLE, DoubleType) => KDouble
-      case (Schema.Type.LONG, TimestampType | TimestampNTZType) =>
-        if (logical.contains("timestamp-millis")) KTsMillis else KLong
-      case _ => -1
-    }
-  }
-
   /** One writer per output file. Not thread-safe (one per task). */
   final class Writer(avroSchema: Schema, sparkSchema: StructType, out: OutputStream,
       syncInterval: Int = 1 << 20) {
-    require(supports(avroSchema, sparkSchema),
-      s"OcfWire: unsupported schema pair $avroSchema vs $sparkSchema")
-    private val kinds: Array[Int] = sparkSchema.fields.zipWithIndex.map { case (f, i) =>
-      kindOf(avroSchema.getFields.get(i).schema(), f.dataType)
-    }
+    private val rows = new AvroCodec.RowWriter(avroSchema, sparkSchema, "OcfWire")
 
-    /** Sync marker: like DataFileWriter's, unique-ish per file; derived
-      * from schema + nanotime via MD5 (the spec only asks for 16 bytes
-      * consistent within the file). */
+    /** Sync marker: like the stock container writer's, unique-ish per
+      * file; derived from schema + nanotime via MD5 (the spec only asks
+      * for 16 bytes consistent within the file). */
     private val sync: Array[Byte] = {
       val md = java.security.MessageDigest.getInstance("MD5")
       md.update(avroSchema.toString.getBytes("UTF-8"))
@@ -151,38 +115,7 @@ private[graft] object OcfWire {
     def append(row: InternalRow): Unit = {
       requireLive()
       val mark = block.size
-      try {
-        var i = 0
-        while (i < kinds.length) {
-          if (row.isNullAt(i))
-            throw new IllegalArgumentException(
-              s"OcfWire: null in field '${sparkSchema(i).name}' — flat no-union model")
-          (kinds(i): @annotation.switch) match {
-            case KBool => block.writeBoolean(row.getBoolean(i))
-            case KInt => block.writeInt(row.getInt(i))
-            case KLong => block.writeLong(row.getLong(i))
-            case KIntAsLong => block.writeLong(row.getInt(i).toLong)
-            case KFloat => block.writeFloat(row.getFloat(i))
-            case KDouble => block.writeDouble(row.getDouble(i))
-            case KStr => block.writeUtf8(row.getUTF8String(i))
-            case KBytes => block.writeBytes(row.getBinary(i))
-            case KTsMillis => block.writeLong(Math.floorDiv(row.getLong(i), 1000L))
-          }
-          i += 1
-        }
-      } catch { case e: Throwable => abortRecord(mark, e) }
-      sealRecord()
-    }
-
-    /** Append a pre-encoded Avro record body (the fused fixed→Avro
-      * expression's output, `graft.functions.FixedAvro`): the bytes land
-      * straight in the block buffer — no field dispatch at all. The
-      * caller guarantees the bytes are a record of this writer's schema
-      * (FixedAvroSpec pins them byte-identical to the typed encode). */
-    def appendEncoded(body: Array[Byte]): Unit = {
-      requireLive()
-      val mark = block.size
-      try block.writeRaw(body)
+      try rows.write(row, block)
       catch { case e: Throwable => abortRecord(mark, e) }
       sealRecord()
     }

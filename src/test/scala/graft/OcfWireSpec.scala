@@ -2,6 +2,7 @@ package graft
 
 import java.io.ByteArrayOutputStream
 
+import graft.functions.AvroCodec
 import graft.sources.{Ocf, OcfWire}
 import org.apache.avro.Schema
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -16,8 +17,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * reader anywhere on the decode path — and every value is compared.
   * Covers the writer's whole kind table (bool / int / long /
   * int-as-long / float / double / string / bytes / date /
-  * timestamp-millis / timestamp-micros) and multi-block output via a
-  * tiny sync interval. */
+  * timestamp-millis / timestamp-micros), the same kinds as optional
+  * `["null", T]` unions under random null masks, and multi-block output
+  * via a tiny sync interval. */
 class OcfWireSpec extends AnyFunSuite {
 
   private val avroJson =
@@ -53,7 +55,9 @@ class OcfWireSpec extends AnyFunSuite {
 
   test("stock DataFileStream + GenericDatumReader reads OcfWire output byte-for-value") {
     val avroSchema = new Schema.Parser().parse(avroJson)
-    assert(OcfWire.supports(avroSchema, sparkSchema), "kind table must cover the schema")
+    assert(sparkSchema.fields.indices.forall(i =>
+        AvroCodec.kindOf(avroSchema.getFields.get(i).schema(), sparkSchema(i).dataType).kind >= 0),
+      "kind table must cover the schema")
     val out = new ByteArrayOutputStream()
     // 256-byte sync interval over ~60-byte rows → many blocks: exercises
     // block framing + per-block crc, not just a single-block file.
@@ -170,5 +174,49 @@ class OcfWireSpec extends AnyFunSuite {
     budget = Int.MaxValue // even with the stream healed, still nothing emitted
     w.close()
     assert(written == lenAtFailure, "failed writer emitted bytes after healing")
+  }
+
+  test("stock DataFileStream reads OcfWire's optional-union output under random null masks") {
+    // Every field as an optional union — null branch first (the
+    // nullableAvroJson shape) for most, value branch first for two, so
+    // both branch indexes are exercised on the wire.
+    val fields = new Schema.Parser().parse(avroJson).getFields
+    val unionJson = (0 until fields.size).map { i =>
+      val f = fields.get(i)
+      val t = f.schema().toString
+      if (i % 5 == 3) s"""{"name":"${f.name}","type":[$t,"null"]}"""
+      else s"""{"name":"${f.name}","type":["null",$t],"default":null}"""
+    }.mkString("""{"type":"record","name":"w","fields":[""", ",", "]}")
+    val avroSchema = new Schema.Parser().parse(unionJson)
+    val rnd = new scala.util.Random(0x5EED)
+    val n = 1000
+    val masks = Array.fill(n, sparkSchema.size)(rnd.nextInt(3) == 0)
+    val out = new ByteArrayOutputStream()
+    val w = new OcfWire.Writer(avroSchema, sparkSchema, out, syncInterval = 256)
+    (0 until n).foreach { i =>
+      val vals = row(i).values.clone()
+      masks(i).indices.foreach(f => if (masks(i)(f)) vals(f) = null)
+      w.append(new GenericInternalRow(vals))
+    }
+    w.close()
+
+    val (readSchema, records) = Ocf.decodeBytes(out.toByteArray)
+    assert(readSchema == avroSchema)
+    assert(records.size == n)
+    records.zipWithIndex.foreach { case (r, i) =>
+      val expected: Seq[Any] = Seq(i % 2 == 0, i, i.toLong * 1000000007L, -i.toLong,
+        i / 7.0f, i / 7.0, s"værdi-$i", Seq(i.toByte, (i >> 8).toByte), 20000 + i,
+        i.toLong, i.toLong * 1000000L + 456L)
+      expected.zipWithIndex.foreach { case (want, f) =>
+        val got = r.get(f) match {
+          case bb: java.nio.ByteBuffer =>
+            val a = new Array[Byte](bb.remaining()); bb.duplicate().get(a); a.toSeq
+          case u: org.apache.avro.util.Utf8 => u.toString
+          case v => v
+        }
+        if (masks(i)(f)) assert(got == null, s"row $i field $f: null expected")
+        else assert(got == want, s"row $i field $f")
+      }
+    }
   }
 }

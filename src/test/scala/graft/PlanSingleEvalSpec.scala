@@ -36,7 +36,7 @@ class PlanSingleEvalSpec extends SparkSpec {
     // bands + sa + sb: the two verify sides re-derive the (2-long)
     // signature rather than shuffling it — AQE stage reuse dedups the
     // shared scan at runtime (an explicit exchange was A/B'd at no
-    // gain; tools/ProbeVerify18). A 4th occurrence = the old
+    // gain). A 4th occurrence = the old
     // filter-on-alias substitution is back.
     assert(occurrences(Dedup.dedupSimhash(spark, sf), "simhash64") == 3)
   }

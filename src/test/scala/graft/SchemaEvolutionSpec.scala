@@ -124,4 +124,26 @@ class SchemaEvolutionSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(back == Seq((1L, "old")))
   }
+
+  test("id discovery drops a 5-byte frame and an unregistered id, keeping the valid row") {
+    // knownIds = Nil: ids come from the data. A frame too short for the
+    // decoder (00 00 00 00 63, id 99, no body) and a well-framed message
+    // under an id the registry never saw are junk like any other — they
+    // must drop, not fail the whole decode at the registry lookup.
+    import spark.implicits._
+    val fixed = FixedSchema.fromJson(oldJson)
+    val registry = new graft.registry.InMemorySchemaRegistry
+    val id = registry.register("disc-value", fixed.avroJson)
+    def framed(rows: Seq[(Long, String)], schemaId: Int) =
+      graft.sinks.KafkaStage.stage(rows.toDF("id", "s"), fixed,
+        schemaId = schemaId, topic = "disc", keySchemaId = id).select("value")
+    val frames = framed(Seq((1L, "ok")), id)
+      .union(Seq(Array[Byte](0, 0, 0, 0, 0x63)).toDF("value"))
+      .union(framed(Seq((2L, "unregistered")), 77))
+    assert(graft.sources.KafkaConsume.schemaIds(frames).sorted == Seq(id, 77),
+      "discovery must accept exactly the frames the decoder accepts")
+    val back = graft.sources.KafkaConsume.decode(frames, registry, fixed)
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(back == Seq((1L, "ok")))
+  }
 }
