@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   */
 object Docs {
   def documents(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    IndexStore.table(spark, dir, "documents")
 
   /** [[documents]] with the scan fanned out to cluster parallelism via
     * an explicit doc_id exchange ([[Similarity.fanOut]] — a no-op once

@@ -74,26 +74,34 @@ object IndexStore {
     if (r == "off" || r.isEmpty) None else Some(r)
   }
 
-  /** One listStatus per (dir, table) per process: the inventory of an
-    * immutable snapshot does not change under us — the same assumption
-    * every other per-snapshot memo here makes. */
-  private val fpCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The content key of `$dir/$table.parquet`: SHA-1 over its file
+    * inventory, from one listing per call. Nothing memoizes it — every
+    * per-snapshot value below is keyed on it, so a table rewritten
+    * under a live process resolves to a new key on the next call. */
+  private[graft] def fingerprint(spark: SparkSession, dir: String, table: String): String = {
+    val p = new Path(s"$dir/$table.parquet")
+    val statuses = p.getFileSystem(spark.sessionState.newHadoopConf())
+      .listStatus(p).sortBy(_.getPath.getName)
+    val md = java.security.MessageDigest.getInstance("SHA-1")
+    statuses.foreach { st =>
+      md.update(
+        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime};".getBytes("UTF-8"))
+    }
+    md.digest().map("%02x".format(_)).mkString
+  }
 
-  private[graft] def fingerprint(spark: SparkSession, dir: String, table: String): String =
-    fpCache.computeIfAbsent(s"$dir#$table", _ => {
-      val p = new Path(s"$dir/$table.parquet")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val statuses =
-        if (fs.getFileStatus(p).isDirectory)
-          fs.listStatus(p).sortBy(_.getPath.getName)
-        else Array(fs.getFileStatus(p))
-      val md = java.security.MessageDigest.getInstance("SHA-1")
-      statuses.foreach { st =>
-        md.update(
-          s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime};".getBytes("UTF-8"))
-      }
-      md.digest().map("%02x".format(_)).mkString
-    })
+  /** Parquet at `path`, derived from `$dir/$table.parquet`, read with
+    * its schema given: the schema is memoized under `key` on the
+    * table's content, so only the first read of that content in a
+    * process pays Spark's one-task schema-inference job. */
+  private def read(spark: SparkSession, dir: String, table: String, path: String,
+      key: String): DataFrame =
+    spark.read.schema(memo(spark, dir, table, key)(spark.read.parquet(path).schema))
+      .parquet(path)
+
+  /** The snapshot table `$dir/$name.parquet` — every `ops/` read of one. */
+  private[graft] def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    read(spark, dir, name, s"$dir/$name.parquet", "schema")
 
   private def destPath(spark: SparkSession, dir: String, table: String,
       name: String, r: String): Path =
@@ -107,7 +115,7 @@ object IndexStore {
     val fs = dest.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(new Path(dest, "_SUCCESS"))) {
       loads.incrementAndGet()
-      Some(spark.read.parquet(dest.toString))
+      Some(read(spark, dir, table, dest.toString, s"schema:$dest"))
     } else None
   }
 
@@ -181,7 +189,8 @@ object IndexStore {
     case Some(r) =>
       tryLoad(spark, dir, table, name).getOrElse {
         write(spark, dir, table, name, build)
-        spark.read.parquet(destPath(spark, dir, table, name, r).toString)
+        val dest = destPath(spark, dir, table, name, r)
+        read(spark, dir, table, dest.toString, s"schema:$dest")
       }
   }
 
@@ -195,33 +204,115 @@ object IndexStore {
 
   private val memos = new java.util.concurrent.ConcurrentHashMap[(String, String), Once]()
 
-  /** The one process memo for per-snapshot index state: a value
-    * derived from `dir` (a corpus count, an embedding dim, a decoded
-    * artifact) under its value or artifact `name`, computed once per
-    * process. Keyed on the snapshot path, so it assumes — like every
-    * artifact here — that the data at `dir` does not change under a
-    * running process. */
-  private[graft] def memo[T](dir: String, name: String)(build: => T): T =
-    memos.computeIfAbsent((dir, name), _ => new Once(build)).value.asInstanceOf[T]
+  /** The one process memo for per-snapshot state: a value derived from
+    * `$dir/$table.parquet` (a corpus count, an embedding dim, a decoded
+    * artifact, a schema, a staged layout's path) under its value or
+    * artifact `name`, computed once per process per table CONTENT. The
+    * key is ([[fingerprint]], name), not the path, so a table rewritten
+    * under a running process misses and rebuilds instead of serving
+    * values derived from its old rows. */
+  private[graft] def memo[T](spark: SparkSession, dir: String, table: String, name: String)(
+      build: => T): T =
+    memos.computeIfAbsent((fingerprint(spark, dir, table), name), _ => new Once(build))
+      .value.asInstanceOf[T]
 
   /** [[loadOrBuild]] decoded to a driver value (centroids, codebooks,
-    * stats), memoized per process on (dir, artifact name): the first
-    * caller loads — or builds and writes — the artifact, later callers
-    * get the decoded value without touching the store. */
+    * stats), memoized on the table's content and the artifact name:
+    * the first caller loads — or builds and writes — the artifact,
+    * later callers get the decoded value without touching the store. */
   private[graft] def loadMemo[T](spark: SparkSession, dir: String, table: String, name: String)(
       build: => DataFrame)(decode: DataFrame => T): T =
-    memo(dir, name)(decode(loadOrBuild(spark, dir, table, name)(build)))
+    memo(spark, dir, table, name)(decode(loadOrBuild(spark, dir, table, name)(build)))
 
-  /** Test hook: forget every memoized value (a simulated fresh driver). */
-  private[graft] def clearMemos(): Unit = memos.clear()
+  /** Most persisted frames one process keeps; past the bound the
+    * least-recently-used frame is unpersisted and dropped (rebuilt on
+    * next touch). */
+  private val MaxPersisted = 4
+
+  /** Access-ordered LRU over persisted per-snapshot frames (the exact
+    * top-k ground truth, the verified pair graph), keyed by SESSION as
+    * well as content: a persisted DataFrame is bound to the session
+    * that planned it, so a content-only key in a multi-session process
+    * could hand a frame of a STOPPED session to a live caller. Each
+    * value carries its table path, so a rewritten table's superseded
+    * frame is released as soon as its successor is built. The monitor
+    * guards MAP MUTATION only. Eviction is logged — a silently-degraded
+    * cache is the failure mode the log line makes observable. */
+  private val frames =
+    new java.util.LinkedHashMap[(SparkSession, String, String), (String, DataFrame)](
+        8, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[(SparkSession, String, String),
+          (String, DataFrame)]): Boolean = {
+        val evict = size() > MaxPersisted
+        if (evict) {
+          log.info(s"evicting persisted ${e.getKey._3} of ${e.getValue._1} " +
+            s"(cache bound $MaxPersisted frames exceeded)")
+          e.getValue._2.unpersist(false)
+        }
+        evict
+      }
+    }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** `df` persisted (memory, spilling to disk) and materialized. */
+  private[graft] def materialize(df: DataFrame): DataFrame = {
+    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    p.count()
+    p
+  }
+
+  /** The session's persisted frame `name` over `$dir/$table.parquet`'s
+    * current content, built once via `build` (which returns it already
+    * [[materialize]]d). A cold build runs OUTSIDE the monitor, so it
+    * never blocks hits for other keys; two threads racing one cold key
+    * both build, and the loser unpersists its copy and adopts the
+    * winner's — a wasted job, never a wrong result or a leaked storage
+    * block. The new frame's superseded generations (same session,
+    * table and name; older content) are unpersisted first: Spark's
+    * CacheManager matches file scans by path, so a stale cached plan
+    * would otherwise stand in for the rewritten table's. */
+  private[graft] def persisted(spark: SparkSession, dir: String, table: String, name: String)(
+      build: => DataFrame): DataFrame = {
+    val path = s"$dir/$table.parquet"
+    val key = (spark, fingerprint(spark, dir, table), name)
+    val hit = frames.synchronized(frames.get(key))
+    if (hit != null) return hit._2
+    frames.synchronized {
+      val it = frames.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        if (e.getKey._1 == spark && e.getKey._3 == name && e.getValue._1 == path &&
+            e.getKey._2 != key._2) {
+          e.getValue._2.unpersist(false); it.remove()
+        }
+      }
+    }
+    val df = build
+    frames.synchronized {
+      val raced = frames.get(key)
+      if (raced != null) { df.unpersist(false); raced._2 }
+      else { frames.put(key, (path, df)); df }
+    }
+  }
+
+  /** Test hook: forget every memoized value and unpersist every cached
+    * frame (a simulated fresh driver). */
+  private[graft] def clearMemos(): Unit = {
+    memos.clear()
+    frames.synchronized {
+      val it = frames.values().iterator()
+      while (it.hasNext) { it.next()._2.unpersist(false); it.remove() }
+    }
+  }
 
   /** Retire artifact generations of superseded snapshots (r18). Every
     * regenerated snapshot gets a fresh fingerprint directory, so the
     * root accumulates one generation per rewrite forever — at 100 TB
     * the pair-graph artifacts alone make that a real storage leak.
     * Deletes each fingerprint directory that (a) is not LIVE in this
-    * process (no (dir, table) this process has fingerprinted resolves
-    * to it — the generations current readers were handed plans over)
+    * process (no value in [[memo]] and no [[persisted]] frame is keyed
+    * on it — the generations current readers were handed plans over)
     * and (b) has no artifact file newer than `maxAgeMs`. An aged-out
     * generation a concurrent process still reads rebuilds on its next
     * cache miss via [[loadOrBuild]] — a wasted build, never a wrong
@@ -236,7 +327,9 @@ object IndexStore {
       val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
       if (!fs.exists(rp)) Nil
       else {
-        val live = new java.util.HashSet[String](fpCache.values())
+        val live = new java.util.HashSet[String]()
+        memos.keySet().forEach(k => live.add(k._1))
+        frames.synchronized(frames.keySet().forEach(k => live.add(k._2)))
         val now = System.currentTimeMillis()
         fs.listStatus(rp).toSeq
           .filter(st => st.isDirectory && !live.contains(st.getPath.getName))
@@ -251,8 +344,4 @@ object IndexStore {
           }
       }
   }
-
-  /** Test hook: drop the fingerprint memo (a spec that rewrites a
-    * fixture table mid-process needs the next call to re-list). */
-  private[graft] def clearFingerprints(): Unit = fpCache.clear()
 }

@@ -10,8 +10,8 @@ import org.apache.spark.sql.types.DecimalType
   * layout whose scans prune to the filtered partitions.
   *
   * Both operators STAGE a layout first (write the fixture into the
-  * bucketed / partitioned form, memoized per JVM and per sf dir), then
-  * run the query against the staged layout. That split mirrors
+  * bucketed / partitioned form, memoized per JVM and per table
+  * content), then run the query against the staged layout. That split mirrors
   * production: the table layout exists once, written by the ingest
   * job; the measured query is the read side. The staged content is
   * row-identical to the source parquet, so the DuckDB oracle runs the
@@ -83,19 +83,28 @@ object Layout {
     f.delete()
   }
 
-  private val stagedBuckets = scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private val stagedPartitions = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** Stage a layout of `$dir/events.parquet`'s current content once per
+    * process and return its path. The memo ([[IndexStore.memo]]) is
+    * keyed on the table's content and its cell is single-flight, so a
+    * contender never re-stages over the layout the winner's query is
+    * already reading; the staged directory carries the fingerprint, so
+    * a rewritten table stages beside — never over — the old layout. */
+  private def stagedEvents(spark: SparkSession, dir: String, name: String)(
+      write: String => Unit): String =
+    IndexStore.memo(spark, dir, "events", s"staged:$name") {
+      val path = s"${stageRoot(dir)}/${IndexStore.fingerprint(spark, dir, "events")}/$name"
+      write(path)
+      path
+    }
 
-  /** Per-(sf dir) staging memo: lock-free probe, then a LOCKED build
-    * with a post-lock recheck — a contender that queued behind the
-    * stager must never overwrite the layout the winner's query is
-    * already reading (the TrieMap.getOrElseUpdate racing-thunk hazard
-    * every staged layout here shares). */
-  private def stagedPath(cache: scala.collection.concurrent.TrieMap[String, String],
-      dir: String)(build: => String): String =
-    cache.get(dir).getOrElse(cache.synchronized {
-      cache.get(dir).getOrElse { val p = build; cache.put(dir, p); p }
-    })
+  /** Staged bucket tables per (orders, lineitem) content. Not an
+    * [[IndexStore.memo]] cell: the value is a pair of CATALOG names,
+    * valid only while this session's catalog holds them (a second
+    * SparkContext in the JVM starts an empty catalog, and a DROP TABLE
+    * removes them), so every hit re-checks the catalog and a miss
+    * re-stages — a memo cell is computed once and never re-checked. */
+  private val stagedBuckets =
+    scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
 
   /** Write orders + lineitem as co-bucketed catalog tables (external,
     * path under the stage root) and return their table names. The
@@ -103,54 +112,44 @@ object Layout {
     * exactly one bucket -> one file per bucket, which is also what
     * lets the bucketed scan surface its sortBy order. */
   private def bucketedTables(spark: SparkSession, dir: String): (String, String) = {
-    // The memo caches per JVM, but catalog entries live per SESSION: a
-    // second session in the same JVM (fresh in-memory catalog) would
-    // resolve the cached names to nothing — detect and re-stage.
-    stagedBuckets.get(dir).filter { case (o, l) =>
+    val key = (IndexStore.fingerprint(spark, dir, "orders"),
+      IndexStore.fingerprint(spark, dir, "lineitem"))
+    def live = stagedBuckets.get(key).filter { case (o, l) =>
       spark.catalog.tableExists(o) && spark.catalog.tableExists(l)
-    }.getOrElse(stageBuckets(spark, dir))
-  }
-
-  private def stageBuckets(spark: SparkSession, dir: String): (String, String) =
-    stagedBuckets.synchronized {
-      // Post-lock recheck: a contender that queued behind the stager
-      // must not overwrite the tables the winner's query is reading.
-      val cached = stagedBuckets.get(dir).filter { case (o, l) =>
-        spark.catalog.tableExists(o) && spark.catalog.tableExists(l)
-      }
-      cached.getOrElse {
-        val root = stageRoot(dir)
-        val tag = stageTag(dir)
-        val oTbl = s"graft_bucketed_orders_$tag"
-        val lTbl = s"graft_bucketed_lineitem_$tag"
-        spark.read.parquet(s"$dir/orders.parquet")
-          .repartition(NBuckets, col("o_orderkey"))
-          .write.mode("overwrite")
-          .bucketBy(NBuckets, "o_orderkey").sortBy("o_orderkey")
-          .option("path", s"$root/orders_bucketed")
-          .saveAsTable(oTbl)
-        spark.read.parquet(s"$dir/lineitem.parquet")
-          .repartition(NBuckets, col("l_orderkey"))
-          .write.mode("overwrite")
-          .bucketBy(NBuckets, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$root/lineitem_bucketed")
-          .saveAsTable(lTbl)
-        stagedBuckets.put(dir, (oTbl, lTbl))
-        (oTbl, lTbl)
-      }
     }
+    // Post-lock recheck: a contender that queued behind the stager
+    // must not overwrite the tables the winner's query is reading.
+    live.getOrElse(stagedBuckets.synchronized(live.getOrElse {
+      val root = stageRoot(dir)
+      val tag = s"${stageTag(dir)}_${key._1.take(12)}_${key._2.take(12)}"
+      val oTbl = s"graft_bucketed_orders_$tag"
+      val lTbl = s"graft_bucketed_lineitem_$tag"
+      IndexStore.table(spark, dir, "orders")
+        .repartition(NBuckets, col("o_orderkey"))
+        .write.mode("overwrite")
+        .bucketBy(NBuckets, "o_orderkey").sortBy("o_orderkey")
+        .option("path", s"$root/${key._1}/orders_bucketed")
+        .saveAsTable(oTbl)
+      IndexStore.table(spark, dir, "lineitem")
+        .repartition(NBuckets, col("l_orderkey"))
+        .write.mode("overwrite")
+        .bucketBy(NBuckets, "l_orderkey").sortBy("l_orderkey")
+        .option("path", s"$root/${key._2}/lineitem_bucketed")
+        .saveAsTable(lTbl)
+      stagedBuckets.put(key, (oTbl, lTbl))
+      (oTbl, lTbl)
+    }))
+  }
 
   /** Write events date-partitioned (day directories) and return the
     * path. One file per day: repartition on the partition column first
     * for the same one-task-one-directory reason as the buckets. */
   private def partitionedEvents(spark: SparkSession, dir: String): String =
-    stagedPath(stagedPartitions, dir) {
-      val path = s"${stageRoot(dir)}/events_by_day"
+    stagedEvents(spark, dir, "events_by_day") { path =>
       Sessions.events(spark, dir)
         .withColumn("day", to_date(col("ts")))
         .repartition(col("day"))
         .write.mode("overwrite").partitionBy("day").parquet(path)
-      path
     }
 
   /** The exchange-free co-bucketed join, exposed for the plan spec:
@@ -306,8 +305,6 @@ object Layout {
        |       ${zTermsSql("user_id", "(CAST(ts AS DATE) - DATE '1970-01-01')")} AS z
        |FROM events ORDER BY event_id""".stripMargin
 
-  private val stagedZorder = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Write events Z-ORDERED on (user_id, day): range-partition on the
     * z-value into [[ZFiles]] files, sort within each — every file then
     * covers one contiguous z-range, i.e. a small RECTANGLE-ish region
@@ -318,8 +315,7 @@ object Layout {
     * space-filling curve makes predicates on EITHER OR BOTH dimensions
     * skip files. */
   private[graft] def zorderedEvents(spark: SparkSession, dir: String): String =
-    stagedPath(stagedZorder, dir) {
-      val path = s"${stageRoot(dir)}/events_zorder"
+    stagedEvents(spark, dir, "events_zorder") { path =>
       Sessions.events(spark, dir)
         .withColumn("day_idx", dayIdx)
         .withColumn("z", zValue(col("user_id"), col("day_idx")))
@@ -330,7 +326,6 @@ object Layout {
       // are known the moment the files land, and a layout that moves
       // carries its manifest with it (the lakehouse-format shape).
       writeManifest(spark, path)
-      path
     }
 
   /** PUBLIC write surface for a Z-ordered layout (r20): what
@@ -1411,19 +1406,15 @@ object Layout {
     * [[ZDayLo]]-[[ZDayHi]] × business hours. */
   val ZHourLo = 9; val ZHourHi = 17
 
-  private val stagedZorder3 = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Events z-ordered on THREE dimensions via the public
     * [[zorderWrite]] API — the staged half of `q_zorder_scan_3d`. */
   private[graft] def zordered3Events(spark: SparkSession, dir: String): String =
-    stagedPath(stagedZorder3, dir) {
-      val path = s"${stageRoot(dir)}/events_zorder3"
+    stagedEvents(spark, dir, "events_zorder3") { path =>
       zorderWrite(spark,
         Sessions.events(spark, dir)
           .withColumn("day_idx", dayIdx)
           .withColumn("hour_idx", hour(col("ts"))),
         path, Z3Dims)
-      path
     }
 
   /** `q_zorder_scan_3d` (r20): per-type counts/sums inside a
@@ -1459,21 +1450,17 @@ object Layout {
        |  AND EXTRACT(hour FROM ts) BETWEEN $ZHourLo AND $ZHourHi
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val stagedZorderDel = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** A fresh 2-dim layout with the standard box DELETED — the staged
     * half of `q_zorder_delete`, built entirely by the public APIs
     * ([[zorderWrite]] then [[zorderDeleteBox]]). */
   private[graft] def zorderedDeletedEvents(spark: SparkSession, dir: String): String =
-    stagedPath(stagedZorderDel, dir) {
-      val path = s"${stageRoot(dir)}/events_zorder_del"
+    stagedEvents(spark, dir, "events_zorder_del") { path =>
       zorderWrite(spark,
         Sessions.events(spark, dir).withColumn("day_idx", dayIdx),
         path, ZDims)
       zorderDeleteBox(spark, path, Seq(
         ("user_id", ZUserLo, ZUserHi),
         ("day_idx", ZDayLo.toLong, ZDayHi.toLong)))
-      path
     }
 
   /** `q_zorder_delete` (late r20): per-type counts/sums over a layout
@@ -1502,15 +1489,12 @@ object Layout {
        |       AND CAST(ts AS DATE) - DATE '1970-01-01' BETWEEN $ZDayLo AND $ZDayHi)
        |GROUP BY 1 ORDER BY 1""".stripMargin
 
-  private val stagedZorderCmp = scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** A layout built as base + two ingest batches, then COMPACTED back
     * to [[ZFiles]] freshly clustered files — the staged half of
     * `q_zorder_compact`, built entirely by the public maintenance
     * verbs (write → ingest ×2 → compact). */
   private[graft] def zorderedCompactedEvents(spark: SparkSession, dir: String): String =
-    stagedPath(stagedZorderCmp, dir) {
-      val path = s"${stageRoot(dir)}/events_zorder_cmp"
+    stagedEvents(spark, dir, "events_zorder_cmp") { path =>
       val ev = Sessions.events(spark, dir).withColumn("day_idx", dayIdx)
       zorderWrite(spark, ev.where(col("day_idx") < 19740), path, ZDims)
       zorderIngestBatch(spark, path, 1L,
@@ -1518,7 +1502,6 @@ object Layout {
       zorderIngestBatch(spark, path, 2L,
         ev.where(col("day_idx") >= 19750).drop("day_idx"))
       zorderCompact(spark, path, gen = 1L)
-      path
     }
 
   /** `q_zorder_compact` (late r20): the same box aggregate as

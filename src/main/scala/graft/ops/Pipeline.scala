@@ -42,7 +42,7 @@ object Pipeline {
   val lineitemFixed: FixedSchema = FixedSchema.fromJson(lineitemSchemaJson)
 
   def lineitem(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    IndexStore.table(spark, dir, "lineitem")
 
   /** [[lineitem]] with the scan fanned out to cluster parallelism
     * ([[Similarity.fanOut]] — a NO-OP once the scan has >=

@@ -35,7 +35,7 @@ import org.apache.spark.sql.types.{DecimalType, IntegerType}
 object Relational {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    IndexStore.table(spark, dir, name)
 
   /** [[t]] with the scan fanned out to cluster parallelism
     * ([[Similarity.fanOut]] — a NO-OP once the scan has >=

@@ -32,7 +32,7 @@ object Sessions {
     * truncates ns→us identically, so the oracle sees the same instants
     * either way. */
   def events(spark: SparkSession, dir: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$dir/events.parquet"))
+    normalizeTs(IndexStore.table(spark, dir, "events"))
 
   /** Normalize the `ts` column to micro-precision TIMESTAMP_NTZ whatever
     * the fixture generation delivered: raw nanos-as-long, NTZ (naive

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
 object SetOps {
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    IndexStore.table(spark, dir, name)
 
   /** Customers with vs without orders, per market segment — LeftSemi and
     * LeftAnti joins (both broadcast the distinct key set at scale). */

@@ -81,7 +81,7 @@ object Similarity {
   val PqBlocks = 4
 
   private def embeddings(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/embeddings.parquet")
+    IndexStore.table(spark, dir, "embeddings")
 
   private def normed(spark: SparkSession, dir: String): DataFrame =
     normedOver(embeddings(spark, dir))
@@ -133,21 +133,23 @@ object Similarity {
     *
     * The split-count probe (`df.rdd.getNumPartitions`) physical-plans a
     * throwaway copy of the corpus subplan, so it is memoized per
-    * scanned source: repeat queries skip both the planning and the
-    * (cached, but thousands-of-splits at 100 TB) file-split
-    * enumeration. The memo key is `dir#table`, and `table` is a
-    * REQUIRED parameter naming the scan the frame reads — the raw
-    * table, or an [[IndexStore]] artifact by its artifact name. A
-    * frame keyed under another scan's name inherits that scan's split
-    * count, and the fan-out silently no-ops (or fires) on the wrong
-    * evidence: the single-core collapse this helper exists to
-    * prevent, with nothing to catch it. */
-  private val scanSplitsCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
+    * scanned source ([[IndexStore.memo]], keyed on the content of
+    * `table`, the raw table the frame reads): repeat queries skip both
+    * the planning and the (cached, but thousands-of-splits at 100 TB)
+    * file-split enumeration. */
   private[graft] def fanOut(spark: SparkSession, dir: String, table: String,
-      df: DataFrame, keys: Column*): DataFrame = {
+      df: DataFrame, keys: Column*): DataFrame = fanOutOn(spark, dir, table, table, df, keys)
+
+  /** [[fanOut]] for a frame that scans `scan`: the raw `table` itself,
+    * or an [[IndexStore]] artifact built from it, by its artifact name.
+    * A frame memoized under another scan's name inherits that scan's
+    * split count, and the fan-out silently no-ops (or fires) on the
+    * wrong evidence: the single-core collapse this helper exists to
+    * prevent, with nothing to catch it. */
+  private def fanOutOn(spark: SparkSession, dir: String, table: String, scan: String,
+      df: DataFrame, keys: Seq[Column]): DataFrame = {
     val par = spark.sparkContext.defaultParallelism
-    val splits = scanSplitsCache.computeIfAbsent(s"$dir#$table", _ => df.rdd.getNumPartitions)
+    val splits = IndexStore.memo(spark, dir, table, s"scan_splits:$scan")(df.rdd.getNumPartitions)
     if (splits >= par) df
     else df.repartition(par, keys: _*)
   }
@@ -239,7 +241,7 @@ object Similarity {
     * snapshot dir (shared by the shortlist budgets and the cluster
     * geometry). */
   private[graft] def corpusCount(spark: SparkSession, dir: String): Long =
-    IndexStore.memo(dir, "corpus_count")(embeddings(spark, dir).count())
+    IndexStore.memo(spark, dir, "embeddings", "corpus_count")(embeddings(spark, dir).count())
 
   /** The scale law itself: k for a corpus of n vectors. Integer-exact
     * (one double ceil on n/32 — exact for any n below 2^53), so the
@@ -549,64 +551,22 @@ object Similarity {
     * [[ProbeFrac]]-derived probe count across sf0.001/0.01/0.1). */
   val AnnRecallFloor = 0.9
 
-  /** Most corpora a session holds ground truth for at once. Each entry
-    * is queries x K id pairs (id-scale), but a long-lived session
-    * sweeping MANY snapshot dirs must not accumulate storage blocks
-    * without bound — beyond this many corpora the least-recently-used
-    * entry is unpersisted and dropped (rebuilt on next touch). */
-  private val MaxExactPairCorpora = 4
-
-  /** Exact-baseline top-k pairs, built ONCE per (corpus dir, K) and
-    * persisted: the exact O(N^2) pass is ground-truth CONSTRUCTION for
-    * an immutable corpus snapshot, not per-query work, and must not
+  /** Exact-baseline top-k pairs, built ONCE per (corpus content, K)
+    * and persisted: the exact O(N^2) pass is ground-truth CONSTRUCTION
+    * for an immutable corpus snapshot, not per-query work, and must not
     * ride along with every recall evaluation. Persisted size is
-    * queries x K id pairs — id-scale.
-    *
-    * Kept apart from [[IndexStore.memo]] because its value is a
-    * session-bound persisted DataFrame: an access-ordered LRU keyed by
-    * SESSION as well as corpus (r18, per ADVICE — a dir-only key in a
-    * multi-session process could hand a frame of a STOPPED session to
-    * a live caller), bounded at [[MaxExactPairCorpora]], unpersisting
-    * on eviction. The monitor guards MAP MUTATION only — the O(N²)
-    * build runs OUTSIDE it, so a cold build for one corpus never blocks
-    * cache hits (or concurrent builds) for others. Two threads racing
-    * the same cold key both build; the loser unpersists its copy and
-    * adopts the winner's — a wasted job, never a wrong result or a
-    * leaked storage block. Eviction is logged — a silently-degraded
-    * cache is the failure mode the log line makes observable. */
-  private val exactPairsCache =
-    new java.util.LinkedHashMap[(SparkSession, String, Int), DataFrame](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Int), DataFrame]): Boolean = {
-        val evict = size() > MaxExactPairCorpora
-        if (evict) {
-          log.info(s"evicting exact-top-k ground truth for ${e.getKey._2} " +
-            s"(cache bound $MaxExactPairCorpora corpora exceeded)")
-          e.getValue.unpersist(false)
-        }
-        evict
-      }
+    * queries x K id pairs — id-scale. The session-bound frame lives in
+    * [[IndexStore.persisted]]'s LRU. */
+  private def exactTopkPairs(spark: SparkSession, dir: String): DataFrame =
+    IndexStore.persisted(spark, dir, "embeddings", s"exact_topk_k$K") {
+      // The O(N²) ground-truth pass is the most expensive construction
+      // in the engine — since r18 it is a written artifact too (id-pair
+      // scale on disk), so only the FIRST process over a snapshot pays it.
+      IndexStore.materialize(
+        IndexStore.loadOrBuild(spark, dir, "embeddings", s"exact_topk_k$K") {
+          ExactTopk.run(spark, dir).select(col("query_id"), col("neighbor_id"))
+        })
     }
-
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  private def exactTopkPairs(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark, dir, K)
-    val hit = exactPairsCache.synchronized(exactPairsCache.get(key))
-    if (hit != null) return hit
-    // The O(N²) ground-truth pass is the most expensive construction in
-    // the engine — since r18 it is a written artifact too (id-pair
-    // scale on disk), so only the FIRST process over a snapshot pays it.
-    val df = IndexStore.loadOrBuild(spark, dir, "embeddings", s"exact_topk_k$K") {
-        ExactTopk.run(spark, dir).select(col("query_id"), col("neighbor_id"))
-      }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    df.count() // materialize now so every later recall check is a cache read
-    exactPairsCache.synchronized {
-      val raced = exactPairsCache.get(key)
-      if (raced != null) { df.unpersist(false); raced }
-      else { exactPairsCache.put(key, df); df }
-    }
-  }
 
   /** Full value oracle for `similarity_ann_ivf` (r17). The IVF result
     * is APPROXIMATE relative to exact top-k (that contract is what the
@@ -817,7 +777,7 @@ object Similarity {
     * side; the literal map keeps the r18 plan shape and adds one
     * map-side expression. */
   private[graft] def semanticSubK(spark: SparkSession, dir: String): Map[Long, Long] =
-    IndexStore.memo(dir, "semantic_subk")(
+    IndexStore.memo(spark, dir, "embeddings", "semantic_subk")(
       assignedCells(normed(spark, dir), seedPivotsFor(spark, dir))
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("n"))
@@ -958,7 +918,7 @@ object Similarity {
   /** Embedding dimension of a corpus snapshot: one head-row probe,
     * memoized (shared by the PQ geometry and the broadcast gate). */
   private[graft] def embeddingDim(spark: SparkSession, dir: String): Int =
-    IndexStore.memo(dir, "embedding_dim")(
+    IndexStore.memo(spark, dir, "embeddings", "embedding_dim")(
       embeddings(spark, dir).select(size(col("embedding"))).head().getInt(0))
 
   /** Subspace width for this corpus: dim / [[PqM]], failing loudly on
@@ -1723,7 +1683,7 @@ object Similarity {
   }
 
   private def resQuantized(spark: SparkSession, dir: String): DataFrame =
-    resQuantizedOver(spark, dir, spark.read.parquet(s"$dir/embeddings.parquet"))
+    resQuantizedOver(spark, dir, embeddings(spark, dir))
 
   /** Residual PQ codebook — [[pqCodebook]]'s machinery (same seeds
     * rule, same Lloyd step, via the shared [[pqSeedsOver]] /
@@ -2044,8 +2004,8 @@ object Similarity {
           // The corpus id rides the inverted lists as `vec_id`.
           val (table, rows) = index.getOrElse(
             "embeddings" -> indexRowsOver(spark, dialsDir, embeddings(spark, corpusDir)))
-          val lists = fanOut(spark, corpusDir, table,
-            rows.withColumnRenamed("neighbor_id", "vec_id"), col("cell"), col("vec_id"))
+          val lists = fanOutOn(spark, corpusDir, "embeddings", table,
+            rows.withColumnRenamed("neighbor_id", "vec_id"), Seq(col("cell"), col("vec_id")))
           val probes =
             if (code == ResPq) resProbeLuts(spark, dialsDir, q, nProbe)
             else broadcast(probeCells(q, ivfPivots(spark, dialsDir), nProbe, label("ql"): _*))
@@ -2369,18 +2329,6 @@ object Similarity {
       newDir: String, queryVecs: DataFrame): DataFrame =
     AnnIvfPq.search(spark, baseDir, newDir, normedOver(queryVecs),
       Some(ivfPqIndexExtendStored(spark, baseDir, newDir)))
-
-  /** Test hook (IndexStoreSpec): drop every in-process memo, simulating
-    * a fresh driver over the same snapshot — anything reproduced after
-    * this call without an [[graft.ops.IndexStore]] build came from a
-    * written artifact, which is exactly what the spec asserts. */
-  private[graft] def clearProcessCaches(): Unit = {
-    IndexStore.clearMemos(); scanSplitsCache.clear()
-    exactPairsCache.synchronized {
-      val it = exactPairsCache.values().iterator()
-      while (it.hasNext) { it.next().unpersist(false); it.remove() }
-    }
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "similarity_topk" -> ExactTopk.run _,

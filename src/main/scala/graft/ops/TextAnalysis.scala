@@ -428,14 +428,6 @@ object TextAnalysis {
     * fixture ranks ([[graft.BpeTrainSpec]]). */
   val BpeLocalRankThreshold = 16
 
-  private val bpeTrainCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, String, Long)]]()
-
-  /** Test hook: drop the in-memory memo so a spec can simulate a fresh
-    * process against a persisted artifact (the IndexStoreSpec
-    * discipline). */
-  private[graft] def clearBpeTrainCache(): Unit = bpeTrainCache.clear()
-
   /** Learn [[BpeTrainRanks]] BPE merges from the corpus — the TRAINING
     * side of the tokenizer lane ([[corpusPackBpe]] applies a shipped
     * vocabulary; this builds one). Classic Sennrich et al. 2016: train
@@ -473,17 +465,15 @@ object TextAnalysis {
     // default-trained merges (and vice versa)
     val mc = bpeMinWordCount(spark)
     val dial = if (mc <= 1L) "" else s"_mc$mc"
-    bpeTrainCache.computeIfAbsent(s"$dir#$dial", _ => {
-      import spark.implicits._
-      val artifact = IndexStore.loadOrBuild(spark, dir, "documents",
-          s"bpe_merges_r$BpeTrainRanks$dial") {
-        bpeTrainedMergesN(spark, dir, BpeTrainRanks).zipWithIndex
-          .map { case ((a, b, c), i) => (i, a, b, c) }
-          .toDF("rank", "lhs", "rhs", "cnt")
-      }
+    import spark.implicits._
+    IndexStore.loadMemo(spark, dir, "documents", s"bpe_merges_r$BpeTrainRanks$dial") {
+      bpeTrainedMergesN(spark, dir, BpeTrainRanks).zipWithIndex
+        .map { case ((a, b, c), i) => (i, a, b, c) }
+        .toDF("rank", "lhs", "rhs", "cnt")
+    } { artifact =>
       artifact.orderBy("rank").collect()
         .map(r => (r.getString(1), r.getString(2), r.getLong(3))).toSeq
-    })
+    }
   }
 
   /** Rank-parameterized trainer: distributed per-rank loop at or below

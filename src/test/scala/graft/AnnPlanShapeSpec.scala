@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Similarity
+import graft.ops.{IndexStore, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -84,17 +84,17 @@ class AnnPlanShapeSpec extends SparkSpec {
       Similarity.AnnIvfPqStaged.run(spark, sf).queryExecution.executedPlan.toString).isDefined
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
-      Similarity.clearProcessCaches()
+      IndexStore.clearMemos()
       val corpusSplits = spark.read.parquet(s"$sf/embeddings.parquet").rdd.getNumPartitions
       assert(corpusSplits >= spark.sparkContext.defaultParallelism,
         s"fixture corpus must scan as >= parallelism splits here (got $corpusSplits)")
       assert(stagedFansOut(), "staged plan lost its fan-out on a cold memo")
-      Similarity.clearProcessCaches()
+      IndexStore.clearMemos()
       Similarity.ExactTopk.run(spark, sf) // primes the corpus scan's split count
       assert(stagedFansOut(), "staged plan inherited the corpus scan's split count")
     } finally {
       confs.keys.foreach(spark.conf.unset)
-      Similarity.clearProcessCaches()
+      IndexStore.clearMemos()
     }
   }
 }

@@ -119,6 +119,9 @@ class BpeTrainSpec extends SparkSpec {
         (m, spark.sparkContext.statusTracker.getJobIdsForGroup(tag).length)
       } finally spark.sparkContext.clearJobGroup()
     }
+    // The first read of new table content infers its schema (one job,
+    // once per content); pay it here so both counts are the trainer's.
+    graft.ops.Docs.documents(spark, dir)
     val (m256, j256) = trainCountingJobs("bpe-train-256", 256)
     val (m320, j320) = trainCountingJobs("bpe-train-320", 320)
     assert(m256.length == 256 && m320.length == 320,
@@ -210,12 +213,12 @@ class BpeTrainSpec extends SparkSpec {
     val root = java.nio.file.Files.createTempDirectory("graft-bpe-store").toString
     spark.conf.set(graft.ops.IndexStore.RootConf, root)
     try {
-      TextAnalysis.clearBpeTrainCache()
+      graft.ops.IndexStore.clearMemos()
       val b0 = graft.ops.IndexStore.builds.get()
       val m1 = TextAnalysis.bpeTrainedMerges(spark, sf)
       assert(graft.ops.IndexStore.builds.get() == b0 + 1,
         "cold training must write exactly one artifact")
-      TextAnalysis.clearBpeTrainCache() // simulate a fresh process
+      graft.ops.IndexStore.clearMemos() // simulate a fresh process
       val l0 = graft.ops.IndexStore.loads.get()
       val m2 = TextAnalysis.bpeTrainedMerges(spark, sf)
       assert(graft.ops.IndexStore.loads.get() > l0, "warm pass must load the artifact")
@@ -223,7 +226,7 @@ class BpeTrainSpec extends SparkSpec {
       assert(m2 == m1, "loaded merges drifted from trained ones")
     } finally {
       spark.conf.unset(graft.ops.IndexStore.RootConf)
-      TextAnalysis.clearBpeTrainCache()
+      graft.ops.IndexStore.clearMemos()
     }
   }
 

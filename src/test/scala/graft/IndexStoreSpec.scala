@@ -20,10 +20,7 @@ class IndexStoreSpec extends SparkSpec {
     finally spark.conf.set(IndexStore.RootConf, prev)
   }
 
-  private def freshProcess(): Unit = {
-    Similarity.clearProcessCaches()
-    Dedup.clearPairGraphCache()
-  }
+  private def freshProcess(): Unit = IndexStore.clearMemos()
 
   private def graphRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -139,24 +136,31 @@ class IndexStoreSpec extends SparkSpec {
 
   test("fingerprint is content-keyed: a regenerated snapshot invalidates") {
     val tmp = Files.createTempDirectory("graft-fp-spec")
-    val src = Paths.get(s"$sf/embeddings.parquet")
+    val root = Files.createTempDirectory("graft-fp-root").toString
     val dst = tmp.resolve("embeddings.parquet")
-    Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
-    val fp1 = IndexStore.fingerprint(spark, tmp.toString, "embeddings")
-    // Regenerate: same path, different modification time.
-    IndexStore.clearFingerprints()
-    Files.setLastModifiedTime(dst,
-      java.nio.file.attribute.FileTime.fromMillis(
-        Files.getLastModifiedTime(dst).toMillis + 60000))
-    val fp2 = IndexStore.fingerprint(spark, tmp.toString, "embeddings")
-    assert(fp1 != fp2, "a touched snapshot must map to a new artifact directory")
-    IndexStore.clearFingerprints()
+    Files.copy(Paths.get(s"$sf/embeddings.parquet"), dst, StandardCopyOption.REPLACE_EXISTING)
+    withRoot(root) {
+      import org.apache.spark.sql.functions.lit
+      def build = spark.range(2).withColumn("v", lit("fp"))
+      IndexStore.loadOrBuild(spark, tmp.toString, "embeddings", "fp_test")(build)
+      val fp1 = IndexStore.fingerprint(spark, tmp.toString, "embeddings")
+      // Regenerate: same path, different modification time.
+      Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(
+          Files.getLastModifiedTime(dst).toMillis + 60000))
+      val b0 = IndexStore.builds.get()
+      IndexStore.loadOrBuild(spark, tmp.toString, "embeddings", "fp_test")(build)
+      val fp2 = IndexStore.fingerprint(spark, tmp.toString, "embeddings")
+      assert(fp1 != fp2, "a touched snapshot must map to a new artifact directory")
+      assert(IndexStore.builds.get() == b0 + 1, "a touched snapshot must build, not load")
+      assert(Files.exists(Paths.get(root, fp2, "fp_test.parquet", "_SUCCESS")),
+        "the rebuild must commit under the new fingerprint directory")
+    }
   }
 
   test("prune retires aged superseded generations, never live or fresh ones") {
     val root = Files.createTempDirectory("graft-prune-spec").toString
     withRoot(root) {
-      IndexStore.clearFingerprints()
       // A live generation: build one artifact for the real snapshot
       // (its fingerprint enters the process's live set).
       IndexStore.loadOrBuild(spark, sf, "embeddings", "prune_live") {
