@@ -55,12 +55,8 @@ object Cli {
         if (registryUrl == "mem:") new InMemorySchemaRegistry
         else new HttpSchemaRegistry(registryUrl))
       val (keyId, _) = KafkaStage.registerSubjects(registry, topic, schema)
-      // Typed parse only here: the OCF branch encodes straight from the
-      // lines, and an unused parse plan still lists the input and gets
-      // analysed.
-      val parsed = FixedWidth.read(spark, dataFile, schema)
-      val staged = KafkaStage.stage(parsed, schema, schemaId = schemaId,
-        topic = topic, keySchemaId = keyId)
+      val staged = KafkaStage.stageLines(FixedWidth.lines(spark, dataFile), schema,
+        schemaId = schemaId, topic = topic, keySchemaId = keyId)
       val stageDir = sys.env.getOrElse("GRAFT_STAGE_DIR", s"/tmp/graft-stage/$topic")
       staged.write.mode("overwrite").parquet(stageDir)
       println(s"[graft] staged Kafka frame for topic '$topic' -> $stageDir " +

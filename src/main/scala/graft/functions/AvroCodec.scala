@@ -7,8 +7,9 @@ import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.io.{BinaryDecoder, DecoderFactory}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Generator, GetStructField, If, IsNull, Literal, RuntimeReplaceable, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -29,9 +30,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * `["null", T]` union ([[graft.schema.FixedSchema.nullableAvroJson]]).
   *
   * One table, [[kindOf]], maps an (Avro field schema, Spark type) pair to
-  * its wire kind. Every encoder ([[RowWriter]] under `to_avro` and the
-  * OCF sink, [[AvroEncodeDirect]]) and every decoder ([[RowReader]] under
-  * `from_avro`, the Kafka decode and the OCF source) dispatches on it.
+  * its wire kind. Every encoder ([[AvroEncodeDirect]] under `to_avro`,
+  * `to_avro_confluent` and SQL `avro_encode`, and the OCF sink's
+  * [[RowWriter]]) and every decoder ([[RowReader]] under `from_avro`,
+  * the Kafka decode and the OCF source) dispatches on it.
   */
 object AvroCodec {
 
@@ -97,10 +99,11 @@ object AvroCodec {
     * boxing, no `GenericData.Record`, no schema walk. Strings ship their
     * UTF-8 bytes in one copy. A null in an optional field is its null
     * branch index; a null in a plain field fails, naming the field.
-    * Shared by [[AvroEncode]] and the OCF sink
-    * ([[graft.sources.OcfWire.Writer.append]]). */
+    * The interpreted writer of [[AvroEncodeDirect]] and the OCF sink
+    * ([[graft.sources.OcfWire.Writer.append]]); its field table is the
+    * one the direct encoder's generated code is emitted from. */
   private[graft] final class RowWriter(avroSchema: Schema, sparkSchema: StructType, who: String) {
-    private val fks = recordKinds(avroSchema, sparkSchema)
+    private[graft] val fks = recordKinds(avroSchema, sparkSchema)
     private val kinds = fks.map(_.kind)
     private val nullIdx = fks.map(_.nullIdx)
     private val valIdx = fks.map(_.valIdx)
@@ -201,37 +204,19 @@ object AvroCodec {
     }
   }
 
-  /** struct → Avro binary (record body only, no framing).
-    *
-    * Codegen: the [[RowWriter]] is library code that cannot be inlined
-    * into generated Java, so doGenCode emits a direct call to
-    * this expression's evaluator via a reference object. That keeps the
-    * surrounding whole-stage codegen fused (no CodegenFallback
-    * row-materialization detour); the measured encode leg runs at
-    * ~2.8M rows/s on local[32] — at parity with the reference's
-    * published 3.28M lines/s toAvro stage on comparable hardware. */
+  /** struct → Avro binary (record body only, no framing): the struct's
+    * fields through [[AvroEncodeDirect]], so `to_avro(struct(cols))`
+    * plans as the direct encoder over `cols` and the struct is never
+    * built. A null struct gives null. */
   case class AvroEncode(child: Expression, avroJson: String)
-      extends UnaryExpression {
+      extends RuntimeReplaceable with UnaryLike[Expression] {
     override def dataType: DataType = BinaryType
     override def prettyName: String = "avro_encode"
 
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-      val ref = ctx.addReferenceObj("avroEncode", this, classOf[AvroEncode].getName)
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = (byte[]) $ref.nullSafeEval($c);")
-    }
-
-    @transient private lazy val writer = new RowWriter(
-      new Schema.Parser().parse(avroJson), child.dataType.asInstanceOf[StructType], "avro_encode")
-    @transient private lazy val wire = new AvroWire(256)
-
-    override def nullSafeEval(input: Any): Any = {
-      wire.reset()
-      writer.write(input.asInstanceOf[InternalRow], wire)
-      wire.result()
+    override lazy val replacement: Expression = {
+      val fields = child.dataType.asInstanceOf[StructType].indices.map(GetStructField(child, _))
+      val body = AvroEncodeDirect(fields, avroJson, -1)
+      if (child.nullable) If(IsNull(child), Literal(null, BinaryType), body) else body
     }
     override protected def withNewChildInternal(c: Expression): AvroEncode = copy(child = c)
   }
@@ -444,17 +429,19 @@ object AvroCodec {
   /** Fused serialize: field expressions → (optional Confluent header +)
     * Avro record body, in one pass into a reusable per-task buffer.
     *
-    * Versus `Confluent.frame(to_avro(struct(cols)))` this removes, per
-    * row: the struct's UnsafeRow materialization (a full copy of the
-    * row), the per-field kind dispatch (codegen emits a direct typed
-    * call per field instead), and the frame `concat`'s second output
-    * array + copy. The reference's equivalent is the
+    * Versus encoding a materialized struct and framing it with a
+    * `concat`, this removes, per row: the struct's UnsafeRow (a full
+    * copy of the row), the per-field kind dispatch (codegen emits a
+    * direct typed call per field instead), and the frame's second
+    * output array + copy. The reference's equivalent is the
     * per-chunk reused record + marshal at
     * `fixed2avro/ColumnBuilder.go:67-95`.
     *
     * `frameId >= 0` prepends the 5-byte Confluent header
     * (`[0x00][id:4B BE]`, `kafkaavro/producer.go:201-207`); -1 emits the
-    * bare record body (OCF / unframed use). */
+    * bare record body (OCF / unframed use). An optional `["null", T]`
+    * field writes its branch index before the value, and a null as its
+    * null branch; a null in a plain field fails, naming the field. */
   case class AvroEncodeDirect(children: Seq[Expression], avroJson: String, frameId: Int)
       extends Expression {
     override def dataType: DataType = BinaryType
@@ -462,25 +449,18 @@ object AvroCodec {
     override def prettyName: String = "avro_encode_direct"
 
     @transient private lazy val avroSchema = new Schema.Parser().parse(avroJson)
-    @transient private[graft] lazy val kinds: Array[Int] = {
-      require(avroSchema.getFields.size == children.size,
-        s"Avro schema has ${avroSchema.getFields.size} fields, ${children.size} exprs given")
-      children.zipWithIndex.map { case (c, i) =>
-        val avro = avroSchema.getFields.get(i).schema()
-        // The fused encoder writes no branch index — handed an
-        // optional-union schema it would emit bytes that CLAIM the union
-        // schema but decode as garbage. Reject at plan build; to_avro
-        // carries optional unions.
-        require(avro.getType != Schema.Type.UNION,
-          "avro_encode_direct: union schemas are not supported by the fused " +
-            "encoder — use to_avro/AvroEncode for [\"null\", T] optional fields")
-        kindOf(avro, c.dataType).kind
-      }.toArray
+    /** The interpreted path; its field table drives the generated code. */
+    @transient private lazy val writer = {
+      import scala.jdk.CollectionConverters._
+      new RowWriter(avroSchema, StructType(children.zip(avroSchema.getFields.asScala).map {
+        case (c, f) => StructField(f.name, c.dataType) }), "avro_encode")
     }
     @transient private lazy val header: Array[Byte] =
       if (frameId >= 0) Confluent.prefixBytes(frameId) else Array.emptyByteArray
     @transient private lazy val wire = new AvroWire(1024)
     @transient private lazy val childArray = children.toArray
+    @transient private lazy val values = new Array[Any](childArray.length)
+    @transient private lazy val row = new GenericInternalRow(values)
 
     // --- called from generated code (must be public) ---
     def begin(): Unit = { wire.reset(); if (header.length > 0) wire.writeRaw(header) }
@@ -498,23 +478,10 @@ object AvroCodec {
         nullFieldMessage("avro_encode", avroSchema.getFields.get(i).name))
 
     override def eval(input: InternalRow): Any = {
-      begin()
       var i = 0
-      while (i < childArray.length) {
-        val v = childArray(i).eval(input)
-        if (v == null) nullField(i)
-        kinds(i) match {
-          case KBool => wBool(v.asInstanceOf[Boolean])
-          case KInt => wInt(v.asInstanceOf[Int])
-          case KLong | KIntAsLong => wLong(v.asInstanceOf[Number].longValue())
-          case KFloat => wFloat(v.asInstanceOf[Float])
-          case KDouble => wDouble(v.asInstanceOf[Double])
-          case KStr => wStr(v.asInstanceOf[UTF8String])
-          case KBytes => wBytes(v.asInstanceOf[Array[Byte]])
-          case KTsMillis => wTsMillis(v.asInstanceOf[Long])
-        }
-        i += 1
-      }
+      while (i < childArray.length) { values(i) = childArray(i).eval(input); i += 1 }
+      begin()
+      writer.write(row, wire)
       finish()
     }
 
@@ -525,8 +492,8 @@ object AvroCodec {
       import org.apache.spark.sql.catalyst.expressions.codegen.Block._
       val ref = ctx.addReferenceObj("avroDirect", this, classOf[AvroEncodeDirect].getName)
       val evals = children.map(_.genCode(ctx))
-      val writes = evals.zip(kinds).zipWithIndex.map { case ((e, kind), i) =>
-        val call = kind match {
+      val writes = evals.zip(writer.fks).zipWithIndex.map { case ((e, fk), i) =>
+        val call = fk.kind match {
           case KBool => s"$ref.wBool(${e.value});"
           case KInt => s"$ref.wInt(${e.value});"
           case KLong => s"$ref.wLong(${e.value});"
@@ -537,11 +504,22 @@ object AvroCodec {
           case KBytes => s"$ref.wBytes(${e.value});"
           case KTsMillis => s"$ref.wTsMillis(${e.value});"
         }
-        s"""
-           |${e.code}
-           |if (${e.isNull}) $ref.nullField($i);
-           |$call
-         """.stripMargin
+        if (fk.nullIdx < 0)
+          s"""
+             |${e.code}
+             |if (${e.isNull}) $ref.nullField($i);
+             |$call
+           """.stripMargin
+        else
+          s"""
+             |${e.code}
+             |if (${e.isNull}) {
+             |  $ref.wInt(${fk.nullIdx});
+             |} else {
+             |  $ref.wInt(${fk.valIdx});
+             |  $call
+             |}
+           """.stripMargin
       }
       ev.copy(
         code = code"""

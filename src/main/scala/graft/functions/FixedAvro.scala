@@ -332,10 +332,6 @@ object FixedAvro {
   def fixed_to_avro_confluent(line: Column, schema: FixedSchema, schemaId: Int): Column =
     ColumnBridge.column(FixedEncode(ColumnBridge.expression(line), schema, schemaId))
 
-  /** Column API: fused line → bare Avro record body. */
-  def fixed_to_avro(line: Column, schema: FixedSchema): Column =
-    ColumnBridge.column(FixedEncode(ColumnBridge.expression(line), schema, -1))
-
   /** Column API: fused line → Confluent-framed OPTIONAL-union Avro
     * bytes — the wire shape of
     * [[graft.schema.FixedSchema.nullableAvroJson]]; failed strict
@@ -343,10 +339,5 @@ object FixedAvro {
   def fixed_to_avro_confluent_nullable(line: Column, schema: FixedSchema,
       schemaId: Int): Column =
     ColumnBridge.column(FixedEncode(ColumnBridge.expression(line), schema, schemaId,
-      optional = true))
-
-  /** Column API: fused line → bare optional-union Avro record body. */
-  def fixed_to_avro_nullable(line: Column, schema: FixedSchema): Column =
-    ColumnBridge.column(FixedEncode(ColumnBridge.expression(line), schema, -1,
       optional = true))
 }

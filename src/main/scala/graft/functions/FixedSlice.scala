@@ -89,7 +89,7 @@ object FixedSlice {
   }
 
   def slices(line: UTF8String, starts: Array[Int], lens: Array[Int],
-      trimmed: Array[Boolean], copyOut: Boolean): GenericArrayData = {
+      trimmed: Array[Boolean]): GenericArrayData = {
     val nFields = starts.length
     val out = new Array[AnyRef](nFields)
     val numBytes = line.numBytes()
@@ -113,8 +113,7 @@ object FixedSlice {
         while (startByte < endByte && line.getByte(startByte) == 0x20) startByte += 1
         while (endByte > startByte && line.getByte(endByte - 1) == 0x20) endByte -= 1
       }
-      val s = UTF8String.fromAddress(base, offset + startByte, endByte - startByte)
-      out(f) = if (copyOut) s.clone() else s
+      out(f) = UTF8String.fromAddress(base, offset + startByte, endByte - startByte)
       f += 1
     }
     if (f < nFields) {
@@ -135,8 +134,7 @@ object FixedSlice {
           while (startByte < endByte && line.getByte(startByte) == 0x20) startByte += 1
           while (endByte > startByte && line.getByte(endByte - 1) == 0x20) endByte -= 1
         }
-        val s = UTF8String.fromAddress(base, offset + startByte, endByte - startByte)
-        out(f) = if (copyOut) s.clone() else s
+        out(f) = UTF8String.fromAddress(base, offset + startByte, endByte - startByte)
         f += 1
       }
     }
@@ -144,7 +142,7 @@ object FixedSlice {
   }
 
   case class FixedSlices(child: Expression, starts: Array[Int], lens: Array[Int],
-      trimmed: Array[Boolean], copyOut: Boolean) extends UnaryExpression {
+      trimmed: Array[Boolean]) extends UnaryExpression {
     require(starts.length == lens.length && starts.length == trimmed.length
       && starts.length > 0)
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -152,38 +150,25 @@ object FixedSlice {
     override def nullIntolerant: Boolean = true
 
     override def nullSafeEval(input: Any): Any =
-      slices(input.asInstanceOf[UTF8String], starts, lens, trimmed, copyOut)
+      slices(input.asInstanceOf[UTF8String], starts, lens, trimmed)
 
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val startsRef = ctx.addReferenceObj("starts", starts, "int[]")
       val lensRef = ctx.addReferenceObj("lens", lens, "int[]")
       val trimRef = ctx.addReferenceObj("trimmed", trimmed, "boolean[]")
       nullSafeCodeGen(ctx, ev, line =>
-        s"${ev.value} = graft.functions.FixedSlice.slices($line, $startsRef, $lensRef, $trimRef, $copyOut);")
+        s"${ev.value} = graft.functions.FixedSlice.slices($line, $startsRef, $lensRef, $trimRef);")
     }
 
     override protected def withNewChildInternal(c: Expression): FixedSlices =
       copy(child = c)
   }
 
-  /** Safety valve for the zero-copy invariant ("every consumer copies at
-    * an UnsafeProjection boundary in the same row scope" — see the class
-    * doc). A future consumer that buffers slices across rows without
-    * copying (e.g. interpreted `collect_list` directly over the parse
-    * projection) would read reused memory; flipping this session conf to
-    * "true" forces a defensive heap copy of every slice so such a bug
-    * surfaces as a perf delta instead of corrupted values. */
-  val ForceCopyConf = "spark.graft.fixedslice.forceCopy"
-
   /** `trimFields`: which fields get the zero-copy space trim (the
     * parser trims numerics/timestamps in Strict mode; Compat keeps Go
     * strconv's untrimmed-input semantics). */
   def fixed_slices(line: Column, schema: FixedSchema,
-      trimFields: Array[Boolean]): Column = {
-    val forceCopy = org.apache.spark.sql.SparkSession.active.conf
-      .get(ForceCopyConf, "false").toBoolean
+      trimFields: Array[Boolean]): Column =
     ColumnBridge.column(FixedSlices(ColumnBridge.expression(line),
-      schema.runeStarts.toArray, schema.fields.map(_.runeLen).toArray, trimFields,
-      forceCopy))
-  }
+      schema.runeStarts.toArray, schema.fields.map(_.runeLen).toArray, trimFields))
 }

@@ -65,12 +65,6 @@ object Dedup {
     * attributable error at the source. */
   val StrictCapConf = "spark.graft.lsh.strictCap"
 
-  /** Conf gate for [[reusePoint]] (`spark.graft.dedup.shareSignatures`,
-    * default on): off = the pre-r21 recompute-per-consumer plans, for
-    * A/B and for corpora where re-deriving a cheap signature beats
-    * shuffling it. */
-  val ShareSignaturesConf = "spark.graft.dedup.shareSignatures"
-
   /** Reuse-point exchange for a computed signature/shingle frame that
     * several subtrees of ONE query consume (the banded-signature pass
     * plus both sides of the exact-verify join). Without it each
@@ -85,11 +79,8 @@ object Dedup {
     * partitioning so the exchange replaces (not adds to) the join's
     * own. Guide §2.4/§8: move the computed bytes once instead of
     * recomputing them per consumer. */
-  private[graft] def reusePoint(df: DataFrame, key: String): DataFrame = {
-    val spark = df.sparkSession
-    if (!spark.conf.get(ShareSignaturesConf, "true").toBoolean) df
-    else df.repartition(spark.sparkContext.defaultParallelism, col(key))
-  }
+  private[graft] def reusePoint(df: DataFrame, key: String): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(key))
 
   /** Banded-signature candidate generation with the bucket-width cap:
     * input is (id, band, sig), output deduplicated (a, b) id pairs with
@@ -491,16 +482,7 @@ object Dedup {
     // byte-identical for AQE stage reuse.
     val widened = embeddings(spark, dir).select(col("vec_id"),
       col("embedding").cast(org.apache.spark.sql.types.ArrayType(DoubleType)).as("v"))
-    val shared = reusePoint(widened, "vec_id")
-    // Conf-off fallback (r22, per ADVICE r21): with shareSignatures
-    // off, reusePoint returns the UNrepartitioned frame — which here
-    // would also drop the pre-r21 Similarity.fanOut and regress to the
-    // single-split banding collapse fixed in earlier rounds. The off
-    // path must mean "pre-r21 plan", not "no fan-out at all".
-    val base =
-      if (shared eq widened)
-        Similarity.fanOut(spark, dir, "embeddings", widened, col("vec_id"))
-      else shared
+    val base = reusePoint(widened, "vec_id")
     val n = base.withColumn("nrm", graft.functions.VectorOps.vec_norm(col("v")))
     // All 2048 plane dots + band signatures in ONE compiled pass per
     // vector (HyperplaneSignBands): every formulation over built-in
@@ -889,13 +871,15 @@ object Dedup {
         parent.keySet().forEach(k => res += ((k, find(k))))
         res.iterator
       }.toDF("doc_id", "cluster_id")
-      // Materialize before unpersisting the input: the union-find's
-      // output is lineage over `sym`, and dropping the cache first
-      // would re-run the producing cascade on any later action.
-      val materialized = out.persist()
-      materialized.count()
+        // Materialize before unpersisting the input: the output is
+        // lineage over `sym`, and dropping the cache first would re-run
+        // the producing cascade on any later action. An eager local
+        // checkpoint, not a persist: nothing can unpersist the returned
+        // frame, and a CacheManager entry left behind would match the
+        // next call over the same edges (by plan, so by path).
+        .localCheckpoint(true)
       sym.unpersist()
-      return materialized
+      return out
     }
     var cached = sym.select(col("src").as("doc_id")).distinct()
       .withColumn("cluster_id", col("doc_id")).persist()

@@ -157,9 +157,9 @@ object Pipeline {
       col("l_linestatus"),
       when(col("l_orderkey") % 3 === 0, lit(null)).otherwise(col("l_shipdate"))
         .as("l_shipdate"))
-    val framed = nulled.select(Confluent.frame(
-      AvroCodec.to_avro(struct(lineitemFixed.fields.map(f => col(f.name)): _*),
-        lineitemFixed.nullableAvroJson), schemaId).as("value"))
+    val framed = nulled.select(
+      AvroCodec.to_avro_confluent(lineitemFixed.fields.map(f => col(f.name)),
+        lineitemFixed.nullableAvroJson, schemaId).as("value"))
     // barrier before the decode projection — the same recompute class
     // every sibling roundtrip documents (encode must not be
     // substituted into the decode's consumer expressions).

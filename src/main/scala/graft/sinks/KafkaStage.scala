@@ -1,13 +1,14 @@
 package graft.sinks
 
 import graft.functions.{AvroCodec, Confluent}
+import graft.parse.FixedWidthParser
 import graft.registry.SchemaRegistryClient
 import graft.schema.FixedSchema
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Kafka producer staging: typed rows → the exact `(key, value, topic,
-  * partition)` frame Spark's Kafka sink consumes.
+/** Kafka producer staging: typed rows or fixed-width lines → the exact
+  * `(key, value, topic, partition)` frame Spark's Kafka sink consumes.
   *
   * Re-expresses `KafkaExporter` (`fixed2avro/Exporters.go:40-103`):
   *  - value = Confluent-framed Avro record, schema id from config (NOT
@@ -18,10 +19,10 @@ import org.apache.spark.sql.functions._
   *  - partition = the task's partition id, mirroring the
   *    producer-pinned-to-chunk# routing (`kafkaavro/producer.go:128-132`).
   *
-  * No Kafka connector jar ships in this environment, so the network hop
-  * itself is behind [[RowSink]]; on a real cluster the staged frame goes
-  * straight to `df.write.format("kafka")` (at-least-once — strictly
-  * stronger than the reference's await-one-delivery, fine print F7).
+  * On a cluster the staged frame goes straight to
+  * `df.write.format("kafka")` (at-least-once — strictly stronger than
+  * the reference's await-one-delivery, fine print F7); without a
+  * connector jar [[graft.Cli]] writes it as parquet.
   */
 object KafkaStage {
 
@@ -53,49 +54,35 @@ object KafkaStage {
   // key frames would carry whatever unrelated schema holds id 1. Every
   // caller gets the id from registerSubjects anyway.
   def stage(df: DataFrame, schema: FixedSchema, schemaId: Int, topic: String,
-      keySchemaId: Int): DataFrame = {
-    val fieldCols: Seq[Column] = schema.fields.map(f => col(f.name))
-    df.select(
-      Confluent.frame(lit(KeyBytes), keySchemaId).as("key"),
-      AvroCodec.to_avro_confluent(fieldCols, schema.avroJson, schemaId).as("value"),
-      lit(topic).as("topic"),
-      spark_partition_id().as("partition"))
-  }
+      keySchemaId: Int): DataFrame =
+    envelope(df, AvroCodec.to_avro_confluent(schema.fields.map(f => col(f.name)),
+      schema.avroJson, schemaId), topic, keySchemaId)
 
   /** Optional-union staging variant (r17): frames the value under the
     * `["null", T]` schema so null fields are CARRIED to the topic
     * instead of killing the encode — pair with
     * `registerSubjects(..., nullable = true)` so consumers resolve the
     * union by the registered id ([[graft.sources.KafkaConsume]]'s
-    * field readers handle optional unions). Goes through the general
-    * [[AvroCodec.to_avro]] path: the fused direct encoder is flat-only
-    * BY DESIGN (it rejects union schemas at plan build) — the fused
-    * fast path remains the null-free reference shape. */
+    * field readers handle optional unions). Same encoder as [[stage]]. */
   def stageNullable(df: DataFrame, schema: FixedSchema, schemaId: Int,
-      topic: String, keySchemaId: Int): DataFrame = {
-    val fieldCols: Seq[Column] = schema.fields.map(f => col(f.name))
+      topic: String, keySchemaId: Int): DataFrame =
+    envelope(df, AvroCodec.to_avro_confluent(schema.fields.map(f => col(f.name)),
+      schema.nullableAvroJson, schemaId), topic, keySchemaId)
+
+  /** Stage fixed-width lines (a `value` string column) for the Kafka
+    * sink through the fused line → Avro encoder
+    * ([[FixedWidthParser.toAvro]]): the same frame as [[stage]] over
+    * the strict parse of those lines, with no typed row in between. */
+  def stageLines(lines: DataFrame, schema: FixedSchema, schemaId: Int, topic: String,
+      keySchemaId: Int): DataFrame =
+    envelope(FixedWidthParser.toAvro(lines, schema, schemaId), col("value"), topic, keySchemaId)
+
+  /** The `(key, value, topic, partition)` frame Spark's Kafka sink reads. */
+  private def envelope(df: DataFrame, value: Column, topic: String,
+      keySchemaId: Int): DataFrame =
     df.select(
       Confluent.frame(lit(KeyBytes), keySchemaId).as("key"),
-      Confluent.frame(
-        AvroCodec.to_avro(struct(fieldCols: _*), schema.nullableAvroJson),
-        schemaId).as("value"),
+      value.as("value"),
       lit(topic).as("topic"),
       spark_partition_id().as("partition"))
-  }
-
-  /** Sink seam for offline tests; production = `format("kafka")`. */
-  trait RowSink extends Serializable {
-    def send(topic: String, partition: Int, key: Array[Byte], value: Array[Byte]): Unit
-    def flush(): Unit = ()
-  }
-
-  /** Drive a staged frame into a sink, partition-parallel. */
-  def writeTo(staged: DataFrame, mkSink: () => RowSink): Unit =
-    staged.select("topic", "partition", "key", "value").rdd.foreachPartition { rows =>
-      val sink = mkSink()
-      rows.foreach { r =>
-        sink.send(r.getString(0), r.getInt(1), r.getAs[Array[Byte]](2), r.getAs[Array[Byte]](3))
-      }
-      sink.flush()
-    }
 }

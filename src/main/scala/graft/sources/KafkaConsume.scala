@@ -15,8 +15,8 @@ import org.apache.spark.storage.StorageLevel
   * never talk to the registry), decode the remaining bytes. With a live
   * cluster the input frame comes from
   * `spark.readStream.format("kafka")`; offline it is any DataFrame with a
-  * binary `value` column. Kafka commit semantics are replaced by
-  * Structured Streaming checkpointing (strictly stronger).
+  * binary `value` column, batch or streaming. Kafka commit semantics are
+  * replaced by Structured Streaming checkpointing (strictly stronger).
   */
 object KafkaConsume {
 
@@ -55,7 +55,8 @@ object KafkaConsume {
     *   registered. When empty, ids are discovered from the data itself
     *   (the frame is persisted first so discovery does not recompute the
     *   upstream pipeline twice), and a discovered id the registry does
-    *   not hold is junk like any other: its messages are dropped.
+    *   not hold is junk like any other: its messages are dropped. A
+    *   streaming frame needs them: discovery is a driver-side collect.
     */
   def decode(framed: DataFrame, registry: SchemaRegistryClient,
       target: FixedSchema, knownIds: Seq[Int] = Nil,
@@ -68,6 +69,9 @@ object KafkaConsume {
     val (input, ids) =
       if (knownIds.nonEmpty) (framed, knownIds)
       else {
+        require(!framed.isStreaming,
+          "decoding a stream needs explicit writer-schema ids: data-driven id " +
+            "discovery is a driver-side collect a streaming plan cannot run")
         val cached = framed.persist(StorageLevel.MEMORY_AND_DISK)
         (cached, schemaIds(cached, valueCol))
       }

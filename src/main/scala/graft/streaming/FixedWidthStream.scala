@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.parse.{FixedWidthParser, ParseMode, Strict}
-import graft.functions.{AvroCodec, Confluent}
+import graft.functions.Confluent
 import graft.schema.FixedSchema
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Structured Streaming front of the fixed-width→Avro pipeline.
@@ -47,13 +46,6 @@ object FixedWidthStream {
       mode: ParseMode = Strict): DataFrame =
     graft.sources.FixedWidth.parseTruncateAtFooter(
       spark.readStream.textFile(dir), schema, mode)
-
-  /** Typed streaming frame → Confluent-framed Avro `value` bytes
-    * (the producer leg of the pipeline, streaming-shaped). */
-  def frameStream(parsed: DataFrame, schema: FixedSchema, schemaId: Int): DataFrame =
-    parsed.select(
-      AvroCodec.to_avro_confluent(schema.fields.map(f => col(f.name)),
-        schema.avroJson, schemaId).as("value"))
 
   /** Streaming twin of the FUSED line→Avro hot path
     * ([[FixedWidthParser.toAvro]]): the expression is a stateless

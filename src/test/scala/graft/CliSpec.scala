@@ -81,4 +81,25 @@ class CliSpec extends SparkSpec {
     assert(frameCanon(staged).exceptAll(frameCanon(expected)).isEmpty &&
       frameCanon(expected).exceptAll(frameCanon(staged)).isEmpty)
   }
+
+  test("http sink: the Kafka branch encodes the lines with the fused encoder, no typed parse") {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      Cli.run(spark, Array("http://broker:9092", "mem:", schemaFile, "7",
+        s"cli-plan-${System.nanoTime()}", "2", dataDir))
+      TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray.map(_.toString)
+    assert(all.exists(_.contains("fixed_to_avro")), all.mkString("\n---\n"))
+    assert(!all.exists(_.contains("avro_encode_direct")), all.mkString("\n---\n"))
+  }
 }

@@ -96,9 +96,7 @@ class FixedAvroSpec extends SparkSpec {
   }
 
   private def unfusedNullable(df: DataFrame): Seq[Seq[Byte]] =
-    // the general codec (to_avro) + frame: AvroEncodeDirect — the fused
-    // STRUCT encoder — rejects union schemas by design, so the
-    // union-capable general writer is the reference formulation here
+    // the typed path: strict parse, then to_avro(nullableAvroJson) + frame
     FixedWidthParser.parse(df, schema, Strict, dropFooter = false)
       .select(graft.functions.Confluent.frame(
         AvroCodec.to_avro(struct(schema.fields.map(f => col(f.name)): _*),

@@ -291,6 +291,48 @@ class LlmOpsSpec extends SparkSpec {
       s"star rounds leaked checkpoint RDDs: $before -> $after persistent RDDs")
   }
 
+  test("connectedComponents: a second union-find call over the same edges caches nothing twice") {
+    import spark.implicits._
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val edges = Seq((1L, 2L), (2L, 3L), (7L, 8L)).toDF("doc_a", "doc_b")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val logger = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
+      .getLogger("org.apache.spark.sql.execution.CacheManager")
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "cc-cache-warnings", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = warned.add(e.getMessage.getFormattedMessage)
+    }
+    def labelled(): (Map[Long, Long], Int) = {
+      org.apache.spark.TestBus.drain(sc)
+      jobs.set(0)
+      val got = Dedup.connectedComponents(edges, "doc_a", "doc_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      org.apache.spark.TestBus.drain(sc)
+      (got, jobs.get)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    sc.addSparkListener(listener)
+    try {
+      val (first, firstJobs) = labelled()
+      val (second, secondJobs) = labelled()
+      assert(first == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L, 8L -> 7L) && second == first)
+      assert(warned.isEmpty, warned.toArray.mkString("|"))
+      assert(secondJobs == firstJobs, s"second call ran $secondJobs jobs, first $firstJobs")
+    } finally {
+      sc.removeSparkListener(listener)
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("connectedComponents: all three paths cover self-loop-only nodes identically") {
     import spark.implicits._
     // node 7 appears ONLY as a self-loop; 1-2 is a normal pair. Every

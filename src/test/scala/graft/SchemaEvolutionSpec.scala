@@ -77,8 +77,9 @@ class SchemaEvolutionSpec extends SparkSpec {
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.BinaryType))))
       .parquet(framesDir)
-    val decoded = graft.streaming.AvroStream.decodeStream(
+    val decoded = graft.sources.KafkaConsume.decode(
       streamIn, registry, newFixed, knownIds = ids, nullable = true)
+    assert(decoded.isStreaming)
     val out = java.nio.file.Files.createTempDirectory("graft-evo-out").toString
     val ck = java.nio.file.Files.createTempDirectory("graft-evo-ck").toString
     graft.streaming.FixedWidthStream.runToParquet(decoded, out, ck)
@@ -86,6 +87,12 @@ class SchemaEvolutionSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(2)) None else Some(r.getDouble(2)))).toSeq
     assert(streamed == expect)
+    // id discovery is a driver-side collect: a stream must name its ids
+    val e = intercept[IllegalArgumentException] {
+      graft.sources.KafkaConsume.decode(streamIn, registry, newFixed, knownIds = Nil)
+    }
+    assert(e.getMessage.contains("needs explicit writer-schema ids: data-driven id " +
+      "discovery is a driver-side collect a streaming plan cannot run"), e.getMessage)
   }
 
   test("writer int promotes into a long reader field (Avro numeric promotion)") {

@@ -53,9 +53,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming framed Avro values decode back (producer leg)") {
     val in = tmp("in3"); val out = tmp("out3"); val ck = tmp("ck3")
     FixedWidth.write(Pipeline.lineitem(spark, sf), Pipeline.lineitemFixed, in)
-    val framed = FixedWidthStream.frameStream(
-      FixedWidthStream.parseStream(spark, in, Pipeline.lineitemFixed),
-      Pipeline.lineitemFixed, schemaId = 7)
+    val framed = FixedWidthStream.toAvroStream(spark, in, Pipeline.lineitemFixed, 7)
     FixedWidthStream.runToParquet(framed, out, ck)
     val vals = spark.read.parquet(out)
     val decoded = vals.select(graft.functions.AvroCodec.from_avro_framed(col("value"),
