@@ -501,34 +501,6 @@ object Bench {
     // and leaks to /tmp after the bench exits (ENOSPC risk on a
     // constrained box).
     deleteRecursively(new java.io.File(ocfDir))
-    // Standing A/B (r13): the SAME parse leg over the stock
-    // spark.read.text source. Prices the native LineScan against stock
-    // in every round's record, so a future LineScan regression is
-    // attributed the day it happens instead of a round later. 3 runs —
-    // it anchors attribution, not a headline figure. Runs AFTER the OCF
-    // legs as of r14 (ADVICE r13: its 4+ GiB of extra scans between the
-    // parse and encode legs shifted the encode/OCF JVM + page-cache
-    // context relative to rounds <= 12 — the leg order now matches
-    // rounds <= 12 with the A/B appended; noted in the notes field).
-    val envStock = envSnap()
-    def stockLeg(n: Int): (Seq[Double], Seq[Double]) = {
-      // restore the PRIOR value, not a hardcoded "true": an operator
-      // benching with the native scan disabled (the documented escape
-      // hatch) must not have the rest of the sweep silently flipped
-      // back to native by this A/B leg.
-      val prior = spark.conf.getOption(graft.sources.LineScan.Conf)
-      spark.conf.set(graft.sources.LineScan.Conf, "false")
-      try {
-        val stockParsed = graft.parse.FixedWidthParser.parse(
-          FixedWidth.lines(spark, dir), schema, Strict)
-        force(stockParsed) // codegen warmup for the stock plan
-        calTimes(force(stockParsed), n)
-      } finally prior match {
-        case Some(v) => spark.conf.set(graft.sources.LineScan.Conf, v)
-        case None    => spark.conf.unset(graft.sources.LineScan.Conf)
-      }
-    }
-    var (stockRuns, stockCals) = stockLeg(3)
     // Bounded requeue (VERDICT r13 #2): a leg whose every run saw the
     // machine at < 70% of the session's best single-thread throughput
     // never got a clean shot — rerun it ONCE, appending the new runs
@@ -544,13 +516,6 @@ object Bench {
       val (t2, c2) = calTimes(force(parsed), LegRuns)
       parseRuns ++= t2; parseCals ++= c2; parseRequeued = t2.size
     }
-    var stockRequeued = 0
-    if (stockCals.max < requeueFrac * sessionMaxCal) {
-      System.err.println(f"[bench] $key stock leg contended (cal max " +
-        f"${stockCals.max}%.0f vs session ${sessionMaxCal}%.0f MB/s); requeueing once")
-      val (t2, c2) = stockLeg(3)
-      stockRuns ++= t2; stockCals ++= c2; stockRequeued = t2.size
-    }
     val scanS = median(scanRuns); val parseS = median(parseRuns)
     val encodeS = median(encodeRuns); val ocfS = median(ocfRuns.toSeq)
     val ocfCpuS = median(ocfCpuRuns.toSeq)
@@ -565,11 +530,10 @@ object Bench {
     // parse_min_s / per_core_lines_per_s_best are the engine's
     // demonstrated-capable figures on the driver's own record. The
     // headline has a hard byte budget (the driver's 2 KB stdout tail),
-    // so scan/encode mins, the stock-scan A/B, and the weblog
-    // line-rate variants live in bench_details.json only (which
-    // carries every leg's full raw-runs array); per-line rates ride
-    // the headline only for the narrow-row corpus, where lines/s is
-    // the README's claimed figure.
+    // so scan/encode mins and the weblog line-rate variants live in
+    // bench_details.json only (which carries every leg's full raw-runs
+    // array); per-line rates ride the headline only for the narrow-row
+    // corpus, where lines/s is the README's claimed figure.
     val linesRatesJson =
       if (linesRates)
         s""","per_core_lines_per_s":${fmt0(lines / parseS / nCores)},""" +
@@ -602,19 +566,15 @@ object Bench {
       // parse-stage shift visible in one number across rounds.
       s""""parse_minus_scan_s":${fmt(parseS - scanS)},""" +
       s""""parse_min_s":${fmt(parseRuns.min)},""" +
-      s""""parse_stock_s":${fmt(median(stockRuns))},""" +
-      s""""parse_stock_runs":${arr(stockRuns)},""" +
       // Per-leg contention telemetry (VERDICT r13 #2): a cal entry per
-      // parse/stock run (MB/s, read against cal_max = the session best),
+      // parse run (MB/s, read against cal_max = the session best),
       // requeued-run counts (0 = no requeue fired; appended runs sit at
-      // the END of the *_runs arrays), and [loadavg, sibling-jvm-count]
-      // snapshots at leg-group boundaries.
+      // the END of the *_runs arrays), and a [loadavg, sibling-jvm-count]
+      // snapshot at the leg-group start.
       s""""parse_cal_runs":${arr(parseCals)},""" +
-      s""""parse_stock_cal_runs":${arr(stockCals)},""" +
       s""""cal_max":${fmt0(sessionMaxCal)},""" +
       s""""cal_at_min":${fmt0(calAtMin)},""" +
-      s""""parse_requeued":$parseRequeued,"stock_requeued":$stockRequeued,""" +
-      s""""env_start":$envStart,"env_stock":$envStock,""" +
+      s""""parse_requeued":$parseRequeued,"env_start":$envStart,""" +
       s""""scan_runs":${arr(scanRuns)},"parse_runs":${arr(parseRuns)},""" +
       s""""encode_runs":${arr(encodeRuns)},"ocf_write_runs":${arr(ocfRuns.toSeq)},""" +
       s""""ocf_cpu_runs":${arr(ocfCpuRuns.toSeq)},""" +
@@ -884,27 +844,17 @@ object Bench {
       "per_core_lines_per_s_best / *_min stage fields are min-of-N " +
       "alongside the median, so one interference spike cannot bury a " +
       "fix; scan/encode mins live in this file's raw runs arrays " +
-      "(headline byte budget). parse_stock_s / parse_stock_runs " +
-      "(parsed blocks in this file) are the same parse leg over stock " +
-      "spark.read.text (spark.graft.linescan.enabled=false) — the " +
-      "standing native-vs-stock A/B, re-priced every round so a " +
-      "LineScan regression is attributed the day it happens. " +
-      "LEG ORDER (r14): the stock A/B runs AFTER the OCF legs (r13 ran " +
-      "it between parse and encode — ADVICE flagged the context shift " +
-      "for encode/OCF cross-round comparisons; r14 restores the " +
-      "<= r12 leg order with the A/B appended). Contention telemetry " +
-      "(r14): parse_cal_runs / parse_stock_cal_runs give a ~100 ms " +
-      "single-thread micro-cal (MB/s) interleaved before every " +
-      "parse/stock run — read each run against cal_max (the session " +
-      "best); cal_at_min is the cal of the min-time parse run, the " +
-      "figure the min-leg lines/s is conditioned on. env_start / " +
-      "env_stock are [1-min loadavg, sibling java process count] at " +
-      "leg-group boundaries, and queries_env gives [micro-cal MB/s, " +
-      "loadavg, sibling-jvms] captured before each sweep query. A " +
-      "parse/stock leg whose every cal sat below 0.7x cal_max is " +
-      "requeued ONCE after the other legs (parse_requeued / " +
-      "stock_requeued = appended run count at the END of the runs " +
-      "arrays; 0 = no requeue)\""
+      "(headline byte budget). Contention telemetry (r14): " +
+      "parse_cal_runs give a ~100 ms single-thread micro-cal (MB/s) " +
+      "interleaved before every parse run — read each run against " +
+      "cal_max (the session best); cal_at_min is the cal of the " +
+      "min-time parse run, the figure the min-leg lines/s is " +
+      "conditioned on. env_start is [1-min loadavg, sibling java " +
+      "process count] at the leg-group start, and queries_env gives " +
+      "[micro-cal MB/s, loadavg, sibling-jvms] captured before each " +
+      "sweep query. A parse leg whose every cal sat below 0.7x cal_max " +
+      "is requeued ONCE after the other legs (parse_requeued = appended " +
+      "run count at the END of the runs arrays; 0 = no requeue)\""
 
     // Full detail to a file (raw runs, corpus geometry, notes)…
     val detail =

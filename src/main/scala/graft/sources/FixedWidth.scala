@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 
 /** Fixed-width text source + renderer.
   *
-  * Read path: `spark.read.text` gives distributed line records (Hadoop
-  * splits replace the reference's manual chunk-at-CRLF logic,
+  * Read path: [[lines]] gives distributed line records (chunks aligned
+  * at line ends replace the reference's manual chunk-at-CRLF logic,
   * `fixed2avro/ColumnBuilder.go:122-196` / `common/fixed.go:150-164`),
   * then [[FixedWidthParser]] projects typed columns.
   *
@@ -19,13 +19,16 @@ import org.apache.spark.sql.types._
   */
 object FixedWidth {
 
-  /** Distributed line records for a text path: the native chunk-aligned
-    * [[LineScan]] (the reference's ParalizeChunks/FindLastNL model, ~2x
-    * cheaper than the Hadoop record reader) unless
-    * `spark.graft.linescan.enabled=false` routes back to
-    * `spark.read.text`. Record semantics are identical (LineScanSpec). */
+  /** Distributed line records for a text path. A local path reads
+    * through the native chunk-aligned [[LineScan]] (the reference's
+    * ParalizeChunks/FindLastNL model), which measured faster than
+    * `spark.read.text` on the 256 MiB weblog corpus through `Cli.run`
+    * (10 alternating pairs, `local[4]`: median pass 0.614 s against
+    * 0.691 s, first pass 3.17 s against 3.83 s). Every other filesystem
+    * reads with `spark.read.text`. Record semantics are identical
+    * (LineScanSpec). */
   def lines(spark: SparkSession, path: String): DataFrame =
-    if (spark.conf.get(LineScan.Conf, "true").toBoolean) LineScan.read(spark, path)
+    if (LineScan.handles(spark, path)) LineScan.read(spark, path)
     else spark.read.text(path)
 
   /** Distributed fixed-width file scan → typed DataFrame (operator S1-S4

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -8,24 +8,24 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native chunk-aligned distributed line scan — the Spark re-expression
-  * of the reference's own chunking model (`ParalizeChunks` +
-  * `FindLastNL`, `common/fixed.go:150-210`): split each file into
-  * byte-range chunks, align every chunk to line boundaries, and read
-  * each chunk's lines in one pass.
+/** Native chunk-aligned distributed line scan over local files — the
+  * Spark re-expression of the reference's own chunking model
+  * (`ParalizeChunks` + `FindLastNL`, `common/fixed.go:150-210`): split
+  * each file into byte-range chunks, align every chunk to line
+  * boundaries, and read each chunk's lines in one pass.
   *
   * Exists because the stock `spark.read.text` path routes every line
   * through Hadoop's `LineRecordReader`: a per-line `Text` copy, a
   * `UTF8String` copy of that, and an UnsafeRow copy — plus a per-byte
-  * readLine state machine. Here a LOCAL file chunk is mmap'd (page-cache
+  * readLine state machine. Here each chunk is mmap'd (page-cache
   * backed, zero heap buffers, zero copies — the reference's whole-file-
   * in-memory model, `common/fixed.go:166-178`) and terminators are found
   * word-at-a-time (SWAR); rows are zero-copy `UTF8String` views over the
   * mapping, which stays referenced until task end (every row crossing a
   * stage or leaving the task is copied by Spark's unsafe projection
-  * first, so no view outlives its mapping). Non-local filesystems
-  * (hdfs/s3) fall back to a buffered stream read of the same chunk
-  * geometry — same semantics, one copy.
+  * first, so no view outlives its mapping). Only the local filesystem
+  * can be mapped; [[FixedWidth.lines]] reads every other filesystem with
+  * `spark.read.text`.
   *
   * Line semantics are Hadoop's, pinned by `LineScanSpec` against
   * `spark.read.text` on adversarial fixtures: terminators are LF, CRLF,
@@ -36,24 +36,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `start < s <= end` (`s == 0` belongs to the first chunk); the partial
   * line a chunk lands in is skipped — its owner is the previous chunk,
   * which reads past its own `end` to finish it.
-  *
-  * Scale notes: chunks parallelize like the reference's per-core chunks
-  * (one task each); on an object store there is no block locality to
-  * lose; on HDFS every task carries its chunks' top block hosts as
-  * preferred locations (weighted by overlap bytes, Spark's own
-  * FilePartition shape) so the scheduler places scans node-local. The
-  * stock source remains available via [[LineScan.Conf]] = false.
   */
 object LineScan {
-
-  /** Session conf: set "false" to route [[FixedWidth.lines]] (and every
-    * file-based fixed-width query) back through `spark.read.text`. */
-  val Conf = "spark.graft.linescan.enabled"
-
-  /** Session conf (tests): "true" forces the non-local stream fallback
-    * even for file:// paths, so LineScanSpec can pin both region
-    * implementations against `spark.read.text`. */
-  private[graft] val ForceStreamConf = "spark.graft.linescan.forceStream"
 
   /** 128 MiB: HDFS-block-scale chunks. Smaller chunks pay ~1 ms of
     * scheduler overhead per task (measured: 1 MiB chunks → 4400 tasks →
@@ -61,10 +45,19 @@ object LineScan {
     * cost virtual, so there is no reason to go fine-grained. */
   val DefaultChunkBytes: Long = 128L << 20
 
-  private[graft] case class Chunk(file: String, start: Long, end: Long, fileLen: Long,
-      forceStream: Boolean = false)
+  private[graft] case class Chunk(file: String, start: Long, end: Long, fileLen: Long)
 
   private val schema = StructType(Seq(StructField("value", StringType, nullable = false)))
+
+  /** Whether [[read]] can serve `path`: it is on the local filesystem
+    * (the only one whose files can be mapped) and the mapping address is
+    * reachable ([[addressField]]). Resolved on the driver. */
+  private[graft] def handles(spark: SparkSession, path: String): Boolean =
+    addressField.isDefined &&
+      (new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration) match {
+        case _: LocalFileSystem | _: RawLocalFileSystem => true
+        case _ => false
+      })
 
   /** Top-level data files of `root` (minus _SUCCESS/._* markers), in
     * stable path order. The stock source's handling of nested layouts
@@ -74,85 +67,37 @@ object LineScan {
     * native scan matches the first case exactly (skip, like stock) and
     * fails loudly on the second — silently reading FEWER rows than the
     * stock source it replaces is the one unacceptable outcome, so that
-    * divergence is an error that names the escape hatch. */
-  private[graft] def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.FileStatus): Seq[org.apache.hadoop.fs.LocatedFileStatus] = {
+    * divergence is an error that names the stock route. The listing is
+    * `listStatus`: the stock `listLocatedStatus` copies each file's
+    * permission, which forks an `ls -ld` per file when the native Hadoop
+    * library is not loaded (8 files on a 4-vCPU VM: 30 ms vs 0.5 ms). */
+  private[graft] def listDataFiles(fs: FileSystem, root: FileStatus): Seq[FileStatus] = {
     def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    // ONE listing per directory serves both the partition-dir guard and
-    // the data files, each carrying its block locations, and the guard
-    // runs on the SAME snapshot as the file selection, so a partition
-    // dir appearing between two listings can never slip past the guard
-    // into a silently-smaller row set.
-    //  - Non-local filesystems: one listLocatedStatus call (the way
-    //    Spark's InMemoryFileIndex gets locations), so at 100 TB HDFS
-    //    pays one NameNode round-trip per directory page instead of a
-    //    getFileBlockLocations call per file. It returns directory
-    //    entries too; dirs simply carry no block locations.
-    //  - Local filesystem: listStatus, with the located status built
-    //    from null permission/owner/group (Spark's HadoopFSUtils
-    //    shape). The stock listLocatedStatus copies each file's
-    //    permission, which forks an `ls -ld` per file when the native
-    //    Hadoop library is not loaded (8 files on a 4-vCPU VM: 30 ms
-    //    vs 0.5 ms for listStatus). Local block locations come from
-    //    the status alone, with no I/O.
-    def located(p: Path): Seq[org.apache.hadoop.fs.LocatedFileStatus] = fs match {
-      case _: org.apache.hadoop.fs.LocalFileSystem | _: org.apache.hadoop.fs.RawLocalFileSystem =>
-        fs.listStatus(p).toSeq.map { f =>
-          val locs = if (f.isFile) fs.getFileBlockLocations(f, 0, f.getLen) else null
-          new org.apache.hadoop.fs.LocatedFileStatus(f.getLen, f.isDirectory,
-            f.getReplication, f.getBlockSize, f.getModificationTime, 0L,
-            null, null, null, if (f.isSymlink) f.getSymlink else null, f.getPath, locs)
-        }
-      case _ =>
-        val it = fs.listLocatedStatus(p)
-        val buf = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
-        while (it.hasNext) buf += it.next()
-        buf.result()
-    }
-    if (root.isFile) located(root.getPath) // a file lists as itself
+    if (root.isFile) Seq(root) // a file lists as itself
     else {
-      val kids = located(root.getPath).filter(s => visible(s.getPath.getName))
+      // ONE listing serves both the partition-dir guard and the data
+      // files, so a partition dir appearing between two listings can
+      // never slip past the guard into a silently-smaller row set.
+      val kids = fs.listStatus(root.getPath).toSeq.filter(s => visible(s.getPath.getName))
       kids.find(d => d.isDirectory && d.getPath.getName.contains('=')).foreach { d =>
         throw new IllegalArgumentException(
-          s"LineScan does not do partition discovery, found ${d.getPath}; " +
-          s"set $Conf=false to route partitioned layouts through " +
-          "spark.read.text")
+          s"LineScan does not do partition discovery, found ${d.getPath}; read " +
+          "partitioned layouts with FixedWidthParser.parse(spark.read.text(dir), schema)")
       }
       kids.filter(_.isFile).sortBy(_.getPath.toString)
     }
   }
 
-  /** Preferred hosts of one packed task: block hosts weighted by the
-    * bytes each contributes to the task's chunks, top 3 (Spark's own
-    * `FilePartition.preferredLocations` shape). "localhost" entries are
-    * dropped the way Spark drops them (meaningless as a cluster
-    * locality hint — every LocalFileSystem block reports it). */
-  private[graft] def taskHosts(task: Seq[Chunk],
-      blocks: Map[String, Array[org.apache.hadoop.fs.BlockLocation]]): Seq[String] = {
-    val w = scala.collection.mutable.HashMap.empty[String, Long]
-    task.foreach { c =>
-      blocks.getOrElse(c.file, Array.empty).foreach { b =>
-        val s = math.max(c.start, b.getOffset)
-        val e = math.min(c.end, b.getOffset + b.getLength)
-        if (e > s) b.getHosts.foreach { h =>
-          if (h.nonEmpty && h != "localhost") w(h) = w.getOrElse(h, 0L) + (e - s)
-        }
-      }
-    }
-    w.toSeq.sortBy { case (h, bytes) => (-bytes, h) }.take(3).map(_._1)
-  }
-
   def read(spark: SparkSession, dir: String,
       chunkBytes: Long = DefaultChunkBytes): DataFrame = {
-    // Upper bound keeps every Int-typed size downstream exact: the
-    // stream region's buffer is addressed with Ints, and the mmap
+    // Upper bound keeps every Int-typed size downstream exact: a
     // region's chunk+tail mapping must stay below Int.MaxValue.
     require(chunkBytes > 0 && chunkBytes <= Int.MaxValue / 2,
       s"chunkBytes must be in (0, ${Int.MaxValue / 2}], got $chunkBytes")
+    require(handles(spark, dir), s"LineScan maps local files only; read $dir with spark.read.text")
     val rootPath = new Path(dir)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files = listDataFiles(fs, fs.getFileStatus(rootPath))
-    val forceStream = spark.conf.get(ForceStreamConf, "false").toBoolean
     // Adaptive chunk size, exactly FilePartition's sizing rule: cap at
     // `chunkBytes`, but shrink toward totalBytes/parallelism (floor
     // 4 MiB ≈ the open cost) so a small corpus still fans out across
@@ -185,8 +130,7 @@ object LineScan {
       // (where the garbage chunks would be FILTERED, silently dropping
       // rows). Both terms here stay below len and k^2 respectively.
       def bound(i: Long): Long = i * (len / k) + i * (len % k) / k
-      (0L until k).map(i => Chunk(st.getPath.toString,
-        bound(i), bound(i + 1), len, forceStream))
+      (0L until k).map(i => Chunk(st.getPath.toString, bound(i), bound(i + 1), len))
     }.filter(c => c.end > c.start)
     // Bin-pack chunks into tasks the way FilePartition packs file
     // splits: a directory of MANY SMALL files must not fan out as one
@@ -209,21 +153,10 @@ object LineScan {
     }
     if (group.nonEmpty) packed += group
     val tasks = packed.result()
-    // HDFS/block-store locality: each task carries the top block hosts
-    // of its chunks ([[taskHosts]]) so the scheduler can place it
-    // node-local, exactly like Spark's FilePartition preferred
-    // locations — the locality story the mmap fast path assumes. On
-    // local/object-store filesystems the host list is empty (locality
-    // is meaningless there) and makeRDD schedules freely.
-    val blockMap: Map[String, Array[org.apache.hadoop.fs.BlockLocation]] =
-      files.map(st => st.getPath.toString -> st.getBlockLocations).toMap
     val rdd =
       if (tasks.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
-      else {
-        val conf = graft.GraftSession.broadcastHadoopConf(spark)
-        spark.sparkContext.makeRDD(tasks.map(t => (t, taskHosts(t, blockMap))))
-          .mapPartitions(_.flatMap(_.iterator.flatMap(c => readChunk(c, conf.value.value))))
-      }
+      else spark.sparkContext.makeRDD(tasks, tasks.size)
+        .mapPartitions(_.flatMap(_.iterator.flatMap(readChunk)))
     org.apache.spark.sql.graftbridge.ColumnBridge.internalDataFrame(spark, rdd, schema)
   }
 
@@ -231,8 +164,8 @@ object LineScan {
     * Reflection under the build's `--add-opens java.base/java.nio`
     * (present for every Spark 4 launch); avoids a compile-time
     * dependency on `sun.nio.ch.DirectBuffer`. None when the module is
-    * not opened in some exotic launcher — then every chunk silently
-    * takes the stream path instead of failing the query. */
+    * not opened in some exotic launcher — then [[handles]] is false and
+    * [[FixedWidth.lines]] reads with `spark.read.text` instead. */
   private lazy val addressField: Option[java.lang.reflect.Field] =
     try {
       val f = classOf[java.nio.Buffer].getDeclaredField("address")
@@ -240,28 +173,20 @@ object LineScan {
       Some(f)
     } catch { case _: Throwable => None }
 
-  /** A chunk's bytes: `(base, off)` addresses the byte at `c.start`,
-    * `limit` bytes are available, `extend()` makes more available until
-    * `eof`. Heap and mmap implementations below. */
-  private abstract class Region(c: Chunk) {
-    var base: AnyRef = _
+  /** A chunk's bytes, mmap'd: zero-copy, page-cache backed. The byte at
+    * `c.start` sits at native address `off`, `limit` bytes are mapped,
+    * and `extend()` maps more until `eof`. Every mapping created for the
+    * chunk is pinned in `mappings` until task end, so zero-copy rows can
+    * never outlive their mapping. Pages are demand-faulted: a cold-corpus
+    * A/B (r14) measured both preloading variants
+    * (`MappedByteBuffer.load()`, and a `read()` pass to fill the page
+    * cache) as no faster, cold or warm. */
+  private final class Region(c: Chunk) {
     var off: Long = _
     var limit: Int = 0
     var eof: Boolean = false
-    def extend(): Unit
-    def close(): Unit
-    final def byteAt(i: Int): Byte = Platform.getByte(base, off + i)
-  }
-
-  /** mmap region for local files: zero-copy, page-cache backed. Every
-    * mapping created for this chunk is pinned in `mappings` until task
-    * end, so zero-copy rows can never outlive their mapping. Pages are
-    * demand-faulted: a cold-corpus A/B (r14) measured both preloading
-    * variants (`MappedByteBuffer.load()`, and a `read()` pass to fill
-    * the page cache) as no faster, cold or warm. */
-  private final class MmapRegion(c: Chunk, f: java.io.File) extends Region(c) {
     private val ch = java.nio.channels.FileChannel.open(
-      f.toPath, java.nio.file.StandardOpenOption.READ)
+      new java.io.File(new Path(c.file).toUri.getPath).toPath, java.nio.file.StandardOpenOption.READ)
     private val mappings = scala.collection.mutable.ListBuffer.empty[java.nio.MappedByteBuffer]
     private var tail: Long = 1L << 20
     remap()
@@ -278,13 +203,13 @@ object LineScan {
           s"${c.start} extends more than ${Int.MaxValue} bytes past the chunk start")
       val mbb = ch.map(java.nio.channels.FileChannel.MapMode.READ_ONLY, c.start, want)
       mappings += mbb // keep EVERY mapping alive until task end
-      base = null
       off = addressField.get.getLong(mbb)
       limit = want.toInt
       eof = c.start + want >= c.fileLen
     }
 
     def extend(): Unit = if (!eof) { tail *= 4; remap() }
+    def byteAt(i: Int): Byte = Platform.getByte(null, off + i)
     // close() runs at task end (completion listener), AFTER the stage
     // has copied every emitted row into UnsafeRows — so the mappings
     // can be unmapped EXPLICITLY (StorageUtils.dispose via the bridge
@@ -299,89 +224,24 @@ object LineScan {
     }
   }
 
-  /** Buffered-stream region for non-local filesystems: one copy into a
-    * private heap buffer (never reused, so zero-copy rows stay valid). */
-  private final class StreamRegion(c: Chunk,
-      conf: org.apache.hadoop.conf.Configuration) extends Region(c) {
-    private val path = new Path(c.file)
-    private val in = path.getFileSystem(conf).open(path)
-    private var buf = new Array[Byte]((c.end - c.start).toInt + (64 << 10))
-    private var closed = false
-    in.seek(c.start)
-    private val want0 = (c.end - c.start).toInt
-    while (limit < want0) {
-      val r = in.read(buf, limit, want0 - limit)
-      if (r < 0) throw new java.io.EOFException(s"${c.file}: EOF before ${c.end}")
-      limit += r
-    }
-    base = buf
-    off = Platform.BYTE_ARRAY_OFFSET
-    eof = c.start + limit >= c.fileLen
-    if (eof) close()
-
-    def extend(): Unit = {
-      if (eof) return
-      if (limit == buf.length) {
-        if (buf.length > Int.MaxValue - (4 << 20))
-          throw new IllegalStateException(s"${c.file}: line starting in chunk at " +
-            s"${c.start} extends more than ${Int.MaxValue} bytes past the chunk start")
-        // growth keeps the OLD array alive for rows already emitted
-        // over it — slices are immutable, so that is correct
-        buf = java.util.Arrays.copyOf(buf, buf.length + (4 << 20))
-        base = buf
-      }
-      val r = in.read(buf, limit, buf.length - limit)
-      if (r < 0) eof = true else limit += r
-      if (c.start + limit >= c.fileLen) eof = true
-      if (eof) close()
-    }
-    def close(): Unit = if (!closed) { closed = true; in.close() }
-  }
-
-  /** Test hook: the raw per-chunk iterator, for pinning the row-reuse
-    * contract (LineScanSpec asserts successive rows are the SAME
-    * instance — the narrow-row fix must not silently unwind into
-    * per-line allocation). The iterator is [[java.io.Closeable]]:
-    * driver-side callers that abandon it mid-chunk must close() it to
-    * release the region's stream deterministically (exhaustion also
-    * releases it; close after exhaustion is a no-op). */
-  private[graft] def readChunkForTest(spark: SparkSession, file: String,
-      chunkStart: Long, chunkEnd: Long): Iterator[InternalRow] with java.io.Closeable = {
-    val len = new java.io.File(file).length()
-    readChunk(Chunk(file, chunkStart, chunkEnd, len),
-      spark.sparkContext.hadoopConfiguration)
-  }
-
-  /** All lines of one chunk, one pass. */
-  private def readChunk(c: Chunk,
-      conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] with java.io.Closeable = {
-    val uri = new Path(c.file).toUri
-    // Outside a task (TaskContext null: direct driver-side callers) the
-    // iterator closes the region itself on exhaustion — which would
-    // UNMAP an mmap region under any zero-copy row views the caller
-    // retained (use-after-free, not a leak). So non-task callers always
-    // take the stream region: its rows view a heap array that plain GC
-    // liveness keeps valid after close(). Inside a task the mmap region
-    // is released at task end, which pins mappings for as long as any
-    // zero-copy row can exist in that task.
+  /** All lines of one chunk, one pass. Runs inside a task only: the
+    * task's completion listener releases the region, which pins the
+    * mappings for as long as any zero-copy row can exist in that task. */
+  private[graft] def readChunk(c: Chunk): Iterator[InternalRow] = {
     val taskCtx = org.apache.spark.TaskContext.get()
-    val region: Region =
-      if (taskCtx != null && !c.forceStream && addressField.isDefined &&
-          (uri.getScheme == null || uri.getScheme == "file"))
-        new MmapRegion(c, new java.io.File(uri.getPath))
-      else new StreamRegion(c, conf)
-    if (taskCtx != null) taskCtx.addTaskCompletionListener[Unit](_ => region.close())
+    require(taskCtx != null, s"${c.file}: LineScan chunks are read inside a task")
+    val region = new Region(c)
+    taskCtx.addTaskCompletionListener[Unit](_ => region.close())
 
     /** Relative index of the first LF/CR at-or-after `from`, extending
       * the region on demand; -1 when the chunk's data ends first. */
     def findTerm(from: Int): Int = {
       var i = from
       while (true) {
-        val base = region.base
         val off = region.off
         val limit = region.limit
         while (i + 8 <= limit) {
-          val w = Platform.getLong(base, off + i)
+          val w = Platform.getLong(null, off + i)
           // SWAR zero-byte test on w XOR pattern, for \n and \r at once
           val xn = w ^ 0x0A0A0A0A0A0A0A0AL
           val xr = w ^ 0x0D0D0D0D0D0D0D0DL
@@ -390,7 +250,7 @@ object LineScan {
           if (hit != 0L) {
             var j = i
             while (j < i + 8) {
-              val b = Platform.getByte(base, off + j)
+              val b = Platform.getByte(null, off + j)
               if (b == '\n' || b == '\r') return j
               j += 1
             }
@@ -398,7 +258,7 @@ object LineScan {
           i += 8
         }
         while (i < limit) {
-          val b = Platform.getByte(base, off + i)
+          val b = Platform.getByte(null, off + i)
           if (b == '\n' || b == '\r') return i
           i += 1
         }
@@ -427,7 +287,7 @@ object LineScan {
         case t  => afterTerm(t)
       }
 
-    new Iterator[InternalRow] with java.io.Closeable {
+    new Iterator[InternalRow] {
       // ONE mutable row + value slot per chunk, overwritten per line —
       // the reference's one-reused-record-per-chunk model
       // (`common/fixed.go:53-64`) and the same reuse contract Spark's
@@ -438,28 +298,17 @@ object LineScan {
       // young-gen churn per pass, the r11 narrow-row finding).
       private val slot = new Array[Any](1)
       private val row = new GenericInternalRow(slot)
-      override def hasNext: Boolean = {
-        // owned iff the line STARTS at absolute position <= c.end, and a
-        // trailing terminator at EOF yields no empty record
-        val more =
-          !(pos < 0 || c.start + pos > c.end || (pos >= region.limit && region.eof))
-        if (!more && taskCtx == null) region.close()
-        more
-      }
+      // owned iff the line STARTS at absolute position <= c.end, and a
+      // trailing terminator at EOF yields no empty record
+      override def hasNext: Boolean =
+        !(pos < 0 || c.start + pos > c.end || (pos >= region.limit && region.eof))
       override def next(): InternalRow = {
         val t = findTerm(pos)
         val lineEnd = if (t < 0) region.limit else t
-        slot(0) = UTF8String.fromAddress(region.base, region.off + pos, lineEnd - pos)
+        slot(0) = UTF8String.fromAddress(null, region.off + pos, lineEnd - pos)
         pos = if (t < 0) -1 else afterTerm(t)
         row
       }
-      // Driver-side callers abandoning the iterator mid-chunk: release
-      // the region's stream now instead of waiting for GC (the r12
-      // exhaustion-only close left an open stream on early termination).
-      // In-task the task-completion listener owns the region — closing
-      // early there would unmap an mmap region under zero-copy row
-      // views still live in the task, so this is a no-op.
-      override def close(): Unit = if (taskCtx == null) region.close()
     }
   }
 }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** One-off heavy fuzz (driver-side diagnostic, not a committed test
   * budget): LineScan vs spark.read.text on 200 random corpora x chunk
-  * sizes x both regions, and fused fixed→Avro vs the composable chain
-  * on 100 random schemas. Prints FUZZ-OK / first failure. */
+  * sizes, and fused fixed→Avro vs the composable chain on 100 random
+  * schemas. Prints FUZZ-OK / first failure. */
 object FuzzOnce {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.local(32, "fuzz-once")
@@ -40,22 +40,19 @@ object FuzzOnce {
           java.nio.file.Paths.get(dir, f"part-$k%03d.txt"), content.getBytes("UTF-8"))
       }
       val expect = spark.read.text(dir).collect().map(_.getString(0)).toSeq.sorted
-      for (cb <- Seq(1L + rnd.nextInt(4), 5L + rnd.nextInt(20), 64L + rnd.nextInt(200));
-           fs <- Seq("false", "true")) {
-        spark.conf.set("spark.graft.linescan.forceStream", fs)
+      for (cb <- Seq(1L + rnd.nextInt(4), 5L + rnd.nextInt(20), 64L + rnd.nextInt(200))) {
         val got = graft.sources.LineScan.read(spark, dir, cb)
           .collect().map(_.getString(0)).toSeq.sorted
         if (got != expect) {
           failures += 1
-          println(s"FUZZ-FAIL linescan case $i chunk=$cb forceStream=$fs " +
+          println(s"FUZZ-FAIL linescan case $i chunk=$cb " +
             s"expect=${expect.take(5)}... got=${got.take(5)}...")
         }
-        spark.conf.unset("spark.graft.linescan.forceStream")
       }
       { val d = new java.io.File(dir)
         Option(d.listFiles).foreach(_.foreach(_.delete())); d.delete(); () }
     }
-    println(s"FUZZ linescan: 200 corpora x 3 chunks x 2 regions, failures=$failures")
+    println(s"FUZZ linescan: 200 corpora x 3 chunks, failures=$failures")
 
     // ---------- fused fixed→Avro fuzz ----------
     var avroFails = 0

@@ -34,7 +34,7 @@ object ReadmeBench {
   }
 
   /** One parse-leg row: corpus label, medians/mins, per-core rates at
-    * the min leg, the stock A/B, and per-run calibration context. */
+    * the min leg, and per-run calibration context. */
   private def parseRow(label: String, p: JsonNode, cores: Int): String = {
     val bytes = d(p, "bytes").getOrElse(0.0)
     val lines = d(p, "lines").getOrElse(0.0)
@@ -42,16 +42,9 @@ object ReadmeBench {
     val min = d(p, "parse_min_s").getOrElse(med)
     val mbCoreMin = if (min > 0) bytes / 1e6 / min / cores else Double.NaN
     val klinesCoreMin = if (min > 0) lines / min / cores / 1000 else Double.NaN
-    // min-vs-min is the drift-robust A/B (medians mix in contended
-    // windows; each leg's best run is its cleanest shot)
-    val stock = opt(p, "parse_stock_runs").filter(_.isArray).map { a =>
-      var m = Double.MaxValue
-      a.forEach(n => m = math.min(m, n.asDouble))
-      fmt(m)
-    }.orElse(d(p, "parse_stock_s").map(fmt(_))).getOrElse("—")
     val calAtMin = d(p, "cal_at_min").map(v => fmt(v, 0)).getOrElse("—")
     s"| $label | ${fmt(med)} | ${fmt(min)} | ${fmt(mbCoreMin)} | " +
-      s"${fmt(klinesCoreMin, 0)}k | $stock | $calAtMin |"
+      s"${fmt(klinesCoreMin, 0)}k | $calAtMin |"
   }
 
   def render(root: JsonNode): String = {
@@ -73,8 +66,8 @@ object ReadmeBench {
       s"these; the per-leg `cal@min` column prices the machine during " +
       s"the min-time run itself (an em-dash cell means the artifact " +
       s"predates the r14 telemetry)._\n\n"
-    sb ++= "| parse leg | med s | min s | MB/s/core @min | lines/s/core @min | stock A/B min s | cal@min MB/s |\n"
-    sb ++= "|---|---|---|---|---|---|---|\n"
+    sb ++= "| parse leg | med s | min s | MB/s/core @min | lines/s/core @min | cal@min MB/s |\n"
+    sb ++= "|---|---|---|---|---|---|\n"
     opt(root, "parsed").foreach(p =>
       sb ++= parseRow("narrow-row (11 cols, 104 runes)", p, cores) + "\n")
     opt(root, "parsed_weblog").foreach(p =>

@@ -1,7 +1,7 @@
 package graft
 
-import graft.sources.LineScan
-import org.scalatest.funsuite.AnyFunSuite
+import graft.sources.{FixedWidth, LineScan}
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
 
 /** The native chunk-aligned line scan must produce EXACTLY the records
   * `spark.read.text` produces — same values, same multiset — for every
@@ -30,15 +30,15 @@ class LineScanSpec extends SparkSpec {
   private def check(files: Seq[String], chunks: Seq[Long]): Unit = {
     val dir = fixture(files)
     val expect = stock(dir)
-    Seq("false", "true").foreach { forceStream => // mmap region AND stream fallback
-      spark.conf.set("spark.graft.linescan.forceStream", forceStream)
-      try chunks.foreach { cb =>
-        val got = scan(dir, cb)
-        assert(got == expect, s"chunkBytes=$cb forceStream=$forceStream diverges " +
-          s"from spark.read.text\nexpect=$expect\ngot=$got")
-      } finally spark.conf.unset("spark.graft.linescan.forceStream")
+    chunks.foreach { cb =>
+      val got = scan(dir, cb)
+      assert(got == expect, s"chunkBytes=$cb diverges from spark.read.text\n" +
+        s"expect=$expect\ngot=$got")
     }
   }
+
+  // the refusal of key=value subdirectories names the stock route
+  private val stockRoute = "FixedWidthParser.parse(spark.read.text(dir), schema)"
 
   // every boundary class: 1-byte (chunk inside CRLF pairs and multibyte
   // runes), small odd, word-size, huge; the exhaustive sweep lives in
@@ -122,14 +122,14 @@ class LineScanSpec extends SparkSpec {
     val part = java.nio.file.Paths.get(dir, "ds=2026-08-13")
     java.nio.file.Files.createDirectory(part)
     val e = intercept[IllegalArgumentException] { scan(dir, 4L) }
-    assert(e.getMessage.contains("partition") && e.getMessage.contains(LineScan.Conf))
+    assert(e.getMessage.contains("partition") && e.getMessage.contains(stockRoute))
   }
 
-  test("local listing ≡ listLocatedStatus: paths, lengths, block offsets/lengths") {
-    // The local filesystem lists with listStatus + a null-permission
-    // LocatedFileStatus (no `ls -ld` per file); the result must equal
-    // the stock located listing, with the same files skipped.
-    import org.apache.hadoop.fs.{LocalFileSystem, LocatedFileStatus, Path}
+  test("local listing ≡ listLocatedStatus: paths and lengths") {
+    // The local filesystem lists with listStatus (no `ls -ld` per file);
+    // the result must name the files of the stock located listing, with
+    // the same files skipped.
+    import org.apache.hadoop.fs.LocalFileSystem
     val dir = fixture(Seq("a\n", "bb\nbb\n", "c" * 5000))
     Seq("_SUCCESS", "._meta", ".hidden").foreach(n =>
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, n), "x\n".getBytes("UTF-8")))
@@ -137,8 +137,7 @@ class LineScanSpec extends SparkSpec {
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.isInstanceOf[LocalFileSystem])
-    def shape(s: LocatedFileStatus) = (s.getPath.toString, s.getLen,
-      s.getBlockLocations.toSeq.map(b => (b.getOffset, b.getLength, b.getHosts.toSeq)))
+    def shape(s: FileStatus) = (s.getPath.toString, s.getLen)
     val stockIt = fs.listLocatedStatus(root)
     val stock = Iterator.continually(stockIt).takeWhile(_.hasNext).map(_.next()).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
@@ -155,7 +154,7 @@ class LineScanSpec extends SparkSpec {
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(dir, "ds=1"))
     val e = intercept[IllegalArgumentException](
       LineScan.listDataFiles(fs, fs.getFileStatus(root)))
-    assert(e.getMessage.contains("partition") && e.getMessage.contains(LineScan.Conf))
+    assert(e.getMessage.contains("partition") && e.getMessage.contains(stockRoute))
   }
 
   test("chunk iterator reuses ONE row instance (no per-line allocation)") {
@@ -163,18 +162,56 @@ class LineScanSpec extends SparkSpec {
     // the SAME mutable row object for every line (consumers copy via
     // RDDScanExec's per-row unsafe projection). A fresh row per line —
     // ~3 GB of young-gen churn per pass over a 41 M-line corpus —
-    // would make this identity check fail immediately.
+    // would make this identity check fail immediately. Chunks are read
+    // inside a task only, so the iterator is driven from one.
     val dir = fixture(Seq("one\ntwo\nthree\n"))
     val file = new java.io.File(dir).listFiles().filter(_.isFile).head.getAbsolutePath
-    val it = LineScan.readChunkForTest(spark, file, 0L, new java.io.File(file).length())
-    assert(it.hasNext)
-    val r1 = it.next()
-    val v1 = r1.getUTF8String(0).toString
-    assert(it.hasNext)
-    val r2 = it.next()
-    assert(r1 eq r2, "per-chunk row must be reused, not allocated per line")
-    assert(v1 == "one" && r2.getUTF8String(0).toString == "two")
-    assert(it.next().getUTF8String(0).toString == "three" && !it.hasNext)
+    val len = new java.io.File(file).length()
+    val (reused, values, more) = spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
+      val it = LineScan.readChunk(LineScan.Chunk(file, 0L, len, len))
+      val r1 = it.next()
+      val v1 = r1.getUTF8String(0).toString
+      val r2 = it.next()
+      val v2 = r2.getUTF8String(0).toString
+      Iterator((r1 eq r2, Seq(v1, v2, it.next().getUTF8String(0).toString), it.hasNext))
+    }.collect().head
+    assert(reused, "per-chunk row must be reused, not allocated per line")
+    assert(values == Seq("one", "two", "three") && !more)
+    intercept[IllegalArgumentException](LineScan.readChunk(LineScan.Chunk(file, 0L, len, len)))
+  }
+
+  test("chunk mappings are released at task end") {
+    // The explicit unmap keeps a long-lived executor below
+    // vm.max_map_count: once the scan's tasks end, no mapping of the
+    // fixture's files may remain in this (local-mode executor) process.
+    assume(new java.io.File("/proc/self/maps").isFile, "/proc/self/maps is absent")
+    val dir = new java.io.File(fixture(Seq("a\nb\n", "c\n"))).getCanonicalPath
+    val lines = LineScan.read(spark, dir)
+    val during = lines.queryExecution.toRdd.mapPartitions { it =>
+      if (it.hasNext) it.next()
+      Iterator(LineScanSpec.mappingsOf(dir))
+    }.collect().max
+    assert(during > 0, "a running scan task should hold a mapping of its chunk")
+    assert(lines.count() == 3)
+    assert(LineScanSpec.mappingsOf(dir) == 0, "chunk mappings survived task end")
+  }
+
+  test("the line source follows the filesystem: local maps, other schemes read stock") {
+    val dir = fixture(Seq("aa\nbb\r\ncc", "dd\n"))
+    val local = FixedWidth.lines(spark, dir)
+    assert(local.queryExecution.executedPlan.toString.contains("Scan ExistingRDD"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.graftproxy.impl", classOf[ProxyLocalFileSystem].getName)
+    try {
+      val proxied = s"graftproxy://$dir"
+      val other = FixedWidth.lines(spark, proxied)
+      val plan = other.queryExecution.executedPlan.toString
+      assert(plan.contains("FileScan text"), plan)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSeq.sorted
+      assert(rows(other) == rows(local))
+      assert(rows(local) == Seq("aa", "bb", "cc", "dd"))
+      intercept[IllegalArgumentException](LineScan.read(spark, proxied))
+    } finally conf.unset("fs.graftproxy.impl")
   }
 
   test("adaptive chunking fans a single small file out across cores") {
@@ -199,29 +236,6 @@ class LineScanSpec extends SparkSpec {
     assert(scan(dir, 1L << 20) == stock(dir))
   }
 
-  test("task preferred hosts: block hosts weighted by overlap bytes, top 3, no localhost") {
-    // The HDFS locality hint (Spark's FilePartition shape): a task's
-    // hosts are its chunks' block hosts ranked by contributed bytes.
-    // Synthetic blocks, no filesystem: file f has 3 x 100-byte blocks
-    // on (h1,h2) / (h2,h3) / (h3,h4); a chunk covering bytes 50-250
-    // overlaps them 50/100/50, so h2=150, h3=150, h1=50, h4=50 —
-    // ranked h2,h3 (ties by name) then h1 (cap 3 drops h4's twin... h1
-    // and h4 tie at 50; name order keeps h1).
-    import org.apache.hadoop.fs.BlockLocation
-    def block(off: Long, len: Long, hosts: String*) =
-      new BlockLocation(hosts.map(h => s"$h:9866").toArray, hosts.toArray, off, len)
-    val blocks = Map("f" -> Array(
-      block(0, 100, "h1", "h2"), block(100, 100, "h2", "h3"), block(200, 100, "h3", "h4")))
-    val task = Seq(LineScan.Chunk("f", 50, 250, 300))
-    assert(LineScan.taskHosts(task, blocks) == Seq("h2", "h3", "h1"))
-    // localhost (every LocalFileSystem block) is dropped like Spark
-    // drops it — meaningless as a cluster locality hint
-    val local = Map("f" -> Array(block(0, 100, "localhost")))
-    assert(LineScan.taskHosts(Seq(LineScan.Chunk("f", 0, 100, 100)), local).isEmpty)
-    // a chunk outside every block contributes nothing
-    assert(LineScan.taskHosts(Seq(LineScan.Chunk("f", 300, 400, 400)), blocks).isEmpty)
-  }
-
   test("chunk count past the overflow-safe bound() range fails loudly") {
     // bound()'s i*(len%k) boundary product wraps past k ~ 3.03e9; the
     // wrapped boundaries would be garbage chunks the end>start filter
@@ -235,30 +249,27 @@ class LineScanSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException](LineScan.read(spark, dir, chunkBytes = 1L))
     assert(e.getMessage.contains("chunkBytes"))
   }
+}
 
-  test("driver-side iterator abandoned mid-chunk releases its stream on close()") {
-    // The r12 exhaustion-only close left an abandoned iterator's input
-    // stream open until GC. The iterator is now Closeable; close() must
-    // release the fd deterministically (observed via /proc/self/fd) and
-    // be a no-op after exhaustion.
-    val dir = fixture(Seq("one\ntwo\nthree\n"))
-    val file = new java.io.File(dir).listFiles().filter(_.isFile).head.getAbsolutePath
-    def fdsOnFile: Int = {
-      val fdDir = new java.io.File("/proc/self/fd")
-      if (!fdDir.isDirectory) -1 // non-Linux: skip the fd observation
-      else fdDir.listFiles().count { l =>
-        try java.nio.file.Files.readSymbolicLink(l.toPath).toString == file
-        catch { case _: Throwable => false }
-      }
-    }
-    // chunkEnd strictly inside the file: a whole-file chunk hits eof at
-    // construction and the region pre-closes its own stream, which
-    // would make this test vacuous.
-    val it = LineScan.readChunkForTest(spark, file, 0L, 4L)
-    assert(it.next().getUTF8String(0).toString == "one")
-    if (fdsOnFile != -1) assert(fdsOnFile > 0, "stream region should hold the file open")
-    it.close() // abandon mid-chunk
-    if (fdsOnFile != -1) assert(fdsOnFile == 0, s"close() left the file open")
-    it.close() // idempotent
+object LineScanSpec {
+  /** Mappings in this process of files under `dir` (a canonical path). */
+  def mappingsOf(dir: String): Int = {
+    val src = scala.io.Source.fromFile("/proc/self/maps")
+    try src.getLines().count(_.contains(dir + "/")) finally src.close()
   }
+}
+
+/** The local disk under a scheme of its own, through a FileSystem class
+  * that is not the local one: to [[FixedWidth.lines]] it stands for an
+  * hdfs:// or s3a:// path. The wrapped RawLocalFileSystem accepts the
+  * scheme, and statuses carry it, so reads come back through here. */
+class ProxyLocalFileSystem extends FilterFileSystem(new RawLocalFileSystem {
+  override protected def checkPath(path: Path): Unit = ()
+}) {
+  override def getScheme: String = "graftproxy"
+  override def getUri: java.net.URI = java.net.URI.create(s"$getScheme:///")
+  private def own(s: FileStatus) = new FileStatus(s.getLen, s.isDirectory, s.getReplication,
+    s.getBlockSize, s.getModificationTime, new Path(getScheme, null, s.getPath.toUri.getPath))
+  override def getFileStatus(p: Path): FileStatus = own(super.getFileStatus(p))
+  override def listStatus(p: Path): Array[FileStatus] = super.listStatus(p).map(own)
 }
