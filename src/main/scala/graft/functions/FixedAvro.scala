@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.schema.FixedSchema
+import graft.schema.FixedType._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -36,8 +37,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    like the reference's reused-record chunk loop.
   *
   * Semantics are EXACTLY the Strict parse + encode chain's, pinned by
-  * `FixedAvroSpec` byte-identity: slicing is the same rune-aware
-  * single pass ([[FixedSlice.advance]]), numeric/timestamp fields are
+  * `FixedAvroSpec` byte-identity: slicing is the parse's own walk
+  * ([[FixedSlice.Walk]]), numeric/timestamp fields are
   * space-trimmed zero-copy, parse surfaces reuse the SAME primitives
   * ([[FastDouble.fastBits]], [[RefTimestamp.parseMicros]],
   * `UTF8String.toLong` — what Spark's cast calls), and a field whose
@@ -45,28 +46,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[AvroCodec.AvroEncodeDirect]] (SURVEY.md §1.2).
   */
 object FixedAvro {
-
-  // Per-field parse/write plans (tableswitch dispatch in the hot loop).
-  private final val PStr = 0; private final val PBytes = 1
-  private final val PBool = 2; private final val PInt = 3
-  private final val PLong = 4; private final val PFloat = 5
-  private final val PDouble = 6; private final val PDate = 7
-  private final val PTsMillis = 8; private final val PTsMicros = 9
-
-  private def planKind(parseType: String, name: String): Int = parseType match {
-    case "string"           => PStr
-    case "bytes" | "Bytes"  => PBytes
-    case "boolean"          => PBool
-    case "int"              => PInt
-    case "long"             => PLong
-    case "float"            => PFloat
-    case "double"           => PDouble
-    case "date"             => PDate
-    case "timestamp-millis" => PTsMillis
-    case "timestamp-micros" => PTsMicros
-    case other => throw new IllegalArgumentException(
-      s"fixed_to_avro: unsupported type '$other' for $name")
-  }
 
   /** `try_cast(s AS FLOAT)`'s surface, mirroring [[FastDouble]]'s
     * pinned double twin: trim → special literals → parseFloat, null on
@@ -89,7 +68,7 @@ object FixedAvro {
 
   /** One-pass line → Avro-record-bytes encoder writing into a
     * CALLER-SUPPLIED [[AvroCodec.AvroWire]]. NOT thread-safe (holds a
-    * reused parse wrapper); one instance per task.
+    * reused slice walk and parse wrapper); one instance per task.
     *
     * `nullable = true` (r18) emits the `["null", T]` OPTIONAL-union
     * wire shape ([[graft.schema.FixedSchema.nullableAvroJson]]): every
@@ -106,17 +85,15 @@ object FixedAvro {
   final class LineEncoder(fixed: FixedSchema, frameId: Int,
       nullable: Boolean = false) extends Serializable {
     private val nFields = fixed.fields.size
-    private val starts: Array[Int] = fixed.runeStarts.toArray
-    private val lens: Array[Int] = fixed.fields.map(_.runeLen).toArray
-    // THE Strict parser's trim table, not a copy: the fused encoder's
-    // byte-identity contract with the parse chain (FixedAvroSpec)
-    // depends on the two never drifting.
-    private val trims: Array[Boolean] =
-      fixed.fields.map(graft.parse.FixedWidthParser.strictTrims).toArray
-    private val kinds: Array[Int] =
-      fixed.fields.map(f => planKind(f.parseType, f.name)).toArray
+    // The Strict parser's trim decision (FixedType.strictTrim), which
+    // the byte-identity contract with the parse chain (FixedAvroSpec)
+    // depends on.
+    private val trims: Array[Boolean] = fixed.fields.map(_.fixedType.strictTrim).toArray
+    private val codes: Array[Int] = fixed.fields.map(_.fixedType.code).toArray
     private val header: Array[Byte] =
       if (frameId >= 0) Confluent.prefixBytes(frameId) else Array.emptyByteArray
+    @transient private lazy val walk =
+      new FixedSlice.Walk(fixed.runeStarts.toArray, fixed.fields.map(_.runeLen).toArray, trims)
     @transient private lazy val longWrapper = new UTF8String.LongWrapper
 
     private def fail(f: Int): Nothing =
@@ -126,36 +103,35 @@ object FixedAvro {
           "the fixed-width schema model has no unions/nullable fields " +
           "(SURVEY.md §1.2); filter or default such lines before encoding")
 
-    /** Strict long surface: plain `[+-]?digits` parsed inline with
+    /** Strict long surface into `longWrapper.value`, false where the
+      * cast would give null: plain `[+-]?digits` parsed inline with
       * Long.parseLong's overflow arithmetic; anything else falls back to
       * `UTF8String.toLong` — the exact routine Spark's cast calls — so
       * the two paths cannot diverge on inputs the cast accepts. */
-    private def parseLong(base: AnyRef, off: Long, n: Int, f: Int): Long = {
-      if (n == 0 || n > 19) return parseLongSlow(base, off, n, f)
+    private def parseLong(base: AnyRef, off: Long, n: Int): Boolean = {
+      if (n == 0 || n > 19) return parseLongSlow(base, off, n)
       var i = 0
       var neg = false
       val b0 = org.apache.spark.unsafe.Platform.getByte(base, off)
       if (b0 == '-') { neg = true; i = 1 }
       else if (b0 == '+') i = 1
-      if (i >= n) return parseLongSlow(base, off, n, f)
+      if (i >= n) return parseLongSlow(base, off, n)
       var m = 0L // accumulate negative: holds Long.MinValue
       while (i < n) {
         val d = org.apache.spark.unsafe.Platform.getByte(base, off + i) - '0'
-        if (d < 0 || d > 9) return parseLongSlow(base, off, n, f)
+        if (d < 0 || d > 9) return parseLongSlow(base, off, n)
         if (m < -922337203685477580L || (m == -922337203685477580L && d > 8))
-          return parseLongSlow(base, off, n, f) // potential overflow → exact path
+          return parseLongSlow(base, off, n) // potential overflow → exact path
         m = m * 10 - d
         i += 1
       }
-      if (neg) m
-      else if (m == Long.MinValue) parseLongSlow(base, off, n, f)
-      else -m
+      if (!neg && m == Long.MinValue) return parseLongSlow(base, off, n)
+      longWrapper.value = if (neg) m else -m
+      true
     }
 
-    private def parseLongSlow(base: AnyRef, off: Long, n: Int, f: Int): Long = {
-      val s = UTF8String.fromAddress(base, off, n)
-      if (s.toLong(longWrapper)) longWrapper.value else fail(f)
-    }
+    private def parseLongSlow(base: AnyRef, off: Long, n: Int): Boolean =
+      UTF8String.fromAddress(base, off, n).toLong(longWrapper)
 
     /** Append `line`'s (optional Confluent header +) record body to
       * `wire`. Throws on any field whose strict parse would be null;
@@ -163,128 +139,75 @@ object FixedAvro {
       * past failures must reset it (both current callers abort). */
     def encodeInto(line: UTF8String, wire: AvroCodec.AvroWire): Unit = {
       if (header.length > 0) wire.writeRaw(header)
-      val numBytes = line.numBytes()
       val base = line.getBaseObject
       val off = line.getBaseOffset
-      // Identical slicing walk to FixedSlice.slices: offset arithmetic
-      // inside the ASCII prefix, rune-aware advance past it.
-      val ascii = FixedSlice.asciiPrefixLen(line)
-      val allAscii = ascii == numBytes
-      var inWalk = false
-      var charIdx = 0
-      var byteIdx = 0
+      val w = walk
+      w.reset(line)
       var f = 0
       while (f < nFields) {
-        var sB = 0
-        var eB = 0
-        if (!inWalk && (allAscii || starts(f) + lens(f) <= ascii)) {
-          sB = Math.min(starts(f), numBytes)
-          eB = Math.min(starts(f) + lens(f), numBytes)
-        } else {
-          if (!inWalk) {
-            inWalk = true
-            charIdx = Math.min(starts(f), ascii)
-            byteIdx = charIdx
-          }
-          var cur = FixedSlice.advance(line, base, off, numBytes, byteIdx, charIdx, starts(f))
-          sB = (cur >>> 32).toInt
-          cur = FixedSlice.advance(line, base, off, numBytes, sB, cur.toInt,
-            starts(f) + lens(f))
-          byteIdx = (cur >>> 32).toInt
-          charIdx = cur.toInt
-          eB = byteIdx
-        }
-        if (trims(f)) {
-          while (sB < eB && org.apache.spark.unsafe.Platform.getByte(base, off + sB) == 0x20)
-            sB += 1
-          while (eB > sB && org.apache.spark.unsafe.Platform.getByte(base, off + eB - 1) == 0x20)
-            eB -= 1
-        }
-        val n = eB - sB
-        val fOff = off + sB
-        // nullable lane: nothing touches the wire before the parse is
-        // known-good — branch index 1 then value on success, a single
-        // 0x00 (branch 0, null-first union) on a failed strict parse.
-        kinds(f) match {
-          case PStr | PBytes =>
-            if (nullable) wire.writeLong(1L)
-            wire.writeMemory(base, fOff, n)
-          case PLong | PInt =>
-            if (nullable) {
-              // cast-equivalent surface directly (UTF8String.toLong):
-              // the fused digit loop's only job was avoiding this
-              // wrapper on the throwing path's hot loop
-              val s = UTF8String.fromAddress(base, fOff, n)
-              if (s.toLong(longWrapper) && (kinds(f) == PLong ||
-                  (longWrapper.value >= Int.MinValue && longWrapper.value <= Int.MaxValue))) {
-                wire.writeLong(1L); wire.writeLong(longWrapper.value)
-              } else wire.writeLong(0L)
-            } else {
-              // Avro int and long share the zigzag varint encoding over the
-              // int range (pinned in AvroDirectSpec), so one writeLong
-              // serves both — and any int/long → Avro long promotion.
-              val v = parseLong(base, fOff, n, f)
-              if (kinds(f) == PInt && (v < Int.MinValue || v > Int.MaxValue)) fail(f)
-              wire.writeLong(v)
-            }
-          case PDouble =>
+        val se = w.next(f)
+        val fOff = off + (se >>> 32)
+        val n = se.toInt - (se >>> 32).toInt
+        // Parse to an ok flag plus a payload (v for the varint lanes and
+        // booleans, d for float/double; strings ship their slice), so
+        // nothing touches the wire before the parse is known-good.
+        var ok = true
+        var v = 0L
+        var d = 0.0
+        codes(f) match {
+          case CString | CBytes =>
+          case CInt | CLong =>
+            ok = parseLong(base, fOff, n) && (codes(f) == CLong ||
+              (longWrapper.value >= Int.MinValue && longWrapper.value <= Int.MaxValue))
+            v = longWrapper.value
+          case CDouble =>
             val bits = FastDouble.fastBits(base, fOff, n)
-            if (bits != FastDouble.FallbackBits) {
-              if (nullable) wire.writeLong(1L)
-              wire.writeDouble(java.lang.Double.longBitsToDouble(bits))
-            } else {
-              val d = FastDouble.tryParse(UTF8String.fromAddress(base, fOff, n))
-              if (d == null) { if (nullable) wire.writeLong(0L) else fail(f) }
-              else {
-                if (nullable) wire.writeLong(1L)
-                wire.writeDouble(d.doubleValue())
-              }
-            }
-          case PTsMicros =>
-            val micros = RefTimestamp.parseMicros(base, fOff, n)
-            if (micros == Long.MinValue) { if (nullable) wire.writeLong(0L) else fail(f) }
+            if (bits != FastDouble.FallbackBits) d = java.lang.Double.longBitsToDouble(bits)
             else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeLong(micros)
+              val slow = FastDouble.tryParse(UTF8String.fromAddress(base, fOff, n))
+              ok = slow != null
+              if (ok) d = slow.doubleValue()
             }
-          case PTsMillis =>
-            val micros = RefTimestamp.parseMicros(base, fOff, n)
-            if (micros == Long.MinValue) { if (nullable) wire.writeLong(0L) else fail(f) }
-            else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeLong(Math.floorDiv(micros, 1000L))
-            }
-          case PDate =>
-            val micros = RefTimestamp.parseMicros(base, fOff, n)
-            if (micros == Long.MinValue) { if (nullable) wire.writeLong(0L) else fail(f) }
-            else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeLong(Math.floorDiv(micros, 86400000000L))
-            }
-          case PBool =>
-            // Strict vocabulary: first char J/j/Y/y → true, N/n → false,
-            // anything else (incl. empty) is a null parse → throw (or
-            // null branch). A multibyte first char can never match,
-            // exactly like the upper(substring(raw,1,1)).isin chain.
-            val c = if (n == 0) 0.toByte
-              else org.apache.spark.unsafe.Platform.getByte(base, fOff)
-            if (c == 'J' || c == 'j' || c == 'Y' || c == 'y') {
-              if (nullable) wire.writeLong(1L)
-              wire.writeBoolean(true)
-            } else if (c == 'N' || c == 'n') {
-              if (nullable) wire.writeLong(1L)
-              wire.writeBoolean(false)
-            } else if (nullable) wire.writeLong(0L)
-            else fail(f)
-          case PFloat =>
+          case CFloat =>
             // Rare type on hot schemas; route through the cast-equivalent
             // surface (tryParseFloat: trim → specials → parseFloat).
-            val v = tryParseFloat(UTF8String.fromAddress(base, fOff, n))
-            if (v == null) { if (nullable) wire.writeLong(0L) else fail(f) }
-            else {
-              if (nullable) wire.writeLong(1L)
-              wire.writeFloat(v.floatValue())
+            val slow = tryParseFloat(UTF8String.fromAddress(base, fOff, n))
+            ok = slow != null
+            if (ok) d = slow.doubleValue()
+          case CDate | CTimestampMillis | CTimestampMicros =>
+            val micros = RefTimestamp.parseMicros(base, fOff, n)
+            ok = micros != Long.MinValue
+            v = codes(f) match {
+              case CDate            => Math.floorDiv(micros, 86400000000L)
+              case CTimestampMillis => Math.floorDiv(micros, 1000L)
+              case _                => micros
             }
+          case CBoolean =>
+            // Strict vocabulary: first char J/j/Y/y → true, N/n → false,
+            // anything else (incl. empty) is a null parse. A multibyte
+            // first char can never match, exactly like the
+            // upper(substring(raw,1,1)).isin chain.
+            val c = if (n == 0) 0.toByte
+              else org.apache.spark.unsafe.Platform.getByte(base, fOff)
+            ok = c == 'J' || c == 'j' || c == 'Y' || c == 'y' || c == 'N' || c == 'n'
+            v = if (c == 'N' || c == 'n') 0L else 1L
+        }
+        // The one null decision: the null branch (0, null-first union)
+        // on the nullable lane, a throw on the flat one, else branch 1
+        // (nullable only) and the value.
+        if (!ok) { if (nullable) wire.writeLong(0L) else fail(f) }
+        else {
+          if (nullable) wire.writeLong(1L)
+          codes(f) match {
+            case CString | CBytes => wire.writeMemory(base, fOff, n)
+            case CDouble          => wire.writeDouble(d)
+            case CFloat           => wire.writeFloat(d.toFloat)
+            case CBoolean         => wire.writeBoolean(v != 0L)
+            // Avro int and long share the zigzag varint encoding over the
+            // int range (pinned in AvroDirectSpec), so one writeLong
+            // serves both — and any int/long → Avro long promotion.
+            case _                => wire.writeLong(v)
+          }
         }
         f += 1
       }

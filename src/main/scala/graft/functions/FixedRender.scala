@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.schema.FixedSchema
+import graft.schema.FixedType._
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -26,33 +27,13 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object FixedRender {
 
-  final val TString = 0
-  final val TBinary = 1
-  final val TBool = 2
-  final val TInt = 3
-  final val TLong = 4
-  final val TFloat = 5
-  final val TDouble = 6
-  final val TTimestamp = 7 // NTZ micros in the struct
-
-  final case class FieldMeta(name: String, tag: Int, len: Int, zeroPad: Boolean)
+  /** `code` is the field's `FixedType.code`. */
+  final case class FieldMeta(name: String, code: Int, len: Int, zeroPad: Boolean)
     extends Serializable
 
   def metaFor(schema: FixedSchema, zeroPadNumerics: Boolean): Array[FieldMeta] =
     schema.fields.map { f =>
-      val (tag, zp) = f.parseType match {
-        case "string"          => (TString, false)
-        case "bytes" | "Bytes" => (TBinary, false)
-        case "boolean"         => (TBool, false)
-        case "int"             => (TInt, zeroPadNumerics)
-        case "long"            => (TLong, zeroPadNumerics)
-        case "float"           => (TFloat, zeroPadNumerics)
-        case "double"          => (TDouble, zeroPadNumerics)
-        case "date" | "timestamp-millis" | "timestamp-micros" => (TTimestamp, false)
-        case other => throw new IllegalArgumentException(
-          s"unsupported type '$other' for field '${f.name}'")
-      }
-      FieldMeta(f.name, tag, f.runeLen, zp)
+      FieldMeta(f.name, f.fixedType.code, f.runeLen, zeroPadNumerics && f.fixedType.numeric)
     }.toArray
 
   private val bufLocal: ThreadLocal[Array[Byte]] =
@@ -102,15 +83,16 @@ object FixedRender {
       if (row.isNullAt(f)) {
         // coalesce(null, "") then pad — full-width padding
         pad(m.len, if (m.zeroPad) '0' else ' ')
-      } else m.tag match {
-        case TString => rightPadUtf8(row.getUTF8String(f), m)
-        case TBinary => rightPadUtf8(UTF8String.fromBytes(row.getBinary(f)), m)
-        case TBool   => leftPadAscii(if (row.getBoolean(f)) "Y" else "N", m)
-        case TInt    => leftPadAscii(java.lang.Integer.toString(row.getInt(f)), m)
-        case TLong   => leftPadAscii(java.lang.Long.toString(row.getLong(f)), m)
-        case TFloat  => leftPadAscii(java.lang.Float.toString(row.getFloat(f)), m)
-        case TDouble => leftPadAscii(java.lang.Double.toString(row.getDouble(f)), m)
-        case TTimestamp =>
+      } else m.code match {
+        case CString  => rightPadUtf8(row.getUTF8String(f), m)
+        case CBytes   => rightPadUtf8(UTF8String.fromBytes(row.getBinary(f)), m)
+        case CBoolean => leftPadAscii(if (row.getBoolean(f)) "Y" else "N", m)
+        case CInt     => leftPadAscii(java.lang.Integer.toString(row.getInt(f)), m)
+        case CLong    => leftPadAscii(java.lang.Long.toString(row.getLong(f)), m)
+        case CFloat   => leftPadAscii(java.lang.Float.toString(row.getFloat(f)), m)
+        case CDouble  => leftPadAscii(java.lang.Double.toString(row.getDouble(f)), m)
+        case CDate | CTimestampMillis | CTimestampMicros =>
+          // NTZ micros in the struct (see render_line)
           val s = RefTimestamp.formatMicros(row.getLong(f)) // ASCII
           val n = s.numBytes()
           if (n > m.len) fail(m, s.toString)
@@ -151,11 +133,7 @@ object FixedRender {
     * normalization the declarative renderer applies). */
   def render_line(schema: FixedSchema, zeroPadNumerics: Boolean): Column = {
     val cols = schema.fields.map { f =>
-      f.parseType match {
-        case "date" | "timestamp-millis" | "timestamp-micros" =>
-          col(f.name).cast(TimestampNTZType)
-        case _ => col(f.name).cast(f.sparkType)
-      }
+      col(f.name).cast(if (f.fixedType.temporal) TimestampNTZType else f.sparkType)
     }
     ColumnBridge.column(RenderLine(
       ColumnBridge.expression(struct(cols: _*)),

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** All fixed-width column slices of a line in ONE forward scan.
@@ -29,29 +30,17 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object FixedSlice {
 
-  /** One-pass slicer (called from both eval and generated code).
-    * Fields must be contiguous ascending (FixedSchema.runeStarts is).
-    * A short line yields empty slices past its end — the same shape
-    * Spark's substring gives, preserved for best-effort short-line
-    * parsing (F5/F8 handling lives in the parser's wellFormed guard).
-    *
-    * `trimmed(f)` shrinks that field's byte bounds past leading and
-    * trailing 0x20 — zero-copy space trimming for the padded numeric /
-    * timestamp fields, replacing a per-field `trim()` allocation
-    * (ASCII space can never be a UTF-8 continuation byte, so the byte
-    * test is codepoint-safe; the semantics match Spark's `trim`, which
-    * strips the space character only). */
   /** Byte index of the first non-ASCII byte (== numBytes for a pure-
     * ASCII line), word-at-a-time: 8 sign bits per long-load — a 528-byte
     * ASCII line is 66 loads, ~100 ns — buying the offset-arithmetic
     * slicing below for every field inside the prefix (x86/arm handle the
     * unaligned loads natively). */
-  private[functions] def asciiPrefixLen(line: UTF8String): Int = {
+  private def asciiPrefixLen(line: UTF8String): Int = {
     val n = line.numBytes()
     val base = line.getBaseObject
     val off = line.getBaseOffset
     var i = 0
-    while (i + 8 <= n && (org.apache.spark.unsafe.Platform.getLong(base, off + i)
+    while (i + 8 <= n && (Platform.getLong(base, off + i)
           & 0x8080808080808080L) == 0L) i += 8
     while (i < n && line.getByte(i) >= 0) i += 1
     i
@@ -65,13 +54,13 @@ object FixedSlice {
     * multibyte stretches step per codepoint. Mixed real corpora are
     * mostly-ASCII lines, so this keeps the walk near offset-arithmetic
     * speed everywhere except inside genuinely multibyte runs. */
-  private[functions] def advance(line: UTF8String, base: AnyRef, off: Long, numBytes: Int,
+  private def advance(base: AnyRef, off: Long, numBytes: Int,
       byte0: Int, char0: Int, targetChar: Int): Long = {
     var b = byte0
     var c = char0
     while (c < targetChar && b < numBytes) {
       if (c + 8 <= targetChar && b + 8 <= numBytes &&
-          (org.apache.spark.unsafe.Platform.getLong(base, off + b)
+          (Platform.getLong(base, off + b)
             & 0x8080808080808080L) == 0L) {
         b += 8; c += 8
       } else {
@@ -81,62 +70,101 @@ object FixedSlice {
         // LineScan's zero-copy mmap rows that is an out-of-bounds
         // read of the file mapping, potentially a SIGSEGV at a
         // page-aligned EOF. Well-formed UTF-8 never hits the clamp.
-        b = Math.min(b + UTF8String.numBytesForFirstByte(line.getByte(b)), numBytes)
+        b = Math.min(b + UTF8String.numBytesForFirstByte(Platform.getByte(base, off + b)),
+          numBytes)
         c += 1
       }
     }
     (b.toLong << 32) | (c.toLong & 0xffffffffL)
   }
 
+  /** The one fixed-width slice walk, shared by the typed parse
+    * ([[slices]]) and the fused encoder ([[FixedAvro.LineEncoder]]):
+    * a cursor over one line at a time, reused across lines, so a
+    * consumer that keeps one allocates nothing per row. Fields must be
+    * contiguous ascending (FixedSchema.runeStarts is) and are visited
+    * in order.
+    *
+    * Rune index == byte index everywhere inside the line's ASCII
+    * prefix, so a field wholly inside it slices by pure offset
+    * arithmetic — no walk. That is the WHOLE line for ASCII corpora
+    * (the overwhelmingly common case — the reference's corpora are
+    * ASCII, and the walk was the dominant cost of the parse leg: ~5
+    * us/row for 30 fields x 528 runes vs ~6x cheaper here), and the
+    * leading columns of a mostly-ASCII line in a mixed corpus. The
+    * fields past the prefix take the rune-aware [[advance]], entered
+    * at the prefix boundary, not at byte 0.
+    *
+    * A short line yields empty slices past its end — the same shape
+    * Spark's substring gives, preserved for best-effort short-line
+    * parsing (F5/F8 handling lives in the parser's wellFormed guard).
+    *
+    * `trimmed(f)` shrinks that field's byte bounds past leading and
+    * trailing 0x20 — zero-copy space trimming for the padded numeric /
+    * timestamp fields, replacing a per-field `trim()` allocation
+    * (ASCII space can never be a UTF-8 continuation byte, so the byte
+    * test is codepoint-safe; the semantics match Spark's `trim`, which
+    * strips the space character only). */
+  final class Walk(starts: Array[Int], lens: Array[Int], trimmed: Array[Boolean]) {
+    private var base: AnyRef = _
+    private var off = 0L
+    private var numBytes = 0
+    // Fields ending at or before this rune slice by offset arithmetic.
+    private var prefixEnd = 0
+    private var byteIdx = 0
+    private var charIdx = 0
+
+    def reset(l: UTF8String): Unit = {
+      base = l.getBaseObject
+      off = l.getBaseOffset
+      numBytes = l.numBytes()
+      val ascii = asciiPrefixLen(l)
+      prefixEnd = if (ascii == numBytes) Int.MaxValue else ascii
+      byteIdx = 0
+      charIdx = 0
+    }
+
+    /** Field `f`'s byte bounds in the line, packed `(start << 32) | end`. */
+    def next(f: Int): Long = {
+      val endChar = starts(f) + lens(f)
+      var s = 0
+      var e = 0
+      if (endChar <= prefixEnd) {
+        s = Math.min(starts(f), numBytes)
+        e = Math.min(endChar, numBytes)
+        byteIdx = e
+        charIdx = e
+      } else {
+        val cur = advance(base, off, numBytes, byteIdx, charIdx, starts(f))
+        s = (cur >>> 32).toInt
+        val end = advance(base, off, numBytes, s, cur.toInt, endChar)
+        byteIdx = (end >>> 32).toInt
+        charIdx = end.toInt
+        e = byteIdx
+      }
+      if (trimmed(f)) {
+        while (s < e && Platform.getByte(base, off + s) == 0x20) s += 1
+        while (e > s && Platform.getByte(base, off + e - 1) == 0x20) e -= 1
+      }
+      (s.toLong << 32) | e.toLong
+    }
+  }
+
+  /** Every field of `line` as a zero-copy slice (called from both eval
+    * and generated code). */
   def slices(line: UTF8String, starts: Array[Int], lens: Array[Int],
       trimmed: Array[Boolean]): GenericArrayData = {
-    val nFields = starts.length
-    val out = new Array[AnyRef](nFields)
-    val numBytes = line.numBytes()
+    val walk = new Walk(starts, lens, trimmed)
+    walk.reset(line)
     val base = line.getBaseObject
     val offset = line.getBaseOffset
-    // Rune index == byte index everywhere inside the ASCII prefix, so a
-    // field wholly inside it slices by pure offset arithmetic — no walk.
-    // That is the WHOLE line for ASCII corpora (the overwhelmingly
-    // common case — the reference's corpora are ASCII, and the walk was
-    // the dominant cost of the parse leg: ~5 us/row for 30 fields x 528
-    // runes vs ~6x cheaper here), and the leading columns of a mostly-
-    // ASCII line in a mixed corpus. Short lines still yield empty
-    // slices past the end via the min() bounds.
-    val ascii = asciiPrefixLen(line)
-    val allAscii = ascii == numBytes
+    val out = new Array[AnyRef](starts.length)
     var f = 0
-    while (f < nFields && (allAscii || starts(f) + lens(f) <= ascii)) {
-      var startByte = Math.min(starts(f), numBytes)
-      var endByte = Math.min(starts(f) + lens(f), numBytes)
-      if (trimmed(f)) {
-        while (startByte < endByte && line.getByte(startByte) == 0x20) startByte += 1
-        while (endByte > startByte && line.getByte(endByte - 1) == 0x20) endByte -= 1
-      }
-      out(f) = UTF8String.fromAddress(base, offset + startByte, endByte - startByte)
+    while (f < out.length) {
+      val se = walk.next(f)
+      val s = (se >>> 32).toInt
+      out(f) = UTF8String.fromAddress(base, offset + s, se.toInt - s)
       f += 1
-    }
-    if (f < nFields) {
-      // Rune-aware walk for the remaining fields, entered AT the prefix
-      // boundary (chars == bytes there), not at byte 0.
-      var charIdx = Math.min(starts(f), ascii)
-      var byteIdx = charIdx
-      while (f < nFields) {
-        val startChar = starts(f)
-        val endChar = startChar + lens(f)
-        var cur = advance(line, base, offset, numBytes, byteIdx, charIdx, startChar)
-        var startByte = (cur >>> 32).toInt
-        cur = advance(line, base, offset, numBytes, startByte, cur.toInt, endChar)
-        byteIdx = (cur >>> 32).toInt
-        charIdx = cur.toInt
-        var endByte = byteIdx
-        if (trimmed(f)) {
-          while (startByte < endByte && line.getByte(startByte) == 0x20) startByte += 1
-          while (endByte > startByte && line.getByte(endByte - 1) == 0x20) endByte -= 1
-        }
-        out(f) = UTF8String.fromAddress(base, offset + startByte, endByte - startByte)
-        f += 1
-      }
     }
     new GenericArrayData(out)
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.parse.{FixedWidthParser, Strict}
+import graft.parse.FixedWidthParser
 import graft.schema.FixedSchema
 import graft.sources.FixedWidth
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -58,8 +58,7 @@ object AllTypes {
     // exchange and the parse projection just to be dropped at the final
     // select (the ordering below uses output columns alone).
     val rendered = Pipeline.barrier(src.select(FixedWidth.renderValue(fixed).as("value")))
-    val parsed = rendered.select(
-      FixedWidthParser.fieldColumns(col("value"), fixed, Strict): _*)
+    val parsed = FixedWidthParser.parse(rendered, fixed, dropFooter = false)
     // Order by every output column: (l_orderkey, l_linenumber) is NOT
     // unique in the fixture, and tied rows must be output-identical for
     // the hash compare to be order-insensitive.

@@ -1,6 +1,7 @@
 package graft.parse
 
 import graft.schema.{FixedField, FixedSchema}
+import graft.schema.FixedType._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,12 +29,15 @@ case object Compat extends ParseMode
   *
   * Spark-first re-expression of the reference's per-chunk scan loop
   * (`fixed2avro/ColumnBuilder.go:198-227`): the chunking/CRLF alignment
-  * (`ParalizeChunks` / `FindLastNL`) is replaced by Hadoop line records in
-  * `spark.read.text`; the per-column `ColumnBuilder` family
-  * (`fixed2avro/ColumnBuilderTypes.go`) becomes a projection of built-in
-  * codegen'd expressions — `substring` is codepoint-based, which matches
-  * the reference's rune-width slicing (`fixed2avro/Util.go:45-65`, fine
-  * print F4). The whole parse is one WholeStageCodegen span: no UDFs.
+  * (`ParalizeChunks` / `FindLastNL`) is the line source's job
+  * ([[graft.sources.FixedWidth.lines]]); each line is cut into its
+  * fields by ONE single-pass slice expression
+  * ([[graft.functions.FixedSlice]], rune-counted like the reference's
+  * slicing — `fixed2avro/Util.go:45-65`, fine print F4), and the
+  * per-column `ColumnBuilder` family (`fixed2avro/ColumnBuilderTypes.go`)
+  * becomes a projection of codegen'd expressions chosen by each field's
+  * [[graft.schema.FixedType]]. The whole parse is one WholeStageCodegen
+  * span: no UDFs.
   */
 object FixedWidthParser {
 
@@ -66,50 +70,11 @@ object FixedWidthParser {
   private def tryTimestampNtz(c: Column): Column =
     graft.functions.RefTimestamp.parse_ref_timestamp(c)
 
-  /** Should the raw slice be space-trimmed before typing in Strict
-    * mode? (strings/bytes keep their padding verbatim). Shared with
-    * the fused encoder (FixedAvro.LineEncoder), whose byte-identity
-    * contract with this parse chain depends on the two trim tables
-    * never drifting. */
-  private[graft] def strictTrims(f: FixedField): Boolean = f.parseType match {
-    case "string" | "bytes" | "Bytes" => false
-    case _                            => true
-  }
-
-  /** Slice + type one field out of the line column (unaliased). */
-  private def fieldExpr(line: Column, field: FixedField, start: Int, mode: ParseMode): Column = {
-    // Spark substring positions are 1-based and codepoint-counted.
-    val raw = substring(line, start + 1, field.runeLen)
-    mode match {
-      case Strict => strictExpr(if (strictTrims(field)) trim(raw) else raw, field)
-      case Compat => compatExpr(raw, field)
-    }
-  }
-
-  /** Slice + type one field out of the line column. */
-  def fieldColumn(line: Column, field: FixedField, start: Int, mode: ParseMode): Column =
-    fieldExpr(line, field, start, mode).as(field.name)
-
-  /** All typed field columns of a schema (for callers that project the
-    * parse alongside other columns) — the same shared single-pass
-    * slicer the full parse uses. */
-  def fieldColumns(line: Column, schema: FixedSchema, mode: ParseMode): Seq[Column] = {
-    val trims = schema.fields.map(f => mode == Strict && strictTrims(f)).toArray
-    val sliced = graft.functions.FixedSlice.fixed_slices(line, schema, trims)
-    schema.fields.zipWithIndex.map { case (f, i) =>
-      val raw = element_at(sliced, i + 1)
-      (mode match {
-        case Strict => strictExpr(raw, f)
-        case Compat => compatExpr(raw, f)
-      }).as(f.name)
-    }
-  }
-
   /** Type a raw slice. `raw` is expected ALREADY space-trimmed for the
-    * trimmable types (see [[strictTrims]]) — the single-pass slicer
-    * trims zero-copy; the legacy substring path trims explicitly. */
-  private def strictExpr(raw: Column, f: FixedField): Column = f.parseType match {
-    case "boolean" =>
+    * trimmable types (`FixedType.strictTrim`) — the single-pass slicer
+    * trims zero-copy. */
+  private def strictExpr(raw: Column, f: FixedField): Column = f.fixedType match {
+    case Bool =>
       // Strict keeps the J/Y vocabulary but nulls out unknowns.
       val c = upper(substring(raw, 1, 1))
       when(c.isin("J", "Y"), lit(true))
@@ -117,19 +82,17 @@ object FixedWidthParser {
         .otherwise(lit(null).cast(BooleanType))
     // try_cast/try_to_timestamp: null on failure regardless of the
     // session's ANSI setting (ANSI is on by default in Spark 4).
-    case "bytes" | "Bytes" => raw.cast(BinaryType)
-    case "int"             => raw.try_cast(IntegerType)
-    case "long"            => raw.try_cast(LongType)
-    case "float"           => raw.try_cast(FloatType)
+    case Bytes   => raw.cast(BinaryType)
+    case Int32   => raw.try_cast(IntegerType)
+    case Int64   => raw.try_cast(LongType)
+    case Float32 => raw.try_cast(FloatType)
     // try_cast-identical semantics, allocation-free on the common plain-
     // decimal form (doubles were ~20% of the weblog parse leg under the
     // cast's String + parseDouble per value).
-    case "double"          => graft.functions.FastDouble.fast_try_double(raw)
-    case "string"          => raw // verbatim, padding preserved (ColumnBuilderTypes.go:157-159)
-    case "date"            => to_date(tryTimestampNtz(raw))
-    case "timestamp-millis" | "timestamp-micros" => tryTimestampNtz(raw)
-    case other =>
-      throw new IllegalArgumentException(s"unsupported type '$other' for ${f.name}")
+    case Float64 => graft.functions.FastDouble.fast_try_double(raw)
+    case Text    => raw // verbatim, padding preserved (ColumnBuilderTypes.go:157-159)
+    case Date    => to_date(tryTimestampNtz(raw))
+    case TimestampMillis | TimestampMicros => tryTimestampNtz(raw)
   }
 
   /** Go `strconv.ParseInt` base-10 surface: optional sign + digits only.
@@ -141,19 +104,19 @@ object FixedWidthParser {
     * model inf/nan/hex-float inputs, absent from fixed-width feeds). */
   private val GoFloatRe = "^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?$"
 
-  private def compatExpr(raw: Column, f: FixedField): Column = f.parseType match {
-    case "boolean" =>
+  private def compatExpr(raw: Column, f: FixedField): Column = f.fixedType match {
+    case Bool =>
       // First byte only; J/j/Y/y → true, everything else (incl. N) → the
       // zero value false (ColumnBuilderTypes.go:35-66).
       upper(substring(raw, 1, 1)).isin("J", "Y")
-    case "bytes" | "Bytes" => raw.cast(BinaryType)
+    case Bytes => raw.cast(BinaryType)
     // strconv semantics on the UNtrimmed substring; failure → 0 (§2.2).
-    case "int"    => coalesce(when(raw.rlike(GoIntRe), raw.try_cast(IntegerType)), lit(0))
-    case "long"   => coalesce(when(raw.rlike(GoIntRe), raw.try_cast(LongType)), lit(0L))
-    case "float"  => coalesce(when(raw.rlike(GoFloatRe), raw.try_cast(FloatType)), lit(0.0f))
-    case "double" => coalesce(when(raw.rlike(GoFloatRe), raw.try_cast(DoubleType)), lit(0.0d))
-    case "string" => raw
-    case "date" | "timestamp-millis" | "timestamp-micros" =>
+    case Int32   => coalesce(when(raw.rlike(GoIntRe), raw.try_cast(IntegerType)), lit(0))
+    case Int64   => coalesce(when(raw.rlike(GoIntRe), raw.try_cast(LongType)), lit(0L))
+    case Float32 => coalesce(when(raw.rlike(GoFloatRe), raw.try_cast(FloatType)), lit(0.0f))
+    case Float64 => coalesce(when(raw.rlike(GoFloatRe), raw.try_cast(DoubleType)), lit(0.0d))
+    case Text    => raw
+    case Date | TimestampMillis | TimestampMicros =>
       // F1: all three variants return Unix SECONDS as long
       // (ColumnBuilder.go:279,330,381); parse failure → 0. The raw
       // substring stays UNtrimmed: Go time.Parse rejects padded input,
@@ -163,8 +126,6 @@ object FixedWidthParser {
       // shifting every value for a caller on a non-UTC session —
       // this parse is public API beyond the UTC-pinned GraftSession).
       coalesce(graft.functions.RefTimestamp.parse_ref_seconds(raw), lit(0L))
-    case other =>
-      throw new IllegalArgumentException(s"unsupported type '$other' for ${f.name}")
   }
 
   /** Project a `value: String` line column into the typed schema.
@@ -214,7 +175,7 @@ object FixedWidthParser {
     // dominant cost on wide rows). In Strict mode the slicer also
     // space-trims the numeric/timestamp fields zero-copy (Compat keeps
     // Go strconv's untrimmed-input semantics).
-    val trims = schema.fields.map(f => mode == Strict && strictTrims(f)).toArray
+    val trims = schema.fields.map(f => mode == Strict && f.fixedType.strictTrim).toArray
     val sliced = graft.functions.FixedSlice.fixed_slices(line, schema, trims)
     // Corrupt-record guard on the slices ARRAY, not per field: a
     // per-field `when(wellFormed, typed)` puts every field's slice
@@ -299,10 +260,9 @@ object FixedWidthParser {
     * seconds, boolean never null, numerics never null. */
   def compatSchema(schema: FixedSchema): StructType =
     StructType(schema.fields.map { f =>
-      val t = f.parseType match {
-        case "date" | "timestamp-millis" | "timestamp-micros" => LongType
-        case _                                                => f.sparkType
-      }
-      StructField(f.name, t, nullable = f.parseType == "string" || f.parseType == "Bytes" || f.parseType == "bytes")
+      val t = f.fixedType
+      // Compat zero-fills every failed parse except the verbatim
+      // string/bytes lanes (the untrimmed ones), which pass null through.
+      StructField(f.name, if (t.temporal) LongType else t.sparkType, nullable = !t.strictTrim)
     })
 }

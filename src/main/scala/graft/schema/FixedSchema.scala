@@ -21,32 +21,16 @@ final case class FixedField(
     avroType: String,
     logicalType: Option[String]) {
 
-  /** The type that drives parsing: logicalType wins over the physical
+  /** The declared type string: logicalType wins over the physical
     * Avro type, as in `common/fixed.go:117-126`. */
   def parseType: String = logicalType.getOrElse(avroType)
 
+  /** The column's resolved type; an unsupported one is refused here,
+    * at schema build. */
+  val fixedType: FixedType = FixedType.of(avroType, logicalType, name)
+
   /** Spark type for the strict (non-compat) output schema. */
-  def sparkType: DataType = parseType match {
-    case "boolean"                              => BooleanType
-    case "bytes" | "Bytes"                      => BinaryType
-    case "int"                                  => IntegerType
-    case "long"                                 => LongType
-    case "float"                                => FloatType
-    case "double"                               => DoubleType
-    case "string"                               => StringType
-    case "date"                                 => DateType
-    // NTZ: the reference parses wall-clock text against a fixed UTC zone
-    // (`ColumnBuilder.go:229`); NTZ also matches how Spark 4 reads the
-    // testdata parquet (isAdjustedToUTC=false) and DuckDB's naive
-    // TIMESTAMP, keeping the whole oracle chain timezone-free.
-    case "timestamp-millis" | "timestamp-micros" => TimestampNTZType
-    case other =>
-      throw new IllegalArgumentException(
-        s"Unsupported column type '$other' for field '$name' " +
-          "(reference supports boolean, Bytes, int, long, float, double, " +
-          "string, date, timestamp-millis, timestamp-micros — " +
-          "fixed2avro/ColumnBuilder.go:392-426)")
-  }
+  def sparkType: DataType = fixedType.sparkType
 }
 
 /** A compiled extended-Avro fixed-width schema.
@@ -136,34 +120,14 @@ object FixedSchema {
     s.fields.foreach { f =>
       val fn: ObjectNode = arr.addObject()
       fn.put("name", f.name)
-      val physical = f.avroType match {
-        case "Bytes" => "bytes" // reference spells it with a capital B (common/avro.go:44)
-        case t       => t
-      }
-      val typeNode: com.fasterxml.jackson.databind.JsonNode = f.logicalType match {
+      val typeNode: JsonNode = f.logicalType match {
         case Some(lt) =>
           val tn = mapper.createObjectNode()
-          // Avro logical types ride on a physical carrier type.
-          val carrier = lt match {
-            case "date"                                   => "int"
-            case "timestamp-millis" | "timestamp-micros"  => "long"
-            // time-millis/time-micros are declared-unsupported
-            // engine-wide (the reference's own builder has no case for
-            // them — fixed2avro/ColumnBuilder.go:420-421); emitting a
-            // well-formed Avro carrier here while sparkSchema/parse
-            // throw would imply support that does not exist.
-            case "time-millis" | "time-micros" =>
-              throw new IllegalArgumentException(
-                s"unsupported logicalType '$lt': time types are " +
-                  "declared-unsupported (reference parity; " +
-                  "fixed2avro/ColumnBuilder.go:420-421)")
-            case _                                        => physical
-          }
-          tn.put("type", carrier)
+          tn.put("type", FixedType.avroName(f.fixedType, f.avroType, logical = true))
           tn.put("logicalType", lt)
           tn
         case None =>
-          mapper.getNodeFactory.textNode(physical)
+          mapper.getNodeFactory.textNode(FixedType.avroName(f.fixedType, f.avroType, logical = false))
       }
       if (nullable) {
         // ["null", T] with a null default — the standard Avro optional

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.parse.{FixedWidthParser, ParseMode, Strict}
-import graft.schema.{FixedField, FixedSchema}
+import graft.schema.{FixedField, FixedSchema, FixedType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -119,28 +119,24 @@ object FixedWidth {
     * its declared width raises an error at render time — lpad/rpad would
     * otherwise truncate it to a different, silently-valid value. */
   def renderField(c: Column, f: FixedField, zeroPadNumerics: Boolean = false): Column = {
-    val s0 = f.parseType match {
-      case "date" | "timestamp-millis" | "timestamp-micros" =>
+    val t = f.fixedType
+    val s0 =
+      if (t.temporal)
         // Fixed-layout formatter (inverse of the parser, codegen'd);
         // date/instant inputs widen to NTZ micros first.
         graft.functions.RefTimestamp.format_ref_timestamp(c.cast(TimestampNTZType))
-      case "boolean" => when(c, lit("Y")).otherwise(lit("N"))
-      case _         => c.cast(StringType)
-    }
+      else if (t == FixedType.Bool) when(c, lit("Y")).otherwise(lit("N"))
+      else c.cast(StringType)
     val s = coalesce(s0, lit(""))
     val guarded = when(length(s) <= f.runeLen, s).otherwise(raise_error(concat(
       lit(s"fixedwidth render: value wider than ${f.runeLen} runes in field '${f.name}': '"),
       s, lit("'"))))
-    f.parseType match {
-      case "string" | "Bytes" | "bytes" => rpad(guarded, f.runeLen, " ")
-      case "boolean" | "date" | "timestamp-millis" | "timestamp-micros" =>
-        lpad(guarded, f.runeLen, " ")
-      case _ =>
-        // Numerics: space-pad (the usual feed convention; under compat
-        // parsing these become 0, faithfully to Go strconv) or zero-pad
-        // (parseable in both modes; non-negative values only).
-        lpad(guarded, f.runeLen, if (zeroPadNumerics) "0" else " ")
-    }
+    // Strings/bytes right-pad; booleans and timestamps space-pad left;
+    // numerics space-pad (the usual feed convention; under compat
+    // parsing these become 0, faithfully to Go strconv) or zero-pad
+    // (parseable in both modes; non-negative values only).
+    if (t == FixedType.Text || t == FixedType.Bytes) rpad(guarded, f.runeLen, " ")
+    else lpad(guarded, f.runeLen, if (zeroPadNumerics && t.numeric) "0" else " ")
   }
 
   /** The whole-row render expression: one single-pass buffer write per

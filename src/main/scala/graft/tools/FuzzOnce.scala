@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.parse.{FixedWidthParser, Strict}
-import graft.schema.{FixedField, FixedSchema}
+import graft.schema.{FixedField, FixedSchema, FixedType}
 import org.apache.spark.sql.functions._
 
 /** One-off heavy fuzz (driver-side diagnostic, not a committed test
@@ -71,11 +71,11 @@ object FuzzOnce {
       }
       val s2 = FixedSchema("prop", fields)
       val nRows = 1 + rnd2.nextInt(30)
-      def value(f: FixedField): Any = f.parseType match {
-        case "long"   => (rnd2.nextLong() % math.pow(10, f.runeLen - 2).toLong)
-        case "int"    => rnd2.nextInt(math.pow(10, math.min(f.runeLen, 9) - 1).toInt)
-        case "double" => (rnd2.nextInt(199999) - 99999) / 1000.0
-        case "string" =>
+      def value(f: FixedField): Any = f.fixedType match {
+        case FixedType.Int64   => (rnd2.nextLong() % math.pow(10, f.runeLen - 2).toLong)
+        case FixedType.Int32   => rnd2.nextInt(math.pow(10, math.min(f.runeLen, 9) - 1).toInt)
+        case FixedType.Float64 => (rnd2.nextInt(199999) - 99999) / 1000.0
+        case FixedType.Text =>
           val alphabet = "abcXYZ019äö界€λ"
           (0 until f.runeLen).map(_ => alphabet(rnd2.nextInt(alphabet.length))).mkString
         case _ => rnd2.nextBoolean()

@@ -322,4 +322,72 @@ class FixedAvroSpec extends SparkSpec {
       s"observation must report the ${corrupt.size} skipped lines")
     assert(metrics.getAs[Long]("input_lines") == (goodLines ++ corrupt).size.toLong)
   }
+
+  test("a truncated multibyte tail: slices and the fused encoder cut the same bytes, inside the line") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    val tail = FixedSchema("tail", Seq(2, 2, 3).zipWithIndex.map { case (len, i) =>
+      graft.schema.FixedField(s"s$i", len, "string", None) })
+    val enc = new graft.functions.FixedAvro.LineEncoder(tail, -1)
+    val wire = new AvroCodec.AvroWire(64)
+    Seq("abc".getBytes(UTF_8) :+ 0xF0.toByte, // a lone 4-byte lead as the last byte
+      "ab".getBytes(UTF_8) ++ "€".getBytes(UTF_8).take(2), // a 3-byte sequence cut short
+      "é✓x".getBytes(UTF_8) ++ "😀".getBytes(UTF_8).take(2) // no ASCII prefix at all
+    ).foreach { bytes =>
+      // The line is a view over a longer buffer: bytes past its end are
+      // a canary that neither consumer may pick up.
+      val line = org.apache.spark.unsafe.types.UTF8String.fromBytes(
+        bytes ++ Array.fill[Byte](16)('Z'), 0, bytes.length)
+      val sliced = graft.functions.FixedSlice.slices(line, tail.runeStarts.toArray,
+        Array(2, 2, 3), Array.fill(3)(false)).array.toSeq
+        .map(s => s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes.toSeq)
+      assert(sliced.flatten == bytes.toSeq, "slices read past the line")
+      wire.reset()
+      enc.encodeInto(line, wire)
+      // A flat record of three strings: each a zigzag length (one byte
+      // at these sizes), then its bytes.
+      val out = wire.result().toSeq
+      val encoded = sliced.indices.scanLeft((0, Seq.empty[Byte])) { case ((pos, _), _) =>
+        val n = out(pos) >> 1
+        (pos + 1 + n, out.slice(pos + 1, pos + 1 + n))
+      }
+      assert(encoded.last._1 == out.length && encoded.tail.map(_._2) == sliced)
+    }
+  }
+
+  test("the fused encoder allocates nothing per row, flat and nullable") {
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean match {
+      case m: com.sun.management.ThreadMXBean
+          if m.isThreadAllocatedMemorySupported && m.isThreadAllocatedMemoryEnabled => m
+      case _ => null
+    }
+    assume(mx != null, "per-thread allocation counting is unsupported on this JVM")
+    import graft.schema.FixedType._
+    val weblog = graft.Bench.weblogFixed
+    // Weblog-shape ASCII lines, every field valid for its type.
+    val pool = Array.tabulate(4096) { i =>
+      org.apache.spark.unsafe.types.UTF8String.fromString(weblog.fields.map { f =>
+        val text = f.fixedType match {
+          case TimestampMicros => f"2020-07-${1 + i % 28}%02d-${i % 24}%02d.${i % 60}%02d.00.${i}%06d"
+          case Int64 | Int32   => (i * 7).toString
+          case Float64         => f"$i.${i % 100}%02d"
+          case _               => ("w" + i).padTo(f.runeLen, ' ')
+        }
+        " " * (f.runeLen - text.length) + text
+      }.mkString)
+    }
+    assert(pool.forall(_.numBytes() == weblog.rowRuneLen))
+    val lines = 200000
+    Seq(false, true).foreach { nullable =>
+      val enc = new graft.functions.FixedAvro.LineEncoder(weblog, -1, nullable)
+      val wire = new AvroCodec.AvroWire(4096)
+      def run(n: Int): Unit =
+        (0 until n).foreach { i => wire.reset(); enc.encodeInto(pool(i % pool.length), wire) }
+      run(100000) // warm-up
+      val tid = Thread.currentThread().getId
+      val before = mx.getThreadAllocatedBytes(tid)
+      run(lines)
+      val perLine = (mx.getThreadAllocatedBytes(tid) - before).toDouble / lines
+      assert(perLine < 1.0, s"nullable=$nullable: $perLine bytes allocated per line")
+    }
+  }
 }

@@ -38,6 +38,23 @@ class FixedWidthParserSpec extends SparkSpec {
     assert(!weblog.avroJson.contains("len"))
   }
 
+  test("unsupported types are refused at schema build, with one message") {
+    Seq("uuid" -> """{"type":"uuid","len":36}""",
+      "time-millis" -> """{"type":"int","logicalType":"time-millis","len":12}""").foreach {
+      case (declared, tpe) =>
+        val e = intercept[IllegalArgumentException](FixedSchema.fromJson(
+          s"""{"type":"record","name":"r","fields":[{"name":"ok","type":{"type":"long","len":4}},
+             |{"name":"bad","type":$tpe}]}""".stripMargin))
+        assert(e.getMessage.startsWith(s"Unsupported column type '$declared' for field 'bad' " +
+          "(reference supports boolean, Bytes, int, long, float, double, string, date, " +
+          "timestamp-millis, timestamp-micros — fixed2avro/ColumnBuilder.go:392-426)"))
+        assert(e.getMessage.contains("time types are declared-unsupported") ==
+          declared.startsWith("time-"), e.getMessage)
+    }
+    // direct construction is refused the same way
+    intercept[IllegalArgumentException](graft.schema.FixedField("bad", 36, "uuid", None))
+  }
+
   test("strict parse of a good line") {
     val df = FixedWidthParser.parse(Seq(goodLine).toDF("value"), weblog, Strict)
     val r = df.head()
