@@ -38,7 +38,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Semantics are EXACTLY the Strict parse + encode chain's, pinned by
   * `FixedAvroSpec` byte-identity: slicing is the parse's own walk
-  * ([[FixedSlice.Walk]]), numeric/timestamp fields are
+  * ([[FixedSlice.fieldEnd]]), numeric/timestamp fields are
   * space-trimmed zero-copy, parse surfaces reuse the SAME primitives
   * ([[FastDouble.fastBits]], [[RefTimestamp.parseMicros]],
   * `UTF8String.toLong` — what Spark's cast calls), and a field whose
@@ -68,7 +68,7 @@ object FixedAvro {
 
   /** One-pass line → Avro-record-bytes encoder writing into a
     * CALLER-SUPPLIED [[AvroCodec.AvroWire]]. NOT thread-safe (holds a
-    * reused slice walk and parse wrapper); one instance per task.
+    * reused parse wrapper); one instance per task.
     *
     * `nullable = true` (r18) emits the `["null", T]` OPTIONAL-union
     * wire shape ([[graft.schema.FixedSchema.nullableAvroJson]]): every
@@ -90,10 +90,10 @@ object FixedAvro {
     // depends on.
     private val trims: Array[Boolean] = fixed.fields.map(_.fixedType.strictTrim).toArray
     private val codes: Array[Int] = fixed.fields.map(_.fixedType.code).toArray
+    private val starts: Array[Int] = fixed.runeStarts.toArray
+    private val ends: Array[Int] = fixed.fields.indices.map(f => starts(f) + fixed.fields(f).runeLen).toArray
     private val header: Array[Byte] =
       if (frameId >= 0) Confluent.prefixBytes(frameId) else Array.emptyByteArray
-    @transient private lazy val walk =
-      new FixedSlice.Walk(fixed.runeStarts.toArray, fixed.fields.map(_.runeLen).toArray, trims)
     @transient private lazy val longWrapper = new UTF8String.LongWrapper
 
     private def fail(f: Int): Nothing =
@@ -141,47 +141,55 @@ object FixedAvro {
       if (header.length > 0) wire.writeRaw(header)
       val base = line.getBaseObject
       val off = line.getBaseOffset
-      val w = walk
-      w.reset(line)
+      val numBytes = line.numBytes()
+      val prefix = FixedSlice.prefixEnd(line)
+      var b = 0 // the slice walk's cursor (FixedSlice.fieldEnd)
       var f = 0
       while (f < nFields) {
-        val se = w.next(f)
+        val e = FixedSlice.fieldEnd(base, off, numBytes, prefix, b, starts(f), ends(f))
+        val se = FixedSlice.span(base, off, b, e, trims(f))
+        b = e
         val fOff = off + (se >>> 32)
         val n = se.toInt - (se >>> 32).toInt
-        // Parse to an ok flag plus a payload (v for the varint lanes and
-        // booleans, d for float/double; strings ship their slice), so
-        // nothing touches the wire before the parse is known-good.
-        var ok = true
-        var v = 0L
-        var d = 0.0
+        // Each lane parses its slice, hands the outcome to `present` —
+        // nothing touches the wire before the parse is known-good — and
+        // writes the value if that says so.
         codes(f) match {
           case CString | CBytes =>
+            present(ok = true, f, wire)
+            wire.writeMemory(base, fOff, n)
           case CInt | CLong =>
-            ok = parseLong(base, fOff, n) && (codes(f) == CLong ||
+            // Avro int and long share the zigzag varint encoding over the
+            // int range (pinned in AvroDirectSpec), so one writeLong
+            // serves both — and any int/long → Avro long promotion.
+            val ok = parseLong(base, fOff, n) && (codes(f) == CLong ||
               (longWrapper.value >= Int.MinValue && longWrapper.value <= Int.MaxValue))
-            v = longWrapper.value
+            if (present(ok, f, wire)) wire.writeLong(longWrapper.value)
           case CDouble =>
             val bits = FastDouble.fastBits(base, fOff, n)
-            if (bits != FastDouble.FallbackBits) d = java.lang.Double.longBitsToDouble(bits)
-            else {
-              val slow = FastDouble.tryParse(UTF8String.fromAddress(base, fOff, n))
-              ok = slow != null
-              if (ok) d = slow.doubleValue()
+            if (bits != FastDouble.FallbackBits) {
+              present(ok = true, f, wire)
+              wire.writeDouble(java.lang.Double.longBitsToDouble(bits))
+            } else {
+              val d = FastDouble.tryParse(UTF8String.fromAddress(base, fOff, n))
+              if (present(d != null, f, wire)) wire.writeDouble(d.doubleValue())
             }
           case CFloat =>
             // Rare type on hot schemas; route through the cast-equivalent
             // surface (tryParseFloat: trim → specials → parseFloat).
-            val slow = tryParseFloat(UTF8String.fromAddress(base, fOff, n))
-            ok = slow != null
-            if (ok) d = slow.doubleValue()
-          case CDate | CTimestampMillis | CTimestampMicros =>
+            val v = tryParseFloat(UTF8String.fromAddress(base, fOff, n))
+            if (present(v != null, f, wire)) wire.writeFloat(v.floatValue())
+          case CTimestampMicros =>
             val micros = RefTimestamp.parseMicros(base, fOff, n)
-            ok = micros != Long.MinValue
-            v = codes(f) match {
-              case CDate            => Math.floorDiv(micros, 86400000000L)
-              case CTimestampMillis => Math.floorDiv(micros, 1000L)
-              case _                => micros
-            }
+            if (present(micros != Long.MinValue, f, wire)) wire.writeLong(micros)
+          case CTimestampMillis =>
+            val micros = RefTimestamp.parseMicros(base, fOff, n)
+            if (present(micros != Long.MinValue, f, wire))
+              wire.writeLong(Math.floorDiv(micros, 1000L))
+          case CDate =>
+            val micros = RefTimestamp.parseMicros(base, fOff, n)
+            if (present(micros != Long.MinValue, f, wire))
+              wire.writeLong(Math.floorDiv(micros, 86400000000L))
           case CBoolean =>
             // Strict vocabulary: first char J/j/Y/y → true, N/n → false,
             // anything else (incl. empty) is a null parse. A multibyte
@@ -189,28 +197,22 @@ object FixedAvro {
             // upper(substring(raw,1,1)).isin chain.
             val c = if (n == 0) 0.toByte
               else org.apache.spark.unsafe.Platform.getByte(base, fOff)
-            ok = c == 'J' || c == 'j' || c == 'Y' || c == 'y' || c == 'N' || c == 'n'
-            v = if (c == 'N' || c == 'n') 0L else 1L
-        }
-        // The one null decision: the null branch (0, null-first union)
-        // on the nullable lane, a throw on the flat one, else branch 1
-        // (nullable only) and the value.
-        if (!ok) { if (nullable) wire.writeLong(0L) else fail(f) }
-        else {
-          if (nullable) wire.writeLong(1L)
-          codes(f) match {
-            case CString | CBytes => wire.writeMemory(base, fOff, n)
-            case CDouble          => wire.writeDouble(d)
-            case CFloat           => wire.writeFloat(d.toFloat)
-            case CBoolean         => wire.writeBoolean(v != 0L)
-            // Avro int and long share the zigzag varint encoding over the
-            // int range (pinned in AvroDirectSpec), so one writeLong
-            // serves both — and any int/long → Avro long promotion.
-            case _                => wire.writeLong(v)
-          }
+            val no = c == 'N' || c == 'n'
+            if (present(no || c == 'J' || c == 'j' || c == 'Y' || c == 'y', f, wire))
+              wire.writeBoolean(!no)
         }
         f += 1
       }
+    }
+
+    /** The one null decision, between field `f`'s parse and its value:
+      * a failed parse writes the null branch (0, null-first union) on
+      * the nullable lane and throws on the flat one; a good one writes
+      * branch 1 (nullable only). True when the value follows. */
+    private def present(ok: Boolean, f: Int, wire: AvroCodec.AvroWire): Boolean = {
+      if (nullable) wire.writeLong(if (ok) 1L else 0L)
+      else if (!ok) fail(f)
+      ok
     }
   }
 

@@ -46,16 +46,16 @@ object FixedSlice {
     i
   }
 
-  /** Advance a (byte, char) cursor to `targetChar`, returned packed as
-    * `(byteIdx << 32) | charIdx`. ASCII stretches hop 8 bytes per step
-    * (sign-bit word test — IDENTICAL semantics to the byte step, which
-    * counts an ASCII byte as one rune, so well-formed and malformed
-    * input alike slice exactly as the per-codepoint walk would);
-    * multibyte stretches step per codepoint. Mixed real corpora are
-    * mostly-ASCII lines, so this keeps the walk near offset-arithmetic
-    * speed everywhere except inside genuinely multibyte runs. */
+  /** Advance a (byte, char) cursor to `targetChar`; returns the byte
+    * index. ASCII stretches hop 8 bytes per step (sign-bit word test —
+    * IDENTICAL semantics to the byte step, which counts an ASCII byte as
+    * one rune, so well-formed and malformed input alike slice exactly as
+    * the per-codepoint walk would); multibyte stretches step per
+    * codepoint. Mixed real corpora are mostly-ASCII lines, so this keeps
+    * the walk near offset-arithmetic speed everywhere except inside
+    * genuinely multibyte runs. */
   private def advance(base: AnyRef, off: Long, numBytes: Int,
-      byte0: Int, char0: Int, targetChar: Int): Long = {
+      byte0: Int, char0: Int, targetChar: Int): Int = {
     var b = byte0
     var c = char0
     while (c < targetChar && b < numBytes) {
@@ -75,95 +75,84 @@ object FixedSlice {
         c += 1
       }
     }
-    (b.toLong << 32) | (c.toLong & 0xffffffffL)
+    b
   }
 
-  /** The one fixed-width slice walk, shared by the typed parse
-    * ([[slices]]) and the fused encoder ([[FixedAvro.LineEncoder]]):
-    * a cursor over one line at a time, reused across lines, so a
-    * consumer that keeps one allocates nothing per row. Fields must be
-    * contiguous ascending (FixedSchema.runeStarts is) and are visited
-    * in order.
-    *
-    * Rune index == byte index everywhere inside the line's ASCII
-    * prefix, so a field wholly inside it slices by pure offset
-    * arithmetic — no walk. That is the WHOLE line for ASCII corpora
-    * (the overwhelmingly common case — the reference's corpora are
-    * ASCII, and the walk was the dominant cost of the parse leg: ~5
-    * us/row for 30 fields x 528 runes vs ~6x cheaper here), and the
-    * leading columns of a mostly-ASCII line in a mixed corpus. The
-    * fields past the prefix take the rune-aware [[advance]], entered
-    * at the prefix boundary, not at byte 0.
-    *
-    * A short line yields empty slices past its end — the same shape
-    * Spark's substring gives, preserved for best-effort short-line
-    * parsing (F5/F8 handling lives in the parser's wellFormed guard).
-    *
-    * `trimmed(f)` shrinks that field's byte bounds past leading and
-    * trailing 0x20 — zero-copy space trimming for the padded numeric /
-    * timestamp fields, replacing a per-field `trim()` allocation
-    * (ASCII space can never be a UTF-8 continuation byte, so the byte
-    * test is codepoint-safe; the semantics match Spark's `trim`, which
-    * strips the space character only). */
-  final class Walk(starts: Array[Int], lens: Array[Int], trimmed: Array[Boolean]) {
-    private var base: AnyRef = _
-    private var off = 0L
-    private var numBytes = 0
-    // Fields ending at or before this rune slice by offset arithmetic.
-    private var prefixEnd = 0
-    private var byteIdx = 0
-    private var charIdx = 0
+  /* The one fixed-width slice walk, shared by the typed parse
+   * ([[slices]]) and the fused encoder ([[FixedAvro.LineEncoder]]).
+   * Fields are contiguous ascending from rune 0 (FixedSchema.runeStarts
+   * is) and are visited in order, so a field starts at the byte where the previous
+   * one ended: the walk's only state is that byte, a local of the
+   * consumer's loop —
+   *
+   *   val prefix = FixedSlice.prefixEnd(line); var b = 0
+   *   per field f:  e = fieldEnd(base, off, numBytes, prefix, b, start(f), end(f))
+   *                 se = span(base, off, b, e, trimmed(f)); b = e
+   *
+   * — so neither consumer allocates anything for it.
+   *
+   * Rune index == byte index everywhere inside the line's ASCII prefix,
+   * so a field wholly inside it slices by pure offset arithmetic — no
+   * walk. That is the WHOLE line for ASCII corpora (the overwhelmingly
+   * common case — the reference's corpora are ASCII, and the walk was
+   * the dominant cost of the parse leg: ~5 us/row for 30 fields x 528
+   * runes vs ~6x cheaper here), and the leading columns of a
+   * mostly-ASCII line in a mixed corpus. The fields past the prefix take
+   * the rune-aware [[advance]], entered at the previous field's end,
+   * not at byte 0.
+   *
+   * A short line yields empty slices past its end — the same shape
+   * Spark's substring gives, preserved for best-effort short-line
+   * parsing (F5/F8 handling lives in the parser's wellFormed guard). */
 
-    def reset(l: UTF8String): Unit = {
-      base = l.getBaseObject
-      off = l.getBaseOffset
-      numBytes = l.numBytes()
-      val ascii = asciiPrefixLen(l)
-      prefixEnd = if (ascii == numBytes) Int.MaxValue else ascii
-      byteIdx = 0
-      charIdx = 0
-    }
+  /** The rune below which `line`'s runes are its bytes (Int.MaxValue for
+    * an all-ASCII line): the walk's offset-arithmetic bound. */
+  def prefixEnd(line: UTF8String): Int = {
+    val ascii = asciiPrefixLen(line)
+    if (ascii == line.numBytes()) Int.MaxValue else ascii
+  }
 
-    /** Field `f`'s byte bounds in the line, packed `(start << 32) | end`. */
-    def next(f: Int): Long = {
-      val endChar = starts(f) + lens(f)
-      var s = 0
-      var e = 0
-      if (endChar <= prefixEnd) {
-        s = Math.min(starts(f), numBytes)
-        e = Math.min(endChar, numBytes)
-        byteIdx = e
-        charIdx = e
-      } else {
-        val cur = advance(base, off, numBytes, byteIdx, charIdx, starts(f))
-        s = (cur >>> 32).toInt
-        val end = advance(base, off, numBytes, s, cur.toInt, endChar)
-        byteIdx = (end >>> 32).toInt
-        charIdx = end.toInt
-        e = byteIdx
-      }
-      if (trimmed(f)) {
-        while (s < e && Platform.getByte(base, off + s) == 0x20) s += 1
-        while (e > s && Platform.getByte(base, off + e - 1) == 0x20) e -= 1
-      }
-      (s.toLong << 32) | e.toLong
+  /** The end byte of the field spanning runes `[startChar, endChar)`,
+    * which starts at byte `b` of a line of `numBytes` bytes. */
+  def fieldEnd(base: AnyRef, off: Long, numBytes: Int, prefixEnd: Int, b: Int,
+      startChar: Int, endChar: Int): Int =
+    if (endChar <= prefixEnd) Math.min(endChar, numBytes)
+    else advance(base, off, numBytes, b, startChar, endChar)
+
+  /** Bytes `[s, e)` as a field slice, packed `(start << 32) | end`;
+    * `trim` shrinks it past leading and trailing 0x20 — zero-copy space
+    * trimming for the padded numeric / timestamp fields, replacing a
+    * per-field `trim()` allocation (ASCII space can never be a UTF-8
+    * continuation byte, so the byte test is codepoint-safe; the
+    * semantics match Spark's `trim`, which strips the space character
+    * only). */
+  def span(base: AnyRef, off: Long, s0: Int, e0: Int, trim: Boolean): Long = {
+    var s = s0
+    var e = e0
+    if (trim) {
+      while (s < e && Platform.getByte(base, off + s) == 0x20) s += 1
+      while (e > s && Platform.getByte(base, off + e - 1) == 0x20) e -= 1
     }
+    (s.toLong << 32) | e.toLong
   }
 
   /** Every field of `line` as a zero-copy slice (called from both eval
     * and generated code). */
   def slices(line: UTF8String, starts: Array[Int], lens: Array[Int],
       trimmed: Array[Boolean]): GenericArrayData = {
-    val walk = new Walk(starts, lens, trimmed)
-    walk.reset(line)
     val base = line.getBaseObject
-    val offset = line.getBaseOffset
+    val off = line.getBaseOffset
+    val numBytes = line.numBytes()
+    val prefix = prefixEnd(line)
     val out = new Array[AnyRef](starts.length)
+    var b = 0
     var f = 0
     while (f < out.length) {
-      val se = walk.next(f)
+      val e = fieldEnd(base, off, numBytes, prefix, b, starts(f), starts(f) + lens(f))
+      val se = span(base, off, b, e, trimmed(f))
       val s = (se >>> 32).toInt
-      out(f) = UTF8String.fromAddress(base, offset + s, se.toInt - s)
+      out(f) = UTF8String.fromAddress(base, off + s, se.toInt - s)
+      b = e
       f += 1
     }
     new GenericArrayData(out)

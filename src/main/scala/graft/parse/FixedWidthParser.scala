@@ -255,14 +255,4 @@ object FixedWidthParser {
     validated.select(
       graft.functions.FixedAvro.fixed_to_avro_confluent(line, schema, schemaId).as(outCol))
   }
-
-  /** Spark output schema under compat mode: date/timestamp → LongType
-    * seconds, boolean never null, numerics never null. */
-  def compatSchema(schema: FixedSchema): StructType =
-    StructType(schema.fields.map { f =>
-      val t = f.fixedType
-      // Compat zero-fills every failed parse except the verbatim
-      // string/bytes lanes (the untrimmed ones), which pass null through.
-      StructField(f.name, if (t.temporal) LongType else t.sparkType, nullable = !t.strictTrim)
-    })
 }

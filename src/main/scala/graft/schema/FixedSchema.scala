@@ -120,14 +120,19 @@ object FixedSchema {
     s.fields.foreach { f =>
       val fn: ObjectNode = arr.addObject()
       fn.put("name", f.name)
+      val physical = f.avroType match {
+        case "Bytes" => "bytes" // reference spells it with a capital B (common/avro.go:44)
+        case t       => t
+      }
       val typeNode: JsonNode = f.logicalType match {
         case Some(lt) =>
           val tn = mapper.createObjectNode()
-          tn.put("type", FixedType.avroName(f.fixedType, f.avroType, logical = true))
+          // A date/timestamp logical type rides on its Avro carrier.
+          tn.put("type", if (f.fixedType.temporal) f.fixedType.carrier else physical)
           tn.put("logicalType", lt)
           tn
         case None =>
-          mapper.getNodeFactory.textNode(FixedType.avroName(f.fixedType, f.avroType, logical = false))
+          mapper.getNodeFactory.textNode(physical)
       }
       if (nullable) {
         // ["null", T] with a null default — the standard Avro optional

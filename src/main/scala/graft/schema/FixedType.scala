@@ -11,11 +11,10 @@ import org.apache.spark.sql.types._
   * `code` is a small literal constant so hot loops can `match` on it as
   * a tableswitch; `strictTrim` says whether Strict mode space-trims the
   * slice before typing it (strings and bytes keep their padding
-  * verbatim); `carrier` is the Avro type a date/timestamp logical type
-  * rides on (for every other type, its own name).
+  * verbatim).
   */
 sealed abstract class FixedType(val name: String, val code: Int, val sparkType: DataType,
-    val carrier: String, val strictTrim: Boolean) extends Serializable {
+    val strictTrim: Boolean) extends Serializable {
 
   /** int, long, float, double: the lanes the renderer may zero-pad. */
   def numeric: Boolean = code >= FixedType.CInt && code <= FixedType.CDouble
@@ -23,6 +22,9 @@ sealed abstract class FixedType(val name: String, val code: Int, val sparkType: 
   /** date, timestamp-millis, timestamp-micros: one timestamp text
     * format, NTZ micros in Spark's render struct, seconds under Compat. */
   def temporal: Boolean = code >= FixedType.CDate
+
+  /** The Avro type a temporal logical type rides on. */
+  def carrier: String = if (code == FixedType.CDate) "int" else "long"
 }
 
 object FixedType {
@@ -30,22 +32,22 @@ object FixedType {
   final val CInt = 3; final val CLong = 4; final val CFloat = 5; final val CDouble = 6
   final val CDate = 7; final val CTimestampMillis = 8; final val CTimestampMicros = 9
 
-  case object Text extends FixedType("string", CString, StringType, "string", false)
-  case object Bytes extends FixedType("bytes", CBytes, BinaryType, "bytes", false)
-  case object Bool extends FixedType("boolean", CBoolean, BooleanType, "boolean", true)
-  case object Int32 extends FixedType("int", CInt, IntegerType, "int", true)
-  case object Int64 extends FixedType("long", CLong, LongType, "long", true)
-  case object Float32 extends FixedType("float", CFloat, FloatType, "float", true)
-  case object Float64 extends FixedType("double", CDouble, DoubleType, "double", true)
-  case object Date extends FixedType("date", CDate, DateType, "int", true)
+  case object Text extends FixedType("string", CString, StringType, false)
+  case object Bytes extends FixedType("bytes", CBytes, BinaryType, false)
+  case object Bool extends FixedType("boolean", CBoolean, BooleanType, true)
+  case object Int32 extends FixedType("int", CInt, IntegerType, true)
+  case object Int64 extends FixedType("long", CLong, LongType, true)
+  case object Float32 extends FixedType("float", CFloat, FloatType, true)
+  case object Float64 extends FixedType("double", CDouble, DoubleType, true)
+  case object Date extends FixedType("date", CDate, DateType, true)
   // NTZ: the reference parses wall-clock text against a fixed UTC zone
   // (`ColumnBuilder.go:229`); NTZ also matches how Spark 4 reads the
   // testdata parquet (isAdjustedToUTC=false) and DuckDB's naive
   // TIMESTAMP, keeping the whole oracle chain timezone-free.
   case object TimestampMillis
-      extends FixedType("timestamp-millis", CTimestampMillis, TimestampNTZType, "long", true)
+      extends FixedType("timestamp-millis", CTimestampMillis, TimestampNTZType, true)
   case object TimestampMicros
-      extends FixedType("timestamp-micros", CTimestampMicros, TimestampNTZType, "long", true)
+      extends FixedType("timestamp-micros", CTimestampMicros, TimestampNTZType, true)
 
   // The reference spells bytes with a capital B (common/avro.go:44).
   private val byName: Map[String, FixedType] = Seq(Text, Bytes, Bool, Int32, Int64, Float32,
@@ -66,11 +68,4 @@ object FixedType {
             "fixed2avro/ColumnBuilder.go:420-421)"
         else "")))
   }
-
-  /** The Avro type name standard schema JSON gives a column of type `t`
-    * declared `physical`: a date/timestamp logicalType rides on its
-    * carrier, every other column keeps its physical name, with `Bytes`
-    * spelled `bytes`. */
-  def avroName(t: FixedType, physical: String, logical: Boolean): String =
-    if (logical && t.temporal) t.carrier else byName.get(physical).fold(physical)(_.name)
 }
