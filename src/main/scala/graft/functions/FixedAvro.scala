@@ -103,35 +103,30 @@ object FixedAvro {
           "the fixed-width schema model has no unions/nullable fields " +
           "(SURVEY.md §1.2); filter or default such lines before encoding")
 
-    /** Strict long surface into `longWrapper.value`, false where the
-      * cast would give null: plain `[+-]?digits` parsed inline with
-      * Long.parseLong's overflow arithmetic; anything else falls back to
-      * `UTF8String.toLong` — the exact routine Spark's cast calls — so
-      * the two paths cannot diverge on inputs the cast accepts. */
-    private def parseLong(base: AnyRef, off: Long, n: Int): Boolean = {
-      if (n == 0 || n > 19) return parseLongSlow(base, off, n)
+    /** Plain `[+-]?digits` parsed inline with Long.parseLong's overflow
+      * arithmetic, or Long.MinValue for anything else — that value's own
+      * text included — where the caller falls back to `UTF8String.toLong`,
+      * the exact routine Spark's cast calls, so the two paths cannot
+      * diverge on inputs the cast accepts. */
+    private def plainLong(base: AnyRef, off: Long, n: Int): Long = {
+      if (n == 0 || n > 19) return Long.MinValue
       var i = 0
       var neg = false
       val b0 = org.apache.spark.unsafe.Platform.getByte(base, off)
       if (b0 == '-') { neg = true; i = 1 }
       else if (b0 == '+') i = 1
-      if (i >= n) return parseLongSlow(base, off, n)
+      if (i >= n) return Long.MinValue
       var m = 0L // accumulate negative: holds Long.MinValue
       while (i < n) {
         val d = org.apache.spark.unsafe.Platform.getByte(base, off + i) - '0'
-        if (d < 0 || d > 9) return parseLongSlow(base, off, n)
+        if (d < 0 || d > 9) return Long.MinValue
         if (m < -922337203685477580L || (m == -922337203685477580L && d > 8))
-          return parseLongSlow(base, off, n) // potential overflow → exact path
+          return Long.MinValue // potential overflow → exact path
         m = m * 10 - d
         i += 1
       }
-      if (!neg && m == Long.MinValue) return parseLongSlow(base, off, n)
-      longWrapper.value = if (neg) m else -m
-      true
+      if (neg) m else -m // -Long.MinValue overflows to Long.MinValue: exact path
     }
-
-    private def parseLongSlow(base: AnyRef, off: Long, n: Int): Boolean =
-      UTF8String.fromAddress(base, off, n).toLong(longWrapper)
 
     /** Append `line`'s (optional Confluent header +) record body to
       * `wire`. Throws on any field whose strict parse would be null;
@@ -162,9 +157,14 @@ object FixedAvro {
             // Avro int and long share the zigzag varint encoding over the
             // int range (pinned in AvroDirectSpec), so one writeLong
             // serves both — and any int/long → Avro long promotion.
-            val ok = parseLong(base, fOff, n) && (codes(f) == CLong ||
-              (longWrapper.value >= Int.MinValue && longWrapper.value <= Int.MaxValue))
-            if (present(ok, f, wire)) wire.writeLong(longWrapper.value)
+            var v = plainLong(base, fOff, n)
+            var ok = true
+            if (v == Long.MinValue) {
+              ok = UTF8String.fromAddress(base, fOff, n).toLong(longWrapper)
+              v = longWrapper.value
+            }
+            if (present(ok && (codes(f) == CLong || (v >= Int.MinValue && v <= Int.MaxValue)),
+                f, wire)) wire.writeLong(v)
           case CDouble =>
             val bits = FastDouble.fastBits(base, fOff, n)
             if (bits != FastDouble.FallbackBits) {
