@@ -141,11 +141,12 @@ object FixedAvro {
       var b = 0 // the slice walk's cursor (FixedSlice.fieldEnd)
       var f = 0
       while (f < nFields) {
-        val e = FixedSlice.fieldEnd(base, off, numBytes, prefix, b, starts(f), ends(f))
-        val se = FixedSlice.span(base, off, b, e, trims(f))
+        var s = b
+        var e = FixedSlice.fieldEnd(base, off, numBytes, prefix, b, starts(f), ends(f))
         b = e
-        val fOff = off + (se >>> 32)
-        val n = se.toInt - (se >>> 32).toInt
+        if (trims(f)) { s = FixedSlice.trimStart(base, off, s, e); e = FixedSlice.trimEnd(base, off, s, e) }
+        val fOff = off + s
+        val n = e - s
         // Each lane parses its slice, hands the outcome to `present` —
         // nothing touches the wire before the parse is known-good — and
         // writes the value if that says so.

@@ -81,13 +81,13 @@ object FixedSlice {
   /* The one fixed-width slice walk, shared by the typed parse
    * ([[slices]]) and the fused encoder ([[FixedAvro.LineEncoder]]).
    * Fields are contiguous ascending from rune 0 (FixedSchema.runeStarts
-   * is) and are visited in order, so a field starts at the byte where the previous
-   * one ended: the walk's only state is that byte, a local of the
-   * consumer's loop —
+   * is) and are visited in order, so a field starts at the byte where
+   * the previous one ended: the walk's only state is that byte, a local
+   * of the consumer's loop —
    *
    *   val prefix = FixedSlice.prefixEnd(line); var b = 0
-   *   per field f:  e = fieldEnd(base, off, numBytes, prefix, b, start(f), end(f))
-   *                 se = span(base, off, b, e, trimmed(f)); b = e
+   *   per field f:  s = b; e = fieldEnd(base, off, numBytes, prefix, b, start(f), end(f)); b = e
+   *                 if trimmed(f): s = trimStart(base, off, s, e); e = trimEnd(base, off, s, e)
    *
    * — so neither consumer allocates anything for it.
    *
@@ -119,21 +119,23 @@ object FixedSlice {
     if (endChar <= prefixEnd) Math.min(endChar, numBytes)
     else advance(base, off, numBytes, b, startChar, endChar)
 
-  /** Bytes `[s, e)` as a field slice, packed `(start << 32) | end`;
-    * `trim` shrinks it past leading and trailing 0x20 — zero-copy space
-    * trimming for the padded numeric / timestamp fields, replacing a
-    * per-field `trim()` allocation (ASCII space can never be a UTF-8
-    * continuation byte, so the byte test is codepoint-safe; the
-    * semantics match Spark's `trim`, which strips the space character
-    * only). */
-  def span(base: AnyRef, off: Long, s0: Int, e0: Int, trim: Boolean): Long = {
+  /** The first byte of `[s, e)` past leading 0x20. With [[trimEnd]]:
+    * zero-copy space trimming for the padded numeric / timestamp
+    * fields, replacing a per-field `trim()` allocation (ASCII space can
+    * never be a UTF-8 continuation byte, so the byte test is
+    * codepoint-safe; the semantics match Spark's `trim`, which strips
+    * the space character only). */
+  def trimStart(base: AnyRef, off: Long, s0: Int, e: Int): Int = {
     var s = s0
+    while (s < e && Platform.getByte(base, off + s) == 0x20) s += 1
+    s
+  }
+
+  /** The end of `[s, e)` before trailing 0x20. */
+  def trimEnd(base: AnyRef, off: Long, s: Int, e0: Int): Int = {
     var e = e0
-    if (trim) {
-      while (s < e && Platform.getByte(base, off + s) == 0x20) s += 1
-      while (e > s && Platform.getByte(base, off + e - 1) == 0x20) e -= 1
-    }
-    (s.toLong << 32) | e.toLong
+    while (e > s && Platform.getByte(base, off + e - 1) == 0x20) e -= 1
+    e
   }
 
   /** Every field of `line` as a zero-copy slice (called from both eval
@@ -148,11 +150,11 @@ object FixedSlice {
     var b = 0
     var f = 0
     while (f < out.length) {
-      val e = fieldEnd(base, off, numBytes, prefix, b, starts(f), starts(f) + lens(f))
-      val se = span(base, off, b, e, trimmed(f))
-      val s = (se >>> 32).toInt
-      out(f) = UTF8String.fromAddress(base, off + s, se.toInt - s)
+      var s = b
+      var e = fieldEnd(base, off, numBytes, prefix, b, starts(f), starts(f) + lens(f))
       b = e
+      if (trimmed(f)) { s = trimStart(base, off, s, e); e = trimEnd(base, off, s, e) }
+      out(f) = UTF8String.fromAddress(base, off + s, e - s)
       f += 1
     }
     new GenericArrayData(out)

@@ -120,19 +120,14 @@ object FixedSchema {
     s.fields.foreach { f =>
       val fn: ObjectNode = arr.addObject()
       fn.put("name", f.name)
-      val physical = f.avroType match {
-        case "Bytes" => "bytes" // reference spells it with a capital B (common/avro.go:44)
-        case t       => t
-      }
       val typeNode: JsonNode = f.logicalType match {
         case Some(lt) =>
           val tn = mapper.createObjectNode()
-          // A date/timestamp logical type rides on its Avro carrier.
-          tn.put("type", if (f.fixedType.temporal) f.fixedType.carrier else physical)
+          tn.put("type", FixedType.avroName(f))
           tn.put("logicalType", lt)
           tn
         case None =>
-          mapper.getNodeFactory.textNode(physical)
+          mapper.getNodeFactory.textNode(FixedType.avroName(f))
       }
       if (nullable) {
         // ["null", T] with a null default — the standard Avro optional

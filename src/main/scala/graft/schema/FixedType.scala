@@ -22,9 +22,6 @@ sealed abstract class FixedType(val name: String, val code: Int, val sparkType: 
   /** date, timestamp-millis, timestamp-micros: one timestamp text
     * format, NTZ micros in Spark's render struct, seconds under Compat. */
   def temporal: Boolean = code >= FixedType.CDate
-
-  /** The Avro type a temporal logical type rides on. */
-  def carrier: String = if (code == FixedType.CDate) "int" else "long"
 }
 
 object FixedType {
@@ -68,4 +65,12 @@ object FixedType {
             "fixed2avro/ColumnBuilder.go:420-421)"
         else "")))
   }
+
+  /** The Avro type name standard schema JSON gives field `f`: a
+    * date/timestamp logicalType rides on its carrier (`int` for date,
+    * `long` for the timestamps); any other column keeps its physical
+    * name, with the reference's `Bytes` spelled `bytes`. */
+  def avroName(f: FixedField): String =
+    if (f.logicalType.isDefined && f.fixedType.temporal) { if (f.fixedType == Date) "int" else "long" }
+    else if (f.avroType == "Bytes") "bytes" else f.avroType
 }
