@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -13,18 +13,114 @@ import org.apache.spark.sql.types._
   * The declarative forms (`aggregate(zip_with(a, b, *), +)`) are
   * correct but interpreted: Spark's higher-order functions evaluate
   * per-element lambdas with boxing, which at 25M pairs x 64 dims
-  * (similarity_topk, sf0.1) is minutes of pure overhead. These
-  * expressions generate a primitive Java loop inside whole-stage
-  * codegen — the preference order of SURVEY.md §7.4: built-ins first,
-  * a custom `Expression` with `doGenCode` where built-ins measurably
-  * can't hold the hot path.
+  * (similarity_topk, sf0.1) is minutes of pure overhead, and they drop
+  * their stage out of whole-stage codegen.
+  *
+  * One kernel per expression: each states its arithmetic once, as a
+  * Scala `kernel` method, and its corruption rule once, as `valid`.
+  * Interpreted evaluation and generated code both call them — the
+  * generated side through one shared template ([[Kernel]]) that emits
+  * a single call on a reference to the expression, the MinHash/SimHash
+  * shape — so the two paths cannot drift apart (a spec compares them).
   */
 object VectorOps {
+
+  /** The shared codegen template. `kernel` is typed on the children's
+    * Java types (`ArrayData`, `double`, `long`); generated code calls
+    * that typed method directly, interpreted `nullSafeEval` reaches it
+    * through the erased bridge. A failed `valid` is a null result, and
+    * an object-valued kernel may return null itself. A primitive
+    * kernel hands back an unboxed value, so a per-pair kernel
+    * allocates nothing on its non-null path. */
+  trait Kernel extends Expression {
+    override def nullIntolerant: Boolean = true
+
+    protected def kernelCode(ctx: CodegenContext, ev: ExprCode, args: String*): String = {
+      val ref = ctx.addReferenceObj("kernel", this)
+      val in = args.mkString(", ")
+      val call = s"${ev.value} = (${CodeGenerator.javaType(dataType)}) $ref.kernel($in);"
+      if (!nullable) call
+      else if (CodeGenerator.isPrimitiveType(dataType))
+        s"${ev.isNull} = !$ref.valid($in);\nif (!${ev.isNull}) { $call }"
+      else s"if ($ref.valid($in)) { $call }\n${ev.isNull} = ${ev.value} == null;"
+    }
+  }
+
+  /** A [[Kernel]] over one child of Java type `A`. */
+  trait UnaryKernel[A] extends UnaryExpression with Kernel {
+    def valid(a: A): Boolean = true
+    def kernel(a: A): Any
+    override def nullSafeEval(a: Any): Any =
+      if (valid(a.asInstanceOf[A])) kernel(a.asInstanceOf[A]) else null
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, a => kernelCode(ctx, ev, a))
+  }
+
+  /** A [[Kernel]] over two children of Java types `A` and `B`. */
+  trait BinaryKernel[A, B] extends BinaryExpression with Kernel {
+    def valid(a: A, b: B): Boolean = true
+    def kernel(a: A, b: B): Any
+    override def nullSafeEval(a: Any, b: Any): Any =
+      if (valid(a.asInstanceOf[A], b.asInstanceOf[B])) kernel(a.asInstanceOf[A], b.asInstanceOf[B])
+      else null
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) => kernelCode(ctx, ev, a, b))
+  }
+
+  /** A matrix every row of which has the first row's length: the
+    * kernels read `x` and each row over that one dimension. */
+  private def rectangular(m: Array[Array[Double]]): Boolean =
+    m.nonEmpty && m.forall(_.length == m(0).length)
+
+  /** `x · c` over `c`'s length (`valid` has matched `x` to it). */
+  private def dot(x: ArrayData, c: Array[Double]): Double = {
+    var s = 0.0
+    var i = 0
+    while (i < c.length) { s += x.getDouble(i) * c(i); i += 1 }
+    s
+  }
+
+  /** Integer L2² of `x`'s subvector at `off` to the same span of `cw`. */
+  private def l2sq(x: ArrayData, cw: Array[Long], off: Int, dims: Int): Long = {
+    var d = 0L
+    var i = off
+    while (i < off + dims) { val t = x.getLong(i) - cw(i); d += t * t; i += 1 }
+    d
+  }
+
+  /** Every code lies in [0, bound): an out-of-range code is index
+    * corruption, and reading through it would leave the table. */
+  private def codesIn(codes: ArrayData, bound: Int): Boolean = {
+    val m = codes.numElements()
+    var s = 0
+    while (s < m) {
+      val j = codes.getInt(s)
+      if (j < 0 || j >= bound) return false
+      s += 1
+    }
+    true
+  }
+
+  /** `cast(round(v · scale) as long)` with EXACTLY Spark's `round`
+    * arithmetic (`BigDecimal.valueOf` of the double product,
+    * `setScale(0, HALF_UP)` — ties away from zero — then the
+    * integral-value cast). Long-range guard: the chain this replaces
+    * ended in an ANSI double→long cast, which THROWS on overflow —
+    * Scala's toLong would silently saturate instead, a semantic
+    * divergence on corrupt inputs (a sane embedding component cannot
+    * reach 2⁶³/scale). `what` names the operand in the message. */
+  private def gridLong(v: Double, scale: Int, what: String): Long = {
+    val rounded = java.math.BigDecimal.valueOf(v * scale)
+      .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+    if (rounded < -9.223372036854776e18 || rounded >= 9.223372036854776e18)
+      throw new ArithmeticException(s"$what $v * $scale overflows the long grid")
+    rounded.toLong
+  }
 
   /** Dot product of two array<double> columns (null if lengths differ —
     * embeddings are fixed-dim, a mismatch is data corruption). */
   case class DotProduct(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
+      extends BinaryKernel[ArrayData, ArrayData] with ImplicitCastInputTypes {
     // Coerce SQL-surface inputs (array(3.0, 4.0) parses as
     // array<decimal>) to the primitive layout the loop reads; the
     // Column-API call sites already pass exact types, so the casts
@@ -33,7 +129,6 @@ object VectorOps {
       Seq(ArrayType(DoubleType), ArrayType(DoubleType))
     override def dataType: DataType = DoubleType
     override def prettyName: String = "vec_dot"
-    override def nullIntolerant: Boolean = true
     // Length mismatch yields a data-dependent null regardless of child
     // nullability; deriving nullable from the children would make
     // codegen assign `isNull` into a `false` literal (Janino failure →
@@ -41,73 +136,33 @@ object VectorOps {
     // expression).
     override def nullable: Boolean = true
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    override def valid(x: ArrayData, y: ArrayData): Boolean = x.numElements() == y.numElements()
+    override def kernel(x: ArrayData, y: ArrayData): Double = {
       val n = x.numElements()
-      if (n != y.numElements()) return null
       var s = 0.0
       var i = 0
       while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
       s
     }
 
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  double $s = 0.0;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    $s += $a.getDouble($i) * $b.getDouble($i);
-           |  }
-           |  ${ev.value} = $s;
-           |}
-         """.stripMargin
-      })
-
     override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
       copy(left = l, right = r)
   }
 
   /** L2 norm of an array<double> column. */
-  case class L2Norm(child: Expression) extends UnaryExpression
+  case class L2Norm(child: Expression) extends UnaryKernel[ArrayData]
       with ImplicitCastInputTypes {
     override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
     override def dataType: DataType = DoubleType
     override def prettyName: String = "vec_norm"
-    override def nullIntolerant: Boolean = true
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
+    override def kernel(x: ArrayData): Double = {
+      val n = x.numElements()
       var s = 0.0
       var i = 0
-      val n = x.numElements()
       while (i < n) { val v = x.getDouble(i); s += v * v; i += 1 }
       math.sqrt(s)
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, a => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        val v = ctx.freshName("v")
-        s"""
-           |int $n = $a.numElements();
-           |double $s = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double $v = $a.getDouble($i);
-           |  $s += $v * $v;
-           |}
-           |${ev.value} = java.lang.Math.sqrt($s);
-         """.stripMargin
-      })
 
     override protected def withNewChildInternal(c: Expression): L2Norm = copy(child = c)
   }
@@ -124,79 +179,32 @@ object VectorOps {
     * candidate shuffles — no per-band string allocation, and the
     * bucket join compares ints, not UTF8 bytes. */
   case class HyperplaneSignBands(child: Expression, planes: Array[Array[Double]],
-      rowsPerBand: Int) extends UnaryExpression {
-    require(planes.nonEmpty && planes.length % rowsPerBand == 0)
+      rowsPerBand: Int) extends UnaryKernel[ArrayData] {
+    require(rectangular(planes) && planes.length % rowsPerBand == 0)
     require(rowsPerBand <= 31, s"sign bits must pack into an int: $rowsPerBand > 31")
     override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
     override def prettyName: String = "vec_lsh_bands"
-    override def nullIntolerant: Boolean = true
     // Dimension mismatch is data corruption and yields NULL, the
     // DotProduct/L2SqLong convention: a silently prefix-truncated dot
     // would hand the corrupt vector a plausible signature and flow it
     // through the LSH joins undetectably.
     override def nullable: Boolean = true
 
-    @transient private lazy val nBands = planes.length / rowsPerBand
-    @transient private lazy val dim0 = planes(0).length
-
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val dim = x.numElements()
-      if (dim != dim0) return null
-      val out = new Array[Int](nBands)
+    override def valid(x: ArrayData): Boolean = x.numElements() == planes(0).length
+    override def kernel(x: ArrayData): ArrayData = {
+      val out = new Array[Int](planes.length / rowsPerBand)
       var b = 0
-      while (b < nBands) {
+      while (b < out.length) {
         var sig = 0
-        var r = 0
-        while (r < rowsPerBand) {
-          val p = planes(b * rowsPerBand + r)
-          var s = 0.0
-          var i = 0
-          val n = math.min(dim, p.length)
-          while (i < n) { s += x.getDouble(i) * p(i); i += 1 }
-          sig = (sig << 1) | (if (s >= 0) 1 else 0)
+        var r = b * rowsPerBand
+        while (r < (b + 1) * rowsPerBand) {
+          sig = (sig << 1) | (if (dot(x, planes(r)) >= 0) 1 else 0)
           r += 1
         }
         out(b) = sig
         b += 1
       }
       new GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val planesRef = ctx.addReferenceObj("planes", planes, "double[][]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val dim = ctx.freshName("dim")
-        val out = ctx.freshName("out")
-        val sig = ctx.freshName("sig")
-        val b = ctx.freshName("b")
-        val r = ctx.freshName("r")
-        val p = ctx.freshName("p")
-        val s = ctx.freshName("s")
-        val i = ctx.freshName("i")
-        val n = ctx.freshName("n")
-        s"""
-           |int $dim = $a.numElements();
-           |if ($dim != $dim0) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  int[] $out = new int[$nBands];
-           |  for (int $b = 0; $b < $nBands; $b++) {
-           |    int $sig = 0;
-           |    for (int $r = 0; $r < $rowsPerBand; $r++) {
-           |      double[] $p = $planesRef[$b * $rowsPerBand + $r];
-           |      double $s = 0.0;
-           |      for (int $i = 0; $i < $dim; $i++) {
-           |        $s += $a.getDouble($i) * $p[$i];
-           |      }
-           |      $sig = ($sig << 1) | ($s >= 0.0 ? 1 : 0);
-           |    }
-           |    $out[$b] = $sig;
-           |  }
-           |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           |}
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): HyperplaneSignBands =
@@ -210,50 +218,22 @@ object VectorOps {
     * `aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), +)` form boxes
     * two lambdas per element (a spec pins the two forms equal). */
   case class L2SqLong(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
+      extends BinaryKernel[ArrayData, ArrayData] with ImplicitCastInputTypes {
     override def inputTypes: Seq[DataType] =
       Seq(ArrayType(LongType), ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "vec_l2sq_long"
-    override def nullIntolerant: Boolean = true
     // Same data-dependent null as DotProduct: see its `nullable` note.
     override def nullable: Boolean = true
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
+    override def valid(x: ArrayData, y: ArrayData): Boolean = x.numElements() == y.numElements()
+    override def kernel(x: ArrayData, y: ArrayData): Long = {
       val n = x.numElements()
-      if (n != y.numElements()) return null
       var s = 0L
       var i = 0
-      while (i < n) {
-        val d = x.getLong(i) - y.getLong(i)
-        s += d * d
-        i += 1
-      }
+      while (i < n) { val d = x.getLong(i) - y.getLong(i); s += d * d; i += 1 }
       s
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n")
-        val i = ctx.freshName("i")
-        val s = ctx.freshName("s")
-        val d = ctx.freshName("d")
-        s"""
-           |int $n = $a.numElements();
-           |if ($n != $b.numElements()) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  long $s = 0L;
-           |  for (int $i = 0; $i < $n; $i++) {
-           |    long $d = $a.getLong($i) - $b.getLong($i);
-           |    $s += $d * $d;
-           |  }
-           |  ${ev.value} = $s;
-           |}
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): L2SqLong =
       copy(left = l, right = r)
@@ -279,65 +259,20 @@ object VectorOps {
     * DotProduct/HyperplaneSignBands corruption convention. */
   case class CentroidSims(left: Expression, right: Expression,
       centroids: Array[Array[Double]], norms: Array[Double])
-      extends BinaryExpression with ImplicitCastInputTypes {
-    require(centroids.nonEmpty && centroids.length == norms.length,
+      extends BinaryKernel[ArrayData, Double] with ImplicitCastInputTypes {
+    require(rectangular(centroids) && centroids.length == norms.length,
       s"centroid matrix/norms mismatch: ${centroids.length} vs ${norms.length}")
     override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), DoubleType)
     override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
     override def prettyName: String = "vec_centroid_sims"
-    override def nullIntolerant: Boolean = true
     override def nullable: Boolean = true
 
-    @transient private lazy val k = centroids.length
-    @transient private lazy val dim0 = centroids(0).length
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val nrm = b.asInstanceOf[Double]
-      if (x.numElements() != dim0) return null
-      val out = new Array[Any](k)
-      var j = 0
-      while (j < k) {
-        val c = centroids(j)
-        var s = 0.0
-        var i = 0
-        while (i < dim0) { s += x.getDouble(i) * c(i); i += 1 }
+    override def valid(x: ArrayData, nrm: Double): Boolean = x.numElements() == centroids(0).length
+    override def kernel(x: ArrayData, nrm: Double): ArrayData =
+      new GenericArrayData(Array.tabulate[Any](centroids.length) { j =>
         val den = nrm * norms(j)
-        out(j) = if (den == 0.0) null else java.lang.Double.valueOf(s / den)
-        j += 1
-      }
-      new GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val cRef = ctx.addReferenceObj("centroids", centroids, "double[][]")
-      val nRef = ctx.addReferenceObj("norms", norms, "double[]")
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val out = ctx.freshName("out")
-        val j = ctx.freshName("j")
-        val c = ctx.freshName("c")
-        val s = ctx.freshName("s")
-        val i = ctx.freshName("i")
-        val den = ctx.freshName("den")
-        s"""
-           |if ($a.numElements() != $dim0) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  Object[] $out = new Object[$k];
-           |  for (int $j = 0; $j < $k; $j++) {
-           |    double[] $c = $cRef[$j];
-           |    double $s = 0.0;
-           |    for (int $i = 0; $i < $dim0; $i++) {
-           |      $s += $a.getDouble($i) * $c[$i];
-           |    }
-           |    double $den = $b * $nRef[$j];
-           |    $out[$j] = ($den == 0.0) ? null : (Object) java.lang.Double.valueOf($s / $den);
-           |  }
-           |  ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-           |}
-         """.stripMargin
+        if (den == 0.0) null else java.lang.Double.valueOf(dot(x, centroids(j)) / den)
       })
-    }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): CentroidSims =
       copy(left = l, right = r)
@@ -365,7 +300,9 @@ object VectorOps {
     * exactly the way an IVF probe list is: a vector whose true cell's
     * group ranks below the probe cut gets its best PROBED cell. The
     * fixtures (k ≤ 63) never reach the two-level threshold, so every
-    * oracle replays the flat rule unchanged.
+    * oracle replays the flat rule unchanged. The matrix and probe loop
+    * live behind the reference object, so the generated code stays
+    * constant-size however large k grows.
     *
     * Null semantics mirror the flat composition: wrong input dim or
     * zero query norm → null result; zero-norm fine centroids are
@@ -376,8 +313,8 @@ object VectorOps {
   case class CentroidArgmaxTwoLevel(left: Expression, right: Expression,
       centroids: Array[Array[Double]], norms: Array[Double],
       groupSize: Int, probeGroups: Int)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    require(centroids.nonEmpty && centroids.length == norms.length,
+      extends BinaryKernel[ArrayData, Double] with ImplicitCastInputTypes {
+    require(rectangular(centroids) && centroids.length == norms.length,
       s"centroid matrix/norms mismatch: ${centroids.length} vs ${norms.length}")
     require(groupSize > 0 && probeGroups > 0,
       s"two-level dials must be positive: groupSize=$groupSize probeGroups=$probeGroups")
@@ -386,7 +323,6 @@ object VectorOps {
       StructField("pos", IntegerType, nullable = false),
       StructField("sim", DoubleType, nullable = false)))
     override def prettyName: String = "centroid_argmax_two_level"
-    override def nullIntolerant: Boolean = true
     override def nullable: Boolean = true
 
     @transient private lazy val k = centroids.length
@@ -416,10 +352,8 @@ object VectorOps {
     @transient private lazy val coarseNorm: Array[Double] =
       coarse.map(c => math.sqrt(c.map(x => x * x).sum))
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val nrm = b.asInstanceOf[Double]
-      if (x.numElements() != dim0 || nrm == 0.0) return null
+    override def valid(x: ArrayData, nrm: Double): Boolean = x.numElements() == dim0 && nrm != 0.0
+    override def kernel(x: ArrayData, nrm: Double): InternalRow = {
       val w = math.min(probeGroups, numGroups)
       // Rank coarse groups: top-w by (sim desc, group asc). w is small
       // (a constant dial), so an insertion pass over a w-slot buffer
@@ -429,25 +363,15 @@ object VectorOps {
       var filled = 0
       var g = 0
       while (g < numGroups) {
-        val cm = coarse(g)
-        var s = 0.0
-        var i = 0
-        while (i < dim0) { s += x.getDouble(i) * cm(i); i += 1 }
         val den = nrm * coarseNorm(g)
-        val sim = if (den == 0.0) Double.NegativeInfinity else s / den
+        val sim = if (den == 0.0) Double.NegativeInfinity else dot(x, coarse(g)) / den
         // insert (sim, g) if it beats the current worst slot
-        if (filled < w) {
-          var p = filled
+        if (filled < w || sim > selSim(w - 1)) {
+          var p = if (filled < w) filled else w - 1
           while (p > 0 && selSim(p - 1) < sim) {
             selSim(p) = selSim(p - 1); selIdx(p) = selIdx(p - 1); p -= 1
           }
-          selSim(p) = sim; selIdx(p) = g; filled += 1
-        } else if (sim > selSim(w - 1)) {
-          var p = w - 1
-          while (p > 0 && selSim(p - 1) < sim) {
-            selSim(p) = selSim(p - 1); selIdx(p) = selIdx(p - 1); p -= 1
-          }
-          selSim(p) = sim; selIdx(p) = g
+          selSim(p) = sim; selIdx(p) = g; filled = math.min(filled + 1, w)
         }
         g += 1
       }
@@ -459,17 +383,12 @@ object VectorOps {
       var bestSim = 0.0
       var sel = 0
       while (sel < filled) {
-        val gg = selIdx(sel)
-        var j = gg * groupSize
+        var j = selIdx(sel) * groupSize
         val to = math.min(j + groupSize, k)
         while (j < to) {
           val den = nrm * norms(j)
           if (den != 0.0) {
-            val c = centroids(j)
-            var s = 0.0
-            var i = 0
-            while (i < dim0) { s += x.getDouble(i) * c(i); i += 1 }
-            val sim = s / den
+            val sim = dot(x, centroids(j)) / den
             if (bestPos < 0 || sim > bestSim) { bestSim = sim; bestPos = j }
           }
           j += 1
@@ -477,22 +396,6 @@ object VectorOps {
         sel += 1
       }
       if (bestPos < 0) null else InternalRow(bestPos + 1, bestSim)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // Constant-size generated code regardless of k: the whole matrix
-      // and probe loop live behind one reference object, same pattern
-      // as PqCodeArgmin — the point is that k can reach 10⁵ without
-      // the stage falling out of whole-stage codegen.
-      val ref = ctx.addReferenceObj("twoLevel", this, classOf[CentroidArgmaxTwoLevel].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val r = ctx.freshName("r")
-        s"""
-           |Object $r = $ref.nullSafeEval($a, $b);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression)
@@ -513,12 +416,12 @@ object VectorOps {
     * candidates (128 at the fixture geometry) into one projection —
     * outside whole-stage codegen the stage ran interpreted, and the
     * plan carried every codeword as a separate literal. One reference
-    * object + one generated loop keeps plan and code constant-size.
+    * object + one generated call keeps plan and code constant-size.
     * Only candidates in `classes` are considered — an uninhabited
     * residue class is NOT a zero codeword (the dense-with-zeros trap). */
   case class PqCodeArgmin(child: Expression, classes: Array[Int],
       codewords: Array[Array[Long]], m: Int, dims: Int)
-      extends UnaryExpression with ImplicitCastInputTypes {
+      extends UnaryKernel[ArrayData] with ImplicitCastInputTypes {
     require(classes.nonEmpty && classes.length == codewords.length && m > 0 && dims > 0)
     require(classes.sameElements(classes.sorted),
       "pq_code_argmin: classes must be sorted (the smallest-class tie-break)")
@@ -535,16 +438,11 @@ object VectorOps {
       StructField("pq_code", LongType, nullable = false),
       StructField("distortion", LongType, nullable = false)))
     override def prettyName: String = "pq_code_argmin"
-    override def nullIntolerant: Boolean = true
     // Length mismatch (corrupt vector) → null, the vec_dot convention.
     override def nullable: Boolean = true
 
-    @transient private lazy val n = classes.length
-    @transient private lazy val total = m * dims
-
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      if (x.numElements() != total) return null
+    override def valid(x: ArrayData): Boolean = x.numElements() == m * dims
+    override def kernel(x: ArrayData): InternalRow = {
       val codes = new Array[Int](m)
       var pq = 0L
       var dist = 0L
@@ -553,16 +451,8 @@ object VectorOps {
         var bestD = Long.MaxValue
         var bestJ = 0
         var j = 0
-        while (j < n) {
-          val cw = codewords(j)
-          var d = 0L
-          var i = 0
-          val off = s * dims
-          while (i < dims) {
-            val t = x.getLong(off + i) - cw(off + i)
-            d += t * t
-            i += 1
-          }
+        while (j < classes.length) {
+          val d = l2sq(x, codewords(j), s * dims, dims)
           if (d < bestD) { bestD = d; bestJ = classes(j) }
           j += 1
         }
@@ -572,18 +462,6 @@ object VectorOps {
         s += 1
       }
       InternalRow(new GenericArrayData(codes), pq, dist)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("pqArgmin", this, classOf[PqCodeArgmin].getName)
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("r")
-        s"""
-           |Object $r = $ref.nullSafeEval($a);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): PqCodeArgmin =
@@ -597,53 +475,27 @@ object VectorOps {
     * formulation's zero-filled rows). Output feeds [[AdcLookup]]. */
   case class PqQueryLut(child: Expression, classes: Array[Int],
       codewords: Array[Array[Long]], m: Int, dims: Int, numClasses: Int)
-      extends UnaryExpression with ImplicitCastInputTypes {
+      extends UnaryKernel[ArrayData] with ImplicitCastInputTypes {
     require(classes.nonEmpty && classes.length == codewords.length && m > 0 && dims > 0)
     require(classes.forall(c => c >= 0 && c < numClasses))
     override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override def prettyName: String = "pq_query_lut"
-    override def nullIntolerant: Boolean = true
     override def nullable: Boolean = true
 
-    @transient private lazy val n = classes.length
-    @transient private lazy val total = m * dims
-
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      if (x.numElements() != total) return null
+    override def valid(x: ArrayData): Boolean = x.numElements() == m * dims
+    override def kernel(x: ArrayData): ArrayData = {
       val out = new Array[Long](m * numClasses)
       var s = 0
       while (s < m) {
         var j = 0
-        while (j < n) {
-          val cw = codewords(j)
-          var d = 0L
-          var i = 0
-          val off = s * dims
-          while (i < dims) {
-            val t = x.getLong(off + i) - cw(off + i)
-            d += t * t
-            i += 1
-          }
-          out(s * numClasses + classes(j)) = d
+        while (j < classes.length) {
+          out(s * numClasses + classes(j)) = l2sq(x, codewords(j), s * dims, dims)
           j += 1
         }
         s += 1
       }
       new GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val ref = ctx.addReferenceObj("pqLut", this, classOf[PqQueryLut].getName)
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("r")
-        s"""
-           |Object $r = $ref.nullSafeEval($a);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): PqQueryLut =
@@ -666,68 +518,33 @@ object VectorOps {
     * codes, or an out-of-range code — all index corruption, same
     * contract as the length-mismatch null above. */
   case class AdcLookup(left: Expression, right: Expression)
-      extends BinaryExpression with ImplicitCastInputTypes {
+      extends BinaryKernel[ArrayData, ArrayData] with ImplicitCastInputTypes {
     override def inputTypes: Seq[DataType] =
       Seq(ArrayType(IntegerType), ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "pq_adc"
-    override def nullIntolerant: Boolean = true
     // Data-dependent null: see DotProduct's `nullable` note.
     override def nullable: Boolean = true
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val codes = a.asInstanceOf[ArrayData]
-      val lut = b.asInstanceOf[ArrayData]
+    override def valid(codes: ArrayData, lut: ArrayData): Boolean = {
       val m = codes.numElements()
-      if (m == 0 || lut.numElements() % m != 0) return null
+      m > 0 && lut.numElements() % m == 0 && codesIn(codes, lut.numElements() / m)
+    }
+    override def kernel(codes: ArrayData, lut: ArrayData): Long = {
+      val m = codes.numElements()
       val stride = lut.numElements() / m
       var sum = 0L
       var s = 0
-      while (s < m) {
-        val j = codes.getInt(s)
-        if (j < 0 || j >= stride) return null
-        sum += lut.getLong(s * stride + j)
-        s += 1
-      }
+      while (s < m) { sum += lut.getLong(s * stride + codes.getInt(s)); s += 1 }
       sum
     }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val m = ctx.freshName("m")
-        val s = ctx.freshName("s")
-        val sum = ctx.freshName("sum")
-        val stride = ctx.freshName("stride")
-        val j = ctx.freshName("j")
-        s"""
-           |int $m = $a.numElements();
-           |if ($m == 0 || $b.numElements() % $m != 0) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  int $stride = $b.numElements() / $m;
-           |  long $sum = 0L;
-           |  for (int $s = 0; $s < $m && !${ev.isNull}; $s++) {
-           |    int $j = $a.getInt($s);
-           |    if ($j < 0 || $j >= $stride) {
-           |      ${ev.isNull} = true;
-           |    } else {
-           |      $sum += $b.getLong($s * $stride + $j);
-           |    }
-           |  }
-           |  ${ev.value} = $sum;
-           |}
-         """.stripMargin
-      })
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcLookup =
       copy(left = l, right = r)
   }
 
   /** The shared fixed-point grid cast in ONE fused expression:
-    * element-wise `cast(round(x · scale) as long)` with EXACTLY
-    * Spark's `round` arithmetic (`java.math.BigDecimal.valueOf` of
-    * the double product, `setScale(0, HALF_UP)` — ties away from
-    * zero — then the integral-value cast), so the output is
+    * element-wise `cast(round(x · scale) as long)` ([[gridLong]]),
     * bit-identical to the `transform(v, x -> round(x*scale).cast
     * (long))` chain it replaces; a spec pins that row-for-row
     * because every persisted index artifact (PQ codebook, SQ stats,
@@ -739,51 +556,16 @@ object VectorOps {
     * paid a boxed interpreted lambda per element. Null elements pass
     * through as null, like the cast chain. */
   case class VecGrid(child: Expression, scale: Int)
-      extends UnaryExpression with ImplicitCastInputTypes {
+      extends UnaryKernel[ArrayData] with ImplicitCastInputTypes {
     require(scale > 0, s"vec_grid: scale must be positive, got $scale")
     override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
     override def dataType: DataType = ArrayType(LongType, containsNull = true)
     override def prettyName: String = "vec_grid"
-    override def nullIntolerant: Boolean = true
 
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      val n = x.numElements()
-      val out = new Array[Any](n)
-      var i = 0
-      while (i < n) {
-        if (!x.isNullAt(i)) {
-          val rounded = java.math.BigDecimal.valueOf(x.getDouble(i) * scale)
-            .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
-          // Long-range guard: the chain this replaces ended in an ANSI
-          // double→long cast, which THROWS on overflow — Scala's
-          // toLong would silently saturate instead, a semantic
-          // divergence on corrupt inputs (a sane embedding component
-          // cannot reach 2⁶³/scale).
-          if (rounded < -9.223372036854776e18 || rounded >= 9.223372036854776e18)
-            throw new ArithmeticException(
-              s"vec_grid: ${x.getDouble(i)} * $scale overflows the long grid")
-          out(i) = rounded.toLong
-        }
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // Delegate via reference object: the per-element BigDecimal walk
-      // is the cost either way; the win is the STAGE staying inside
-      // whole-stage codegen (no lambdafunction fallback) and zero
-      // boxed lambda dispatch.
-      val ref = ctx.addReferenceObj("vecGrid", this, classOf[VecGrid].getName)
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("r")
-        s"""
-           |Object $r = $ref.nullSafeEval($a);
-           |${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r;
-         """.stripMargin
+    override def kernel(x: ArrayData): ArrayData =
+      new GenericArrayData(Array.tabulate[Any](x.numElements()) { i =>
+        if (x.isNullAt(i)) null else gridLong(x.getDouble(i), scale, "vec_grid:")
       })
-    }
 
     override protected def withNewChildInternal(c: Expression): VecGrid =
       copy(child = c)
@@ -807,61 +589,21 @@ object VectorOps {
     * null like VecGrid. */
   case class VecResidualGrid(left: Expression, right: Expression,
       centroids: Array[Array[Double]], scale: Int)
-      extends BinaryExpression with ImplicitCastInputTypes {
-    require(centroids.nonEmpty, "vec_residual_grid: empty centroid matrix")
+      extends BinaryKernel[ArrayData, Long] with ImplicitCastInputTypes {
+    require(rectangular(centroids), "vec_residual_grid: empty or ragged centroid matrix")
     require(scale > 0, s"vec_residual_grid: scale must be positive, got $scale")
     override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType), LongType)
     override def dataType: DataType = ArrayType(LongType, containsNull = true)
     override def prettyName: String = "vec_residual_grid"
-    override def nullIntolerant: Boolean = true
     override def nullable: Boolean = true
 
-    @transient private lazy val k = centroids.length
-    @transient private lazy val dim0 = centroids(0).length
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val cell = b.asInstanceOf[Long]
-      if (cell < 0 || cell >= k) return null
-      val x = a.asInstanceOf[ArrayData]
-      if (x.numElements() != dim0) return null
+    override def valid(x: ArrayData, cell: Long): Boolean =
+      cell >= 0 && cell < centroids.length && x.numElements() == centroids(0).length
+    override def kernel(x: ArrayData, cell: Long): ArrayData = {
       val c = centroids(cell.toInt)
-      val out = new Array[Any](dim0)
-      var i = 0
-      while (i < dim0) {
-        if (!x.isNullAt(i)) {
-          val rounded = java.math.BigDecimal.valueOf((x.getDouble(i) - c(i)) * scale)
-            .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
-          // Same loud overflow guard as VecGrid: the ANSI-cast chain
-          // this fuses would THROW, and a silent toLong saturation is a
-          // semantic divergence on corrupt inputs.
-          if (rounded < -9.223372036854776e18 || rounded >= 9.223372036854776e18)
-            throw new ArithmeticException(
-              s"vec_residual_grid: residual ${x.getDouble(i) - c(i)} * $scale " +
-                "overflows the long grid")
-          out(i) = rounded.toLong
-        }
-        i += 1
-      }
-      new GenericArrayData(out)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // Delegate via reference object (the VecGrid pattern): the
-      // BigDecimal walk is the cost either way; the win is the stage
-      // staying inside whole-stage codegen. Unlike VecGrid the result
-      // can be null (bad cell / bad dim), so the delegate's null maps
-      // back onto ev.isNull.
-      val ref = ctx.addReferenceObj("vecResGrid", this, classOf[VecResidualGrid].getName)
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val r = ctx.freshName("r")
-        s"""
-           |Object $r = $ref.nullSafeEval($a, (Object) java.lang.Long.valueOf($b));
-           |if ($r == null) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $r;
-           |}
-         """.stripMargin
+      new GenericArrayData(Array.tabulate[Any](c.length) { i =>
+        if (x.isNullAt(i)) null
+        else gridLong(x.getDouble(i) - c(i), scale, "vec_residual_grid: residual")
       })
     }
 
@@ -890,7 +632,7 @@ object VectorOps {
     * wrong-dimension vector, the vec_dot corruption convention. */
   case class SqEncode(child: Expression, mins: Array[Long], maxs: Array[Long],
       levels: Int)
-      extends UnaryExpression with ImplicitCastInputTypes {
+      extends UnaryKernel[ArrayData] with ImplicitCastInputTypes {
     require(mins.nonEmpty && mins.length == maxs.length,
       s"sq_encode: stats arrays must be non-empty and equal-length " +
         s"(got ${mins.length} mins, ${maxs.length} maxs)")
@@ -903,49 +645,27 @@ object VectorOps {
       StructField("codes", ArrayType(IntegerType, containsNull = false), nullable = false),
       StructField("distortion", LongType, nullable = false)))
     override def prettyName: String = "sq_encode"
-    override def nullIntolerant: Boolean = true
     // Dimension mismatch (corrupt vector) → null, the vec_dot convention.
     override def nullable: Boolean = true
 
-    @transient private lazy val dim = mins.length
-
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      if (x.numElements() != dim) return null
-      val codes = new Array[Int](dim)
+    override def valid(x: ArrayData): Boolean = x.numElements() == mins.length
+    override def kernel(x: ArrayData): InternalRow = {
+      val codes = new Array[Int](mins.length)
       var dist = 0L
       var i = 0
-      while (i < dim) {
+      while (i < mins.length) {
         val xi = x.getLong(i)
         val mn = mins(i)
         val mx = maxs(i)
         val xc = if (xi < mn) mn else if (xi > mx) mx else xi
         val rng = mx - mn
         val q = if (rng == 0L) 0 else (((xc - mn) * (levels - 1)) / rng).toInt
-        val recon = mn + q * rng / (levels - 1)
-        val err = xi - recon
+        val err = xi - (mn + q * rng / (levels - 1))
         codes(i) = q
         dist += err * err
         i += 1
       }
       InternalRow(new GenericArrayData(codes), dist)
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      // Reference-object delegation (the PqCodeArgmin pattern): the
-      // stats live behind one object, generated code constant-size in
-      // dim — this is the once-per-row corpus map pass, not the pair
-      // stage, so a delegate call is fine and keeps the stage inside
-      // whole-stage codegen.
-      val ref = ctx.addReferenceObj("sqEncode", this, classOf[SqEncode].getName)
-      nullSafeCodeGen(ctx, ev, a => {
-        val r = ctx.freshName("r")
-        s"""
-           |Object $r = $ref.nullSafeEval($a);
-           |if ($r == null) { ${ev.isNull} = true; }
-           |else { ${ev.value} = (org.apache.spark.sql.catalyst.InternalRow) $r; }
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): SqEncode =
@@ -955,17 +675,16 @@ object VectorOps {
   /** SQ asymmetric distance: integer L2² between a candidate's
     * reconstruction (decoded from its SQ codes via the shared stats)
     * and a query's exact grid vector — the SQ dual of [[AdcLookup]],
-    * and like it written as inline primitive codegen because it IS
-    * the O(N·queries) hot pair stage: the dim×levels reconstruction
-    * table is precomputed once per plan as one flat long[] reference
-    * object (entry i·levels + q = dimension i's decoded value for
-    * code q), so each pair costs dim loads/mults, no per-pair decode
+    * and like it the O(N·queries) hot pair stage: the dim×levels
+    * reconstruction table is precomputed once per plan as one flat
+    * long[] (entry i·levels + q = dimension i's decoded value for code
+    * q), so each pair costs dim loads/mults, no per-pair decode
     * arithmetic and no allocation. Null on a wrong-dimension input or
     * an out-of-range code — index corruption, the AdcLookup
     * contract. */
   case class SqAdcL2(left: Expression, right: Expression,
       mins: Array[Long], maxs: Array[Long], levels: Int)
-      extends BinaryExpression with ImplicitCastInputTypes {
+      extends BinaryKernel[ArrayData, ArrayData] with ImplicitCastInputTypes {
     require(mins.nonEmpty && mins.length == maxs.length,
       s"sq_adc_l2: stats arrays must be non-empty and equal-length " +
         s"(got ${mins.length} mins, ${maxs.length} maxs)")
@@ -975,72 +694,29 @@ object VectorOps {
       Seq(ArrayType(IntegerType), ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "sq_adc_l2"
-    override def nullIntolerant: Boolean = true
     // Data-dependent null: see DotProduct's `nullable` note.
     override def nullable: Boolean = true
 
-    @transient private lazy val dim = mins.length
-
     /** Flat decode table, identical arithmetic to [[SqEncode]]'s
       * reconstruction (`mn + q·rng div (levels-1)`, exact integers). */
-    @transient private[graft] lazy val reconTable: Array[Long] = {
-      val t = new Array[Long](dim * levels)
-      var i = 0
-      while (i < dim) {
-        val mn = mins(i)
-        val rng = maxs(i) - mins(i)
-        var q = 0
-        while (q < levels) {
-          t(i * levels + q) = mn + q.toLong * rng / (levels - 1)
-          q += 1
-        }
-        i += 1
+    @transient private lazy val reconTable: Array[Long] =
+      Array.tabulate(mins.length * levels) { e =>
+        val i = e / levels
+        mins(i) + (e % levels).toLong * (maxs(i) - mins(i)) / (levels - 1)
       }
-      t
-    }
 
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val codes = a.asInstanceOf[ArrayData]
-      val y = b.asInstanceOf[ArrayData]
-      if (codes.numElements() != dim || y.numElements() != dim) return null
+    override def valid(codes: ArrayData, y: ArrayData): Boolean =
+      codes.numElements() == mins.length && y.numElements() == mins.length && codesIn(codes, levels)
+    override def kernel(codes: ArrayData, y: ArrayData): Long = {
       val lut = reconTable
       var sum = 0L
       var i = 0
-      while (i < dim) {
-        val q = codes.getInt(i)
-        if (q < 0 || q >= levels) return null
-        val t = lut(i * levels + q) - y.getLong(i)
+      while (i < mins.length) {
+        val t = lut(i * levels + codes.getInt(i)) - y.getLong(i)
         sum += t * t
         i += 1
       }
       sum
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val lutRef = ctx.addReferenceObj("sqReconLut", reconTable, "long[]")
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i")
-        val q = ctx.freshName("q")
-        val t = ctx.freshName("t")
-        val sum = ctx.freshName("sum")
-        s"""
-           |if ($a.numElements() != $dim || $b.numElements() != $dim) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  long $sum = 0L;
-           |  for (int $i = 0; $i < $dim && !${ev.isNull}; $i++) {
-           |    int $q = $a.getInt($i);
-           |    if ($q < 0 || $q >= $levels) {
-           |      ${ev.isNull} = true;
-           |    } else {
-           |      long $t = $lutRef[$i * $levels + $q] - $b.getLong($i);
-           |      $sum += $t * $t;
-           |    }
-           |  }
-           |  ${ev.value} = $sum;
-           |}
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildrenInternal(l: Expression, r: Expression): SqAdcL2 =
@@ -1056,47 +732,24 @@ object VectorOps {
     * require); null on a wrong-dimension vector, the vec_dot
     * corruption convention. */
   case class BitPackGt(child: Expression, thresholds: Array[Long])
-      extends UnaryExpression with ImplicitCastInputTypes {
+      extends UnaryKernel[ArrayData] with ImplicitCastInputTypes {
     require(thresholds.nonEmpty && thresholds.length <= 64,
       s"bitpack_gt: dimension must be in [1, 64] to pack one long " +
         s"(got ${thresholds.length}); wider vectors want an array-of-words variant")
     override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
     override def dataType: DataType = LongType
     override def prettyName: String = "bitpack_gt"
-    override def nullIntolerant: Boolean = true
     override def nullable: Boolean = true
 
-    @transient private lazy val dim = thresholds.length
-
-    override def nullSafeEval(a: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]
-      if (x.numElements() != dim) return null
+    override def valid(x: ArrayData): Boolean = x.numElements() == thresholds.length
+    override def kernel(x: ArrayData): Long = {
       var bits = 0L
       var i = 0
-      while (i < dim) {
+      while (i < thresholds.length) {
         if (x.getLong(i) > thresholds(i)) bits |= (1L << i)
         i += 1
       }
       bits
-    }
-
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val tRef = ctx.addReferenceObj("bqThresholds", thresholds, "long[]")
-      nullSafeCodeGen(ctx, ev, a => {
-        val i = ctx.freshName("i")
-        val bits = ctx.freshName("bits")
-        s"""
-           |if ($a.numElements() != $dim) {
-           |  ${ev.isNull} = true;
-           |} else {
-           |  long $bits = 0L;
-           |  for (int $i = 0; $i < $dim; $i++) {
-           |    if ($a.getLong($i) > $tRef[$i]) $bits |= (1L << $i);
-           |  }
-           |  ${ev.value} = $bits;
-           |}
-         """.stripMargin
-      })
     }
 
     override protected def withNewChildInternal(c: Expression): BitPackGt =

@@ -470,8 +470,6 @@ object Dedup {
           .cast(org.apache.spark.sql.types.ArrayType(DoubleType)).as("v"))
       .withColumn("nrm", graft.functions.VectorOps.vec_norm(col("v")))
 
-  def dot(a: Column, b: Column): Column = graft.functions.VectorOps.vec_dot(a, b)
-
   def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
     // r21: ONE shared (vec_id, v) stage feeds the banding pass and both
     // verify-join sides (previously the joins consumed the UNfanned
@@ -507,7 +505,7 @@ object Dedup {
         // Threshold via a GENERATOR (the minhashSigs trap): a
         // `.filter(col("cosine") >= t)` on the alias is pushdown-
         // substituted and evaluates the dim-wide dot twice per pair.
-        explode(filter(array(dot(col("a.v"), col("b.v")) /
+        explode(filter(array(graft.functions.VectorOps.vec_dot(col("a.v"), col("b.v")) /
             nullif(col("a.nrm") * col("b.nrm"), lit(0.0))),
           c => c >= cosineThreshold(spark))).as("cosine"))
       .select(col("vec_a"), col("vec_b"), round(col("cosine"), 6).as("cosine"))

@@ -172,7 +172,7 @@ object Similarity {
     * are skipped by the topk aggregate (TopKByScore.update's null
     * guard), matching the oracle's NULL-propagating comparisons. */
   private def cosine: Column =
-    Dedup.dot(col("va"), col("vb")) / nullif(col("na") * col("nb"), lit(0.0))
+    VectorOps.vec_dot(col("va"), col("vb")) / nullif(col("na") * col("nb"), lit(0.0))
 
   /** Broadcast-regime ceiling for the exact baseline's query side.
     * `similarity_topk` makes EVERY corpus vector a query, so the r16
@@ -846,7 +846,7 @@ object Similarity {
         col("a.cluster_id") === col("b.cluster_id") &&
           col("a.sub_id") === col("b.sub_id") &&
           col("b.vec_id") < col("a.vec_id"))
-      .filter(Dedup.dot(col("a.v"), col("b.v")) /
+      .filter(VectorOps.vec_dot(col("a.v"), col("b.v")) /
         nullif(col("a.nrm") * col("b.nrm"), lit(0.0)) >=
           Dedup.cosineThreshold(spark)) // conf-dialed; default = the oracle's 0.45
       .groupBy(col("a.vec_id").as("vec_id"))

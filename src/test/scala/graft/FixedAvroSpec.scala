@@ -198,56 +198,6 @@ class FixedAvroSpec extends SparkSpec {
     framed.zip(bare).foreach { case (fr, ba) => assert(fr.drop(5).toSeq == ba.toSeq) }
   }
 
-  test("property: fused ≡ chain on random schemas and rows (15 seeded samples)") {
-    // Same deterministic mini-forAll as RoundtripPropertySpec: random
-    // flat schemas (long/int/double/multibyte-string/boolean lanes),
-    // in-width random rows, rendered to lines — the fused encoder and
-    // the composable chain must emit identical wire bytes for every
-    // sample, whatever the field mix and rune widths.
-    import org.scalacheck.Gen
-    import org.scalacheck.rng.Seed
-    val genField: Gen[(graft.schema.FixedField, Gen[Any])] = for {
-      name <- Gen.identifier.map(s => "f_" + s.take(8))
-      pick <- Gen.oneOf[(String, Int => Gen[Any])](
-        ("long", (w: Int) => Gen.chooseNum(0L, math.pow(10, w - 1).toLong - 1)),
-        ("int", (w: Int) => Gen.chooseNum(0, math.pow(10, math.min(w, 9) - 1).toInt - 1)),
-        ("double", (_: Int) => Gen.chooseNum(0, 9999).map(_ / 100.0)),
-        ("string", (w: Int) => Gen.listOfN(w, Gen.oneOf(
-          Gen.alphaNumChar, Gen.oneOf('ä', 'ö', '界', '€', 'λ'))).map(_.mkString)),
-        ("boolean", (_: Int) => Gen.oneOf(true, false)))
-      width <- pick._1 match {
-        case "boolean" => Gen.const(1)
-        case "double"  => Gen.chooseNum(8, 12)
-        case "int"     => Gen.chooseNum(4, 9)
-        case _         => Gen.chooseNum(4, 12)
-      }
-    } yield (graft.schema.FixedField(name, width, pick._1, None), pick._2(width))
-    val genSchemaAndRows: Gen[(FixedSchema, List[List[Any]])] = for {
-      nFields <- Gen.chooseNum(1, 6)
-      fields0 <- Gen.listOfN(nFields, genField)
-      fields = fields0.zipWithIndex.map { case ((f, g), i) =>
-        (f.copy(name = s"${f.name}_$i"), g) }
-      nRows <- Gen.chooseNum(1, 20)
-      rows <- Gen.listOfN(nRows, Gen.sequence[List[Any], Any](fields.map(_._2)))
-    } yield (FixedSchema("prop", fields.map(_._1)), rows)
-    (1 to 15).foreach { i =>
-      genSchemaAndRows.apply(Gen.Parameters.default.withSize(8), Seed(i.toLong)).foreach {
-        case (s2, rows) =>
-          val df = spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.map(org.apache.spark.sql.Row.fromSeq), 2),
-            s2.sparkSchema)
-          val lines = graft.sources.FixedWidth.render(df, s2).coalesce(1)
-          val a = FixedWidthParser.parse(lines, s2, Strict, dropFooter = false)
-            .select(AvroCodec.to_avro_confluent(
-              s2.fields.map(f => col(f.name)), s2.avroJson, 9).as("value"))
-            .collect().map(_.getAs[Array[Byte]]("value").toSeq).sortBy(_.mkString(","))
-          val b = FixedWidthParser.toAvro(lines, s2, 9, dropFooter = false)
-            .collect().map(_.getAs[Array[Byte]]("value").toSeq).sortBy(_.mkString(","))
-          assert(a.toSeq == b.toSeq, s"seed $i: fused and chain bytes diverge")
-      }
-    }
-  }
-
   test("fused lines→OCF read-back equals the typed parse (stock reader)") {
     import spark.implicits._
     val df = linesDf(goodLines)

@@ -67,7 +67,7 @@ class LlmOpsSpec extends SparkSpec {
     val n = e.withColumn("nrm", sqrt(aggregate(col("v"), lit(0.0), (a, x) => a + x * x)))
     val brute = n.as("a").join(n.as("b"), col("a.vec_id") < col("b.vec_id"))
       .select(col("a.vec_id"), col("b.vec_id"),
-        (Dedup.dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("c"))
+        (graft.functions.VectorOps.vec_dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("c"))
       .filter(col("c") >= Dedup.CosineThreshold)
       .select(col("a.vec_id"), col("b.vec_id")).as[(Long, Long)].collect().toSet
     assert(lsh == brute, s"missed=${(brute -- lsh).size} extra=${(lsh -- brute).size}")
